@@ -10,7 +10,8 @@ Python + numpy/pandas - no native deps to ship).
 
 Subcommands:
     generate  - flagship pipeline: docs -> spatial join -> tiles -> split,
-                resumable via per-partition manifests (plans.checkpoint).
+                resumable via per-partition manifests (plans.checkpoint);
+                ends with one JSON summary line.
     rasters   - tile assignment + mosaic (export_rasters path).
     stats     - per-band stats JSON (compute_stats path).
     corpus    - LLM training-corpus export chain from a JSON config
@@ -43,6 +44,9 @@ def _package(out: str = "geeflow_spark.zip") -> str:
 
 
 def _cmd_generate(args) -> None:
+    import json
+    import time
+
     import pandas as pd
 
     from geeflow_spark.plans import checkpoint, generate
@@ -56,10 +60,17 @@ def _cmd_generate(args) -> None:
     ex = generate.generate_examples(docs, regions,
                                     cell_level=args.cell_level)
     parts = ["train", "val", "test"]
+    t0 = time.monotonic()
     recs = checkpoint.run_partitioned(ex, args.out, "split", parts,
                                       id_col="doc_id",
                                       input_fingerprint=args.docs)
-    print(f"wrote {len(recs)} partitions -> {args.out}")
+    wall_s = time.monotonic() - t0
+    rows = {r["partition"]: r["rows"] for r in recs}
+    print(json.dumps({"cmd": "generate", "out": args.out,
+                      "partitions_written": len(recs),
+                      "partitions_skipped": len(parts) - len(recs),
+                      "rows": rows, "total_rows": sum(rows.values()),
+                      "wall_s": round(wall_s, 3)}))
     spark.stop()
 
 

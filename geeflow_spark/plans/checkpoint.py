@@ -7,15 +7,28 @@ resume unit is coarser (skip already-exported UTM-zone assets,
 partition.
 
 Design (works on plain parquet dirs; Iceberg-compatible layout):
-  - Output is written partitionBy(partition_col).
-  - After each partition commits, a manifest row is appended under
-    `<out>/_manifest/` as JSON: partition value, row count, min/max of the
-    id column (lineage), input fingerprint, wall time, engine version.
+  - Output is one directory per partition value, `<out>/<col>=<v>/`,
+    whose files keep the partition column (a reader of one leaf sees the
+    full schema).
   - `remaining_partitions` filters a new run's work list against the
     manifest - idempotent relaunch skips committed partitions.
-  - Metrics rows are collected per partition via Spark accumulator-free
-    aggregation (a groupBy on the partition col), so they are exact and
-    reproducible.
+  - ONE Spark job writes every remaining partition into
+    `<out>/_staging/_ckpt_i=<i>/` (i = the value's index in the work
+    list), and the same job observes each partition's row count and
+    min/max of the id column (lineage) through `DataFrame.observe`, so
+    the upstream plan runs once however many partitions there are.
+  - After the job commits, each partition's staging directory replaces
+    `<out>/<col>=<v>/` (a torn directory from an earlier crash included),
+    and only then is its manifest record written under `<out>/_manifest/`
+    as JSON: partition value, row count, lineage, input fingerprint,
+    wall time, engine version. Manifest => partition committed; a crash
+    anywhere re-runs exactly the partitions without a manifest.
+  - Every file operation (manifests, moves, deletes) goes through the
+    Hadoop FileSystem of Spark's session, so `output_path` may be any
+    path or URI Spark writes to (local dir, `file://`, `hdfs://`,
+    `s3a://`), and the manifests live next to the data.
+  - The `observe` aggregates are three per work-list entry, so their
+    per-row cost grows linearly with the number of remaining partitions.
 """
 
 from __future__ import annotations
@@ -24,10 +37,65 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 ENGINE_VERSION = "0.1.0"
+JOB_DESCRIPTION = "geeflow.plans.checkpoint.write"
+_INDEX_COL = "_ckpt_i"
+
+
+class _Files:
+    """File operations under one output root, through the Hadoop
+    FileSystem Spark writes that root with, so it may be any path or URI
+    Spark writes to. The filesystem is resolved once, so each operation
+    costs only its own few JVM calls. A local root gets the raw local
+    filesystem, so manifests and markers carry no `.crc` side files."""
+
+    def __init__(self, spark: SparkSession, root: str):
+        hadoop_fs = spark._jvm.org.apache.hadoop.fs  # noqa: SLF001
+        self._path = hadoop_fs.Path
+        fs = self._path(root).getFileSystem(
+            spark._jsc.hadoopConfiguration())  # noqa: SLF001
+        if fs.getScheme() == "file":
+            wrapper = hadoop_fs.FilterFileSystem._java_lang_class
+            while wrapper.isInstance(fs):  # checksum / proxy wrappers
+                fs = fs.getRawFileSystem()
+        self._fs = fs
+
+    def exists(self, path: str) -> bool:
+        return self._fs.exists(self._path(path))
+
+    def delete(self, path: str) -> None:
+        self._fs.delete(self._path(path), True)
+
+    def rename(self, src: str, dst: str) -> None:
+        if not self._fs.rename(self._path(src), self._path(dst)):
+            raise OSError(f"could not move {src} to {dst}")
+
+    def write_text(self, path: str, text: str) -> None:
+        out = self._fs.create(self._path(path), True)
+        try:
+            out.write(bytearray(text.encode()))
+        finally:
+            out.close()
+
+    def read_json_dir(self, path: str) -> list:
+        """The `*.json` files directly under `path`, in name order."""
+        d = self._path(path)
+        if not self._fs.exists(d):
+            return []
+        recs = []
+        for name, p in sorted((st.getPath().getName(), st.getPath())
+                              for st in self._fs.listStatus(d)):
+            if name.endswith(".json"):
+                stream = self._fs.open(p)
+                try:
+                    recs.append(json.loads(
+                        bytes(stream.readAllBytes()).decode()))
+                finally:
+                    stream.close()
+        return recs
 
 
 def manifest_dir(output_path: str) -> str:
@@ -36,16 +104,9 @@ def manifest_dir(output_path: str) -> str:
 
 def load_manifest(output_path: str) -> dict:
     """{partition_value: manifest_record} of committed partitions."""
-    d = manifest_dir(output_path)
-    out = {}
-    if not os.path.isdir(d):
-        return out
-    for name in sorted(os.listdir(d)):
-        if name.endswith(".json"):
-            with open(os.path.join(d, name)) as f:
-                rec = json.load(f)
-            out[str(rec["partition"])] = rec
-    return out
+    files = _Files(SparkSession.active(), output_path)
+    return {str(rec["partition"]): rec
+            for rec in files.read_json_dir(manifest_dir(output_path))}
 
 
 def remaining_partitions(output_path: str, all_partitions: list) -> list:
@@ -53,58 +114,94 @@ def remaining_partitions(output_path: str, all_partitions: list) -> list:
     return [p for p in all_partitions if str(p) not in done]
 
 
-def write_partition_with_manifest(df: DataFrame, output_path: str,
-                                  partition_col: str, partition_value,
-                                  id_col: str | None = None,
-                                  input_fingerprint: str = "") -> dict:
-    """Writes one partition + its manifest/lineage/metrics record.
+def _write_manifest(files: _Files, output_path: str, rec: dict) -> None:
+    safe = rec["partition"].replace("/", "_")
+    files.write_text(os.path.join(manifest_dir(output_path), f"{safe}.json"),
+                     json.dumps(rec, indent=2, sort_keys=True))
 
-    The partition directory is written atomically by Spark's committer;
-    the manifest record is written only after success, so a crash between
-    the two re-runs that partition idempotently (overwrite mode).
-    """
-    part_df = df.filter(F.col(partition_col) == partition_value)
-    t0 = time.monotonic()
-    (part_df.write.mode("overwrite")
-     .parquet(os.path.join(output_path,
-                           f"{partition_col}={partition_value}")))
-    aggs = [F.count("*").alias("rows")]
-    if id_col:
-        aggs += [F.min(id_col).cast("string").alias("id_min"),
-                 F.max(id_col).cast("string").alias("id_max")]
-    stats = part_df.agg(*aggs).collect()[0].asDict()
-    rec = {
-        "partition": str(partition_value),
-        "partition_col": partition_col,
-        "rows": stats["rows"],
-        "lineage": {
-            "id_min": stats.get("id_min"),
-            "id_max": stats.get("id_max"),
-            "input_fingerprint": input_fingerprint,
-            "engine_version": ENGINE_VERSION,
-        },
-        "metrics": {
-            "wall_sec": round(time.monotonic() - t0, 3),
-            "rows_per_sec": (round(stats["rows"] /
-                                   max(time.monotonic() - t0, 1e-9), 1)),
-        },
-    }
-    os.makedirs(manifest_dir(output_path), exist_ok=True)
-    safe = str(partition_value).replace("/", "_")
-    with open(os.path.join(manifest_dir(output_path), f"{safe}.json"),
-              "w") as f:
-        json.dump(rec, f, indent=2, sort_keys=True)
-    return rec
+
+def _staged_write(df: DataFrame, staging: str, partition_col: str,
+                  todo: list, id_col: str | None) -> dict:
+    """Writes the `todo` partitions of `df` in one job, partitioned by
+    their index in `todo`; returns that job's observed metrics."""
+    dtype = df.schema[partition_col].dataType
+    values = [F.lit(p).cast(dtype) for p in todo]
+    idx = F.col(_INDEX_COL)
+    aggs = []
+    for i in range(len(todo)):
+        aggs.append(F.count(F.when(idx == i, 1)).alias(f"rows_{i}"))
+        if id_col:
+            own = F.when(idx == i, F.col(id_col))
+            aggs += [F.min(own).cast("string").alias(f"id_min_{i}"),
+                     F.max(own).cast("string").alias(f"id_max_{i}")]
+    obs = Observation()
+    # array_position is 0 for a value outside `todo`, so idx is -1 there.
+    (df.withColumn(_INDEX_COL,
+                   F.array_position(F.array(*values), F.col(partition_col))
+                   - 1)
+     .filter(idx >= 0)
+     .observe(obs, *aggs)
+     .write.mode("overwrite").partitionBy(_INDEX_COL).parquet(staging))
+    return obs.get
 
 
 def run_partitioned(df: DataFrame, output_path: str, partition_col: str,
                     partitions: list, id_col: str | None = None,
                     input_fingerprint: str = "") -> list[dict]:
-    """Resumable partitioned write: skips committed partitions, writes the
-    rest one-by-one with manifests. Returns the new manifest records."""
-    todo = remaining_partitions(output_path, partitions)
-    recs = []
-    for p in todo:
-        recs.append(write_partition_with_manifest(
-            df, output_path, partition_col, p, id_col, input_fingerprint))
+    """Resumable partitioned write: skips committed partitions and writes
+    the rest in one Spark job (module docstring). A listed value with no
+    rows gets an empty directory with the full schema and a zero-row
+    manifest. Every record's `metrics.wall_sec` is the wall time of the
+    shared job. Returns the new manifest records, in `partitions` order."""
+    # One entry per output directory: a repeated value would otherwise
+    # get an empty staging index that replaces its written directory.
+    todo = list({str(p): p for p in
+                 remaining_partitions(output_path, partitions)}.values())
+    if not todo:
+        return []
+    files = _Files(df.sparkSession, output_path)
+    staging = os.path.join(output_path, "_staging")
+    files.delete(staging)
+    sc = df.sparkSession.sparkContext
+    prev_desc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(JOB_DESCRIPTION)
+    try:
+        t0 = time.monotonic()
+        stats = _staged_write(df, staging, partition_col, todo, id_col)
+        wall = time.monotonic() - t0
+        recs = []
+        for i, p in enumerate(todo):
+            rows = stats[f"rows_{i}"]
+            dst = os.path.join(output_path, f"{partition_col}={p}")
+            src = os.path.join(staging, f"{_INDEX_COL}={i}")
+            if rows and not files.exists(src):
+                raise RuntimeError(f"staged data of {partition_col}={p} "
+                                   f"({rows} rows) is missing at {src}")
+            files.delete(dst)
+            if rows:
+                files.rename(src, dst)
+                # The marker a direct Spark write leaves in the directory.
+                files.write_text(os.path.join(dst, "_SUCCESS"), "")
+            else:
+                df.limit(0).write.parquet(dst)
+            rec = {
+                "partition": str(p),
+                "partition_col": partition_col,
+                "rows": rows,
+                "lineage": {
+                    "id_min": stats.get(f"id_min_{i}"),
+                    "id_max": stats.get(f"id_max_{i}"),
+                    "input_fingerprint": input_fingerprint,
+                    "engine_version": ENGINE_VERSION,
+                },
+                "metrics": {
+                    "wall_sec": round(wall, 3),
+                    "rows_per_sec": round(rows / max(wall, 1e-9), 1),
+                },
+            }
+            _write_manifest(files, output_path, rec)
+            recs.append(rec)
+    finally:
+        sc.setLocalProperty("spark.job.description", prev_desc)
+    files.delete(staging)
     return recs

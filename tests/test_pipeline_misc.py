@@ -158,6 +158,18 @@ def test_checkpoint_resume(spark, tmp_path):
     os.remove(os.path.join(checkpoint.manifest_dir(out), "2.json"))
     recs3 = checkpoint.run_partitioned(docs, out, "part", [0, 1, 2, 3])
     assert [r["partition"] for r in recs3] == ["2"]
+    # Each partition's files keep the partition column (readers of one
+    # `part=<v>` leaf see the full schema).
+    assert spark.read.parquet(out + "/part=0").columns == docs.columns
+    # A listed value with no rows still commits: a readable, empty
+    # directory with the full schema and a zero-row manifest.
+    recs4 = checkpoint.run_partitioned(docs, out, "part", [0, 1, 2, 3, 7],
+                                       id_col="doc_id")
+    assert [(r["partition"], r["rows"], r["lineage"]["id_min"])
+            for r in recs4] == [("7", 0, None)]
+    empty = spark.read.parquet(out + "/part=7")
+    assert empty.columns == docs.columns and empty.count() == 0
+    assert spark.read.parquet(out + "/part=*").count() == 300
 
 
 def test_checkpoint_resume_torn_partition(spark, tmp_path):
@@ -191,6 +203,132 @@ def test_checkpoint_resume_torn_partition(spark, tmp_path):
     total = spark.read.parquet(out + "/part=*")
     assert total.count() == 300
     assert total.select("doc_id").distinct().count() == 300
+
+
+def test_checkpoint_resume_crash_before_manifest(spark, tmp_path,
+                                                 monkeypatch):
+    # Failure injection: the shared write job has committed, partition 0
+    # is in place with its manifest, partition 1 has been moved into
+    # place but the crash hits before its manifest is written, and 2-3
+    # are still staged. The relaunch re-runs exactly the partitions
+    # without a manifest, leaves no staging behind, and the dataset
+    # reads back exactly once.
+    import os
+
+    import pytest
+    out = str(tmp_path / "out")
+    docs = synth.docs(spark, 300).withColumn(
+        "part", (F.crc32(F.col("doc_id")) % 4).cast("int"))
+    write_manifest = checkpoint._write_manifest
+
+    def crash_on_1(files, path, rec):
+        if rec["partition"] == "1":
+            raise RuntimeError("injected crash")
+        write_manifest(files, path, rec)
+
+    monkeypatch.setattr(checkpoint, "_write_manifest", crash_on_1)
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        with pytest.raises(RuntimeError, match="injected crash"):
+            checkpoint.run_partitioned(docs, out, "part", [0, 1, 2, 3],
+                                       id_col="doc_id")
+        # The engine's job label does not leak into the caller's jobs.
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    monkeypatch.undo()
+    assert set(checkpoint.load_manifest(out)) == {"0"}
+    assert os.path.isdir(os.path.join(out, "part=1"))
+    assert os.path.isdir(os.path.join(out, "_staging"))
+    # A repeated value is written once.
+    recs = checkpoint.run_partitioned(docs, out, "part", [0, 1, 2, 3, 3],
+                                      id_col="doc_id")
+    assert [r["partition"] for r in recs] == ["1", "2", "3"]
+    assert not os.path.exists(os.path.join(out, "_staging"))
+    back = spark.read.parquet(out + "/part=*")
+    assert back.count() == 300
+    assert back.select("doc_id").distinct().count() == 300
+
+
+def test_checkpoint_missing_staged_partition_raises(spark, tmp_path,
+                                                    monkeypatch):
+    # A partition the write job counted rows for but whose staged data
+    # is gone must fail loudly: no empty directory in its place and no
+    # manifest claiming it committed. The relaunch then completes it.
+    import os
+    import shutil
+
+    import pytest
+    out = str(tmp_path / "out")
+    docs = synth.docs(spark, 300).withColumn(
+        "part", (F.crc32(F.col("doc_id")) % 4).cast("int"))
+    staged_write = checkpoint._staged_write
+
+    def lose_staged_1(df, staging, *args):
+        stats = staged_write(df, staging, *args)
+        shutil.rmtree(os.path.join(staging, "_ckpt_i=1"))
+        return stats
+
+    monkeypatch.setattr(checkpoint, "_staged_write", lose_staged_1)
+    with pytest.raises(RuntimeError, match="part=1"):
+        checkpoint.run_partitioned(docs, out, "part", [0, 1, 2, 3])
+    monkeypatch.undo()
+    assert set(checkpoint.load_manifest(out)) == {"0"}
+    assert not os.path.exists(os.path.join(out, "part=1"))
+    recs = checkpoint.run_partitioned(docs, out, "part", [0, 1, 2, 3])
+    assert [r["partition"] for r in recs] == ["1", "2", "3"]
+    back = spark.read.parquet(out + "/part=*")
+    assert back.count() == 300
+    assert back.select("doc_id").distinct().count() == 300
+
+
+def test_checkpoint_resume_file_uri(spark, tmp_path):
+    # An output URI (not a bare path) keeps data, manifests and staging
+    # on the filesystem Spark writes to.
+    import os
+    local = str(tmp_path / "out")
+    out = "file://" + local
+    docs = synth.docs(spark, 300).withColumn(
+        "part", (F.crc32(F.col("doc_id")) % 4).cast("int"))
+    recs = checkpoint.run_partitioned(docs, out, "part", [0, 1, 2, 3],
+                                      id_col="doc_id")
+    assert sum(r["rows"] for r in recs) == 300
+    assert sorted(os.listdir(os.path.join(local, "_manifest"))) == \
+        ["0.json", "1.json", "2.json", "3.json"]
+    assert not os.path.exists(os.path.join(local, "_staging"))
+    assert set(checkpoint.load_manifest(out)) == {"0", "1", "2", "3"}
+    assert checkpoint.run_partitioned(docs, out, "part", [0, 1, 2, 3]) == []
+    back = spark.read.parquet(local + "/part=*")
+    assert back.count() == 300
+    assert back.select("doc_id").distinct().count() == 300
+
+
+def test_cli_generate_summary_line(spark, tmp_path, monkeypatch, capsys):
+    # `cli generate` ends with one JSON summary line built from the
+    # manifest records; a relaunch reports every partition as skipped.
+    # In-process the CLI would stop the shared fixture session - no-op it.
+    import json
+
+    from pyspark.sql import SparkSession
+
+    from geeflow_spark import cli
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    docs, out = str(tmp_path / "docs"), str(tmp_path / "out")
+    synth.docs(spark, 300).write.parquet(docs)
+    argv = ["generate", "--docs", docs, "--out", out]
+    cli.main(argv)
+    got = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    man = checkpoint.load_manifest(out)
+    assert got["out"] == out
+    assert (got["partitions_written"], got["partitions_skipped"]) == (3, 0)
+    assert got["rows"] == {p: r["rows"] for p, r in man.items()}
+    assert got["total_rows"] == spark.read.parquet(out + "/split=*").count()
+    assert got["wall_s"] > 0
+    cli.main(argv)
+    again = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert (again["partitions_written"], again["partitions_skipped"],
+            again["total_rows"]) == (0, 3, 0)
 
 
 def test_exact_dedup_hash_collision_safe(spark):
