@@ -14,9 +14,6 @@ Subcommands:
                 ends with one JSON summary line.
     rasters   - tile assignment + mosaic (export_rasters path).
     stats     - per-band stats JSON (compute_stats path).
-    corpus    - LLM training-corpus export chain from a JSON config
-                (plans/corpus step dict), stage-materialized +
-                resumable (run_corpus_pipeline_checkpointed).
     package   - build the --py-files zip.
 """
 
@@ -24,7 +21,6 @@ from __future__ import annotations
 
 import argparse
 import os
-import sys
 import zipfile
 
 
@@ -107,28 +103,6 @@ def _cmd_stats(args) -> None:
     spark.stop()
 
 
-def _cmd_corpus(args) -> None:
-    import json
-
-    from geeflow_spark.plans import corpus
-    from geeflow_spark.session import get_spark
-
-    with open(args.config) as f:
-        cfg = json.load(f)
-    spark = get_spark("geeflow-corpus")
-    docs = spark.read.parquet(args.docs)
-    bench = spark.read.parquet(args.benchmark) if args.benchmark \
-        else None
-    out = corpus.run_corpus_pipeline_checkpointed(
-        docs, cfg, args.stages, benchmark=bench,
-        input_fingerprint=args.docs,
-        benchmark_fingerprint=args.benchmark or "",
-        hash_family=args.hash_family)
-    out.write.mode("overwrite").parquet(args.out)
-    print(f"corpus chain ({', '.join(k for k in cfg)}) -> {args.out}")
-    spark.stop()
-
-
 def main(argv=None):
     p = argparse.ArgumentParser(prog="geeflow_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -154,18 +128,6 @@ def main(argv=None):
     s.add_argument("--n-bands", type=int, required=True)
     s.add_argument("--out", required=True)
 
-    c = sub.add_parser("corpus")
-    c.add_argument("--docs", required=True)
-    c.add_argument("--config", required=True,
-                   help="JSON step dict (plans/corpus config)")
-    c.add_argument("--stages", required=True,
-                   help="stage-checkpoint dir (driver-visible FS)")
-    c.add_argument("--out", required=True)
-    c.add_argument("--benchmark", default=None,
-                   help="benchmark parquet (decontaminate step)")
-    c.add_argument("--hash-family", default="xxh64",
-                   choices=("xxh64", "md5"))
-
     sub.add_parser("package")
 
     args = p.parse_args(argv)
@@ -177,8 +139,6 @@ def main(argv=None):
         _cmd_rasters(args)
     elif args.cmd == "stats":
         _cmd_stats(args)
-    elif args.cmd == "corpus":
-        _cmd_corpus(args)
 
 
 if __name__ == "__main__":

@@ -9,32 +9,16 @@ Exact semantics of the reference's split logic
     the rest -> train (:99-109).
 
 The md5 runs over the DECIMAL STRING of the python int cell id - we keep
-that exactly (uint64 rendering), computed batch-wise in a pandas UDF.
+that exactly (uint64 rendering), computed by the pure-JVM column
+expression `md5_mod10_col`.
 """
 
 from __future__ import annotations
 
-import hashlib
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import IntegerType
 
-from geeflow_spark.functions import s2
 from geeflow_spark.operators.spatial_join import with_cell
-
-
-@pandas_udf(IntegerType())
-def _md5_mod10(cell: pd.Series) -> pd.Series:
-    ids = cell.to_numpy(np.int64).astype(np.uint64)
-    out = np.empty(len(ids), dtype=np.int32)
-    for i, c in enumerate(ids):
-        out[i] = int(hashlib.md5(str(int(c)).encode("utf-8")).hexdigest(),
-                     16) % 10
-    return pd.Series(out)
 
 
 def md5_mod10_col(cell_col) -> "F.Column":
@@ -66,16 +50,11 @@ def md5_mod10_col(cell_col) -> "F.Column":
 
 def with_split_bucket(df: DataFrame, level: int = 9, lat_col: str = "lat",
                       lon_col: str = "lon",
-                      out_col: str = "split_bucket",
-                      jvm_fast_path: bool = True) -> DataFrame:
-    """Adds the 0..9 geographic split bucket column.
-
-    jvm_fast_path uses the codegen-friendly CRT md5 expression; False
-    uses the literal hashlib formulation (same results, slower)."""
+                      out_col: str = "split_bucket") -> DataFrame:
+    """Adds the 0..9 geographic split bucket column."""
     enc = with_cell(df, level, lat_col, lon_col, out_col="_s2split")
-    bucket = (md5_mod10_col(F.col("_s2split")) if jvm_fast_path
-              else _md5_mod10(F.col("_s2split")))
-    return enc.withColumn(out_col, bucket.cast("int")).drop("_s2split")
+    return (enc.withColumn(out_col, md5_mod10_col(F.col("_s2split")))
+            .drop("_s2split"))
 
 
 def with_split(df: DataFrame, level: int = 9, lat_col: str = "lat",

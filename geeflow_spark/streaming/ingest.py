@@ -59,16 +59,17 @@ def start_generate_stream(docs_stream: DataFrame, regions, out_path: str,
         m = written.agg(F.count("*").alias("rows"),
                         F.min("doc_id").alias("id_min"),
                         F.max("doc_id").alias("id_max")).collect()[0]
-        d = checkpoint.manifest_dir(out_path)
-        os.makedirs(d, exist_ok=True)
         rec = {"partition": f"batch_id={batch_id}",
                "rows": int(m["rows"]),
                "lineage": {"id_min": m["id_min"], "id_max": m["id_max"],
                            "source": "stream"},
                "wall_sec": round(time.monotonic() - t0, 3),
                "engine_version": checkpoint.ENGINE_VERSION}
-        with open(os.path.join(d, f"stream_{batch_id}.json"), "w") as f:
-            json.dump(rec, f)
+        files = checkpoint._Files(  # noqa: SLF001
+            batch_df.sparkSession, out_path)
+        files.write_text(os.path.join(checkpoint.manifest_dir(out_path),
+                                      f"stream_{batch_id}.json"),
+                         json.dumps(rec))
 
     return (docs_stream.writeStream
             .option("checkpointLocation", checkpoint_path)

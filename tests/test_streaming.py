@@ -66,420 +66,20 @@ def test_stream_matches_batch_exactly_once(spark, tmp_path):
                for r in recs)
 
 
-def test_stream_dedup_builtin_across_batches(spark, tmp_path):
-    import pandas as pd
-    from geeflow_spark.streaming import dedup_stream
-    land = str(tmp_path / "dl")
-    out = str(tmp_path / "dout")
-    ckpt = str(tmp_path / "dckpt")
-    b1 = pd.DataFrame({"doc_id": [1, 2, 3],
-                       "text": ["alpha text", "beta text", "alpha  TEXT"]})
-    spark.createDataFrame(b1).write.mode("overwrite").parquet(land)
-    schema = spark.read.parquet(land).schema
-
-    def run():
-        s = spark.readStream.schema(schema).parquet(land)
-        d = dedup_stream.dedup_stream_builtin(s)
-        return (d.writeStream.format("parquet")
-                .option("path", out).option("checkpointLocation", ckpt)
-                .trigger(availableNow=True).start())
-
-    run().awaitTermination(120)
-    got1 = spark.read.parquet(out).toPandas()
-    # alpha/ALPHA normalize equal -> one survivor
-    assert len(got1) == 2
-
-    # Batch 2: duplicate of batch-1 text arrives later + one new text.
-    b2 = pd.DataFrame({"doc_id": [4, 5],
-                       "text": ["ALPHA text", "gamma text"]})
-    spark.createDataFrame(b2).write.mode("append").parquet(land)
-    run().awaitTermination(120)
-    got2 = spark.read.parquet(out).toPandas()
-    # cross-batch state: the late alpha duplicate is dropped
-    assert len(got2) == 3
-    assert sorted(got2["text"].str.lower().str.split().str[0]) \
-        == ["alpha", "beta", "gamma"]
-
-
-def test_stream_seen_counts_stateful(spark, tmp_path):
-    import pandas as pd
-    from geeflow_spark.streaming import dedup_stream
-    land = str(tmp_path / "sl")
-    ckpt = str(tmp_path / "sckpt")
-    out = str(tmp_path / "sout")
-    ts = pd.Timestamp("2024-01-01")
-    b1 = pd.DataFrame({"doc_id": [1, 2, 3],
-                       "text": ["xx yy", "zz ww", "xx  YY"],
-                       "ts": [ts, ts, ts + pd.Timedelta(minutes=1)]})
-    spark.createDataFrame(b1).write.mode("overwrite").parquet(land)
-    schema = spark.read.parquet(land).schema
-
-    def run():
-        s = spark.readStream.schema(schema).parquet(land)
-        d = dedup_stream.seen_counts_stream(s)
-        # update-mode stateful op -> foreachBatch append sink
-        def sink(batch_df, batch_id):
-            batch_df.write.mode("append").parquet(out)
-        return (d.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("update")
-                .trigger(availableNow=True).start())
-
-    run().awaitTermination(120)
-    # Batch 2: two more of the 'xx yy' digest.
-    b2 = pd.DataFrame({"doc_id": [4, 5],
-                       "text": ["XX yy", "xx yy"],
-                       "ts": [ts + pd.Timedelta(hours=1)] * 2})
-    spark.createDataFrame(b2).write.mode("append").parquet(land)
-    run().awaitTermination(120)
-    got = spark.read.parquet(out).toPandas()
-    # state carried across micro-batches: latest emission for the xx-yy
-    # digest counts all 4 occurrences with the batch-1 first_ts
-    top = got.sort_values("n_seen").iloc[-1]
-    assert top["n_seen"] == 4
-    assert pd.Timestamp(top["first_ts"]) == ts
-
-
-def test_stream_near_dup_survivors_cross_batch(spark, tmp_path):
-    # Near-dup SURVIVORS on a stream: planted dup chains SPAN batch
-    # boundaries (a late doc must join the component of docs from
-    # earlier micro-batches and drop), and the streamed survivor set
-    # must equal the batch pairs -> components -> survivors answer
-    # over the union of all batches (arrival in id order, so
-    # first-arrival-wins == min-id-canonical).
-    import numpy as np
-    import pandas as pd
-
-    from geeflow_spark.operators import dedup
-    from geeflow_spark.streaming import survivors_stream
-
-    rng = np.random.default_rng(7)
-    vocab = [f"w{i}" for i in range(400)]
-    base = [" ".join(rng.choice(vocab, 30)) for _ in range(30)]
-    texts = {f"doc{i:04d}": base[i] for i in range(30)}
-    # cross-batch chains: batch2's doc0031 copies batch1's doc0003;
-    # batch3's doc0052 copies doc0031 (transitive closure reaches the
-    # batch-1 canonical through a DROPPED batch-2 member); one near
-    # copy (single token changed -> hamming small) inside batch 3.
-    fresh = [" ".join(rng.choice(vocab, 30)) for _ in range(8)]
-    for j, i in enumerate((32, 33, 34, 35, 51, 53, 56, 57)):
-        texts[f"doc{i:04d}"] = fresh[j]
-    texts["doc0031"] = texts["doc0003"]
-    texts["doc0052"] = texts["doc0031"]
-    texts["doc0047"] = texts["doc0010"]
-    # one exact within-batch-3 pair too (fresh component, min-id wins)
-    texts["doc0055"] = texts["doc0051"]
-    ids = sorted(texts)
-    batches = [ids[:30],
-               [i for i in ids if "doc0030" <= i < "doc0050"],
-               [i for i in ids if i >= "doc0050"]]
-
+def test_stream_manifest_file_uri(spark, tmp_path, monkeypatch):
+    """A `file://` output root gets its stream manifests under
+    `<out>/_manifest/`, next to the data, not in a relative `file:`
+    directory under the working directory."""
+    monkeypatch.chdir(tmp_path)
     land = str(tmp_path / "landing")
-    state = str(tmp_path / "state")
-    out = str(tmp_path / "survivors")
-    ckpt = str(tmp_path / "ckpt")
-    params = dict(shingle_k=2, blocks=6, block_t=3, max_hamming=3)
+    out = tmp_path / "out"
+    synth.docs(spark, 100).write.mode("overwrite").parquet(land)
+    docs = spark.read.parquet(land)
+    q = ingest.start_generate_stream(
+        ingest.stream_docs(spark, land, docs.schema),
+        synth.regions_pdf(10, radius_scale=3.0), f"file://{out}",
+        str(tmp_path / "ckpt"), cell_level=6)
+    q.awaitTermination(120)
 
-    schema = None
-    for b in batches:
-        pdf = pd.DataFrame({"doc_id": b, "text": [texts[i] for i in b]})
-        df = spark.createDataFrame(pdf)
-        schema = df.schema
-        df.coalesce(1).write.mode("append").parquet(land)
-        q = survivors_stream.start_survivors_stream(
-            spark.readStream.schema(schema).parquet(land),
-            state, out, ckpt, **params)
-        q.awaitTermination(120)
-
-    got = sorted(r["doc_id"] for r in
-                 spark.read.parquet(out).select("doc_id").collect())
-    assert len(got) == len(set(got))  # exactly-once: no dup outputs
-
-    alldocs = spark.createDataFrame(pd.DataFrame(
-        {"doc_id": ids, "text": [texts[i] for i in ids]}))
-    pairs = dedup.simhash_candidate_pairs(alldocs, **params)
-    exp = sorted(r["doc_id"] for r in
-                 dedup.dedup_survivors(alldocs, pairs)
-                 .select("doc_id").collect())
-    assert got == exp
-    # the planted chain really dropped its late members
-    for dropped in ("doc0031", "doc0052", "doc0047", "doc0055"):
-        assert dropped not in got
-    assert "doc0051" in got  # fresh batch-3 component keeps its min id
-    # state carries ALL seen docs' signatures (transitivity needs the
-    # dropped ones too)
-    assert spark.read.parquet(state).count() == len(ids)
-    dedup.release_survivors_state()
-
-
-def test_stream_corpus_filter_pipeline_matches_batch(spark, tmp_path):
-    # The stateless corpus-pipeline ops (stratified sampling + Gopher
-    # flags + containment fingerprints are row-local) compose directly
-    # onto the streaming tail: a readStream through
-    # stratified_sample + gopher_quality_flags must emit exactly the
-    # batch answer, incrementally, exactly once.
-    import pandas as pd
-    from geeflow_spark.operators import sampling, text_metrics
-
-    land = str(tmp_path / "landing")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    words = "the quick brown fox and that dog have fun with all of it"
-    pdf = pd.DataFrame({
-        "doc_id": range(300),
-        "lang": [("en", "de", "fr")[i % 3] for i in range(300)],
-        "text": [(words + " ") * (2 + i % 5) for i in range(300)],
-    })
-    docs = spark.createDataFrame(pdf)
-    docs.filter(F.col("doc_id") < 150).write.mode("overwrite") \
-        .parquet(land)
-
-    def pipe(df):
-        s = sampling.stratified_sample(
-            df, {"en": 1.0, "de": 0.5}, strata_col="lang",
-            default_fraction=0.25, seed=3)
-        return text_metrics.gopher_quality_flags(s, min_words=30) \
-            .select("doc_id", "n_words", "gopher_pass")
-
-    def run_stream():
-        st = (spark.readStream.schema(docs.schema).parquet(land))
-        q = (pipe(st).writeStream.format("parquet")
-             .option("path", out).option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    run_stream()
-    docs.filter(F.col("doc_id") >= 150).write.mode("append") \
-        .parquet(land)
-    run_stream()
-
-    got = spark.read.parquet(out).toPandas() \
-        .sort_values("doc_id").reset_index(drop=True)
-    exp = pipe(docs).toPandas().sort_values("doc_id") \
-        .reset_index(drop=True)
-    assert len(got) == len(exp) > 0
-    assert got.equals(exp)
-
-
-def test_stream_survivors_bridge_doc_overkeeps_documented(spark,
-                                                          tmp_path):
-    # The documented append-only relaxation: a batch-3 doc C bridging
-    # two committed components (hamming(A,C) <= 3 and hamming(B,C)
-    # <= 3 while hamming(A,B) > 3) drops, but BOTH earlier survivors
-    # stay - the streamed set is a strict superset of the batch
-    # answer (which keeps only the min id of {A,B,C}), and never
-    # over-drops. The triple is found by a seeded search over token
-    # variants of one base text.
-    import itertools
-
-    import numpy as np
-    import pandas as pd
-
-    from geeflow_spark.operators import dedup
-    from geeflow_spark.streaming import survivors_stream
-
-    rng = np.random.default_rng(11)
-    vocab = [f"w{i}" for i in range(400)]
-    base = list(rng.choice(vocab, 30))
-    variants = [" ".join(base)]
-    for _ in range(60):
-        v = list(base)
-        for pos in rng.choice(30, rng.integers(1, 4), replace=False):
-            v[pos] = vocab[int(rng.integers(400))]
-        variants.append(" ".join(v))
-    sig_df = spark.createDataFrame(
-        pd.DataFrame({"i": range(len(variants)), "text": variants}))
-    sigs = {r["i"]: r["h"] for r in sig_df.select(
-        "i", dedup.simhash_udf(2)(F.col("text")).alias("h")).collect()}
-
-    def ham(a, b):
-        return bin((sigs[a] ^ sigs[b]) & ((1 << 64) - 1)).count("1")
-
-    triple = next(((a, b, c)
-                   for a, b, c in itertools.permutations(sigs, 3)
-                   if a < b and ham(a, b) > 3
-                   and ham(a, c) <= 3 and ham(b, c) <= 3), None)
-    assert triple is not None, "seeded search found no bridge triple"
-    a, b, c = triple
-
-    land = str(tmp_path / "landing")
-    state = str(tmp_path / "state")
-    out = str(tmp_path / "survivors")
-    ckpt = str(tmp_path / "ckpt")
-    params = dict(shingle_k=2, blocks=6, block_t=3, max_hamming=3)
-    filler = " ".join(rng.choice(vocab, 30))
-    batches = [[("docA", variants[a])],
-               [("docB", variants[b]), ("docF", filler)],
-               [("docC", variants[c])]]
-    schema = None
-    for rows in batches:
-        df = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["doc_id", "text"]))
-        schema = df.schema
-        df.coalesce(1).write.mode("append").parquet(land)
-        q = survivors_stream.start_survivors_stream(
-            spark.readStream.schema(schema).parquet(land),
-            state, out, ckpt, **params)
-        q.awaitTermination(120)
-
-    got = sorted(r["doc_id"] for r in
-                 spark.read.parquet(out).select("doc_id").collect())
-    assert got == ["docA", "docB", "docF"]  # C dropped, both kept
-
-    alldocs = spark.createDataFrame(pd.DataFrame(
-        [r for rows in batches for r in rows],
-        columns=["doc_id", "text"]))
-    pairs = spark.createDataFrame(pd.DataFrame(
-        {"a": ["docA", "docB"], "b": ["docC", "docC"]}))
-    batch_ans = sorted(
-        r["doc_id"] for r in
-        dedup.dedup_survivors(alldocs, pairs).select("doc_id")
-        .collect())
-    assert batch_ans == ["docA", "docF"]  # batch keeps only min id
-    assert set(batch_ans) <= set(got)     # over-keep, never over-drop
-    dedup.release_survivors_state()
-
-
-def test_stream_substring_dedup_cross_batch(spark, tmp_path):
-    # ExactSubstr on a stream: duplicated window runs SPAN batch
-    # boundaries (a late doc quoting an earlier batch's run must be
-    # cut), and with in-id-order delivery the streamed output equals
-    # batch substring_dedup over the union of all batches.
-    import numpy as np
-    import pandas as pd
-
-    from geeflow_spark.operators import dedup
-    from geeflow_spark.streaming import substring_stream
-
-    rng = np.random.default_rng(11)
-    vocab = [f"w{i}" for i in range(300)]
-    texts = {}
-    for i in range(36):
-        texts[f"doc{i:04d}"] = " ".join(rng.choice(vocab, 20))
-    # cross-batch quotes: batch-2 doc quotes a batch-1 run; batch-3
-    # doc quotes the BATCH-2 occurrence (already cut there - state
-    # membership must still cut the batch-3 copy); an exact
-    # within-batch-3 dup; a whole-doc short dup across batches.
-    run = texts["doc0003"].split()[4:12]          # 8-token run
-    texts["doc0014"] = " ".join(
-        texts["doc0014"].split()[:6] + run
-        + texts["doc0014"].split()[14:])
-    texts["doc0026"] = " ".join(run + texts["doc0026"].split()[8:])
-    texts["doc0030"] = texts["doc0029"]
-    texts["doc0007"] = "tiny short doc"
-    texts["doc0033"] = "tiny short doc"            # whole-doc window dup
-    ids = sorted(texts)
-    batches = [ids[:12], ids[12:24], ids[24:]]
-
-    land = str(tmp_path / "landing")
-    state = str(tmp_path / "state")
-    out = str(tmp_path / "clean")
-    ckpt = str(tmp_path / "ckpt")
-    base_ids = dedup._persistent_rdd_ids(spark.sparkContext)
-    schema = None
-    for b in batches:
-        pdf = pd.DataFrame({"doc_id": b, "text": [texts[i] for i in b]})
-        df = spark.createDataFrame(pdf)
-        schema = df.schema
-        df.coalesce(1).write.mode("append").parquet(land)
-        q = substring_stream.start_substring_stream(
-            spark.readStream.schema(schema).parquet(land),
-            state, out, ckpt, window=8)
-        q.awaitTermination(120)
-
-    got = {r["doc_id"]: r["text"]
-           for r in spark.read.parquet(out).collect()}
-    assert len(got) == len(ids)  # exactly-once, every doc emitted
-    alldocs = spark.createDataFrame(pd.DataFrame(
-        {"doc_id": ids, "text": [texts[i] for i in ids]}))
-    exp = {r["doc_id"]: r["text"]
-           for r in dedup.substring_dedup(alldocs, window=8,
-                                          metrics=False).collect()}
-    assert got == exp
-    # the planted cuts really happened
-    assert " ".join(run) not in got["doc0014"]
-    assert " ".join(run) not in got["doc0026"]
-    assert " ".join(run) in got["doc0003"]        # first keeper intact
-    assert got["doc0030"] == ""                    # exact dup emptied
-    assert got["doc0033"] == ""                    # cross-batch short dup
-    assert got["doc0007"] == "tiny short doc"
-    # no storage creep FROM THIS TEST: the per-batch occurrence
-    # checkpoints released (other suite tests may legitimately hold
-    # live state - assert no NEW ids, not a globally empty context).
-    # The expected-value computation above used the BATCH operator,
-    # whose r7 occurrence cache lives until the next call by contract
-    # (the minhash candidate-cache lifetime); sweep it first - the
-    # assertion is about the STREAM's checkpoint hygiene.
-    dedup.release_candidate_caches()
-    assert dedup._persistent_rdd_ids(spark.sparkContext) <= base_ids
-
-
-def test_stream_substring_dedup_out_of_order(spark, tmp_path):
-    # out-of-order delivery: first-ARRIVAL wins (doc0020 arrives in
-    # batch 1, the global-min doc0001 in batch 2) - the same run is
-    # cut the same number of times, only which copy survives differs
-    # from the batch answer.
-    import pandas as pd
-
-    from geeflow_spark.streaming import substring_stream
-
-    # distinct suffixes directly after the shared run, so only the
-    # pure run windows collide (a shared token at position 8 would
-    # extend the cut through the overlapping windows)
-    run = " ".join(f"t{i}" for i in range(8))
-    rows = {"doc0020": run + " twenty tailA",
-            "doc0001": run + " one tailB"}
-    land = str(tmp_path / "landing")
-    state = str(tmp_path / "state")
-    out = str(tmp_path / "clean")
-    ckpt = str(tmp_path / "ckpt")
-    schema = None
-    for b in (["doc0020"], ["doc0001"]):
-        pdf = pd.DataFrame({"doc_id": b, "text": [rows[i] for i in b]})
-        df = spark.createDataFrame(pdf)
-        schema = df.schema
-        df.coalesce(1).write.mode("append").parquet(land)
-        q = substring_stream.start_substring_stream(
-            spark.readStream.schema(schema).parquet(land),
-            state, out, ckpt, window=8)
-        q.awaitTermination(120)
-    got = {r["doc_id"]: r["text"]
-           for r in spark.read.parquet(out).collect()}
-    assert got["doc0020"] == rows["doc0020"]   # first arrival keeps
-    assert got["doc0001"] == "one tailB"       # later global-min cut
-
-
-def test_stream_substring_batch_replay_idempotent(spark, tmp_path):
-    # foreachBatch is at-least-once: invoke the batch body TWICE with
-    # the same batch_id (a crash between sink write and checkpoint
-    # commit replays the batch). The per-batch overwrite sinks and the
-    # own-partition state exclusion must yield identical output - no
-    # duplicate rows, and the replay must NOT see its own fingerprints
-    # as seen (which would cut the first keepers too).
-    import pandas as pd
-
-    from geeflow_spark.streaming import substring_stream
-
-    state = str(tmp_path / "state")
-    out = str(tmp_path / "clean")
-    fn = substring_stream.substring_foreach_batch(state, out, window=4)
-    run = "a b c d"
-    b1 = spark.createDataFrame(pd.DataFrame(
-        {"doc_id": ["d1", "d2"], "text": [run + " one", run + " two"]}))
-    fn(b1, 0)
-    first = {r["doc_id"]: r["text"]
-             for r in spark.read.parquet(out).collect()}
-    fn(b1, 0)  # replay
-    replay = [(r["doc_id"], r["text"])
-              for r in spark.read.parquet(out).collect()]
-    assert len(replay) == 2  # no duplicates appended
-    assert dict(replay) == first
-    assert first["d1"] == run + " one"  # first keeper NOT over-cut
-    assert first["d2"] == "two"
-    # a genuine second batch still sees batch-0 state
-    b2 = spark.createDataFrame(pd.DataFrame(
-        {"doc_id": ["d3"], "text": [run + " three"]}))
-    fn(b2, 1)
-    got = {r["doc_id"]: r["text"]
-           for r in spark.read.parquet(out).collect()}
-    assert got["d3"] == "three"
+    assert "stream_0.json" in os.listdir(out / "_manifest")
+    assert not (tmp_path / "file:").exists()

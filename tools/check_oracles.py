@@ -16,21 +16,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-TABLES = ("region nation customer supplier part orders lineitem events "
-          "documents embeddings").split()
-
-
-# ---------------------------------------------------------------------------
-# Pandas oracles for queries whose math is not SQL-expressible.
-# As of round 3 every battery query has a DuckDB SQL oracle (the former
-# pandas-oracled four became SQL-recomputable: S2 encode and the UTM
-# Snyder series were ported to SQL, minhash pairs are checked against
-# exact all-pairs Jaccard, and the simhash battery query switched to the
-# md5 hash family which DuckDB can replay end-to-end). This registry
-# remains for any future query whose math cannot reach SQL.
-# ---------------------------------------------------------------------------
-
-PANDAS_ORACLES: dict = {}
+# The tables the oracles read.
+TABLES = ("documents", "events")
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -45,46 +32,34 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
-def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    from geeflow_spark.session import get_spark
-    import __spark_entry__ as entrymod
-
-    spark = get_spark("oracle-check")
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per oracle table of `sf_dir`."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
                     f"'{sf_dir}/{t}.parquet'")
+    return con
+
+
+def check(spark, con, sf_dir: str, names) -> list[str]:
+    """Runs the named queries() entries on Spark and their oracle_sql()
+    on `con`, printing one line per query; returns the names that
+    failed."""
+    import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    for name in names:
         try:
-            got = fn(spark, sf_dir).toPandas()
+            got = qs[name](spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"[SPARK-FAIL] {name}: {e}")
             failures.append(name)
             continue
         if name not in oracles:
-            if name in PANDAS_ORACLES:
-                exp = PANDAS_ORACLES[name](sf_dir)
-                g, e = canon(got), canon(exp)
-                if list(g.columns) == list(e.columns) and g.equals(e):
-                    print(f"[OK-PANDAS ] {name}: {len(g)} rows")
-                else:
-                    print(f"[PANDAS-DIFF] {name}: spark {len(g)} rows "
-                          f"{list(g.columns)} vs oracle {len(e)} rows "
-                          f"{list(e.columns)}")
-                    failures.append(name)
-            else:
-                print(f"[ROWS-ONLY ] {name}: {len(got)} rows, "
-                      f"cols={sorted(got.columns)}")
+            print(f"[ROWS-ONLY ] {name}: {len(got)} rows, "
+                  f"cols={sorted(got.columns)}")
             continue
         try:
             exp = con.execute(oracles[name]).df()
@@ -110,6 +85,20 @@ def main():
             failures.append(name)
             continue
         print(f"[OK        ] {name}: {len(g)} rows")
+    return failures
+
+
+def main():
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = sys.argv[2:]
+
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+    from geeflow_spark.session import get_spark
+    import __spark_entry__ as entrymod
+
+    spark = get_spark("oracle-check")
+    failures = check(spark, connect(sf_dir), sf_dir,
+                     only or list(entrymod.queries()))
 
     # entry smoke
     if not only:

@@ -29,12 +29,6 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLE_WIDTHS = {
-    "documents": 4, "embeddings": 2, "events": 6, "lineitem": 16,
-    "orders": 9, "customer": 8, "part": 9, "region": 3, "nation": 4,
-    "supplier": 7,
-}
-
 
 def audit_plan(df) -> dict:
     buf = io.StringIO()
