@@ -13,7 +13,7 @@ materialized ONCE per document: the chunk-index explode runs on a row
 that already carries the split array, so per-chunk slicing references
 a bound column, not a re-evaluated split expression (the interpreted
 re-evaluation trap measured 10x on rolling fingerprints - see
-functions/text.rolling_fingerprints).
+dedup.shingle_hashes_col).
 """
 
 from __future__ import annotations

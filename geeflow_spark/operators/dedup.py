@@ -994,9 +994,9 @@ def containment_pairs(df: DataFrame, threshold: float = 0.5,
                       spread: int | None = None) -> DataFrame:
     """Directional CONTAINMENT pairs (a, b, containment): the fraction
     of doc a's distinct rolling word-window fingerprints
-    (functions/text.rolling_fingerprints - the winnowing-style shingle
-    fingerprint set) that also occur in doc b, for every ordered pair
-    with containment >= threshold.
+    (`_horner_window_fps` over lowercased token hashes - the
+    winnowing-style shingle fingerprint set) that also occur in doc b,
+    for every ordered pair with containment >= threshold.
 
     This is the dedup signal symmetric Jaccard structurally misses: a
     short document quoted whole inside a long one has near-1.0
@@ -1021,7 +1021,7 @@ def containment_pairs(df: DataFrame, threshold: float = 0.5,
     shared-window counts then partial-aggregate on (a, b).
 
     Exactness: fingerprints are the minhash-family polynomial fold of
-    per-token xxhash64s (functions/text.rolling_fingerprints),
+    per-token xxhash64s (`_horner_window_fps`),
     injective on window token sequences up to 64-bit collisions (the
     minhash_duplicate_pairs verify argument), so containment over
     fingerprint SETS equals containment over window-string sets; the
@@ -1266,7 +1266,7 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
     pass: fingerprint -> explode -> semi-join -> distinct contaminated
     ids -> anti-join back (contaminated ids are a small fraction at
     real contamination rates; that join is left to AQE). Fingerprints
-    are the rolling-window fold (functions/text.rolling_fingerprints)
+    are the rolling-window fold (`_horner_window_fps`)
     - exact n-gram equality up to 64-bit collisions; empty/whitespace
     docs have no fingerprints and always survive.
 

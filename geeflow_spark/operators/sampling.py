@@ -179,7 +179,7 @@ def shuffle_rank(df: DataFrame, key_col: str = "doc_id", seed: int = 0,
     # ReusedExchange instead of re-deriving the input) was measured
     # and REJECTED: under AQE the broadcast offsets stage serializes
     # behind the exchange materialization and every measured
-    # composition (standalone, corpus_e2e, corpus_e2e_clean) was
+    # composition (standalone and inside the composed corpus chains) was
     # slower than this two-evaluation form, whose counts branch is a
     # narrow column-pruned pass.
     counts = d.groupBy("_b").agg(F.count("*").alias("_c"))

@@ -4,13 +4,12 @@ The repetition family of quality signals (duplicate-word and
 duplicate-n-gram fractions, most-frequent-term share) is the standard
 web-pipeline filter for machine-generated / boilerplate pages whose
 length and punctuation look fine but whose content loops. These are
-DataFrame-level operators (they need a per-(doc, term) aggregation),
-complementing the per-row Column functions in functions/text.py.
+DataFrame-level operators (they need a per-(doc, term) aggregation).
 
-Not in the reference (an LLM-data-pipeline extension, like
-functions/text.py); the closest reference analog is the corpus-level
-counter statistics (utils/stats.py CounterAccumulator), which count
-values per COLUMN, not terms per DOCUMENT.
+Not in the reference (an LLM-data-pipeline extension); the closest
+reference analog is the corpus-level counter statistics
+(utils/stats.py CounterAccumulator), which count values per COLUMN,
+not terms per DOCUMENT.
 
 Scale design (100 TB lens): everything is JVM-side.
 

@@ -40,6 +40,15 @@ def get_spark(app_name: str = "geeflow-spark",
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # NOTE (r7): spark.sql.files.minPartitionNum was evaluated for
+        # scan parallelism on the small test tables and rejected: the
+        # test parquet files hold ONE row group, so extra splits are
+        # empty (63 of 64 tasks read nothing) while the inflated
+        # partition COUNT defeats the _spread "only widen
+        # under-partitioned inputs" heuristic the operators rely on.
+        # Under-partitioned inputs are widened explicitly at the query
+        # entry points instead (dedup._spread - a no-op on any real
+        # at-scale table).
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -49,9 +58,8 @@ def get_spark(app_name: str = "geeflow-spark",
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
-        # sources/synth's splitmix64 column arithmetic (_splitmix64_cols,
-        # reached through _uniform) wraps on 64-bit overflow, which needs
-        # non-ANSI overflow semantics.
+        # Wrapping 64-bit integer arithmetic (splitmix64 mixing, hash-derived
+        # columns) requires non-ANSI overflow semantics.
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.ui.enabled", "false")
     )

@@ -1,8 +1,8 @@
 """Long-lived-session cache audit (round-6 brief item 6).
 
-The engine keeps three bounded session caches: the minhash candidate
-cache, the session IVF index, and the survivors drop-list checkpoints
-(CC round checkpoints are released inside the loop). A long-lived
+The engine keeps bounded session caches: the minhash candidate cache
+and the survivors drop-list checkpoints (CC round checkpoints are
+released inside the loop). A long-lived
 session (a notebook, a streaming driver, a multi-tenant Thrift server)
 must be able to run the WHOLE battery repeatedly without executor
 storage creeping: after each full pass + the documented release calls,
@@ -13,15 +13,11 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def _release_all(spark):
-    from geeflow_spark.operators import dedup, similarity
-    from geeflow_spark.plans import corpus
+    from geeflow_spark.operators import dedup
     dedup.release_candidate_caches()
     dedup.release_survivors_state()
     dedup.release_component_labels()
     dedup.release_decontaminate_state()
-    similarity.release_session_index()
-    similarity.release_probe_state()
-    corpus.release_pipeline_caches()
     spark.catalog.clearCache()
 
 

@@ -2,7 +2,8 @@
 
 Each engine kernel that a battery query relies on has a pure-SQL twin
 (DuckDB) that must match bit-for-bit: the S2 cell encode
-(s2.cell_sql_query) and the UTM tile origin (utm.tile_origin_sql_query).
+(s2.cell_sql_query), the UTM tile origin (utm.tile_origin_sql_query),
+and the md5-family token hash used by the SQL-verifiable simhash.
 These tests sweep adversarial inputs well beyond the gate data.
 """
 
@@ -10,8 +11,10 @@ import duckdb
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from geeflow_spark.functions import s2, utm
+from geeflow_spark.operators import dedup
 
 
 @pytest.mark.parametrize("level", [3, 5, 8, 12])
@@ -56,3 +59,94 @@ def test_utm_tile_sql_matches_numpy():
     assert (got["utm_zone"].to_numpy() == zone).all()
     assert (got["tile_x"].to_numpy() == x0).all()
     assert (got["tile_y"].to_numpy() == y0).all()
+
+
+def test_md5_token_hashes_match_hashlib(spark):
+    import hashlib
+    texts = ["hello world", "  padded   tokens  ", "", "ß ünïcode ☃",
+             "single"]
+    df = spark.createDataFrame(pd.DataFrame({"text": texts}))
+    got = df.select(dedup.md5_token_hashes_col(F.col("text"))
+                    .alias("h")).toPandas()["h"].tolist()
+    for t, hs in zip(texts, got):
+        toks = t.split()
+        exp = []
+        for tok in toks:
+            u = int(hashlib.md5(tok.encode()).hexdigest()[:16], 16)
+            exp.append(u - (1 << 64) if u >= (1 << 63) else u)
+        assert list(hs) == exp
+
+
+def test_simhash_md5_family_matches_recompute(spark):
+    import hashlib
+    base = "alpha beta gamma delta epsilon zeta eta theta " * 3
+    texts = [base, base.replace("zeta", "zz"), "one", ""]
+    df = spark.createDataFrame(pd.DataFrame({"text": texts}))
+    got = df.select(dedup.simhash_udf(2, hash_family="md5")(F.col("text"))
+                    .alias("h")).toPandas()["h"].tolist()
+    POLY = np.uint64(0x100000001B3)
+    shifts = np.arange(64, dtype=np.uint64)
+    for t, g in zip(texts, got):
+        toks = t.split()
+        th = np.array(
+            [np.uint64(int(hashlib.md5(x.encode()).hexdigest()[:16], 16))
+             for x in toks], dtype=np.uint64)
+        if len(th) == 0:
+            assert int(g) == 0
+            continue
+        sh = th[:-1] * POLY + th[1:] if len(th) >= 2 else th
+        sh = np.unique(sh)
+        bits = ((sh[:, None] >> shifts[None, :])
+                & np.uint64(1)).astype(np.int64)
+        sums = (2 * bits - 1).sum(axis=0)
+        exp = int(((sums > 0).astype(np.uint64)
+                   << shifts).sum().astype(np.int64))
+        assert int(g) == exp
+
+
+def test_max_bucket_caps_hot_buckets(spark):
+    # 30 copies of one template (a degenerate hot bucket) + one true
+    # near-dup pair elsewhere. With max_bucket=8 the template bucket's
+    # O(n^2) pair explosion is dropped; the small pair survives.
+    template = "spam spam spam wonderful spam baked beans and spam " * 3
+    base = ("the quiet library holds many unusual maps of old coastlines "
+            "drawn by careful sailors who charted every hidden reef")
+    near = base.replace("reef", "shoal")  # 3 of ~18 shingles differ
+    pdf = pd.DataFrame({
+        "doc_id": list(range(100, 130)) + [1, 2],
+        "text": [template] * 30 + [base, near]})
+    out = dedup.minhash_duplicate_pairs(
+        spark.createDataFrame(pdf), num_perm=64, bands=16,
+        verify_jaccard=0.5, max_bucket=8).toPandas()
+    pairs = set(map(tuple, out[["a", "b"]].itertuples(index=False)))
+    assert pairs == {(1, 2)}
+    # uncapped: the template copies all pair up
+    out2 = dedup.minhash_duplicate_pairs(
+        spark.createDataFrame(pdf), num_perm=64, bands=16,
+        verify_jaccard=0.5, max_bucket=None).toPandas()
+    assert len(out2) == 30 * 29 // 2 + 1
+    # simhash analog
+    out3 = dedup.simhash_candidate_pairs(
+        spark.createDataFrame(pdf), bands=16, max_hamming=15,
+        max_bucket=8).toPandas()
+    assert set(map(tuple, out3[["a", "b"]].itertuples(index=False))) \
+        == {(1, 2)}
+
+
+def test_spread_is_result_invariant(spark):
+    # `spread` repartitions before the signature stage; results must be
+    # identical regardless (guards against any shuffle-order dependence
+    # sneaking into the vectorized folds / bucket emission).
+    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    base = dedup.minhash_duplicate_pairs(
+        d, num_perm=64, bands=16, verify_jaccard=0.6, spread=None) \
+        .toPandas().sort_values(["a", "b"]).reset_index(drop=True)
+    wide = dedup.minhash_duplicate_pairs(
+        d, num_perm=64, bands=16, verify_jaccard=0.6, spread=16) \
+        .toPandas().sort_values(["a", "b"]).reset_index(drop=True)
+    pd.testing.assert_frame_equal(base, wide)
+    s1 = dedup.simhash_candidate_pairs(d, hash_family="md5", spread=None) \
+        .toPandas().sort_values(["a", "b"]).reset_index(drop=True)
+    s2_ = dedup.simhash_candidate_pairs(d, hash_family="md5", spread=16) \
+        .toPandas().sort_values(["a", "b"]).reset_index(drop=True)
+    pd.testing.assert_frame_equal(s1, s2_)

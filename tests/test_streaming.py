@@ -83,3 +83,126 @@ def test_stream_manifest_file_uri(spark, tmp_path, monkeypatch):
 
     assert "stream_0.json" in os.listdir(out / "_manifest")
     assert not (tmp_path / "file:").exists()
+
+
+def test_stream_dedup_builtin_across_batches(spark, tmp_path):
+    import pandas as pd
+    from geeflow_spark.streaming import dedup_stream
+    land = str(tmp_path / "dl")
+    out = str(tmp_path / "dout")
+    ckpt = str(tmp_path / "dckpt")
+    b1 = pd.DataFrame({"doc_id": [1, 2, 3],
+                       "text": ["alpha text", "beta text", "alpha  TEXT"]})
+    spark.createDataFrame(b1).write.mode("overwrite").parquet(land)
+    schema = spark.read.parquet(land).schema
+
+    def run():
+        s = spark.readStream.schema(schema).parquet(land)
+        d = dedup_stream.dedup_stream_builtin(s)
+        return (d.writeStream.format("parquet")
+                .option("path", out).option("checkpointLocation", ckpt)
+                .trigger(availableNow=True).start())
+
+    run().awaitTermination(120)
+    got1 = spark.read.parquet(out).toPandas()
+    # alpha/ALPHA normalize equal -> one survivor
+    assert len(got1) == 2
+
+    # Batch 2: duplicate of batch-1 text arrives later + one new text.
+    b2 = pd.DataFrame({"doc_id": [4, 5],
+                       "text": ["ALPHA text", "gamma text"]})
+    spark.createDataFrame(b2).write.mode("append").parquet(land)
+    run().awaitTermination(120)
+    got2 = spark.read.parquet(out).toPandas()
+    # cross-batch state: the late alpha duplicate is dropped
+    assert len(got2) == 3
+    assert sorted(got2["text"].str.lower().str.split().str[0]) \
+        == ["alpha", "beta", "gamma"]
+
+
+def test_stream_seen_counts_stateful(spark, tmp_path):
+    import pandas as pd
+    from geeflow_spark.streaming import dedup_stream
+    land = str(tmp_path / "sl")
+    ckpt = str(tmp_path / "sckpt")
+    out = str(tmp_path / "sout")
+    ts = pd.Timestamp("2024-01-01")
+    b1 = pd.DataFrame({"doc_id": [1, 2, 3],
+                       "text": ["xx yy", "zz ww", "xx  YY"],
+                       "ts": [ts, ts, ts + pd.Timedelta(minutes=1)]})
+    spark.createDataFrame(b1).write.mode("overwrite").parquet(land)
+    schema = spark.read.parquet(land).schema
+
+    def run():
+        s = spark.readStream.schema(schema).parquet(land)
+        d = dedup_stream.seen_counts_stream(s)
+        # update-mode stateful op -> foreachBatch append sink
+        def sink(batch_df, batch_id):
+            batch_df.write.mode("append").parquet(out)
+        return (d.writeStream.foreachBatch(sink)
+                .option("checkpointLocation", ckpt)
+                .outputMode("update")
+                .trigger(availableNow=True).start())
+
+    run().awaitTermination(120)
+    # Batch 2: two more of the 'xx yy' digest.
+    b2 = pd.DataFrame({"doc_id": [4, 5],
+                       "text": ["XX yy", "xx yy"],
+                       "ts": [ts + pd.Timedelta(hours=1)] * 2})
+    spark.createDataFrame(b2).write.mode("append").parquet(land)
+    run().awaitTermination(120)
+    got = spark.read.parquet(out).toPandas()
+    # state carried across micro-batches: latest emission for the xx-yy
+    # digest counts all 4 occurrences with the batch-1 first_ts
+    top = got.sort_values("n_seen").iloc[-1]
+    assert top["n_seen"] == 4
+    assert pd.Timestamp(top["first_ts"]) == ts
+
+
+def test_stream_corpus_filter_pipeline_matches_batch(spark, tmp_path):
+    # The stateless corpus-pipeline ops (stratified sampling + Gopher
+    # flags + containment fingerprints are row-local) compose directly
+    # onto the streaming tail: a readStream through
+    # stratified_sample + gopher_quality_flags must emit exactly the
+    # batch answer, incrementally, exactly once.
+    import pandas as pd
+    from geeflow_spark.operators import sampling, text_metrics
+
+    land = str(tmp_path / "landing")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    words = "the quick brown fox and that dog have fun with all of it"
+    pdf = pd.DataFrame({
+        "doc_id": range(300),
+        "lang": [("en", "de", "fr")[i % 3] for i in range(300)],
+        "text": [(words + " ") * (2 + i % 5) for i in range(300)],
+    })
+    docs = spark.createDataFrame(pdf)
+    docs.filter(F.col("doc_id") < 150).write.mode("overwrite") \
+        .parquet(land)
+
+    def pipe(df):
+        s = sampling.stratified_sample(
+            df, {"en": 1.0, "de": 0.5}, strata_col="lang",
+            default_fraction=0.25, seed=3)
+        return text_metrics.gopher_quality_flags(s, min_words=30) \
+            .select("doc_id", "n_words", "gopher_pass")
+
+    def run_stream():
+        st = (spark.readStream.schema(docs.schema).parquet(land))
+        q = (pipe(st).writeStream.format("parquet")
+             .option("path", out).option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+
+    run_stream()
+    docs.filter(F.col("doc_id") >= 150).write.mode("append") \
+        .parquet(land)
+    run_stream()
+
+    got = spark.read.parquet(out).toPandas() \
+        .sort_values("doc_id").reset_index(drop=True)
+    exp = pipe(docs).toPandas().sort_values("doc_id") \
+        .reset_index(drop=True)
+    assert len(got) == len(exp) > 0
+    assert got.equals(exp)
