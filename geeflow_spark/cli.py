@@ -12,7 +12,8 @@ Subcommands:
     generate  - flagship pipeline: docs -> spatial join -> tiles -> split,
                 resumable via per-partition manifests (plans.checkpoint);
                 ends with one JSON summary line.
-    rasters   - tile assignment + mosaic (export_rasters path).
+    rasters   - tile assignment + mosaic (export_rasters path); ends
+                with one JSON summary line.
     stats     - per-band stats JSON (compute_stats path).
     package   - build the --py-files zip.
 """
@@ -72,6 +73,7 @@ def _cmd_generate(args) -> None:
 
 def _cmd_rasters(args) -> None:
     import json
+    import time
 
     from geeflow_spark.operators import raster_export, tiles
     from geeflow_spark.session import get_spark
@@ -80,11 +82,20 @@ def _cmd_rasters(args) -> None:
     plots = spark.read.parquet(args.plots)
     zone_bboxes = json.loads(args.zone_bboxes)
     assigned = tiles.assign_tiles(plots, zone_bboxes=zone_bboxes,
+                                  cell_size=args.cell_size,
                                   num_splits=args.num_splits)
     rasters = raster_export.mosaic_assigned_tiles(
-        assigned, zone_bboxes=zone_bboxes, num_splits=args.num_splits,
-        pred_c=args.channels, border_mode=args.border_mode)
-    rasters.write.mode("overwrite").parquet(args.out)
+        assigned, zone_bboxes=zone_bboxes, cell_size=args.cell_size,
+        num_splits=args.num_splits, pred_c=args.channels,
+        border_mode=args.border_mode)
+    t0 = time.monotonic()
+    per_zone = raster_export.write_rasters(rasters, args.out,
+                                           list(zone_bboxes))
+    wall_s = time.monotonic() - t0
+    print(json.dumps({"cmd": "rasters", "out": args.out,
+                      "rasters": per_zone,
+                      "total_rasters": sum(per_zone.values()),
+                      "wall_s": round(wall_s, 3)}))
     spark.stop()
 
 
@@ -119,6 +130,8 @@ def main(argv=None):
                    help='JSON {"32T": [x0, y0, x1, y1], ...}')
     r.add_argument("--out", required=True)
     r.add_argument("--num-splits", type=int, default=4)
+    r.add_argument("--cell-size", type=float, default=10.0,
+                   help="raster cell size in metres")
     r.add_argument("--channels", type=int, default=2)
     r.add_argument("--border-mode", default="uniform_avg")
 

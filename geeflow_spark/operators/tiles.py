@@ -84,16 +84,23 @@ def assign_tiles(plots: DataFrame, *, zone_bboxes: dict,
     worklist, small, embedded as literals (the reference reads it on the
     master, export_rasters.py:97-101).
     """
-    spark = plots.sparkSession
-    rows = []
+    x_map, y_map = [], []
     for zone, (x0, y0, x1, y1) in zone_bboxes.items():
         xsb, ysb = get_split_boundaries(x0, y0, x1, y1, plot_size_m,
                                         num_splits)
-        rows.append((zone, xsb, ysb))
-    bounds = spark.createDataFrame(
-        rows, "utm_zone string, x_splits array<double>, y_splits array<double>")
+        x_map += [F.lit(zone), F.array(*map(F.lit, xsb))]
+        y_map += [F.lit(zone), F.array(*map(F.lit, ysb))]
 
-    df = plots.join(F.broadcast(bounds), "utm_zone", "inner")
+    # Per-zone boundaries come from literal maps keyed by zone, with the
+    # inner-join semantics of the zone worklist (unlisted or null zones
+    # dropped). A joined table of the worklist would be built from Python
+    # rows: one more Spark job per query, run in Python workers.
+    bounds_type = "map<string,array<double>>"
+    zone = F.col("utm_zone")
+    df = plots.filter(zone.isin(list(zone_bboxes))).select(
+        zone, *[c for c in plots.columns if c != "utm_zone"],
+        F.create_map(*x_map).cast(bounds_type)[zone].alias("x_splits"),
+        F.create_map(*y_map).cast(bounds_type)[zone].alias("y_splits"))
 
     # Home split: (first index with boundary > coord) - 1
     # (export_rasters.py:255-256). With uniform interior boundaries this is

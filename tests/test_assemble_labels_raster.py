@@ -248,3 +248,158 @@ def test_mosaic_post_ops():
     v = out[mask]
     np.testing.assert_allclose(v[:, 0] + v[:, 1], 1.0)  # normalized
     assert set(np.unique(v[:, 2])) == {2.0}  # argmax 1 + shift 1
+
+
+def _mosaic_split_loop(plots, *, x_lo, x_hi, y_lo, y_hi, cell_size,
+                       plot_size_m, pred_h, pred_w, pred_c,
+                       border_mode="uniform_avg", normalize=False,
+                       clip_min=None, clip_max=None,
+                       discretization_factor=None, add_argmax=False,
+                       shift_argmax=0):
+    """Oracle for `raster_export.mosaic_split`: the per-plot, per-row
+    loop it replaced, in the same plot-major summation order."""
+    height = int(round((y_hi - y_lo) / cell_size))
+    width = int(round((x_hi - x_lo) / cell_size))
+    acc = np.zeros((height, width, pred_c))
+    wacc = np.zeros((height, width))
+    filled = np.zeros((height, width), dtype=bool)
+    weights = raster_export._plot_weights(pred_h, pred_w, border_mode)
+    half = plot_size_m // 2
+    grouped = plots.groupby(["utm_x", "utm_y", "dx", "dy"], sort=True)
+    for (xp, yp, dx, dy), grp in grouped:
+        t = np.mean([np.asarray(v, dtype=np.float64).reshape(
+            pred_h, pred_w, pred_c) for v in grp["tensor"]], axis=0)
+        x_start = xp + dx * cell_size - half
+        y_end = yp - dy * cell_size + half
+        y_start = y_end - pred_h * cell_size
+        col0 = int(round((x_start - x_lo) / cell_size))
+        row0 = int(round((y_start - y_lo) / cell_size))
+        for r in range(pred_h):
+            rr = row0 + (pred_h - 1 - r)
+            if rr < 0 or rr >= height:
+                continue
+            c0, c1 = max(0, col0), min(width, col0 + pred_w)
+            if c0 >= c1:
+                continue
+            tc0, tc1 = c0 - col0, c1 - col0
+            if border_mode == "none":
+                acc[rr, c0:c1] = t[r, tc0:tc1]
+                wacc[rr, c0:c1] = 1.0
+            elif border_mode == "any":
+                new = ~filled[rr, c0:c1]
+                acc[rr, c0:c1][new] = t[r, tc0:tc1][new]
+                wacc[rr, c0:c1][new] = 1.0
+            else:
+                wrow = weights[r, tc0:tc1]
+                acc[rr, c0:c1] += t[r, tc0:tc1] * wrow[:, None]
+                wacc[rr, c0:c1] += wrow
+            filled[rr, c0:c1] = True
+
+    mask = wacc > 0
+    out = np.zeros_like(acc)
+    if border_mode in ("none", "any"):
+        out[mask] = acc[mask]
+    else:
+        out[mask] = acc[mask] / wacc[mask][:, None]
+    if normalize:
+        s = out.sum(axis=-1, keepdims=True)
+        np.divide(out, s, out=out, where=s != 0)
+    if clip_min is not None or clip_max is not None:
+        out = np.clip(out, clip_min, clip_max)
+    if discretization_factor:
+        out = np.round(out * discretization_factor)
+    if add_argmax:
+        am = out.argmax(axis=-1)[..., None].astype(np.float64) + shift_argmax
+        out = np.concatenate([out, am], axis=-1)
+    return out, mask
+
+
+def _random_split_plots(rng, n, *, x_lo, y_lo, width, height, cell,
+                        plot_size_m, pred_h, pred_w, pred_c):
+    # Anchors reach a plot's extent past every edge, so some plots land
+    # partly or fully outside the split; a fifth of the rows repeat the
+    # key of one of the first few rows with their own tensor, so some
+    # keys average three or more tensors.
+    pad = plot_size_m + max(pred_h, pred_w) * cell
+    xs = x_lo - pad + rng.uniform(0, width * cell + 2 * pad, n)
+    ys = y_lo - pad + rng.uniform(0, height * cell + 2 * pad, n)
+    # Snap to a 1/4-cell grid: placements hit exact rounding ties and
+    # overlapping plots share pixels.
+    xs = np.round(xs / (cell / 4)) * (cell / 4)
+    ys = np.round(ys / (cell / 4)) * (cell / 4)
+    pdf = pd.DataFrame({"utm_x": xs, "utm_y": ys,
+                        "dx": rng.integers(-1, 2, n),
+                        "dy": rng.integers(-1, 2, n)})
+    if n > 1:
+        dup = rng.random(n) < 0.2
+        src = rng.integers(0, max(1, n // 10), n)
+        pdf.loc[dup, ["utm_x", "utm_y", "dx", "dy"]] = \
+            pdf.loc[src[dup], ["utm_x", "utm_y", "dx", "dy"]].to_numpy()
+    # float64 values, so sums in another order round differently
+    pdf["tensor"] = list(rng.uniform(-1, 1, (n, pred_h * pred_w * pred_c)))
+    return pdf
+
+
+@pytest.mark.parametrize("border_mode", raster_export.BORDER_MODES)
+@pytest.mark.parametrize("post_ops", [
+    {},
+    {"normalize": True, "clip_min": 0.05, "clip_max": 0.9,
+     "discretization_factor": 7, "add_argmax": True, "shift_argmax": 1},
+])
+def test_mosaic_split_matches_loop_oracle(border_mode, post_ops):
+    """The array kernel equals the per-plot loop bit for bit."""
+    rng = np.random.default_rng(
+        7 + raster_export.BORDER_MODES.index(border_mode))
+    cases = [(10.0, 960.0, (4, 4, 2)), (7.5, 960.0, (3, 5, 2)),
+             (240.0, 960.0, (5, 5, 3)), (1920.0, 960.0, (1, 1, 1)),
+             (10.0, 30.0, (2, 6, 1))]
+    for cell, plot_size_m, (h, w, c) in cases:
+        for n in (0, 1, 5, 40):
+            width, height = rng.integers(3, 40, 2)
+            x_lo, y_lo = 300_000.0, 1_100_000.0
+            pdf = _random_split_plots(
+                rng, n, x_lo=x_lo, y_lo=y_lo, width=width, height=height,
+                cell=cell, plot_size_m=plot_size_m, pred_h=h, pred_w=w,
+                pred_c=c)
+            kw = dict(x_lo=x_lo, x_hi=x_lo + width * cell, y_lo=y_lo,
+                      y_hi=y_lo + height * cell, cell_size=cell,
+                      plot_size_m=plot_size_m, pred_h=h, pred_w=w,
+                      pred_c=c, border_mode=border_mode, **post_ops)
+            got, got_mask = raster_export.mosaic_split(pdf, **kw)
+            exp, exp_mask = _mosaic_split_loop(pdf, **kw)
+            where = f"cell={cell} shape={(h, w, c)} n={n}"
+            assert np.array_equal(got_mask, exp_mask), where
+            assert np.array_equal(got, exp), where
+            assert got.dtype == exp.dtype and got.tobytes() == exp.tobytes()
+
+
+def test_mosaic_one_task_per_split(spark):
+    """The grouping exchange is an explicit hash repartition on the split
+    key with one partition per split, capped at one per two cores."""
+    import re
+    import warnings
+
+    assigned, zb = _assigned(spark, n=200)
+    zb = {"32T": zb["32T"], "18N": zb["32T"]}
+    assigned = assigned.withColumn(
+        "utm_zone", F.when(F.col("id") % 2 == 0, "32T").otherwise("18N"))
+    with warnings.catch_warnings():
+        # no "Cannot infer the eval type from type hints" per call
+        warnings.simplefilter("error", UserWarning)
+        out = raster_export.mosaic_assigned_tiles(
+            assigned, zone_bboxes=zb, num_splits=4, pred_c=2)
+    rows = out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    below = final.split("FlatMapGroupsInPandas", 1)[1]
+    exchanges = [ln for ln in below.splitlines()
+                 if "Exchange " in ln and "BroadcastExchange" not in ln]
+    n_parts = min(2 * 4 ** 2,
+                  max(1, spark.sparkContext.defaultParallelism // 2))
+    assert len(exchanges) == 1, final
+    assert re.search(r"Exchange hashpartitioning\(utm_zone#\d+, xs#\d+, "
+                     rf"ys#\d+, {n_parts}\)", exchanges[0]), exchanges[0]
+    splits = {tuple(r) for r in
+              assigned.select("utm_zone", "xs", "ys").distinct().collect()}
+    keys = [(r["utm_zone"], r["xs"], r["ys"]) for r in rows]
+    assert len(splits) > 4 and sorted(keys) == sorted(splits)

@@ -271,6 +271,84 @@ def test_cli_generate_summary_line(spark, tmp_path, monkeypatch, capsys):
             again["total_rows"]) == (0, 3, 0)
 
 
+def _cli_raster_plots(spark, path, n=400):
+    # benchmark-shaped plots: two zones over one 960 km bbox, 4x4x2 preds
+    synth.cells_metadata(spark, n).join(
+        synth.predictions(spark, n, 4, 4, 2), "id").write.parquet(path)
+    x0, y0, span = 200_000.0, 1_000_000.0, 99_999 * 9.6
+    bb = [x0, y0, x0 + span, y0 + span]
+    return {"32T": bb, "18N": bb}
+
+
+def _raster_rows(df):
+    return sorted((r["utm_zone"], r["xs"], r["ys"], tuple(r["geotransform"]),
+                   tuple(r["raster"]), tuple(r["mask"]))
+                  for r in df.collect())
+
+
+def test_cli_rasters_cell_size(spark, tmp_path, monkeypatch):
+    # `cli rasters --cell-size` reaches both tile assignment and the
+    # mosaic: the CLI writes the rows of the library call at that size.
+    import json
+
+    from pyspark.sql import SparkSession
+
+    from geeflow_spark import cli
+    from geeflow_spark.operators import raster_export, tiles
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    plots, out = str(tmp_path / "plots"), str(tmp_path / "out")
+    zb = _cli_raster_plots(spark, plots)
+    cli.main(["rasters", "--plots", plots, "--zone-bboxes", json.dumps(zb),
+              "--out", out, "--cell-size", "1920"])
+    assigned = tiles.assign_tiles(spark.read.parquet(plots), zone_bboxes=zb,
+                                  cell_size=1920.0, num_splits=4)
+    exp = raster_export.mosaic_assigned_tiles(
+        assigned, zone_bboxes=zb, cell_size=1920.0, num_splits=4, pred_c=2)
+    got = _raster_rows(spark.read.parquet(out))
+    assert got and got == _raster_rows(exp)
+    assert {r[3][1] for r in got} == {1920.0}
+
+
+def test_cli_rasters_summary_line(spark, tmp_path, monkeypatch, capsys):
+    # `cli rasters` ends with one JSON summary line whose per-zone counts
+    # come from the write job; that job carries the layer description and
+    # the caller's description is restored afterwards.
+    import json
+
+    from pyspark.sql import SparkSession
+
+    from geeflow_spark import cli
+    from geeflow_spark.operators import raster_export
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    plots, out = str(tmp_path / "plots"), str(tmp_path / "out")
+    zb = _cli_raster_plots(spark, plots)
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def jobs():
+        seq = store.jobsList(None)
+        return [seq.apply(i) for i in range(seq.size())]
+
+    jobs_before = {j.jobId() for j in jobs()}
+    sc.setJobDescription("caller")
+    try:
+        cli.main(["rasters", "--plots", plots, "--zone-bboxes",
+                  json.dumps(zb), "--out", out, "--cell-size", "1920"])
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    got = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    back = spark.read.parquet(out).groupBy("utm_zone").count().collect()
+    assert got["cmd"] == "rasters" and got["out"] == out
+    assert got["rasters"] == {r["utm_zone"]: r["count"] for r in back}
+    assert set(got["rasters"]) == set(zb)
+    assert got["total_rasters"] == sum(got["rasters"].values()) == 32
+    assert got["wall_s"] > 0
+    descs = {j.description().get() for j in jobs()
+             if j.jobId() not in jobs_before and j.description().isDefined()}
+    assert raster_export.WRITE_JOB_DESCRIPTION in descs
+
+
 def test_exact_dedup_hash_collision_safe(spark):
     # Force a first-digest collision via an injected constant hasher:
     # the second independent digest must keep distinct texts apart.

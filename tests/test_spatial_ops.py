@@ -94,6 +94,30 @@ def test_tile_boundary_multi_assignment(spark):
         set((r.xs, r.ys) for r in exp.itertuples())
 
 
+def test_tile_assignment_zone_worklist(spark):
+    # Plots of unlisted or null zones are dropped, as the reference skips
+    # zones outside its worklist; the boundaries are literals, so the plan
+    # has no join and no broadcast of the worklist.
+    zb = {"32T": (200000., 1000000., 1160000., 1960000.)}
+    pdf = pd.DataFrame({"id": [0, 1, 2, 3], "utm_x": [300000.0] * 4,
+                        "utm_y": [1100000.0] * 4, "dx": [0, 1, 0, 1],
+                        "dy": [0, 0, 1, 1],
+                        "utm_zone": ["32T", "18N", None, "32T"]})
+    plots = spark.createDataFrame(pdf)
+    out = tiles.assign_tiles(plots, zone_bboxes=zb, num_splits=4)
+    assert out.columns == ["utm_zone", "id", "utm_x", "utm_y", "dx", "dy",
+                           "xs", "ys"]
+    got = out.select("utm_zone", "xs", "ys", "id").toPandas()
+    exp = tiles.tile_assign_pandas_oracle(pdf, zb, num_splits=4)
+    assert sorted(got["id"].unique()) == [0, 3]
+    assert set(map(tuple, got.itertuples(index=False))) == \
+        set(map(tuple, exp.itertuples(index=False)))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Broadcast" not in plan and "Join" not in plan, plan
+    none = tiles.assign_tiles(plots, zone_bboxes={}, num_splits=4)
+    assert none.columns == out.columns and none.count() == 0
+
+
 def test_knn_matches_brute_force(spark):
     docs = _docs(spark)
     q = docs.limit(15).select(F.col("doc_id").alias("query_id"),
