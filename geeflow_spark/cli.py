@@ -14,7 +14,8 @@ Subcommands:
                 ends with one JSON summary line.
     rasters   - tile assignment + mosaic (export_rasters path); ends
                 with one JSON summary line.
-    stats     - per-band stats JSON (compute_stats path).
+    stats     - per-band stats JSON (compute_stats path); ends with one
+                JSON summary line.
     package   - build the --py-files zip.
 """
 
@@ -100,17 +101,26 @@ def _cmd_rasters(args) -> None:
 
 
 def _cmd_stats(args) -> None:
+    import json
+    import time
+
     from geeflow_spark.operators import stats
+    from geeflow_spark.plans import checkpoint
     from geeflow_spark.session import get_spark
 
     spark = get_spark("geeflow-stats")
     df = spark.read.parquet(args.table)
-    out = stats.per_band_counter_stats(df, args.array_col, args.n_bands)
-    os.makedirs(args.out, exist_ok=True)
+    t0 = time.monotonic()
+    out = stats.per_band_counter_stats(df, args.array_col, args.n_bands,
+                                       mask_col=args.mask_col)
+    files = checkpoint._Files(spark, args.out)
     for band, d in out.items():
-        stats.save_stats_json(
-            d, os.path.join(args.out, f"stats_band_{band}.json"))
-    print(f"wrote {len(out)} band stats -> {args.out}")
+        files.write_text(os.path.join(args.out, f"stats_band_{band}.json"),
+                         stats.stats_json(d))
+    wall_s = time.monotonic() - t0
+    print(json.dumps({"cmd": "stats", "out": args.out, "bands": sorted(out),
+                      "n": {str(b): d["n"] for b, d in sorted(out.items())},
+                      "wall_s": round(wall_s, 3)}))
     spark.stop()
 
 
@@ -139,6 +149,8 @@ def main(argv=None):
     s.add_argument("--table", required=True)
     s.add_argument("--array-col", required=True)
     s.add_argument("--n-bands", type=int, required=True)
+    s.add_argument("--mask-col", default=None,
+                   help="array column of per-value masks (> 0 = kept)")
     s.add_argument("--out", required=True)
 
     sub.add_parser("package")

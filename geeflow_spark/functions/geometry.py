@@ -80,23 +80,6 @@ def points_in_polygon_batch(px: np.ndarray, py: np.ndarray,
     return out
 
 
-def polygon_area(poly: np.ndarray) -> float:
-    """Signed shoelace area of a flat ring."""
-    xs, ys = poly[0::2], poly[1::2]
-    x1, y1 = np.roll(xs, -1), np.roll(ys, -1)
-    return float(0.5 * np.sum(xs * y1 - x1 * ys))
-
-
-def buffer_bbox(poly: np.ndarray, radius: float) -> np.ndarray:
-    """Axis-aligned bbox of the polygon grown by `radius` (planar units),
-    as a flat rectangle ring. Semantics analog of the reference's feature
-    buffer-with-bounds (ee_data.py:1187-1196 `buffer_features(..., bounds)`).
-    """
-    x0, y0, x1, y1 = polygon_bbox(poly)
-    x0, y0, x1, y1 = x0 - radius, y0 - radius, x1 + radius, y1 + radius
-    return np.array([x0, y0, x1, y0, x1, y1, x0, y1], dtype=np.float64)
-
-
 def rect_ring(x0: float, y0: float, x1: float, y1: float) -> np.ndarray:
     """Rectangle as a flat ring (ccw)."""
     return np.array([x0, y0, x1, y0, x1, y1, x0, y1], dtype=np.float64)
@@ -187,23 +170,6 @@ def points_in_buffered_polygon(px: np.ndarray, py: np.ndarray,
     if radius > 0:
         return inside | (d <= radius)
     return inside & (d >= -radius)
-
-
-def buffer_point_ring(lat: float, lon: float, radius_m: float,
-                      n_vertices: int = 32) -> np.ndarray:
-    """Point -> circle polygon of `radius_m` meters (flat lon/lat ring).
-
-    The CustomFC `buffer_points` path (ee_data.py:1187-1193): point
-    features become disks before rasterize/join. Local-scale conversion
-    (meters -> degrees with cos(lat) on the lon axis).
-    """
-    lat_deg = radius_m / 111194.0
-    lon_deg = radius_m / (111194.0 * max(np.cos(np.radians(lat)), 1e-9))
-    ang = np.linspace(0, 2 * np.pi, n_vertices, endpoint=False)
-    ring = np.empty(2 * n_vertices)
-    ring[0::2] = lon + lon_deg * np.cos(ang)
-    ring[1::2] = lat + lat_deg * np.sin(ang)
-    return ring
 
 
 def realign_ring_scale(ring: np.ndarray, scale: float) -> np.ndarray:

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 
 def s2_qa60_cloud_mask(qa60: np.ndarray) -> np.ndarray:
@@ -107,15 +106,3 @@ def s2_qa60_cloud_mask_col(qa60: Column) -> Column:
 def landsat_qa_cloud_mask_col(qa_pixel: Column, qa_radsat: Column) -> Column:
     return (~((qa_pixel.bitwiseAND(int("11111", 2)) != 0) |
               (qa_radsat != 0))).cast("tinyint")
-
-
-def cloud_percentage_filter(df, percentage: float,
-                            col: str = "CLOUDY_PIXEL_PERCENTAGE"):
-    """Metadata cloud filter (ee_data.py:205-212 S2 `< p`; the Landsat
-    variant additionally requires CLOUD_COVER >= 0, ee_data.py:291-296)."""
-    return df.filter(F.col(col) < percentage)
-
-
-def landsat_cloud_percentage_filter(df, percentage: float,
-                                    col: str = "CLOUD_COVER"):
-    return df.filter((F.col(col) >= 0) & (F.col(col) < percentage))

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MAX_NUM_BINS = 10_000_000
+COLLECT_JOB_DESCRIPTION = "geeflow.operators.stats.collect"
 
 
 def hist_quantile(x, b, quantiles):
@@ -51,19 +52,25 @@ def hist_quantile(x, b, quantiles):
     return out[0] if is_scalar else out
 
 
-def moments_agg(df: DataFrame, value_col: str,
-                key_cols: list[str] = ()) -> DataFrame:
-    """StatsAccumulator as one aggregation: sum, sum2, n, min, max."""
-    v = F.col(value_col)
-    aggs = [
+def _moment_aggs(v) -> list:
+    """sum, sum2, n, min, max of the non-null values of column `v`."""
+    return [
         F.sum(v).alias("sum"),
         F.sum(v.cast("double") * v.cast("double")).alias("sum2"),
         F.count(v).alias("n"),
         F.min(v).alias("min"),
         F.max(v).alias("max"),
     ]
-    key_cols = list(key_cols)
+
+
+def _agg(df: DataFrame, key_cols: list[str], aggs: list) -> DataFrame:
     return df.groupBy(*key_cols).agg(*aggs) if key_cols else df.agg(*aggs)
+
+
+def moments_agg(df: DataFrame, value_col: str,
+                key_cols: list[str] = ()) -> DataFrame:
+    """StatsAccumulator as one aggregation: sum, sum2, n, min, max."""
+    return _agg(df, list(key_cols), _moment_aggs(F.col(value_col)))
 
 
 def derive_moment_stats(row: dict) -> dict:
@@ -97,28 +104,24 @@ def counter_agg(df: DataFrame, value_col: str, key_cols: list[str] = (),
         kept values (reference adds raw floats to the moment accumulator,
         stats_util.py:206-207, while binning astype(int), :212-214);
       bins_df - (keys, bin, count) exact histogram.
+    A null value counts as masked (a fully masked pixel reduced to null).
     """
     key_cols = list(key_cols)
     v = F.col(value_col)
-    kept = df.filter(F.col(mask_col) > 0) if mask_col else df
-    n_masked = (df.filter(~(F.col(mask_col) > 0))
-                .groupBy(*key_cols).agg(F.count("*").alias("n_masked"))
-                if mask_col else None)
-
-    moments = moments_agg(kept, value_col, key_cols)
-    if n_masked is not None:
-        moments = (moments.join(n_masked, key_cols, "left")
-                   .fillna({"n_masked": 0}) if key_cols else
-                   moments.crossJoin(n_masked.select(
-                       F.coalesce(F.col("n_masked"), F.lit(0))
-                       .alias("n_masked"))))
+    if mask_col:
+        keep = F.col(mask_col) > 0
+        masked = ~keep | v.isNull()
     else:
-        moments = moments.withColumn("n_masked", F.lit(0))
+        keep, masked = F.lit(True), v.isNull()
+
+    moments = _agg(df, key_cols, _moment_aggs(F.when(keep, v))
+                   + [F.count(F.when(masked, 1)).alias("n_masked")])
 
     # astype(int) truncation toward zero for float dtypes.
     bin_col = (v.cast("double").cast("long") if to_int else v)
-    bins = kept.groupBy(*key_cols, bin_col.alias("bin")) \
-               .agg(F.count("*").alias("count"))
+    bins = df.filter(keep & v.isNotNull()) \
+             .groupBy(*key_cols, bin_col.alias("bin")) \
+             .agg(F.count("*").alias("count"))
     return moments, bins
 
 
@@ -192,11 +195,15 @@ def _bins_std(c: dict) -> float:
     return float(np.sqrt(sum2 / n - (total ** 2) / (n ** 2)))
 
 
-def save_stats_json(d: dict, path: str) -> None:
+def stats_json(d: dict) -> str:
     """Byte-compatible JSON formatting (stats_util.py:130):
     indent=4, sort_keys=True, separators=(",", ":")."""
+    return json.dumps(d, indent=4, sort_keys=True, separators=(",", ":"))
+
+
+def save_stats_json(d: dict, path: str) -> None:
     with open(path, "w") as f:
-        json.dump(d, f, indent=4, sort_keys=True, separators=(",", ":"))
+        f.write(stats_json(d))
 
 
 def per_band_counter_stats(df: DataFrame, array_col: str, n_bands: int,
@@ -204,7 +211,8 @@ def per_band_counter_stats(df: DataFrame, array_col: str, n_bands: int,
                            key_cols: list[str] = ()) -> dict:
     """BandsAccumulator: stats per last-axis band of a flattened array
     column with band-interleaved layout (..., C). Returns
-    {band_index: as_dict} like stats_util.py:416-424.
+    {band_index: as_dict} like stats_util.py:416-424. The collecting jobs
+    are described as COLLECT_JOB_DESCRIPTION.
     """
     key_cols = list(key_cols)
     idx = F.posexplode(F.col(array_col)).alias("pos", "val")
@@ -218,9 +226,16 @@ def per_band_counter_stats(df: DataFrame, array_col: str, n_bands: int,
     else:
         mask_arg = None
     moments, bins = counter_agg(sel, "val", key_cols + ["band"], mask_arg)
-    m_rows = {r["band"]: r.asDict() for r in moments.collect()}
+    sc = df.sparkSession.sparkContext
+    prev_desc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(COLLECT_JOB_DESCRIPTION)
+    try:
+        m_rows = {r["band"]: r.asDict() for r in moments.collect()}
+        bin_rows = bins.collect()
+    finally:
+        sc.setLocalProperty("spark.job.description", prev_desc)
     b_rows: dict[int, list] = {}
-    for r in bins.collect():
+    for r in bin_rows:
         b_rows.setdefault(r["band"], []).append((r["bin"], r["count"]))
     out = {}
     for band in sorted(m_rows):

@@ -30,8 +30,6 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geeflow_spark.functions import coords as coords_lib
-
 
 def get_split_boundaries(utm_x_min: float, utm_y_min: float,
                          utm_x_max: float, utm_y_max: float,
@@ -56,21 +54,6 @@ def get_split_boundaries(utm_x_min: float, utm_y_min: float,
         return [float(v) for v in b]
 
     return axis(utm_x_min, utm_x_max), axis(utm_y_min, utm_y_max)
-
-
-def zone_bbox_utm(start_lat: float, start_lon: float, end_lat: float,
-                  end_lon: float, grid_spacing_m: float
-                  ) -> tuple[str, float, float, float, float]:
-    """Zone-level UTM bbox via the reference's grid construction
-    (export_rasters.py:125-142 generate_utm_metadata).
-    """
-    x_num, y_num = coords_lib.get_utm_grid_size(
-        start_lat, start_lon, end_lat, end_lon, grid_spacing_m)
-    roi = coords_lib.UtmGridMapping.from_latlon_center(
-        (start_lat + end_lat) / 2, (start_lon + end_lon) / 2,
-        grid_spacing_m, x_num, y_num)
-    x0, y0, x1, y1 = roi.bbox
-    return roi.utm_zone, float(x0), float(y0), float(x1), float(y1)
 
 
 def assign_tiles(plots: DataFrame, *, zone_bboxes: dict,

@@ -48,22 +48,6 @@ def _nested_array(elem: DataType, ndim: int) -> DataType:
     return t
 
 
-def time_varying_keys(config: dict) -> set[str]:
-    """Source names whose algo emits a variable number of timesteps
-    (`_is_time_varying_algo`, export_beam_tfds.py:236-247): ic_sample
-    and ic_sample_date_ranges outputs stack along time."""
-    from geeflow_spark.plans.config import get_algo
-    out = set()
-    for name, cfg in config.get("sources", {}).items():
-        try:
-            algo = get_algo(cfg, name)
-        except ValueError:
-            continue
-        if algo in ("ic_sample", "ic_sample_date_ranges"):
-            out.add(name)
-    return out
-
-
 def plan_schema(probe_row: dict, metadata_keys: set[str],
                 time_varying: set[str] | None = None) -> StructType:
     """One probe row (key -> numpy value) -> StructType.

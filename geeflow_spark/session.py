@@ -8,8 +8,31 @@ the sandbox runs local[N].
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+_DAEMON = "geeflow_spark._daemon"
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _with_worker_daemon(master: str, conf: dict) -> dict:
+    """Adds `_daemon` as the Python worker daemon of a local master.
+
+    Workers start it with `python -m`, so the package's parent directory
+    goes first on their PYTHONPATH; a package that is not a plain directory
+    there (a zip) keeps the stock daemon, and so does a caller that sets
+    `spark.python.daemon.module` itself.
+    """
+    conf = dict(conf)
+    daemon_py = os.path.join(_ROOT, "geeflow_spark", "_daemon.py")
+    if (re.fullmatch(r"local(\[.*\])?", master) and os.path.isfile(daemon_py)
+            and conf.setdefault("spark.python.daemon.module",
+                                _DAEMON) == _DAEMON):
+        path = conf.get("spark.executorEnv.PYTHONPATH")
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            filter(None, [_ROOT, path]))
+    return conf
 
 
 def get_spark(app_name: str = "geeflow-spark",
@@ -25,6 +48,9 @@ def get_spark(app_name: str = "geeflow-spark",
         reference's adaptive request splitting, ee_export_utils.py:151-232)
       - broadcast threshold raised: region/polygon sets are small and must
         broadcast (BASELINE.json north_star)
+      - local masters start Python workers through `_daemon`, which loads
+        the installed PySpark instead of pyspark.zip (README, "Python
+        workers"); `extra_conf` can set `spark.python.daemon.module`
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
     master = master or os.environ.get("SPARK_MASTER",
@@ -63,6 +89,6 @@ def get_spark(app_name: str = "geeflow-spark",
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in _with_worker_daemon(master, extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

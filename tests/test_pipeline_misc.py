@@ -1,5 +1,7 @@
 """dedup / text metrics / rasterize / checkpoint tests."""
 
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -347,6 +349,78 @@ def test_cli_rasters_summary_line(spark, tmp_path, monkeypatch, capsys):
     descs = {j.description().get() for j in jobs()
              if j.jobId() not in jobs_before and j.description().isDefined()}
     assert raster_export.WRITE_JOB_DESCRIPTION in descs
+
+
+def _cli_stats_table(spark, path):
+    # two bands, band-interleaved; the mask hides one value of each band
+    rows = [([float(i), 10.0 + i], [1, 1] if i % 3 else [0, 0])
+            for i in range(12)]
+    spark.createDataFrame(rows, "feat array<double>, m array<int>") \
+        .write.parquet(path)
+
+
+def test_cli_stats_file_uri_out(spark, tmp_path, monkeypatch):
+    # `--out file://...` writes the band files under that path, in the
+    # reference's JSON format, and creates no local `file:` directory.
+    from pyspark.sql import SparkSession
+
+    from geeflow_spark import cli
+    from geeflow_spark.operators import stats
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    monkeypatch.chdir(tmp_path)
+    table, out = str(tmp_path / "table"), tmp_path / "stats"
+    _cli_stats_table(spark, table)
+    cli.main(["stats", "--table", table, "--array-col", "feat",
+              "--n-bands", "2", "--out", f"file://{out}"])
+    exp = stats.per_band_counter_stats(spark.read.parquet(table), "feat", 2)
+    assert sorted(os.listdir(out)) == ["stats_band_0.json",
+                                       "stats_band_1.json"]
+    for band, d in exp.items():
+        assert (out / f"stats_band_{band}.json").read_text() == \
+            stats.stats_json(d)
+    assert not (tmp_path / "file:").exists()
+
+
+def test_cli_stats_summary_line(spark, tmp_path, monkeypatch, capsys):
+    # `cli stats --mask-col` ends with one JSON summary line; its collect
+    # jobs carry the layer description and the caller's is restored.
+    import json
+
+    from pyspark.sql import SparkSession
+
+    from geeflow_spark import cli
+    from geeflow_spark.operators import stats
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    table, out = str(tmp_path / "table"), str(tmp_path / "stats")
+    _cli_stats_table(spark, table)
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def jobs():
+        seq = store.jobsList(None)
+        return [seq.apply(i) for i in range(seq.size())]
+
+    jobs_before = {j.jobId() for j in jobs()}
+    sc.setJobDescription("caller")
+    try:
+        cli.main(["stats", "--table", table, "--array-col", "feat",
+                  "--n-bands", "2", "--mask-col", "m", "--out", out])
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    descs = {j.description().get() for j in jobs()
+             if j.jobId() not in jobs_before and j.description().isDefined()}
+    got = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    exp = stats.per_band_counter_stats(spark.read.parquet(table), "feat", 2,
+                                       mask_col="m")
+    assert got["cmd"] == "stats" and got["out"] == out
+    assert got["bands"] == [0, 1]
+    assert got["n"] == {"0": 8, "1": 8} == {str(b): d["n"]
+                                            for b, d in exp.items()}
+    assert got["wall_s"] > 0
+    assert stats.COLLECT_JOB_DESCRIPTION in descs
+    assert json.loads(open(os.path.join(out, "stats_band_1.json")).read()) \
+        == exp[1]
 
 
 def test_exact_dedup_hash_collision_safe(spark):

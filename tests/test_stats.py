@@ -120,3 +120,24 @@ def test_save_json_format(tmp_path):
     stats.save_stats_json({"b": 1, "a": {"z": 2, "y": 3}}, str(p))
     assert p.read_text() == (
         '{\n    "a":{\n        "y":3,\n        "z":2\n    },\n    "b":1\n}')
+
+
+def test_null_values_count_as_masked(spark):
+    # A fully masked pixel reduced with `mean` arrives as null; it must
+    # stay out of the moments and the bins and count in n_masked, with or
+    # without a mask column.
+    rows = [([1.0, None],), ([3.0, 10.0],), ([None, 10.0],), ([5.0, None],)]
+    df = spark.createDataFrame(rows, "feat array<double>")
+    out = stats.per_band_counter_stats(df, "feat", n_bands=1)
+    kept = np.array([1.0, 3.0, 10.0, 10.0, 5.0])
+    assert out[0]["n"] == 5 and out[0]["n_masked"] == 3
+    assert out[0]["mean"] == kept.mean() and out[0]["min"] == 1.0
+    assert out[0]["~c"] == {"1": 1, "3": 1, "5": 1, "10": 2}
+
+    rows = [(2.0, 1), (None, 1), (4.0, 1), (99.0, 0), (None, 0)]
+    df = spark.createDataFrame(rows, "v double, m int")
+    moments, bins = stats.counter_agg(df, "v", mask_col="m")
+    m = moments.collect()[0].asDict()
+    b = sorted((r["bin"], r["count"]) for r in bins.collect())
+    assert (m["n"], m["n_masked"], m["sum"]) == (2, 3, 6.0)
+    assert b == [(2, 1), (4, 1)]
