@@ -32,7 +32,6 @@ from geeflow_spark.functions import masks
 from geeflow_spark.functions import s2 as _s2
 from geeflow_spark.functions import utm as _utm
 from geeflow_spark.operators import dedup, knn, spatial_join, tiles
-from geeflow_spark.operators import chunking, sampling, text_metrics
 from geeflow_spark.plans import generate, layout
 from geeflow_spark.sources import catalog, derived, synth
 
@@ -254,80 +253,6 @@ def _q_geo_cell_counts_hex(spark, sf_dir):
             .select(F.col("cell").cast("long").alias("cell"), "n"))
 
 
-def _q_rel_q1(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-                 F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-                 F.round(F.sum(F.col("l_extendedprice")
-                               * (1 - F.col("l_discount"))), 2)
-                 .alias("sum_disc_price"),
-                 F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-                 F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-                 F.count("*").alias("count_order")))
-
-
-def _q_rel_q3(spark, sf_dir):
-    cu = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    # lineitem is the probe side of the join and the test file has ~2
-    # row groups -> 2-core scan; widening it measured 5.0 -> 3.8 s at
-    # sf1.0 (widening orders too added nothing - it is the broadcast-
-    # subtree side).
-    li = _widen(spark.read.parquet(f"{sf_dir}/lineitem.parquet"))
-    return (cu.filter(F.col("c_mktsegment") == "BUILDING")
-            .join(o, cu.c_custkey == o.o_custkey)
-            .join(li, o.o_orderkey == li.l_orderkey)
-            .groupBy("o_orderkey")
-            .agg(F.round(F.sum(F.col("l_extendedprice")
-                               * (1 - F.col("l_discount"))), 2)
-                 .alias("revenue"))
-            .orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
-            .limit(10))
-
-
-def _q_rel_topk_window(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
-    return (o.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= 3)
-            .select("o_custkey", "o_orderkey",
-                    F.col("rnk").cast("long").alias("rnk")))
-
-
-def _q_rel_events_sessions(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = (F.unix_timestamp("ts")
-           - F.unix_timestamp(F.lag("ts").over(w)))
-    return (ev.withColumn("new_sess",
-                          F.when(gap.isNull() | (gap > 1800), 1)
-                          .otherwise(0))
-            .groupBy("user_id")
-            .agg(F.sum("new_sess").alias("n_sessions"),
-                 F.count("*").alias("n_events"),
-                 F.round(F.sum("value"), 4).alias("total_value")))
-
-
-def _q_rel_part_brand(spark, sf_dir):
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
-    return (p.groupBy("p_brand")
-            .agg(F.count("*").alias("n"),
-                 F.round(F.avg("p_retailprice"), 4).alias("avg_price"),
-                 F.max("p_size").cast("long").alias("max_size")))
-
-
-def _q_text_repetition(spark, sf_dir):
-    # Repetition quality signals (the Gopher-style web filters):
-    # distinct-word fraction, most-frequent-word share, duplicate-
-    # bigram fraction - all integer-count ratios, so bit-stable across
-    # partitionings and exactly replayable in SQL.
-    d = _widen(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    return text_metrics.repetition_metrics(d)
-
-
 def _q_dedup_exact(spark, sf_dir):
     d = _widen(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     return dedup.exact_dedup(d, "text", "doc_id").select("doc_id")
@@ -417,114 +342,6 @@ def _q_dedup_survivors(spark, sf_dir):
     return out.select(F.col("doc_id").cast("long").alias("doc_id"))
 
 
-_SAMPLE_FRACS = {"en": 0.5, "de": 0.25, "zh": 0.75}
-_SAMPLE_DEFAULT = 0.1
-_MIX_RATES = {"src0": 2.5, "src1": 0.4, "src2": 0.0}
-
-
-def _q_corpus_sample(spark, sf_dir):
-    # Deterministic stratified sampling (md5 family so DuckDB replays
-    # the exact per-row draw): per-language keep fractions with a
-    # default for unlisted strata. Membership is a pure function of
-    # (lang, doc_id, seed) - identical across runs, partitionings,
-    # and cluster sizes.
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = sampling.stratified_sample(
-        d, _SAMPLE_FRACS, strata_col="lang",
-        default_fraction=_SAMPLE_DEFAULT, seed=7, hash_family="md5")
-    return out.select(F.col("doc_id").cast("long").alias("doc_id"),
-                      "lang")
-
-
-def _q_corpus_mix(spark, sf_dir):
-    # Rate-based training-mix: per-source rates incl. upsampling
-    # (2.5 -> two full epochs + a deterministic 50% third) and a full
-    # drop; epoch-tagged output, row-local explode (no join).
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = sampling.mix_corpus(
-        d, _MIX_RATES, strata_col="source", default_rate=1.0,
-        seed=3, hash_family="md5")
-    return out.select(F.col("doc_id").cast("long").alias("doc_id"),
-                      "source", F.col("epoch").cast("long").alias("epoch"))
-
-
-def _q_corpus_chunks(spark, sf_dir):
-    # Context-window chunking (40-token windows, 8-token overlap):
-    # row-local JVM explode/slice, no UDF, no shuffle; the token array
-    # is split once per doc (explode-then-slice shape - the bound
-    # column, not a re-evaluated split expression).
-    d = _widen(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    return chunking.chunk_documents(d, max_tokens=40, overlap=8)
-
-
-def _q_corpus_shuffle_rank(spark, sf_dir):
-    # Deterministic global permutation (md5 family): rank = position
-    # in (hash(doc_id, seed), doc_id) order, computed scalably via
-    # value-range buckets + cumulative offsets instead of a
-    # single-partition global window.
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = sampling.shuffle_rank(d, seed=11, hash_family="md5")
-    return out.select(F.col("doc_id").cast("long").alias("doc_id"),
-                      "rank")
-
-
-def _q_text_gopher(spark, sf_dir):
-    # The published Gopher web-filter rule set, one boolean per rule
-    # plus the conjunction - row-local integer-count ratios, so every
-    # threshold comparison replays bit-identically in SQL.
-    d = _widen(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    return text_metrics.gopher_quality_flags(d)
-
-
-def _q_text_c4_clean(spark, sf_dir):
-    # C4 line rules over a deterministically derived multi-line form
-    # of the corpus (the flat synthetic text has no newlines or
-    # punctuation, which would make every rule vacuous): ' spark '
-    # occurrences become sentence boundaries ('.' + newline), giving
-    # real variation - punctuated/unpunctuated tails, short lines.
-    # The oracle replays the derivation AND the rules.
-    d = _widen(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    lined = d.select("doc_id",
-                     F.replace(F.col("text"), F.lit(" spark "),
-                               F.lit(".\n")).alias("text"))
-    return text_metrics.c4_line_clean(lined)
-
-
-def _pii_augment(d):
-    # Deterministic PII planting from doc_id (the synthetic text is
-    # pure lowercase words, so without it every PII rule is vacuous -
-    # the c4 lesson); the oracles replay the same concatenation.
-    did = F.col("doc_id")
-    return d.select(
-        "doc_id", "lang",
-        F.concat(
-            F.col("text"),
-            F.when(did % 5 == 0, F.concat(
-                F.lit(" contact u"), did.cast("string"),
-                F.lit("@ex-"), (did % 13).cast("string"),
-                F.lit(".org now"))).otherwise(F.lit("")),
-            F.when(did % 7 == 0, F.concat(
-                F.lit(" from 10."), (did % 256).cast("string"),
-                F.lit(".0."), (did % 254 + 1).cast("string"),
-                F.lit(" logged"))).otherwise(F.lit("")),
-            F.when(did % 11 == 0, F.concat(
-                F.lit(" call 555-010-"),
-                F.lpad((did % 10000).cast("string"), 4, "0"),
-                F.lit(" today"))).otherwise(F.lit("")),
-        ).alias("text"))
-
-
-def _q_text_pii_redact(spark, sf_dir):
-    # PII masking over the deterministically PII-augmented corpus;
-    # the oracle replays the augmentation AND the sequential
-    # count+replace chain with the same RE2/Java-compatible patterns.
-    d = _widen(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    aug = _pii_augment(d).drop("lang")
-    out = text_metrics.pii_redact(aug)
-    return out.select("doc_id", "pii_email", "pii_ipv4", "pii_phone",
-                      F.col("text").alias("clean_text"))
-
-
 def _q_dedup_substrings(spark, sf_dir):
     # Duplicate-substring removal (Lee et al. 2022 ExactSubstr at
     # token granularity): every 8-token run occurring >= 2 times
@@ -540,21 +357,6 @@ def _q_dedup_substrings(spark, sf_dir):
         d, window=8, spread=spark.sparkContext.defaultParallelism)
     return out.select("doc_id", "ss_n_tokens", "ss_n_removed",
                       F.col("text").alias("clean_text"))
-
-
-def _q_corpus_decontaminate(spark, sf_dir):
-    # Benchmark decontamination (test-set n-gram overlap removal):
-    # docs with id % 10 == 0 act as the held-out benchmark; every
-    # training doc sharing an 8-token window with any of them is
-    # dropped (near-dup copies of benchmark docs are the real-world
-    # leak this catches). Counted broadcast gate on the benchmark
-    # fingerprint set; oracle recomputes the window-string overlap
-    # from scratch.
-    d = _widen(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    train = d.filter(F.col("doc_id") % 10 != 0)
-    bench = d.filter(F.col("doc_id") % 10 == 0)
-    out = dedup.decontaminate(train, bench, window=8)
-    return out.select(F.col("doc_id").cast("long").alias("doc_id"))
 
 
 def _q_dedup_survivors_quality(spark, sf_dir):
@@ -734,12 +536,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "geo_tile_origin": _q_geo_tile_origin,
         "geo_cell_counts": _q_geo_cell_counts,
         "geo_cell_counts_hex": _q_geo_cell_counts_hex,
-        "rel_q1_pricing": _q_rel_q1,
-        "rel_q3_revenue": _q_rel_q3,
-        "rel_topk_window": _q_rel_topk_window,
-        "rel_events_sessions": _q_rel_events_sessions,
-        "rel_part_brand": _q_rel_part_brand,
-        "text_repetition": _q_text_repetition,
         "dedup_exact": _q_dedup_exact,
         "dedup_minhash_pairs": _q_dedup_minhash,
         "dedup_simhash_pairs": _q_dedup_simhash,
@@ -747,14 +543,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_components": _q_dedup_components,
         "dedup_survivors": _q_dedup_survivors,
         "dedup_survivors_quality": _q_dedup_survivors_quality,
-        "corpus_sample": _q_corpus_sample,
-        "corpus_mix": _q_corpus_mix,
-        "corpus_chunks": _q_corpus_chunks,
-        "corpus_shuffle_rank": _q_corpus_shuffle_rank,
-        "corpus_decontaminate": _q_corpus_decontaminate,
-        "text_gopher_flags": _q_text_gopher,
-        "text_c4_clean": _q_text_c4_clean,
-        "text_pii_redact": _q_text_pii_redact,
         "dedup_substrings": _q_dedup_substrings,
         "dedup_simhash_manku": _q_dedup_simhash_manku,
         "dedup_spans": _q_dedup_spans,
@@ -1038,57 +826,6 @@ def oracle_sql() -> dict[str, str]:
         # Full Snyder-series UTM forward transform + tile snap in SQL.
         "geo_tile_origin": _utm.tile_origin_sql_query(
             "documents", _LAT, _LON, 10.0, 96),
-        "rel_q1_pricing": """
-          SELECT l_returnflag, l_linestatus,
-                 ROUND(SUM(l_quantity), 2) AS sum_qty,
-                 ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
-                 ROUND(SUM(l_extendedprice * (1 - l_discount)), 2)
-                   AS sum_disc_price,
-                 ROUND(AVG(l_quantity), 4) AS avg_qty,
-                 ROUND(AVG(l_discount), 4) AS avg_disc,
-                 COUNT(*) AS count_order
-          FROM lineitem
-          WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-          GROUP BY l_returnflag, l_linestatus
-        """,
-        "rel_q3_revenue": """
-          SELECT o_orderkey,
-                 ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
-          FROM customer JOIN orders ON c_custkey = o_custkey
-                        JOIN lineitem ON o_orderkey = l_orderkey
-          WHERE c_mktsegment = 'BUILDING'
-          GROUP BY o_orderkey
-          ORDER BY revenue DESC, o_orderkey ASC
-          LIMIT 10
-        """,
-        "rel_topk_window": """
-          SELECT o_custkey, o_orderkey, CAST(rnk AS BIGINT) AS rnk FROM (
-            SELECT o_custkey, o_orderkey,
-                   row_number() OVER (PARTITION BY o_custkey
-                                      ORDER BY o_totalprice DESC,
-                                               o_orderkey ASC) AS rnk
-            FROM orders)
-          WHERE rnk <= 3
-        """,
-        "rel_events_sessions": """
-          WITH g AS (
-            SELECT user_id, value,
-                   epoch(ts) - epoch(lag(ts) OVER
-                     (PARTITION BY user_id ORDER BY ts, event_id)) AS gap
-            FROM events)
-          SELECT user_id,
-                 CAST(SUM(CASE WHEN gap IS NULL OR gap > 1800
-                          THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
-                 COUNT(*) AS n_events,
-                 ROUND(SUM(value), 4) AS total_value
-          FROM g GROUP BY user_id
-        """,
-        "rel_part_brand": """
-          SELECT p_brand, COUNT(*) AS n,
-                 ROUND(AVG(p_retailprice), 4) AS avg_price,
-                 CAST(MAX(p_size) AS BIGINT) AS max_size
-          FROM part GROUP BY p_brand
-        """,
         "dedup_exact": r"""
           SELECT MIN(doc_id) AS doc_id FROM (
             SELECT doc_id,
@@ -1138,153 +875,6 @@ def oracle_sql() -> dict[str, str]:
           comp AS (SELECT n, MIN(l) AS component FROM reach GROUP BY n)
           SELECT CAST(doc_id AS BIGINT) AS doc_id FROM documents
           WHERE doc_id NOT IN (SELECT n FROM comp WHERE component <> n)
-        """,
-        # deterministic stratified sampling: DuckDB replays the exact
-        # md5 draw ((top-64-bits of md5) mod 2^63) against the same
-        # integer thresholds the Spark side embeds (both come from
-        # sampling.threshold_u63 - engine float rounding can't
-        # disagree).
-        "corpus_sample": f"""
-          SELECT CAST(doc_id AS BIGINT) AS doc_id, lang
-          FROM documents
-          WHERE (('0x' || substr(md5(lang || '|' ||
-                     CAST(doc_id AS VARCHAR) || ':7'), 1, 16))::UBIGINT
-                 % 9223372036854775808)
-                < CASE lang
-                    {' '.join(f"WHEN '{s}' THEN {sampling.threshold_u63(v)}"
-                              for s, v in sorted(_SAMPLE_FRACS.items()))}
-                    ELSE {sampling.threshold_u63(_SAMPLE_DEFAULT)} END
-        """,
-        # rate-based mixing: whole-epoch count + the same Bernoulli
-        # draw for the fractional extra copy, exploded via a lateral
-        # generate_series (empty when copies = 0).
-        "corpus_mix": f"""
-          WITH c AS (
-            SELECT doc_id, source,
-                   CASE source
-                     {' '.join(f"WHEN '{s}' THEN {int(v)}"
-                               for s, v in sorted(_MIX_RATES.items()))}
-                     ELSE 1 END
-                   + CASE WHEN (('0x' || substr(md5(source || '|' ||
-                         CAST(doc_id AS VARCHAR) || ':3'), 1, 16))::UBIGINT
-                         % 9223372036854775808)
-                       < CASE source
-                           {' '.join(
-                               f"WHEN '{s}' THEN "
-                               f"{sampling.threshold_u63(v - int(v))}"
-                               for s, v in sorted(_MIX_RATES.items()))}
-                           ELSE 0 END
-                     THEN 1 ELSE 0 END AS copies
-            FROM documents)
-          SELECT CAST(doc_id AS BIGINT) AS doc_id, source,
-                 CAST(unnest([i for i in range(0, copies)]) AS BIGINT)
-                   AS epoch
-          FROM c
-        """,
-        # chunking: same windows via DuckDB list slicing (1-based,
-        # INCLUSIVE end -> [start+1 : start+max]); n_chunks =
-        # ceil((n - overlap) / stride) floored at 1.
-        "corpus_chunks": """
-          WITH w AS (
-            SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ws
-            FROM documents),
-          c AS (
-            SELECT doc_id, ws,
-                   greatest(CAST(ceil((len(ws) - 8) / 32.0) AS BIGINT),
-                            1) AS nc
-            FROM w),
-          e AS (
-            SELECT doc_id, ws,
-                   unnest([i for i in range(0, nc)]) AS ci
-            FROM c)
-          SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                 CAST(ci AS BIGINT) AS chunk_id,
-                 array_to_string(ws[ci * 32 + 1 : ci * 32 + 40], ' ')
-                   AS chunk_text,
-                 CAST(least(40, len(ws) - ci * 32) AS BIGINT)
-                   AS chunk_tokens
-          FROM e
-        """,
-        # C4 line rules: derivation (sentence boundaries from a
-        # literal replace) + per-line keep conditions + page tells,
-        # all replayed; counts are integers so flags match exactly.
-        "text_c4_clean": r"""
-          WITH li AS (
-            SELECT doc_id,
-                   trim(replace(text, ' spark ', '.' || chr(10))) AS t
-            FROM documents),
-          m AS (
-            SELECT doc_id, t,
-                   list_filter(list_transform(
-                       string_split(t, chr(10)), x -> trim(x)),
-                     x -> length(x) > 0) AS lines
-            FROM li),
-          k AS (
-            SELECT doc_id, t, lines,
-                   list_filter(lines, x ->
-                     len(string_split_regex(x, '\s+')) >= 3
-                     AND NOT contains(lower(x), 'javascript')
-                     AND regexp_matches(x, '[.!?"]$')) AS kept
-            FROM m)
-          SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                 COALESCE(array_to_string(kept, chr(10)), '')
-                   AS clean_text,
-                 CAST(len(kept) AS BIGINT) AS n_lines_kept,
-                 CAST(len(lines) - len(kept) AS BIGINT)
-                   AS n_lines_dropped,
-                 (len(kept) >= 1
-                  AND NOT contains(lower(t), 'lorem ipsum')
-                  AND NOT contains(t, '{')
-                  AND NOT contains(t, '}')) AS c4_keep
-          FROM k
-        """,
-        # PII masking: the doc_id-keyed augmentation, then the same
-        # sequential count+replace chain (each count on the PREVIOUS
-        # stage's output) with the identical RE2-compatible patterns;
-        # DuckDB regexp_replace needs the explicit 'g' flag to match
-        # Spark's replace-all.
-        "text_pii_redact": r"""
-          WITH aug AS (
-            SELECT doc_id,
-                   text
-                   || CASE WHEN doc_id % 5 = 0 THEN
-                        ' contact u' || CAST(doc_id AS VARCHAR)
-                        || '@ex-' || CAST(doc_id % 13 AS VARCHAR)
-                        || '.org now' ELSE '' END
-                   || CASE WHEN doc_id % 7 = 0 THEN
-                        ' from 10.' || CAST(doc_id % 256 AS VARCHAR)
-                        || '.0.' || CAST(doc_id % 254 + 1 AS VARCHAR)
-                        || ' logged' ELSE '' END
-                   || CASE WHEN doc_id % 11 = 0 THEN
-                        ' call 555-010-'
-                        || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                        || ' today' ELSE '' END AS t0
-            FROM documents),
-          s1 AS (
-            SELECT doc_id,
-                   CAST(len(regexp_extract_all(t0,
-                     '[A-Za-z0-9._%+\-]+@[A-Za-z0-9.\-]+\.[A-Za-z]{2,}'
-                     )) AS BIGINT) AS pii_email,
-                   regexp_replace(t0,
-                     '[A-Za-z0-9._%+\-]+@[A-Za-z0-9.\-]+\.[A-Za-z]{2,}',
-                     '<EMAIL>', 'g') AS t1
-            FROM aug),
-          s2 AS (
-            SELECT doc_id, pii_email,
-                   CAST(len(regexp_extract_all(t1,
-                     '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b'
-                     )) AS BIGINT) AS pii_ipv4,
-                   regexp_replace(t1,
-                     '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b',
-                     '<IP>', 'g') AS t2
-            FROM s1)
-          SELECT doc_id, pii_email, pii_ipv4,
-                 CAST(len(regexp_extract_all(t2,
-                   '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b')) AS BIGINT)
-                   AS pii_phone,
-                 regexp_replace(t2, '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b',
-                                '<PHONE>', 'g') AS clean_text
-          FROM s2
         """,
         # duplicate-substring removal: positional 8-token windows from
         # the window STRINGS (independent of the operator's rolling
@@ -1341,104 +931,6 @@ def oracle_sql() -> dict[str, str]:
           FROM base b
           LEFT JOIN rebuilt ON rebuilt.doc_id = b.doc_id
           LEFT JOIN nrm ON nrm.doc_id = b.doc_id
-        """,
-        # Gopher rules: every ratio is an integer-count division, so
-        # the boolean thresholds replay exactly; line rules over
-        # trimmed non-empty lines, vacuous at zero lines.
-        "text_gopher_flags": r"""
-          WITH b AS (
-            SELECT doc_id, trim(text) AS t,
-                   string_split_regex(lower(trim(text)), '\s+') AS ws
-            FROM documents),
-          m AS (
-            SELECT doc_id, t, ws,
-                   CASE WHEN length(t) = 0 THEN 0 ELSE len(ws) END
-                     AS nw,
-                   list_filter(list_transform(
-                       string_split_regex(t, '\n'), x -> trim(x)),
-                     x -> length(x) > 0) AS lines
-            FROM b),
-          r AS (
-            SELECT doc_id, nw,
-                   CASE WHEN nw > 0 THEN
-                     CAST(list_sum(list_transform(ws,
-                         w -> length(w))) AS DOUBLE) / nw
-                   ELSE 0.0 END AS mwl,
-                   CASE WHEN nw > 0 THEN
-                     ((length(t) - length(replace(t, '#', '')))
-                      + (length(t) - length(replace(t, '...', ''))) / 3)
-                     / nw
-                   ELSE 0.0 END AS sym,
-                   len(lines) AS nl,
-                   len(list_filter(lines,
-                       x -> starts_with(x, '-') OR starts_with(x, '*')))
-                     AS bullet,
-                   len(list_filter(lines, x -> ends_with(x, '...')))
-                     AS elend,
-                   len(list_filter(ws,
-                       w -> regexp_matches(w, '[a-z]'))) AS alpha,
-                   len(list_intersect(list_distinct(ws),
-                       ['the', 'be', 'to', 'of', 'and', 'that',
-                        'have', 'with'])) AS swh
-            FROM m)
-          SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                 CAST(nw AS BIGINT) AS n_words,
-                 nw BETWEEN 50 AND 100000 AS wc_ok,
-                 mwl BETWEEN 3.0 AND 10.0 AS mwl_ok,
-                 sym <= 0.1 AS symbol_ok,
-                 (nl = 0 OR CAST(bullet AS DOUBLE) / nl < 0.9)
-                   AS bullet_ok,
-                 (nl = 0 OR CAST(elend AS DOUBLE) / nl < 0.3)
-                   AS ellipsis_ok,
-                 (nw > 0 AND CAST(alpha AS DOUBLE) / nw >= 0.8)
-                   AS alpha_ok,
-                 swh >= 2 AS stopword_ok,
-                 (nw BETWEEN 50 AND 100000)
-                   AND mwl BETWEEN 3.0 AND 10.0 AND sym <= 0.1
-                   AND (nl = 0 OR CAST(bullet AS DOUBLE) / nl < 0.9)
-                   AND (nl = 0 OR CAST(elend AS DOUBLE) / nl < 0.3)
-                   AND (nw > 0 AND CAST(alpha AS DOUBLE) / nw >= 0.8)
-                   AND swh >= 2 AS gopher_pass
-          FROM r
-        """,
-        # decontamination: benchmark window-string set, training docs
-        # sharing any window dropped - the same list-comprehension
-        # window derivation the containment oracle uses.
-        "corpus_decontaminate": r"""
-          WITH w AS (
-            SELECT doc_id,
-                   list_distinct([array_to_string(ws[i:i+7], ' ')
-                     for i in range(1, greatest(len(ws) - 7, 1) + 1)])
-                     AS fps
-            FROM (SELECT doc_id,
-                         string_split_regex(lower(trim(text)), '\s+')
-                           AS ws
-                  FROM documents WHERE trim(text) <> '') t),
-          b AS (
-            SELECT DISTINCT unnest(fps) AS f FROM w
-            WHERE doc_id % 10 = 0),
-          bad AS (
-            SELECT DISTINCT e.doc_id
-            FROM (SELECT doc_id, unnest(fps) AS f FROM w
-                  WHERE doc_id % 10 <> 0) e
-            JOIN b USING (f))
-          SELECT CAST(doc_id AS BIGINT) AS doc_id FROM documents
-          WHERE doc_id % 10 <> 0
-            AND doc_id NOT IN (SELECT doc_id FROM bad)
-        """,
-        # global permutation: the exact md5 draw, ranked by
-        # (draw, doc_id) - one window in DuckDB replays what Spark
-        # computes via range buckets + offsets.
-        "corpus_shuffle_rank": """
-          SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                 CAST(row_number() OVER (ORDER BY d, doc_id) - 1
-                      AS BIGINT) AS rank
-          FROM (
-            SELECT doc_id,
-                   (('0x' || substr(md5(CAST(doc_id AS VARCHAR)
-                        || ':11'), 1, 16))::UBIGINT
-                    % 9223372036854775808) AS d
-            FROM documents)
         """,
         # quality-aware winner: same closure, then the (length DESC,
         # id ASC) rank-1 member per component survives; everything in
@@ -1539,39 +1031,6 @@ def oracle_sql() -> dict[str, str]:
                    AS span_idx,
                  kind, r."offset" AS offset, content
           FROM r WHERE rn = 1
-        """,
-        # repetition metrics: integer-count ratios recomputed from the
-        # same lowercase whitespace tokenization (unnest + group for
-        # the top-word share, list functions for the array-shape
-        # metrics), rounded identically.
-        "text_repetition": r"""
-          WITH w AS (
-            SELECT doc_id,
-                   string_split_regex(lower(trim(text)), '\s+') AS ws
-            FROM documents
-            WHERE text IS NOT NULL AND length(trim(text)) > 0),
-          ex AS (SELECT doc_id, unnest(ws) AS word FROM w),
-          wc AS (SELECT doc_id, word, count(*) AS c
-                 FROM ex GROUP BY doc_id, word),
-          top AS (SELECT doc_id, max(c) AS topc FROM wc GROUP BY doc_id),
-          shape AS (
-            SELECT doc_id, len(ws) AS n,
-                   len(list_distinct(ws)) AS nd,
-                   CASE WHEN len(ws) >= 2 THEN
-                     list_transform(range(2, len(ws) + 1),
-                                    i -> ws[i-1] || ' ' || ws[i])
-                   ELSE [] END AS bgs
-            FROM w)
-          SELECT s.doc_id, CAST(s.n AS BIGINT) AS n_words,
-                 ROUND(s.nd / CAST(s.n AS DOUBLE), 6)
-                   AS distinct_word_frac,
-                 ROUND(t.topc / CAST(s.n AS DOUBLE), 6)
-                   AS top_word_frac,
-                 ROUND(CASE WHEN len(s.bgs) > 0 THEN
-                         1.0 - len(list_distinct(s.bgs))
-                               / CAST(len(s.bgs) AS DOUBLE)
-                       ELSE 0.0 END, 6) AS dup_bigram_frac
-          FROM shape s JOIN top t ON s.doc_id = t.doc_id
         """,
         "spans_explode": r"""
           WITH base AS (

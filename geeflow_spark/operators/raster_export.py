@@ -68,6 +68,7 @@ from pyspark.sql.types import (ArrayType, DoubleType, FloatType,
                                StructType)
 
 from geeflow_spark.operators.tiles import get_split_boundaries
+from geeflow_spark.session import job_description
 
 WRITE_JOB_DESCRIPTION = "geeflow.operators.raster_export.write"
 BORDER_MODES = ("none", "uniform_avg", "l2_dist_avg",
@@ -254,13 +255,8 @@ def write_rasters(rasters: DataFrame, out: str, zones: list) -> dict:
     obs = Observation()
     counts = [F.count(F.when(F.col("utm_zone") == z, 1)).alias(f"n_{i}")
               for i, z in enumerate(zones)]
-    sc = rasters.sparkSession.sparkContext
-    prev_desc = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(WRITE_JOB_DESCRIPTION)
-    try:
+    with job_description(rasters.sparkSession, WRITE_JOB_DESCRIPTION):
         rasters.observe(obs, *counts).write.mode("overwrite").parquet(out)
-    finally:
-        sc.setLocalProperty("spark.job.description", prev_desc)
     got = obs.get
     return {z: got[f"n_{i}"] for i, z in enumerate(zones)}
 

@@ -30,6 +30,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geeflow_spark.session import job_description
+
 MAX_NUM_BINS = 10_000_000
 COLLECT_JOB_DESCRIPTION = "geeflow.operators.stats.collect"
 
@@ -104,12 +106,13 @@ def counter_agg(df: DataFrame, value_col: str, key_cols: list[str] = (),
         kept values (reference adds raw floats to the moment accumulator,
         stats_util.py:206-207, while binning astype(int), :212-214);
       bins_df - (keys, bin, count) exact histogram.
-    A null value counts as masked (a fully masked pixel reduced to null).
+    A null value counts as masked (a fully masked pixel reduced to null),
+    and so does a value whose mask element is null.
     """
     key_cols = list(key_cols)
     v = F.col(value_col)
     if mask_col:
-        keep = F.col(mask_col) > 0
+        keep = F.coalesce(F.col(mask_col) > 0, F.lit(False))
         masked = ~keep | v.isNull()
     else:
         keep, masked = F.lit(True), v.isNull()
@@ -226,14 +229,9 @@ def per_band_counter_stats(df: DataFrame, array_col: str, n_bands: int,
     else:
         mask_arg = None
     moments, bins = counter_agg(sel, "val", key_cols + ["band"], mask_arg)
-    sc = df.sparkSession.sparkContext
-    prev_desc = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(COLLECT_JOB_DESCRIPTION)
-    try:
+    with job_description(df.sparkSession, COLLECT_JOB_DESCRIPTION):
         m_rows = {r["band"]: r.asDict() for r in moments.collect()}
         bin_rows = bins.collect()
-    finally:
-        sc.setLocalProperty("spark.job.description", prev_desc)
     b_rows: dict[int, list] = {}
     for r in bin_rows:
         b_rows.setdefault(r["band"], []).append((r["bin"], r["count"]))

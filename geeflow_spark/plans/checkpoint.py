@@ -40,6 +40,8 @@ import time
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from geeflow_spark.session import job_description
+
 ENGINE_VERSION = "0.1.0"
 JOB_DESCRIPTION = "geeflow.plans.checkpoint.write"
 _INDEX_COL = "_ckpt_i"
@@ -162,10 +164,7 @@ def run_partitioned(df: DataFrame, output_path: str, partition_col: str,
     files = _Files(df.sparkSession, output_path)
     staging = os.path.join(output_path, "_staging")
     files.delete(staging)
-    sc = df.sparkSession.sparkContext
-    prev_desc = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(JOB_DESCRIPTION)
-    try:
+    with job_description(df.sparkSession, JOB_DESCRIPTION):
         t0 = time.monotonic()
         stats = _staged_write(df, staging, partition_col, todo, id_col)
         wall = time.monotonic() - t0
@@ -201,7 +200,5 @@ def run_partitioned(df: DataFrame, output_path: str, partition_col: str,
             }
             _write_manifest(files, output_path, rec)
             recs.append(rec)
-    finally:
-        sc.setLocalProperty("spark.job.description", prev_desc)
     files.delete(staging)
     return recs

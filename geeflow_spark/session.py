@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 import re
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -33,6 +34,20 @@ def _with_worker_daemon(master: str, conf: dict) -> dict:
         conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
             filter(None, [_ROOT, path]))
     return conf
+
+
+@contextmanager
+def job_description(spark: SparkSession, description: str):
+    """Describes the Spark jobs started in the block as `description`
+    (`geeflow.<module>.<op>`) and restores the caller's description
+    afterwards. Sets no job group: callers may set their own."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def get_spark(app_name: str = "geeflow-spark",

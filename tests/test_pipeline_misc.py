@@ -733,30 +733,6 @@ def test_span_dedup_collision_safe(spark):
     assert (1, 64) in kept and (2, 35) in kept
 
 
-def test_repetition_metrics(spark):
-    from geeflow_spark.operators import text_metrics
-    pdf = pd.DataFrame({
-        "doc_id": [1, 2, 3, 4, 5],
-        "text": ["A a b", "x x x x", "solo", "   ", None],
-    })
-    out = (text_metrics.repetition_metrics(spark.createDataFrame(pdf))
-           .toPandas().set_index("doc_id").sort_index())
-    assert list(out.index) == [1, 2, 3]  # blank/null rows dropped
-    # doc 1: words [a, a, b] (case-folded)
-    assert out.loc[1, "n_words"] == 3
-    assert out.loc[1, "distinct_word_frac"] == round(2 / 3, 6)
-    assert out.loc[1, "top_word_frac"] == round(2 / 3, 6)
-    assert out.loc[1, "dup_bigram_frac"] == 0.0   # "a a" != "a b"
-    # doc 2: pure repetition
-    assert out.loc[2, "n_words"] == 4
-    assert out.loc[2, "distinct_word_frac"] == 0.25
-    assert out.loc[2, "top_word_frac"] == 1.0
-    assert out.loc[2, "dup_bigram_frac"] == round(1 - 1 / 3, 6)
-    # doc 3: single word - no bigrams, frac pinned to 0
-    assert out.loc[3, "n_words"] == 1
-    assert out.loc[3, "dup_bigram_frac"] == 0.0
-
-
 def test_containment_directional(spark):
     # Short doc quoted whole inside a long one: containment(a->b)=1.0
     # while Jaccard (3/8) and the reverse direction (3/8) stay low -
@@ -817,59 +793,6 @@ def test_decontaminate(spark):
     dedup.release_decontaminate_state()
 
 
-def test_gopher_quality_flags(spark):
-    from geeflow_spark.operators import text_metrics as tm
-    good = ("the quick brown fox and that dog have fun with all of it "
-            * 6)
-    bullets = "- a\n- b\n- c\n- d\n- e\n- f\n- g\n- h\n- i\nplain"
-    dots = "one...\ntwo...\nthree fine\nfour fine"
-    docs = pd.DataFrame({"doc_id": [1, 2, 3, 4, 5],
-                         "text": [good, "# # # short", bullets, dots,
-                                  ""]})
-    out = tm.gopher_quality_flags(
-        spark.createDataFrame(docs), min_words=10).toPandas() \
-        .set_index("doc_id")
-    assert bool(out.loc[1, "gopher_pass"])
-    # symbol + alpha + stopword failures on the hash-spam doc
-    assert not out.loc[2, ["symbol_ok", "alpha_ok",
-                           "stopword_ok"]].any()
-    assert not out.loc[3, "bullet_ok"]      # 9/10 lines bulleted
-    assert not out.loc[4, "ellipsis_ok"]    # 2/4 lines end ...
-    assert out.loc[4, "bullet_ok"]
-    assert out.loc[5, "n_words"] == 0 and not out.loc[5, "wc_ok"]
-    assert bool(out.loc[5, "bullet_ok"])    # vacuous: zero lines
-
-
-def test_c4_line_clean(spark):
-    from geeflow_spark.operators import text_metrics as tm
-    doc1 = ("Good first sentence here.\n"
-            "no terminal punct line\n"
-            "Too short.\n"
-            "Uses javascript for menus.\n"
-            "Another keeper with a question mark?\n")
-    docs = pd.DataFrame({"doc_id": [1, 2, 3],
-                         "text": [doc1,
-                                  "Lorem ipsum dolor sit amet.",
-                                  "closing brace only } fine sentence."]})
-    out = tm.c4_line_clean(spark.createDataFrame(docs)) \
-        .toPandas().set_index("doc_id")
-    # doc 1: keeps the two punctuated >=3-word non-js lines
-    assert out.loc[1, "clean_text"] == (
-        "Good first sentence here.\n"
-        "Another keeper with a question mark?")
-    assert out.loc[1, "n_lines_kept"] == 2
-    assert out.loc[1, "n_lines_dropped"] == 3
-    assert bool(out.loc[1, "c4_keep"])
-    # page tells: lorem ipsum and curly brace fail the page
-    assert not out.loc[2, "c4_keep"]
-    assert not out.loc[3, "c4_keep"]
-    # punct check off: the bare line qualifies too
-    relaxed = tm.c4_line_clean(
-        spark.createDataFrame(docs), require_terminal_punct=False) \
-        .toPandas().set_index("doc_id")
-    assert relaxed.loc[1, "n_lines_kept"] == 3
-
-
 def test_dedup_survivors_quality_string_ids(spark):
     # The (quality DESC, id ASC) tie-break must hold for STRING doc
     # ids too (negating a string id casts to NULL and silently breaks
@@ -890,32 +813,6 @@ def test_dedup_survivors_quality_string_ids(spark):
                                  quality_col="q").toPandas()
     assert sorted(out2["doc_id"]) == ["doc01", "doc03", "doc09"]
     dedup.release_survivors_state()
-
-
-def test_pii_redact(spark):
-    from geeflow_spark.operators import text_metrics as tm
-    docs = pd.DataFrame({"doc_id": [1, 2, 3, 4],
-                         "text": [
-        "reach me at jo.na+1@sub.example.org or admin@ex.io thanks",
-        "server 192.168.0.1 then call 555-010-1234 ok",
-        "plain text with no pii at all",
-        "a@b.co 1.2.3.4 999 888 7777",
-    ], "keepme": [10, 20, 30, 40]})
-    out = tm.pii_redact(spark.createDataFrame(docs)) \
-        .toPandas().set_index("doc_id")
-    assert out.loc[1, "text"] == "reach me at <EMAIL> or <EMAIL> thanks"
-    assert out.loc[1, "pii_email"] == 2
-    assert out.loc[2, "text"] == "server <IP> then call <PHONE> ok"
-    assert (out.loc[2, "pii_ipv4"], out.loc[2, "pii_phone"]) == (1, 1)
-    # no-PII rows pass through untouched, zero counts
-    assert out.loc[3, "text"] == docs.set_index("doc_id").loc[3, "text"]
-    assert out.loc[3, ["pii_email", "pii_ipv4", "pii_phone"]].sum() == 0
-    # space-separated phone form; other columns ride along
-    assert out.loc[4, "text"] == "<EMAIL> <IP> <PHONE>"
-    assert list(out["keepme"]) == [10, 20, 30, 40]
-    # counts=False adds no columns
-    bare = tm.pii_redact(spark.createDataFrame(docs), counts=False)
-    assert set(bare.columns) == {"doc_id", "text", "keepme"}
 
 
 def test_substring_dedup(spark):
@@ -1008,13 +905,11 @@ def test_substring_dedup_matches_reference(spark):
 def test_new_ops_plan_shapes(spark):
     # Lock the scale-relevant physical-plan properties of the round-6
     # operators (the PLANS.md audit, as regression tests):
-    # - pii_redact: zero exchanges, zero Python (one codegen span)
     # - substring_dedup: exactly ONE Arrow boundary (the fingerprint
     #   UDF must not be re-evaluated below an inferred-filter push -
     #   the explode_outer lesson) and no more than 3 exchanges
     #   (spread, fingerprint window, per-doc position agg)
     import re
-    from geeflow_spark.operators import text_metrics as tm
 
     def detail_nodes(df, name):
         s = df.sparkSession._jvm.PythonSQLUtils.explainString(
@@ -1023,9 +918,6 @@ def test_new_ops_plan_shapes(spark):
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet")
-    pii = tm.pii_redact(docs)
-    assert detail_nodes(pii, "Exchange") == 0
-    assert detail_nodes(pii, "ArrowEvalPython") == 0
     ss = dedup.substring_dedup(docs, window=8)
     # r7: the corpus-wide count is a partial-aggregated groupBy joined
     # back to the occurrence rows (skew-safe; the r6 single-evaluation
@@ -1038,4 +930,3 @@ def test_new_ops_plan_shapes(spark):
     assert detail_nodes(ss, "BatchEvalPython") == 0
     assert detail_nodes(ss, "Window") == 0
     assert detail_nodes(ss, "Exchange") <= 5
-

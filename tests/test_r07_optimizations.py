@@ -1,137 +1,26 @@
 """Round-7 optimization pins.
 
-Three families:
-  1. gopher rule equivalence: the r7 single-pass regex forms must
-     reproduce the r6 array/HOF semantics bit-for-bit on adversarial
-     texts (tabs, newlines, bullets, ellipses, phantom split fields).
-     The reference implementation here is pure python mirroring the
-     ORIGINAL column semantics (java \\s class, split -1 limit,
-     space-only trim) - an independent recomputation, not a port of
-     the new expressions.
-  2. substring/containment skew safety: the corpus-wide count stage is
+Two families:
+  1. substring/containment skew safety: the corpus-wide count stage is
      a partial-aggregated groupBy (map-side combine), so a planted
      boilerplate window occurring in most docs must NOT funnel its
      occurrence rows through one task before the cap applies
      (r6 verdict item 2).
-  3. linear token rebuild: cutting |rm| ~ T positions from a T-token
+  2. linear token rebuild: cutting |rm| ~ T positions from a T-token
      doc is O(T), not O(T^2) (r6 verdict item 6).
 """
 
 import random
-import re
 import string
 import time
 
-import pytest
 from pyspark.sql import functions as F
 
-from geeflow_spark.operators import dedup, text_metrics
+from geeflow_spark.operators import dedup
 
 
 # ---------------------------------------------------------------------------
-# 1. gopher equivalence
-# ---------------------------------------------------------------------------
-
-_JWS = " \t\n\x0b\f\r"  # java \s
-
-
-def _ref_gopher(text, min_words, max_words, stopwords):
-    """Pure-python mirror of the r6 array-expression semantics."""
-    t = text.strip(" ")  # F.trim strips spaces only
-    words = re.split(f"[{re.escape(_JWS)}]+", t.lower())  # limit -1
-    nw = 0 if len(t) == 0 else len(words)
-    total = sum(len(w) for w in words)
-    mwl = total / nw if nw > 0 else 0.0
-    hashes = t.count("#")
-    ellipses = (len(t) - len(t.replace("...", ""))) / 3
-    sym = (hashes + ellipses) / nw if nw > 0 else 0.0
-    lines = [x.strip(" ") for x in t.split("\n")]
-    lines = [x for x in lines if len(x) > 0]
-    nl = len(lines)
-    bullet = sum(1 for x in lines if x.startswith(("-", "*")))
-    ell_end = sum(1 for x in lines if x.endswith("..."))
-    alpha = sum(1 for w in words if re.search("[a-z]", w))
-    sw_hits = len(set(words) & set(stopwords))
-    out = {
-        "n_words": nw,
-        "wc_ok": min_words <= nw <= max_words,
-        "mwl_ok": 3.0 <= mwl <= 10.0,
-        "symbol_ok": sym <= 0.1,
-        "bullet_ok": nl == 0 or bullet / nl < 0.9,
-        "ellipsis_ok": nl == 0 or ell_end / nl < 0.3,
-        "alpha_ok": nw > 0 and alpha / nw >= 0.8,
-        "stopword_ok": sw_hits >= 2,
-    }
-    out["gopher_pass"] = all(
-        out[k] for k in ("wc_ok", "mwl_ok", "symbol_ok", "bullet_ok",
-                         "ellipsis_ok", "alpha_ok", "stopword_ok"))
-    return out
-
-
-def _adversarial_texts():
-    rng = random.Random(77)
-    vocab = ["the", "be", "to", "of", "and", "scanner", "Column",
-             "x", "abc", "##", "#tag", "...", "a...", "12", "9.5",
-             "-", "- item", "* item", "word..."]
-    texts = [
-        "", " ", "   ", "\t", "\tleading tab", "trailing tab\t",
-        "\nstarts newline", "ends newline\n", "a\n\nb",
-        "- one\n- two\n- three", "- only bullet",
-        "line one...\nline two...\nplain line",
-        "### ### ###", "a b c", "the of and that have with be to",
-        "\t\t", " \t ", "x\r\ny", "dots... mid... text...",
-        "*star\n -dash \n  * spaced star",
-        "..." * 10, "#" * 30, "UPPER CASE ONLY", "MiXeD the Case of",
-    ]
-    for _ in range(150):
-        n = rng.randint(1, 60)
-        parts = []
-        for _ in range(n):
-            parts.append(rng.choice(vocab))
-            parts.append(rng.choice([" ", " ", " ", "  ", "\t", "\n"]))
-        texts.append("".join(parts))
-    # long natural-ish docs around the thresholds
-    for k in (5, 49, 50, 51, 200):
-        texts.append(" ".join(rng.choice(["the", "of", "and", "words",
-                                          "mean", "length", "okay"])
-                              for _ in range(k)))
-    return texts
-
-
-@pytest.mark.parametrize("params", [
-    dict(min_words=50, max_words=100_000, stopwords=None),
-    dict(min_words=3, max_words=40,
-         stopwords=("scan", "column", "window", "order")),
-])
-def test_gopher_regex_forms_match_reference(spark, params):
-    texts = _adversarial_texts()
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    got = {r["doc_id"]: r.asDict()
-           for r in text_metrics.gopher_quality_flags(
-               df, **params).collect()}
-    sw = params["stopwords"] or text_metrics.GOPHER_STOPWORDS
-    for i, t in enumerate(texts):
-        ref = _ref_gopher(t, params["min_words"], params["max_words"], sw)
-        g = got[i]
-        for k, v in ref.items():
-            assert g[k] == v, (i, k, repr(t), ref, g)
-
-
-def test_gopher_pass_column_matches_flags(spark):
-    texts = _adversarial_texts()
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    flags = text_metrics.gopher_quality_flags(df, min_words=3)
-    keep_flags = sorted(r.doc_id for r in
-                        flags.filter("gopher_pass").collect())
-    keep_filter = sorted(r.doc_id for r in df.filter(
-        text_metrics.gopher_pass(min_words=3)).collect())
-    assert keep_flags == keep_filter
-
-
-# ---------------------------------------------------------------------------
-# 2. substring/containment skew safety (r6 verdict item 2)
+# 1. substring/containment skew safety (r6 verdict item 2)
 # ---------------------------------------------------------------------------
 
 def _planted_boilerplate_docs(spark, n_docs=4000, hot_frac=0.5):
@@ -192,7 +81,7 @@ def test_containment_cap_drops_hot_posting_before_buckets(spark):
 
 
 # ---------------------------------------------------------------------------
-# 3. linear token rebuild (r6 verdict item 6)
+# 2. linear token rebuild (r6 verdict item 6)
 # ---------------------------------------------------------------------------
 
 def test_token_rebuild_not_quadratic(spark):

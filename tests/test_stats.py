@@ -141,3 +141,11 @@ def test_null_values_count_as_masked(spark):
     b = sorted((r["bin"], r["count"]) for r in bins.collect())
     assert (m["n"], m["n_masked"], m["sum"]) == (2, 3, 6.0)
     assert b == [(2, 1), (4, 1)]
+
+    # A null mask element (here past the end of a short mask array)
+    # masks its value too.
+    df = spark.createDataFrame([([1.0, 2.0, 3.0], [1, 0])],
+                               "feat array<double>, m array<int>")
+    out = stats.per_band_counter_stats(df, "feat", n_bands=1, mask_col="m")
+    assert out[0]["n"] == 1 and out[0]["n_masked"] == 2
+    assert out[0]["~c"] == {"1": 1}

@@ -157,52 +157,3 @@ def test_stream_seen_counts_stateful(spark, tmp_path):
     top = got.sort_values("n_seen").iloc[-1]
     assert top["n_seen"] == 4
     assert pd.Timestamp(top["first_ts"]) == ts
-
-
-def test_stream_corpus_filter_pipeline_matches_batch(spark, tmp_path):
-    # The stateless corpus-pipeline ops (stratified sampling + Gopher
-    # flags + containment fingerprints are row-local) compose directly
-    # onto the streaming tail: a readStream through
-    # stratified_sample + gopher_quality_flags must emit exactly the
-    # batch answer, incrementally, exactly once.
-    import pandas as pd
-    from geeflow_spark.operators import sampling, text_metrics
-
-    land = str(tmp_path / "landing")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    words = "the quick brown fox and that dog have fun with all of it"
-    pdf = pd.DataFrame({
-        "doc_id": range(300),
-        "lang": [("en", "de", "fr")[i % 3] for i in range(300)],
-        "text": [(words + " ") * (2 + i % 5) for i in range(300)],
-    })
-    docs = spark.createDataFrame(pdf)
-    docs.filter(F.col("doc_id") < 150).write.mode("overwrite") \
-        .parquet(land)
-
-    def pipe(df):
-        s = sampling.stratified_sample(
-            df, {"en": 1.0, "de": 0.5}, strata_col="lang",
-            default_fraction=0.25, seed=3)
-        return text_metrics.gopher_quality_flags(s, min_words=30) \
-            .select("doc_id", "n_words", "gopher_pass")
-
-    def run_stream():
-        st = (spark.readStream.schema(docs.schema).parquet(land))
-        q = (pipe(st).writeStream.format("parquet")
-             .option("path", out).option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    run_stream()
-    docs.filter(F.col("doc_id") >= 150).write.mode("append") \
-        .parquet(land)
-    run_stream()
-
-    got = spark.read.parquet(out).toPandas() \
-        .sort_values("doc_id").reset_index(drop=True)
-    exp = pipe(docs).toPandas().sort_values("doc_id") \
-        .reset_index(drop=True)
-    assert len(got) == len(exp) > 0
-    assert got.equals(exp)

@@ -20,13 +20,10 @@ UNREACHED_ALLOWLIST = {
     "geeflow_spark.functions.ccdc",
     "geeflow_spark.functions.coords",
     "geeflow_spark.functions.times",
-    "geeflow_spark.operators.chunking",
     "geeflow_spark.operators.dedup",
     "geeflow_spark.operators.knn",
     "geeflow_spark.operators.rasterize",
     "geeflow_spark.operators.reducers",
-    "geeflow_spark.operators.sampling",
-    "geeflow_spark.operators.text_metrics",
     "geeflow_spark.plans.assemble",
     "geeflow_spark.plans.config",
     "geeflow_spark.plans.labels",
