@@ -342,23 +342,6 @@ def _q_dedup_survivors(spark, sf_dir):
     return out.select(F.col("doc_id").cast("long").alias("doc_id"))
 
 
-def _q_dedup_substrings(spark, sf_dir):
-    # Duplicate-substring removal (Lee et al. 2022 ExactSubstr at
-    # token granularity): every 8-token run occurring >= 2 times
-    # corpus-wide is cut from all but its first occurrence. The
-    # planted near-dup structure in the documents table gives ~2k
-    # duplicated window occurrences at sf0.01. Oracle: occurrences
-    # recomputed from the window STRINGS themselves (independent of
-    # the operator's 64-bit rolling fingerprints - the minhash verify
-    # argument), keep-first rank and the token-level rebuild replayed
-    # exactly.
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = dedup.substring_dedup(
-        d, window=8, spread=spark.sparkContext.defaultParallelism)
-    return out.select("doc_id", "ss_n_tokens", "ss_n_removed",
-                      F.col("text").alias("clean_text"))
-
-
 def _q_dedup_survivors_quality(spark, sf_dir):
     # Quality-aware survivor selection: keep the LONGEST member of
     # each duplicate cluster (ties -> min id) instead of the arbitrary
@@ -398,57 +381,14 @@ def _q_dedup_simhash_manku(spark, sf_dir):
                       .alias("hamming"))
 
 
-def _q_dedup_containment(spark, sf_dir):
-    # Directional containment via the rolling-fingerprint inverted
-    # index (the signal symmetric Jaccard misses: short doc quoted
-    # inside a long one). Oracle: containment recomputed from the
-    # window STRINGS themselves (list comprehensions), so the row
-    # checks the fingerprint pipeline end-to-end up to 64-bit
-    # collisions - the minhash verify argument.
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = dedup.containment_pairs(
-        d, threshold=0.5, window=8,
-        spread=spark.sparkContext.defaultParallelism)
-    return out.select("a", "b",
-                      F.round("containment", 6).alias("containment"))
-
-
-def _q_dedup_spans(spark, sf_dir):
-    # Span-level (paragraph) dedup over the interleaved table: a text
-    # span is dropped iff its normalized text already occurred at a
-    # smaller (doc_id, position) ANYWHERE in the corpus; media and
-    # empty spans pass; surviving spans keep their original relative
-    # order (span_idx re-derived by posexplode, so the oracle's
-    # survivor-rank check pins order preservation too). Oracle: the
-    # span derivation replayed as in spans_explode, first-occurrence
-    # ranking recomputed by window over the normalized text itself
-    # (the operator groups by dual digest of the same key - identical
-    # up to engineered 128-bit collisions, exact_dedup's argument).
-    d = derived.with_spans(_widen(spark.read.parquet(
-        f"{sf_dir}/documents.parquet")))
-    out = dedup.span_dedup(d)
-    # posexplode_outer + isNotNull, same rows as posexplode: the plain
-    # generator's inferred size(spans)>0 filter re-evaluated the whole
-    # rebuilt-spans expression per row (guide §4.4's duplicated-
-    # evaluation trap, here on a JVM transform).
-    ex = out.select("doc_id",
-                    F.posexplode_outer("spans").alias("span_idx", "s")) \
-        .filter(F.col("s").isNotNull())
-    return ex.select("doc_id",
-                     F.col("span_idx").cast("long").alias("span_idx"),
-                     F.col("s.kind").alias("kind"),
-                     F.col("s.offset").cast("long").alias("offset"),
-                     F.coalesce(F.col("s.text"), F.col("s.media_ref"))
-                     .alias("content"))
-
-
 def _q_spans_explode(spark, sf_dir):
     # Interleaved span derivation + order-preserving explode (the
     # span-sequence invariant surfaced as an oracle-checkable query).
     d = derived.with_spans(_widen(spark.read.parquet(
         f"{sf_dir}/documents.parquet")))
-    # posexplode_outer + isNotNull (see _q_dedup_spans): avoids the
-    # inferred size(spans)>0 filter re-running the span transform.
+    # posexplode_outer + isNotNull, same rows as posexplode: the plain
+    # generator makes Catalyst infer a size(spans)>0 filter that
+    # re-runs the whole span transform per row.
     ex = d.select("doc_id",
                   F.posexplode_outer("spans").alias("span_idx", "s")) \
         .filter(F.col("s").isNotNull())
@@ -543,10 +483,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_components": _q_dedup_components,
         "dedup_survivors": _q_dedup_survivors,
         "dedup_survivors_quality": _q_dedup_survivors_quality,
-        "dedup_substrings": _q_dedup_substrings,
         "dedup_simhash_manku": _q_dedup_simhash_manku,
-        "dedup_spans": _q_dedup_spans,
-        "dedup_containment": _q_dedup_containment,
         "spans_explode": _q_spans_explode,
         "src_s2_cloudfree_mosaic": _q_src_s2_cloudfree_mosaic,
         "src_s2_quality_mosaic": _q_src_s2_quality_mosaic,
@@ -876,62 +813,6 @@ def oracle_sql() -> dict[str, str]:
           SELECT CAST(doc_id AS BIGINT) AS doc_id FROM documents
           WHERE doc_id NOT IN (SELECT n FROM comp WHERE component <> n)
         """,
-        # duplicate-substring removal: positional 8-token windows from
-        # the window STRINGS (independent of the operator's rolling
-        # fingerprints), corpus-wide occurrence count + keep-first
-        # rank over (doc_id, pos), covered-token union, token-level
-        # rebuild. Short docs (0 < T < 8 tokens) form ONE whole-doc
-        # window; empty docs pass through with ''.
-        "dedup_substrings": r"""
-          WITH base AS (
-            SELECT doc_id,
-                   list_filter(string_split_regex(trim(text), '\s+'),
-                               x -> x <> '') AS ws
-            FROM documents),
-          g AS (
-            SELECT doc_id, ws, len(ws) AS n,
-                   unnest([i for i in range(0,
-                     CASE WHEN len(ws) >= 8 THEN len(ws) - 7
-                          WHEN len(ws) > 0 THEN 1 ELSE 0 END)]) AS pos
-            FROM base),
-          win AS (
-            SELECT doc_id, n, pos,
-                   array_to_string(ws[pos+1:least(pos+8, n)], ' ')
-                     AS wstr
-            FROM g),
-          r AS (
-            SELECT doc_id, n, pos,
-                   COUNT(*) OVER (PARTITION BY wstr) AS cnt,
-                   ROW_NUMBER() OVER (PARTITION BY wstr
-                                      ORDER BY doc_id, pos) AS rn
-            FROM win),
-          cov AS (
-            SELECT DISTINCT doc_id,
-                   unnest([j for j in range(pos,
-                                            least(pos+8, n))]) AS j
-            FROM r WHERE cnt >= 2 AND rn >= 2),
-          toks AS (
-            SELECT doc_id, unnest(ws) AS t,
-                   unnest([j for j in range(0, len(ws))]) AS j
-            FROM base),
-          kept AS (
-            SELECT k.doc_id, k.j, k.t
-            FROM toks k LEFT JOIN cov c
-              ON c.doc_id = k.doc_id AND c.j = k.j
-            WHERE c.doc_id IS NULL),
-          rebuilt AS (
-            SELECT doc_id, string_agg(t, ' ' ORDER BY j) AS ct
-            FROM kept GROUP BY doc_id),
-          nrm AS (
-            SELECT doc_id, COUNT(*) AS nr FROM cov GROUP BY doc_id)
-          SELECT b.doc_id,
-                 CAST(len(b.ws) AS BIGINT) AS ss_n_tokens,
-                 CAST(COALESCE(nrm.nr, 0) AS BIGINT) AS ss_n_removed,
-                 COALESCE(rebuilt.ct, '') AS clean_text
-          FROM base b
-          LEFT JOIN rebuilt ON rebuilt.doc_id = b.doc_id
-          LEFT JOIN nrm ON nrm.doc_id = b.doc_id
-        """,
         # quality-aware winner: same closure, then the (length DESC,
         # id ASC) rank-1 member per component survives; everything in
         # a component but not rank-1 is dropped.
@@ -962,76 +843,6 @@ def oracle_sql() -> dict[str, str]:
         "dedup_minhash_pairs": _ngram_jaccard_oracle(3, 0.6),
         "dedup_simhash_pairs": _SIMHASH_ORACLE,
         "dedup_simhash_manku": _simhash_manku_oracle(6, 3, 3),
-        # containment from window strings: build each doc's distinct
-        # 8-word rolling windows (partial windows when the doc is
-        # shorter, matching the Spark kernel's greatest(n-w+1, 1)
-        # index range), then ordered-pair intersect / |a| - the
-        # fingerprint layer is checked implicitly (hashing is a
-        # set-preserving map up to 64-bit collisions).
-        "dedup_containment": r"""
-          WITH w AS (
-            SELECT doc_id,
-                   string_split_regex(lower(trim(text)), '\s+') AS ws
-            FROM documents
-            WHERE trim(text) <> ''),
-          f AS (
-            SELECT doc_id,
-                   list_distinct([array_to_string(
-                       ws[i:i+7], ' ')
-                     for i in range(1, greatest(len(ws) - 7, 1) + 1)])
-                     AS fps
-            FROM w)
-          SELECT a.doc_id AS a, b.doc_id AS b,
-                 ROUND(len(list_intersect(a.fps, b.fps))
-                       / CAST(len(a.fps) AS DOUBLE), 6) AS containment
-          FROM f a JOIN f b ON a.doc_id <> b.doc_id
-          WHERE len(list_intersect(a.fps, b.fps))
-                / CAST(len(a.fps) AS DOUBLE) >= 0.5
-        """,
-        # span-level dedup: the derivation of spans_explode, then
-        # first-occurrence ranking by normalized span text (window
-        # over (doc_id, pos)); media/empty spans bypass the ranking;
-        # span_idx recomputed as the survivor rank inside each doc so
-        # the row also checks order preservation.
-        "dedup_spans": r"""
-          WITH base AS (
-            SELECT doc_id, string_split_regex(trim(text), '\s+') AS words
-            FROM documents),
-          s AS (
-            SELECT doc_id, g.range AS pos, words
-            FROM base, range(0, 4) g),
-          exp AS (
-            SELECT doc_id, pos,
-                   CASE WHEN pos % 2 = 0 THEN 'text' ELSE 'media' END
-                     AS kind,
-                   CAST(pos * 32 + doc_id % 7 AS BIGINT) AS offset,
-                   CASE WHEN pos % 2 = 0 THEN
-                     array_to_string(words[CAST(pos*2+1 AS INT):
-                                           CAST(pos*2+2 AS INT)], ' ')
-                   ELSE 'media/' || CAST(doc_id AS VARCHAR) || '/'
-                        || CAST(pos AS VARCHAR) END AS content
-            FROM s),
-          k AS (
-            SELECT *,
-                   CASE WHEN kind = 'text' AND length(trim(content)) > 0
-                        THEN lower(trim(regexp_replace(content,
-                                                       '\s+', ' ', 'g')))
-                   END AS nk
-            FROM exp),
-          r AS (
-            SELECT *,
-                   CASE WHEN nk IS NULL THEN 1
-                        ELSE row_number() OVER (PARTITION BY nk
-                                                ORDER BY doc_id, pos)
-                   END AS rn
-            FROM k)
-          SELECT doc_id,
-                 CAST(row_number() OVER (PARTITION BY doc_id
-                                         ORDER BY pos) - 1 AS BIGINT)
-                   AS span_idx,
-                 kind, r."offset" AS offset, content
-          FROM r WHERE rn = 1
-        """,
         "spans_explode": r"""
           WITH base AS (
             SELECT doc_id, string_split_regex(trim(text), '\s+') AS words

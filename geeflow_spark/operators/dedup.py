@@ -51,30 +51,15 @@ _cache_lock = threading.Lock()
 
 
 def release_candidate_caches() -> None:
-    """Unpersists candidate-pair caches from prior
-    minhash_duplicate_pairs calls AND the occurrence caches of prior
-    substring_dedup / containment_pairs calls. Called automatically at
-    the start of each new call; callers that keep many results live
-    concurrently can instead call this explicitly when done with ALL
-    of them. Releases here are recompute-safe: a released result stays
-    correct, it just recomputes per action."""
+    """Unpersists the candidate-pair caches of prior
+    minhash_duplicate_pairs calls. Called automatically at the start
+    of each new call; callers that keep many results live concurrently
+    can instead call this explicitly when done with ALL of them.
+    Releases here are recompute-safe: a released result stays correct,
+    it just recomputes per action."""
     with _cache_lock:
         while _live_candidate_caches:
             _live_candidate_caches.pop().unpersist(blocking=False)
-        while _live_occurrence_caches:
-            _live_occurrence_caches.pop().unpersist(blocking=False)
-
-
-# NOTE (r7): persisting the occurrence/posting frames of
-# substring_dedup / containment_pairs (so the count aggregation and
-# the join-back probe share one fingerprint pass) was measured and
-# REJECTED: the columnar cache encode of the exploded 24-byte rows
-# cost more than the saved Arrow pass in back-to-back A/B at sf1.0,
-# and at 10^12 docs materializing the occurrence table trades a pure
-# CPU re-pass for corpus-token-count x 24 bytes of storage traffic.
-# Both consumers re-derive the occurrence pipeline; the skew-safe
-# partial-aggregated count + AQE-splittable join-back stands.
-_live_occurrence_caches: list = []
 
 
 def _token_shingles(text: str, k: int) -> set:
@@ -145,33 +130,6 @@ def shingle_hashes_col(text: Column, k: int = 3) -> Column:
     return _sh(token_hashes_col(text))
 
 
-def window_fingerprints_col(text: Column, window: int = 8) -> Column:
-    """text -> array<long> of rolling `window`-token fingerprints in
-    POSITION order: element i is the fold of tokens[i:i+window], so
-    `posexplode` recovers each occurrence's token offset - the
-    positional sibling of `shingle_hashes_col` (which dedups per row
-    for set semantics). Same kernel (per-token JVM xxhash64 once, then
-    the vectorized numpy polynomial fold), same short-doc convention
-    (0 < T < window tokens -> ONE fingerprint folding all T tokens at
-    position 0), empty text -> empty array. No case folding: consumers
-    (substring_dedup) rebuild the ORIGINAL text, so occurrences must
-    key on the exact token sequence.
-    """
-    @pandas_udf(ArrayType(LongType()))
-    def _wh(tok_hashes: pd.Series) -> pd.Series:
-        flat, counts, _ = _segmented(tok_hashes)
-        sh, sh_counts = _shingle_hashes_flat(flat, counts, window)
-        out = []
-        pos = 0
-        for c in sh_counts:
-            c = int(c)
-            out.append(sh[pos:pos + c].astype(np.int64).tolist())
-            pos += c
-        return pd.Series(out)
-
-    return _wh(token_hashes_col(text))
-
-
 def token_hashes_col(text: Column) -> Column:
     """text -> array<long>: xxhash64 of each whitespace token (JVM-side).
 
@@ -226,10 +184,9 @@ def _horner_window_fps(h: Column, window: int) -> Column:
     uint64 fold, so the output is BIT-IDENTICAL to the Arrow form
     (probed: exceptAll both ways empty on the 10x corpus) - while
     removing the Python boundary from every consumer (no worker
-    round-trip, no Arrow transpose; measured faster per pass, and the
-    skew-safe substring/containment pipelines evaluate the pass
-    twice). Short docs (0 < T < window) fold all T tokens into one
-    fingerprint at position 0; empty -> empty array.
+    round-trip, no Arrow transpose; measured faster per pass). Short
+    docs (0 < T < window) fold all T tokens into one fingerprint at
+    position 0; empty -> empty array.
 
     `h` MUST be an attribute reference (bound by a lower Project), not
     an inline expression: higher-order-function lambdas evaluate
@@ -371,82 +328,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
         keyed = keyed.withColumn(f"_k{i}", fn(key))
     w_min = keyed.groupBy(*kcols).agg(F.min(id_col).alias(id_col))
     return keyed.join(w_min, [*kcols, id_col], "inner").drop(*kcols)
-
-
-def span_dedup(df: DataFrame, spans_col: str = "spans",
-               id_col: str = "doc_id", normalize: bool = True,
-               key_fns: Sequence[Callable[[Column], Column]] | None = None,
-               ) -> DataFrame:
-    """Corpus-global exact dedup of interleaved TEXT spans (paragraph
-    dedup): within each document's span array, a text span is dropped
-    iff the same normalized text already occurred at a smaller
-    (doc_id, position) anywhere in the corpus. The first occurrence
-    survives; media spans (kind != 'text') and empty/null text spans
-    always pass; surviving spans keep their original relative order and
-    offsets (the BASELINE.json span-sequence invariant). Same schema
-    out as in.
-
-    This is the span-level sibling of exact_dedup: web pipelines over
-    interleaved documents dedup boilerplate at the PARAGRAPH level
-    (headers, navboxes, license blocks recur across pages whose full
-    texts differ), where whole-doc dedup sees nothing.
-
-    Plan shape at 10^12 docs: the shuffle never carries span text -
-    text spans reduce to (doc_id, pos, 40 bytes of dual digest), the
-    winner per digest pair comes from one partial-aggregated min, and
-    only the DROPPED positions (duplicate spans) flow back to the
-    documents, grouped to one short array per affected doc. The final
-    join is AQE-planned (no forced broadcast: at real boilerplate
-    rates most docs ARE affected). Collision safety = exact_dedup's
-    argument: two independent digests, spurious merges ~2^-128.
-    `key_fns` is injectable the same way, so tests can force a
-    first-digest collision and assert both spans survive.
-    """
-    if key_fns is None:
-        key_fns = (F.xxhash64, lambda c: F.sha2(c, 256))
-    s = F.col("_s")
-    txt = s.getField("text")
-    norm = F.lower(F.trim(F.regexp_replace(txt, r"\s+", " "))) \
-        if normalize else txt
-    # posexplode_OUTER, not posexplode (r7): the plain generator lets
-    # Catalyst infer `size(spans) > 0` and evaluate the ENTIRE span-
-    # building transform a second time per row as a pushed filter (the
-    # containment_pairs lesson); the kind/text filter below already
-    # drops the null rows outer-explode emits for empty arrays, so the
-    # output is identical. The normalized text is bound ONCE as a
-    # column before the digest projection - each key_fn referenced the
-    # full regexp_replace/lower/trim chain, evaluating it per digest.
-    ex = df.select(F.col(id_col),
-                   F.posexplode_outer(spans_col).alias("_pos", "_s"))
-    keyed = (ex.filter((s.getField("kind") == "text")
-                       & txt.isNotNull() & (F.length(F.trim(txt)) > 0))
-             .select(id_col, "_pos", norm.alias("_nm"))
-             .select(id_col, "_pos",
-                     *[fn(F.col("_nm")).alias(f"_k{i}")
-                       for i, fn in enumerate(key_fns)]))
-    kcols = [f"_k{i}" for i in range(len(key_fns))]
-    winners = keyed.groupBy(*kcols).agg(
-        F.min(F.struct(F.col(id_col).alias("i"),
-                       F.col("_pos").alias("p"))).alias("_w"))
-    dropped = (keyed.join(winners, kcols)
-               .filter((F.col(id_col) != F.col("_w.i"))
-                       | (F.col("_pos") != F.col("_w.p")))
-               .groupBy(id_col)
-               .agg(F.collect_set("_pos").alias("_drop")))
-    out = df.join(dropped, id_col, "left")
-    # Linear rebuild (r6 verdict item 6): surviving indices via ONE
-    # array_except hash-set pass (order-preserving on the first array)
-    # + element_at gather - O(S + |drop|) instead of the per-element
-    # array_contains scan (O(S * |drop|), quadratic when most spans of
-    # a long doc are boilerplate duplicates).
-    kept = F.when(F.col("_drop").isNull() | (F.size(spans_col) == 0),
-                  F.col(spans_col)).otherwise(
-        F.transform(
-            F.array_except(F.sequence(F.lit(0),
-                                      F.size(spans_col) - F.lit(1)),
-                           F.col("_drop")),
-            lambda p: F.element_at(F.col(spans_col), p + F.lit(1))))
-    return out.withColumn(spans_col, kept).drop("_drop")
 
 
 def _spread(df: DataFrame, n: int | None) -> DataFrame:
@@ -985,353 +866,6 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float,
                                                 F.col("_shb")))
             .filter(F.col("jaccard") >= threshold)
             .select("a", "b", "jaccard"))
-
-
-def containment_pairs(df: DataFrame, threshold: float = 0.5,
-                      window: int = 8, text_col: str = "text",
-                      id_col: str = "doc_id",
-                      max_postings: int = 4096,
-                      spread: int | None = None) -> DataFrame:
-    """Directional CONTAINMENT pairs (a, b, containment): the fraction
-    of doc a's distinct rolling word-window fingerprints
-    (`_horner_window_fps` over lowercased token hashes - the
-    winnowing-style shingle fingerprint set) that also occur in doc b,
-    for every ordered pair with containment >= threshold.
-
-    This is the dedup signal symmetric Jaccard structurally misses: a
-    short document quoted whole inside a long one has near-1.0
-    containment but tiny Jaccard (the union is dominated by the long
-    doc). Web pipelines use it to drop wrapper/quotation copies after
-    near-dup filtering.
-
-    Plan shape at 10^12 docs: an inverted-index BUCKET pipeline, not a
-    self-join and not an all-pairs scan - per-doc DISTINCT fingerprints
-    explode into (fingerprint, id, n_fp) postings, ONE pass (a
-    fingerprint self-join would rescan + re-explode the corpus for
-    both aliases - measured 2 scans / 12 exchanges / 10.4 s at sf0.1
-    vs 1 scan / 4 exchanges / ~2 s for this shape). A window count
-    over the fingerprint drops singleton postings (no pair possible;
-    on a clean corpus that is ~all of them) and hot postings above
-    `max_postings` (boilerplate windows occurring in ~every doc - the
-    O(postings^2) blowup; dropped fingerprints still count in the
-    denominator, so capped containment only UNDERestimates -
-    conservative). The count, the groupBy that builds the bucket, and
-    the ordered-pair emission all ride one hash partitioning on the
-    8-byte fingerprint - the shuffle never carries text. Per-pair
-    shared-window counts then partial-aggregate on (a, b).
-
-    Exactness: fingerprints are the minhash-family polynomial fold of
-    per-token xxhash64s (`_horner_window_fps`),
-    injective on window token sequences up to 64-bit collisions (the
-    minhash_duplicate_pairs verify argument), so containment over
-    fingerprint SETS equals containment over window-string sets; the
-    driver oracle recomputes containment from the window strings
-    themselves. Empty/whitespace-only docs have no fingerprints and
-    emit no pairs.
-    """
-    # Pure-JVM staged fingerprints (r7): bind token hashes, then the
-    # DISTINCT fingerprint array (multi-use: size + explode), then
-    # explode. Bit-identical values to the former Arrow form; zero
-    # Python nodes. explode_OUTER + post-filter, not explode: plain
-    # explode makes Catalyst infer `size(fp) > 0` and push it below
-    # the spread exchange, re-evaluating the fingerprint pass over the
-    # whole corpus a second time (measured: doubled eval nodes).
-    b = (_spread(df, spread)
-         .select(F.col(id_col),
-                 token_hashes_col(F.lower(F.col(text_col)))
-                 .alias("_th")))
-    fps = F.array_distinct(_horner_window_fps(F.col("_th"), window))
-    base = (b.select(id_col, fps.alias("_fp"))
-            .select(id_col, F.size("_fp").alias("_n"),
-                    F.explode_outer("_fp").alias("_f"))
-            .filter(F.col("_f").isNotNull()))
-    # Posting-list size gate via PARTIAL-AGGREGATED groupBy + semi-join,
-    # not Window.partitionBy("_f") (r6 verdict): the window colocated
-    # every posting of a fingerprint in one task BEFORE the cap could
-    # apply - a single-task straggler on exactly the boilerplate keys
-    # max_postings exists to drop. The count groupBy map-side-combines
-    # to one row per key; the semi-join back is AQE skew-splittable,
-    # and hot keys are gone before the collect_list groupBy builds any
-    # bucket array.
-    live = (base.groupBy("_f").agg(F.count("*").alias("_pn"))
-            .filter((F.col("_pn") > 1) & (F.col("_pn") <= max_postings))
-            .select("_f"))
-    post = base.join(live, "_f", "left_semi")
-    grouped = (post.groupBy("_f")
-               .agg(F.collect_list(
-                   F.struct(F.col(id_col).alias("i"),
-                            F.col("_n").alias("n"))).alias("_ms")))
-    ms = F.col("_ms")
-    pair_arr = F.flatten(F.transform(
-        ms, lambda x: F.transform(
-            F.filter(ms, lambda y: y["i"] != x["i"]),
-            lambda y: F.struct(x["i"].alias("a"), y["i"].alias("b"),
-                               x["n"].alias("_na")))))
-    return (grouped.select(F.explode(pair_arr).alias("p"))
-            .select("p.a", "p.b", "p._na")
-            .groupBy("a", "b", "_na")
-            .agg(F.count("*").alias("_shared"))
-            .withColumn("containment",
-                        F.col("_shared") / F.col("_na"))
-            .filter(F.col("containment") >= threshold)
-            .select("a", "b", "containment"))
-
-
-def substring_dedup(df: DataFrame, window: int = 8,
-                    min_count: int = 2, keep_first: bool = True,
-                    text_col: str = "text", id_col: str = "doc_id",
-                    metrics: bool = True,
-                    spread: int | None = None) -> DataFrame:
-    """Duplicate-substring removal at token granularity - the
-    ExactSubstr pass of Lee et al. 2022 ("Deduplicating Training Data
-    Makes Language Models Better"), the step web pipelines run IN
-    ADDITION to document-level near-dup filtering: any `window`-token
-    run whose exact token sequence occurs >= `min_count` times
-    corpus-wide is cut from every occurrence except the first
-    (`keep_first=True`, ranked by (doc_id, position); False cuts all
-    occurrences). Returns df's full rows with `text_col` rebuilt from
-    the surviving tokens (single-space joined - token-granularity
-    rebuild, original inter-token whitespace is not preserved), plus
-    `ss_n_tokens` / `ss_n_removed` metric columns when `metrics=True`.
-
-    Plan shape at 10^12 docs: the occurrence pipeline ships
-    (id, position, fingerprint) rows only - 24 bytes, never text. One
-    hash partitioning on the 8-byte fingerprint carries BOTH the
-    corpus-wide occurrence count and the keep-first rank (one
-    Exchange, one Sort, two Window nodes); removed occurrences then
-    explode into covered token positions and aggregate to one
-    positions-array row per affected doc, so the join back to the
-    corpus is keyed on id with a small right side at real duplication
-    rates (AQE picks broadcast when it fits, shuffled hash join
-    otherwise - the survivors-gate lesson: never force the broadcast).
-    The rebuild is JVM-side (filter-by-index over the token array;
-    docs with no duplicated windows pass through with a null positions
-    array and zero per-token work).
-
-    Exactness: fingerprints are the positional rolling fold of
-    per-token xxhash64s (`window_fingerprints_col`) - injective on
-    window token sequences up to 64-bit collisions (the minhash verify
-    argument); the driver oracle recomputes occurrences from the
-    window STRINGS themselves, an independent hash family. Docs with
-    0 < T < window tokens form ONE whole-doc fingerprint (exact short
-    duplicates still dedup); empty docs pass through. Within-doc
-    repeats count as distinct occurrences (a doc repeating its own
-    window keeps only the first copy).
-    """
-    occ = _window_occurrences(_spread(df, spread), window, text_col,
-                              id_col)
-    # Corpus-wide count + keep-first winner via PARTIAL-AGGREGATED
-    # groupBy, not Window.partitionBy("_f") (r6 verdict): a window
-    # colocates every occurrence of a fingerprint in one task with no
-    # map-side combine, so at web scale the top boilerplate windows
-    # ("all rights reserved ...", occurring billions of times) straggle
-    # or OOM the count stage - exactly the keys this operator exists to
-    # cut. groupBy's partial aggregation folds each map task's
-    # occurrences to one (count, min) row per key before the shuffle,
-    # and the join back on _f is AQE skew-join-splittable. Semantics
-    # identical: min(struct(id, pos)) is the row row_number()=1 picked
-    # under orderBy(id, pos).
-    dup = (occ.groupBy("_f")
-           .agg(F.count("*").alias("_cnt"),
-                F.min(F.struct(F.col(id_col).alias("i"),
-                               F.col("_p").alias("p"))).alias("_w"))
-           .filter(F.col("_cnt") >= min_count)
-           .select("_f", "_w"))
-    removed = occ.join(dup, "_f")
-    if keep_first:
-        removed = removed.filter((F.col(id_col) != F.col("_w.i"))
-                                 | (F.col("_p") != F.col("_w.p")))
-    cov = _covered_positions(removed, window, id_col)
-    return _cut_token_positions(df, cov, text_col, id_col, metrics)
-
-
-def _window_occurrences(df: DataFrame, window: int, text_col: str,
-                        id_col: str) -> DataFrame:
-    """Positional window-fingerprint occurrence rows
-    (id, _n token count, _p position, _f fingerprint) - the 24-byte
-    shuffle currency of substring dedup, shared by the batch operator
-    and the streaming per-batch form. Pure JVM (r7): token hashes are
-    bound once (`_th`, multi-use so CollapseProject keeps the
-    binding), the rolling fold is `_horner_window_fps` - bit-identical
-    to the former Arrow UDF, zero Python nodes in the plan.
-    explode_outer + isNotNull, NOT a plain generator: plain explode
-    makes Catalyst infer size(arr) > 0 and push it below upstream
-    exchanges, re-running the fingerprint pass over the whole corpus
-    (the containment_pairs lesson)."""
-    b = df.select(F.col(id_col),
-                  token_hashes_col(F.col(text_col)).alias("_th"))
-    h = F.col("_th")
-    return (b.select(id_col, F.size(h).alias("_n"),
-                     _horner_window_fps(h, window).alias("_fp"))
-            .select(id_col, "_n",
-                    F.posexplode_outer("_fp").alias("_p", "_f"))
-            .filter(F.col("_f").isNotNull()))
-
-
-def _covered_positions(removed: DataFrame, window: int,
-                       id_col: str) -> DataFrame:
-    """Removed occurrences (id, _n, _p) -> (id, _rm array<int>) of
-    covered token positions, one row per affected doc. The short-doc
-    whole-text fingerprint covers [0, T) - least() clamps the window
-    run to the doc."""
-    return (removed
-            .select(id_col,
-                    F.explode(F.sequence(
-                        F.col("_p"),
-                        F.least(F.col("_p") + F.lit(window),
-                                F.col("_n")) - F.lit(1))).alias("_j"))
-            .groupBy(id_col)
-            .agg(F.collect_set("_j").alias("_rm")))
-
-
-def _cut_token_positions(df: DataFrame, cov: DataFrame, text_col: str,
-                         id_col: str, metrics: bool) -> DataFrame:
-    """Rebuilds `text_col` dropping the token positions in `cov`
-    ((id, _rm array<int>), one row per affected doc - unaffected docs
-    pass through on the left join). JVM-side filter-by-index; shared
-    by the batch operator and the streaming per-batch form."""
-    out = df.join(cov, on=id_col, how="left")
-    toks = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"),
-                    lambda t: t != "")
-    rm = F.coalesce(F.col("_rm"),
-                    F.expr("CAST(array() AS array<int>)"))
-    # Bind the token array ONCE as a real column (multi-use non-cheap
-    # alias, so CollapseProject cannot inline the split back into the
-    # per-element lambdas), then rebuild in LINEAR time: surviving
-    # positions = array_except(all positions, removed) - O(T + |rm|)
-    # hash-set pass - instead of the r6 per-element array_contains scan
-    # (O(T * |rm|), quadratic on heavily-duplicated long docs - r6
-    # verdict item 6). array_except preserves first-array order, so
-    # the surviving positions stay ascending and the rebuilt text is
-    # byte-identical.
-    out = (out.withColumn("_tk", toks)
-           .withColumn("_kp",
-                       F.when(F.size("_tk") > 0,
-                              F.array_except(
-                                  F.sequence(F.lit(0),
-                                             F.size("_tk") - F.lit(1)),
-                                  rm))
-                       .otherwise(F.expr("CAST(array() AS array<int>)"))))
-    kept = F.transform(F.col("_kp"),
-                       lambda p: F.element_at(F.col("_tk"), p + F.lit(1)))
-    out = out.withColumn("_ss_nt", F.size("_tk"))
-    if metrics:
-        out = (out.withColumn("ss_n_tokens",
-                              F.col("_ss_nt").cast("long"))
-               .withColumn("ss_n_removed",
-                           F.size(rm).cast("long")))
-    return (out.withColumn(text_col, F.array_join(kept, " "))
-            .drop("_rm", "_ss_nt", "_tk", "_kp"))
-
-
-# decontaminate's contaminated-id frames are eagerly localCheckpointed
-# (lineage truncated - the benchmark blocks are released before
-# returning, so the ids must not be recomputable-from-them). Each call
-# releases the PREVIOUS call's blocks; release_decontaminate_state()
-# sweeps at session end. Separate registry from the survivors state:
-# a dedup_survivors call must not free a live decontaminate result.
-_decontaminate_live_ids: set = set()
-
-
-def release_decontaminate_state() -> None:
-    """Releases the contaminated-id checkpoint blocks of prior
-    decontaminate() calls (their results recompute nothing - consume
-    before releasing)."""
-    with _cache_lock:
-        from pyspark.sql import SparkSession
-        spark = SparkSession.getActiveSession()
-        sc = spark.sparkContext if spark is not None else None
-        if sc is not None and _decontaminate_live_ids:
-            _release_rdds(sc, set(_decontaminate_live_ids))
-        _decontaminate_live_ids.clear()
-
-
-def decontaminate(docs: DataFrame, benchmark: DataFrame,
-                  window: int = 8, text_col: str = "text",
-                  id_col: str = "doc_id",
-                  bench_text_col: str = "text",
-                  broadcast_max_rows: int = 10_000_000,
-                  spread: int | None = None) -> DataFrame:
-    """Benchmark decontamination: drop every training doc that shares
-    at least one `window`-token n-gram with any benchmark text - the
-    standard test-set-overlap filter LLM pipelines run before
-    training (n-gram collision, case/whitespace-normalized).
-
-    Plan shape at 10^12 docs: the benchmark n-gram set is the SMALL
-    side (test sets are ~10^5-10^7 n-grams) - its distinct
-    fingerprints are localCheckpointed, COUNTED, and broadcast only
-    under `broadcast_max_rows` (a semi-join against exploded corpus
-    fingerprints stays map-side); above the gate the semi-join is
-    AQE-planned, the survivors-gate pattern. The corpus side is one
-    pass: fingerprint -> explode -> semi-join -> distinct contaminated
-    ids -> anti-join back (contaminated ids are a small fraction at
-    real contamination rates; that join is left to AQE). Fingerprints
-    are the rolling-window fold (`_horner_window_fps`)
-    - exact n-gram equality up to 64-bit collisions; empty/whitespace
-    docs have no fingerprints and always survive.
-
-    Returns docs' full rows, decontaminated only. The benchmark
-    fingerprint blocks are released before returning; the (small)
-    contaminated-id frame's blocks are released at the next call or
-    via release_decontaminate_state().
-    """
-    sc = docs.sparkSession.sparkContext
-    release_decontaminate_state()  # previous call's id blocks
-    # BOTH persistent-RDD-id diff windows run under _cc_lock: the
-    # module invariant (see _cc_lock) is that context-wide checkpoint
-    # diffs are serialized - without it, a concurrent dedup_survivors
-    # call's drop-list blocks could land in bench_ids and be released
-    # here (killing that caller's truncated-lineage result), or this
-    # call's blocks could land in the other's sweep.
-    with _cc_lock:
-        # The `before` snapshot MUST precede the localCheckpoint mark:
-        # eager=False registers its persist id AT MARK TIME (probed on
-        # this Spark build), so a post-mark snapshot would put the
-        # bench block inside `before`, leave bench_ids empty, and leak
-        # the block past every release sweep until the ContextCleaner's
-        # nondeterministic GC found it (the storage-creep flake).
-        before = _persistent_rdd_ids(sc)
-        # Staged pure-JVM fingerprints (r7, see _horner_window_fps);
-        # per-row array_distinct is skipped on BOTH sides - the bench
-        # side global-distincts the exploded rows and the docs side
-        # only feeds a left-semi + distinct(id), so per-row duplicate
-        # fingerprints cannot change either result.
-        bench = (benchmark
-                 .select(token_hashes_col(
-                     F.lower(F.col(bench_text_col))).alias("_th"))
-                 .select(_horner_window_fps(F.col("_th"), window)
-                         .alias("_fp"))
-                 .select(F.explode_outer("_fp").alias("_f"))
-                 .filter(F.col("_f").isNotNull())
-                 .distinct()
-                 .localCheckpoint(eager=False))
-        n_bench = int(bench.count())
-        bench_ids = _persistent_rdd_ids(sc) - before
-        try:
-            exploded = (_spread(docs, spread)
-                        .select(F.col(id_col),
-                                token_hashes_col(
-                                    F.lower(F.col(text_col)))
-                                .alias("_th"))
-                        .select(id_col,
-                                _horner_window_fps(F.col("_th"),
-                                                   window)
-                                .alias("_fp"))
-                        .select(id_col,
-                                F.explode_outer("_fp").alias("_f"))
-                        .filter(F.col("_f").isNotNull()))
-            rhs = F.broadcast(bench) if n_bench <= broadcast_max_rows \
-                else bench
-            pre = _persistent_rdd_ids(sc)
-            bad = (exploded.join(rhs, "_f", "left_semi")
-                   .select(id_col).distinct()
-                   .localCheckpoint(eager=True))
-            with _cache_lock:
-                _decontaminate_live_ids.update(
-                    _persistent_rdd_ids(sc) - pre - bench_ids)
-            return docs.join(bad, id_col, "left_anti")
-        finally:
-            _release_rdds(sc, bench_ids)
 
 
 def _block_combo_masks(blocks: int, block_t: int) -> list[int]:

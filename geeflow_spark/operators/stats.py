@@ -132,7 +132,12 @@ def counter_as_dict(moment_row: dict, bins_rows: list[tuple[int, int]],
                     numeric: bool = True, to_int: bool = True,
                     drop_support: bool = False) -> dict:
     """Assembles the reference's CounterAccumulator.as_dict output
-    (stats_util.py:225-241) from the two aggregation results."""
+    (stats_util.py:225-241) from the two aggregation results.
+
+    A numeric band whose integer range is wider than MAX_NUM_BINS has no
+    histogram (`_hist` caps it, as the reference does), so its dict
+    leaves out the five histogram-quantile keys (bins_median, bins_iqr,
+    bins_iqr_std, bins_mad, bins_mad_std) and keeps every other key."""
     c = {int(b): int(cnt) for b, cnt in bins_rows}
     if not c or not sum(c.values()):
         return {}
@@ -149,15 +154,16 @@ def counter_as_dict(moment_row: dict, bins_rows: list[tuple[int, int]],
         x, b = _hist(c, int(d["min"]), int(d["max"]))
         d["bins_mean"] = _bins_mean(c)
         d["bins_std"] = _bins_std(c)
-        d["bins_median"] = hist_quantile(x, b, 0.5)
-        p25, p75 = hist_quantile(x, b, [0.25, 0.75])
-        d["bins_iqr"] = p75 - p25
-        d["bins_iqr_std"] = d["bins_iqr"] / 1.349
-        med = hist_quantile(x, b, 0.5)
-        ax = np.abs(np.array(x) - med)
-        ax, ab = zip(*sorted(zip(ax, b)))
-        d["bins_mad"] = hist_quantile(ax, ab, 0.5)
-        d["bins_mad_std"] = d["bins_mad"] * 1.4826
+        if x is not None:
+            d["bins_median"] = hist_quantile(x, b, 0.5)
+            p25, p75 = hist_quantile(x, b, [0.25, 0.75])
+            d["bins_iqr"] = p75 - p25
+            d["bins_iqr_std"] = d["bins_iqr"] / 1.349
+            med = hist_quantile(x, b, 0.5)
+            ax = np.abs(np.array(x) - med)
+            ax, ab = zip(*sorted(zip(ax, b)))
+            d["bins_mad"] = hist_quantile(ax, ab, 0.5)
+            d["bins_mad_std"] = d["bins_mad"] * 1.4826
     support = {"c": {str(k): v for k, v in sorted(c.items())},
                "numeric": numeric, "to_int": to_int}
     if not drop_support:

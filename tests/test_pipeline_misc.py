@@ -684,115 +684,6 @@ def test_xxh64_twin_matches_spark(spark):
     assert got == [xxh64_str_signed(s) for s in strs]
 
 
-_SPAN_SCHEMA = ("doc_id long, spans array<struct<"
-                "kind:string,text:string,media_ref:string,offset:int>>")
-
-
-def _span_docs(spark):
-    rows = [
-        (1, [("text", "Common Header", None, 0),
-             ("media", None, "m/1/1", 32),
-             ("text", "unique A", None, 64),
-             ("text", "common  header", None, 96)]),   # within-doc dup
-        (2, [("text", "COMMON HEADER ", None, 3),      # cross-doc dup
-             ("text", "unique B", None, 35),
-             ("text", "", None, 67)]),                 # empty: bypasses
-        (3, [("media", None, "m/3/0", 5)]),
-    ]
-    return spark.createDataFrame(rows, _SPAN_SCHEMA)
-
-
-def test_span_dedup(spark):
-    docs = _span_docs(spark)
-    out = dedup.span_dedup(docs)
-    assert out.schema == docs.schema  # same shape out as in
-    got = {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"],
-                          s["offset"]) for s in r["spans"]]
-           for r in out.collect()}
-    # doc 1: within-doc dup at pos 3 dropped; order + offsets intact
-    assert got[1] == [("text", "Common Header", None, 0),
-                      ("media", None, "m/1/1", 32),
-                      ("text", "unique A", None, 64)]
-    # doc 2: cross-doc dup (pos 0, normalized equal to doc 1 pos 0)
-    # dropped; empty-text span bypasses dedup
-    assert got[2] == [("text", "unique B", None, 35),
-                      ("text", "", None, 67)]
-    # doc 3: media only, untouched
-    assert got[3] == [("media", None, "m/3/0", 5)]
-
-
-def test_span_dedup_collision_safe(spark):
-    # Constant first digest: the second independent digest must keep
-    # DISTINCT span texts apart (exact_dedup's collision contract).
-    docs = _span_docs(spark)
-    out = dedup.span_dedup(
-        docs, key_fns=[lambda c: F.lit(0), lambda c: F.sha2(c, 256)])
-    kept = {(r["doc_id"], s["offset"])
-            for r in out.collect() for s in r["spans"]}
-    # "unique A" and "unique B" both survive despite colliding k0
-    assert (1, 64) in kept and (2, 35) in kept
-
-
-def test_containment_directional(spark):
-    # Short doc quoted whole inside a long one: containment(a->b)=1.0
-    # while Jaccard (3/8) and the reverse direction (3/8) stay low -
-    # the signal symmetric near-dup misses by construction.
-    short = "one two three four five"
-    long_ = "zero one two three four five six seven eight nine"
-    pdf = pd.DataFrame({"doc_id": [1, 2, 3],
-                        "text": [short, long_, "alpha beta gamma delta"]})
-    got = dedup.containment_pairs(
-        spark.createDataFrame(pdf), threshold=0.9, window=3).toPandas()
-    assert list(map(tuple, got[["a", "b"]].itertuples(index=False))) == [(1, 2)]
-    assert got["containment"].iloc[0] == 1.0
-    # reverse direction visible (and correct) at a lower threshold
-    lo = dedup.containment_pairs(
-        spark.createDataFrame(pdf), threshold=0.3, window=3).toPandas()
-    rev = lo[(lo.a == 2) & (lo.b == 1)]["containment"]
-    assert len(rev) == 1 and abs(rev.iloc[0] - 3 / 8) < 1e-9
-
-
-def test_containment_max_postings_cap(spark):
-    # A boilerplate window shared by every doc: with the cap below the
-    # corpus size its posting list is dropped (no pair survives); with
-    # the cap at corpus size the 0.25-containment pairs appear. The
-    # denominator always counts ALL fingerprints (capped containment
-    # only underestimates - conservative).
-    docs = [f"common boiler plate u{i} v{i} w{i}" for i in range(5)]
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": range(5), "text": docs}))
-    capped = dedup.containment_pairs(
-        df, threshold=0.2, window=3, max_postings=4).toPandas()
-    assert capped.empty
-    full = dedup.containment_pairs(
-        df, threshold=0.2, window=3, max_postings=5).toPandas()
-    assert len(full) == 20  # 5*4 ordered pairs, each 1/4
-    assert (full["containment"] == 0.25).all()
-
-
-def test_decontaminate(spark):
-    # train doc 10 embeds the benchmark 8-gram verbatim -> dropped;
-    # doc 11 shares only 7 consecutive tokens -> kept; doc 12 is
-    # disjoint and doc 13 empty -> kept. Case-insensitive (the
-    # benchmark is uppercased). The gated (non-broadcast) path must
-    # return identical survivors.
-    bench = spark.createDataFrame(pd.DataFrame(
-        {"doc_id": [1], "text": ["ALPHA beta gamma delta epsilon zeta eta theta"]}))
-    train = spark.createDataFrame(pd.DataFrame({
-        "doc_id": [10, 11, 12, 13],
-        "text": [
-            "intro words alpha beta gamma delta epsilon zeta eta theta tail",
-            "alpha beta gamma delta epsilon zeta eta DIFFERENT",
-            "totally unrelated content here",
-            ""]}))
-    out = dedup.decontaminate(train, bench, window=8).toPandas()
-    assert sorted(out["doc_id"]) == [11, 12, 13]
-    gated = dedup.decontaminate(train, bench, window=8,
-                                broadcast_max_rows=0).toPandas()
-    assert sorted(gated["doc_id"]) == [11, 12, 13]
-    dedup.release_decontaminate_state()
-
-
 def test_dedup_survivors_quality_string_ids(spark):
     # The (quality DESC, id ASC) tie-break must hold for STRING doc
     # ids too (negating a string id casts to NULL and silently breaks
@@ -813,120 +704,3 @@ def test_dedup_survivors_quality_string_ids(spark):
                                  quality_col="q").toPandas()
     assert sorted(out2["doc_id"]) == ["doc01", "doc03", "doc09"]
     dedup.release_survivors_state()
-
-
-def test_substring_dedup(spark):
-    rows = [
-        (1, "a b c d e f g h i j"),      # first occurrence -> kept
-        (2, "x y a b c d e f g h k"),    # same 8-run at pos 2 -> cut
-        (3, "p q r s"),                  # short unique -> kept
-        (4, "p q r s"),                  # short exact dup -> emptied
-        (5, ""),                         # empty passthrough
-        (6, "m n o a b c d e f g h m n o a b c d e f g h"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = dedup.substring_dedup(df, window=8).toPandas() \
-        .set_index("doc_id").sort_index()
-    assert out.loc[1, "text"] == "a b c d e f g h i j"
-    assert out.loc[2, "text"] == "x y k"
-    assert (out.loc[2, "ss_n_tokens"], out.loc[2, "ss_n_removed"]) \
-        == (11, 8)
-    assert out.loc[3, "text"] == "p q r s"
-    assert out.loc[4, "text"] == ""          # whole-doc window dup
-    assert out.loc[5, "text"] == ""
-    assert out.loc[5, "ss_n_removed"] == 0
-    # within-doc repeat: overlapping dup windows cover everything
-    # after the first occurrence's unique prefix
-    assert out.loc[6, "text"] == "m n o"
-    assert out.loc[6, "ss_n_removed"] == 19
-    # keep_first=False cuts every occurrence, including the first
-    allcut = dedup.substring_dedup(df, window=8, keep_first=False) \
-        .toPandas().set_index("doc_id")
-    assert allcut.loc[1, "text"] == "i j"
-    assert allcut.loc[3, "text"] == ""
-    # min_count above a window's occurrence count spares it: the
-    # whole-doc "p q r s" window occurs exactly twice, so doc 4
-    # survives at min_count=3 (the a..h run occurs 4x - doc 6 has it
-    # twice - and keeps being cut)
-    rare = dedup.substring_dedup(df, window=8, min_count=3) \
-        .toPandas().set_index("doc_id")
-    assert rare.loc[4, "text"] == "p q r s"
-    assert rare.loc[2, "text"] == "x y k"
-    # metrics=False keeps the original schema
-    bare = dedup.substring_dedup(df, window=8, metrics=False)
-    assert bare.columns == ["doc_id", "text"]
-
-
-def test_substring_dedup_matches_reference(spark):
-    # property check vs an independent pure-python reference on a
-    # planted corpus: docs share runs by construction (every doc
-    # id%3==1 embeds doc id-1's middle run), plus random uniques.
-    import numpy as np
-    rng = np.random.default_rng(17)
-    vocab = [f"w{i}" for i in range(40)]
-    texts = []
-    for i in range(60):
-        toks = list(rng.choice(vocab, size=24))
-        if i % 3 == 1:
-            toks[5:15] = texts[i - 1].split()[7:17]
-        texts.append(" ".join(toks))
-    W = 6
-    # reference: window strings -> global count + keep-first rank
-    occ = {}
-    for i, t in enumerate(texts):
-        ws = t.split()
-        n = len(ws)
-        spans = range(max(n - W + 1, 1)) if n else range(0)
-        for p in spans:
-            occ.setdefault(" ".join(ws[p:p + W]), []).append((i, p))
-    removed = {}
-    for k, lst in occ.items():
-        if len(lst) >= 2:
-            for (i, p) in sorted(lst)[1:]:
-                n = len(texts[i].split())
-                removed.setdefault(i, set()).update(
-                    range(p, min(p + W, n)))
-    expect = {}
-    for i, t in enumerate(texts):
-        ws = t.split()
-        rm = removed.get(i, set())
-        expect[i] = " ".join(w for j, w in enumerate(ws)
-                             if j not in rm)
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)],
-        "doc_id long, text string")
-    got = dedup.substring_dedup(df, window=W).toPandas() \
-        .set_index("doc_id")
-    for i in range(60):
-        assert got.loc[i, "text"] == expect[i], i
-        assert got.loc[i, "ss_n_removed"] == len(removed.get(i, set()))
-
-
-def test_new_ops_plan_shapes(spark):
-    # Lock the scale-relevant physical-plan properties of the round-6
-    # operators (the PLANS.md audit, as regression tests):
-    # - substring_dedup: exactly ONE Arrow boundary (the fingerprint
-    #   UDF must not be re-evaluated below an inferred-filter push -
-    #   the explode_outer lesson) and no more than 3 exchanges
-    #   (spread, fingerprint window, per-doc position agg)
-    import re
-
-    def detail_nodes(df, name):
-        s = df.sparkSession._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
-        return len(re.findall(rf"^\(\d+\) {name}", s, re.M))
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet")
-    ss = dedup.substring_dedup(docs, window=8)
-    # r7: the corpus-wide count is a partial-aggregated groupBy joined
-    # back to the occurrence rows (skew-safe; the r6 single-evaluation
-    # form was a Window colocating every occurrence of a hot
-    # fingerprint in one task), and the fingerprint pass is the pure-
-    # JVM Horner fold - ZERO Python nodes even though the occurrence
-    # pipeline is evaluated on both join sides. No Window nodes may
-    # remain in the occurrence pipeline.
-    assert detail_nodes(ss, "ArrowEvalPython") == 0
-    assert detail_nodes(ss, "BatchEvalPython") == 0
-    assert detail_nodes(ss, "Window") == 0
-    assert detail_nodes(ss, "Exchange") <= 5

@@ -17,36 +17,7 @@ def _release_all(spark):
     dedup.release_candidate_caches()
     dedup.release_survivors_state()
     dedup.release_component_labels()
-    dedup.release_decontaminate_state()
     spark.catalog.clearCache()
-
-
-def test_decontaminate_releases_bench_blocks(spark):
-    # r7 regression pin: the bench-fingerprint checkpoint is marked
-    # with eager=False, which registers its persist id AT MARK TIME -
-    # the before-snapshot must precede the mark or the block escapes
-    # every release sweep (only the ContextCleaner's nondeterministic
-    # GC would reclaim it: the storage-creep flake's root cause).
-    import time
-
-    from pyspark.sql import functions as F
-    from geeflow_spark.operators import dedup
-
-    _release_all(spark)
-    sc = spark.sparkContext
-    base = dedup._persistent_rdd_ids(sc)
-    d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    train = d.filter(F.col("doc_id") % 10 != 0)
-    bench = d.filter(F.col("doc_id") % 10 == 0)
-    out = dedup.decontaminate(train, bench, window=8)
-    out.write.format("noop").mode("overwrite").save()
-    _release_all(spark)
-    leaked = dedup._persistent_rdd_ids(sc) - base
-    deadline = time.monotonic() + 15
-    while leaked and time.monotonic() < deadline:
-        time.sleep(1.0)
-        leaked = dedup._persistent_rdd_ids(sc) - base
-    assert not leaked, leaked
 
 
 def test_full_battery_twice_no_storage_creep(spark):

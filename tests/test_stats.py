@@ -114,6 +114,26 @@ def test_per_band_counter_stats(spark):
     assert out[0]["n"] == 6
 
 
+def test_counter_wide_range_has_no_hist_quantiles():
+    # A range wider than MAX_NUM_BINS gets no histogram (the reference
+    # caps its bins too, stats_util.py:257-258); the dict keeps every
+    # other key and leaves out the five histogram quantiles.
+    m = {"sum": 2e7, "sum2": 4e14, "n": 2, "min": 0, "max": 20000001,
+         "n_masked": 0}
+    d = stats.counter_as_dict(m, [(0, 1), (20000001, 1)])
+    hist_keys = {"bins_median", "bins_iqr", "bins_iqr_std", "bins_mad",
+                 "bins_mad_std"}
+    assert not hist_keys & d.keys()
+    assert d["n"] == 2 and d["min"] == 0 and d["max"] == 20000001
+    assert d["mode"] == 0 and d["n_masked"] == 0
+    assert d["bins_mean"] == 10000000.5
+    assert d["bins_std"] == 10000000.5
+    assert d["~c"] == {"0": 1, "20000001": 1}
+
+    narrow = stats.counter_as_dict(m | {"max": 9}, [(0, 1), (9, 1)])
+    assert hist_keys <= narrow.keys()
+
+
 def test_save_json_format(tmp_path):
     # stats_util.py:130 formatting contract
     p = tmp_path / "s.json"

@@ -83,77 +83,3 @@ def test_stream_manifest_file_uri(spark, tmp_path, monkeypatch):
 
     assert "stream_0.json" in os.listdir(out / "_manifest")
     assert not (tmp_path / "file:").exists()
-
-
-def test_stream_dedup_builtin_across_batches(spark, tmp_path):
-    import pandas as pd
-    from geeflow_spark.streaming import dedup_stream
-    land = str(tmp_path / "dl")
-    out = str(tmp_path / "dout")
-    ckpt = str(tmp_path / "dckpt")
-    b1 = pd.DataFrame({"doc_id": [1, 2, 3],
-                       "text": ["alpha text", "beta text", "alpha  TEXT"]})
-    spark.createDataFrame(b1).write.mode("overwrite").parquet(land)
-    schema = spark.read.parquet(land).schema
-
-    def run():
-        s = spark.readStream.schema(schema).parquet(land)
-        d = dedup_stream.dedup_stream_builtin(s)
-        return (d.writeStream.format("parquet")
-                .option("path", out).option("checkpointLocation", ckpt)
-                .trigger(availableNow=True).start())
-
-    run().awaitTermination(120)
-    got1 = spark.read.parquet(out).toPandas()
-    # alpha/ALPHA normalize equal -> one survivor
-    assert len(got1) == 2
-
-    # Batch 2: duplicate of batch-1 text arrives later + one new text.
-    b2 = pd.DataFrame({"doc_id": [4, 5],
-                       "text": ["ALPHA text", "gamma text"]})
-    spark.createDataFrame(b2).write.mode("append").parquet(land)
-    run().awaitTermination(120)
-    got2 = spark.read.parquet(out).toPandas()
-    # cross-batch state: the late alpha duplicate is dropped
-    assert len(got2) == 3
-    assert sorted(got2["text"].str.lower().str.split().str[0]) \
-        == ["alpha", "beta", "gamma"]
-
-
-def test_stream_seen_counts_stateful(spark, tmp_path):
-    import pandas as pd
-    from geeflow_spark.streaming import dedup_stream
-    land = str(tmp_path / "sl")
-    ckpt = str(tmp_path / "sckpt")
-    out = str(tmp_path / "sout")
-    ts = pd.Timestamp("2024-01-01")
-    b1 = pd.DataFrame({"doc_id": [1, 2, 3],
-                       "text": ["xx yy", "zz ww", "xx  YY"],
-                       "ts": [ts, ts, ts + pd.Timedelta(minutes=1)]})
-    spark.createDataFrame(b1).write.mode("overwrite").parquet(land)
-    schema = spark.read.parquet(land).schema
-
-    def run():
-        s = spark.readStream.schema(schema).parquet(land)
-        d = dedup_stream.seen_counts_stream(s)
-        # update-mode stateful op -> foreachBatch append sink
-        def sink(batch_df, batch_id):
-            batch_df.write.mode("append").parquet(out)
-        return (d.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("update")
-                .trigger(availableNow=True).start())
-
-    run().awaitTermination(120)
-    # Batch 2: two more of the 'xx yy' digest.
-    b2 = pd.DataFrame({"doc_id": [4, 5],
-                       "text": ["XX yy", "xx yy"],
-                       "ts": [ts + pd.Timedelta(hours=1)] * 2})
-    spark.createDataFrame(b2).write.mode("append").parquet(land)
-    run().awaitTermination(120)
-    got = spark.read.parquet(out).toPandas()
-    # state carried across micro-batches: latest emission for the xx-yy
-    # digest counts all 4 occurrences with the batch-1 first_ts
-    top = got.sort_values("n_seen").iloc[-1]
-    assert top["n_seen"] == 4
-    assert pd.Timestamp(top["first_ts"]) == ts

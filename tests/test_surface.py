@@ -34,7 +34,6 @@ UNREACHED_ALLOWLIST = {
     "geeflow_spark.sources.iceberg",
     "geeflow_spark.sources.registry",
     "geeflow_spark.streaming",
-    "geeflow_spark.streaming.dedup_stream",
     "geeflow_spark.streaming.ingest",
 }
 
