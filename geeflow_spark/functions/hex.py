@@ -209,6 +209,15 @@ def cover_bbox(lat_min, lat_max, lon_min, lon_max, res: int) -> np.ndarray:
     return cells[keep]
 
 
+def cover_bboxes(boxes, res: int):
+    """`cover_bbox` of every (lat_min, lat_max, lon_min, lon_max) row of
+    `boxes`: (cells, box index), grouped by box in row order."""
+    covers = [cover_bbox(*box, res) for box in boxes]
+    owner = np.repeat(np.arange(len(covers)), [len(c) for c in covers])
+    cells = np.concatenate(covers) if covers else np.array([], np.int64)
+    return cells, owner
+
+
 def hex_cell_sql(lat_sql: str, lon_sql: str, res: int) -> str:
     """Scalar SQL expression (DuckDB) computing the packed hex cell id.
 

@@ -298,17 +298,12 @@ def neighbors_ring(cell_id, level: int, ring: int):
     return ids.reshape(cell_id.shape[0], -1)
 
 
-def cover_bbox(lat_min, lat_max, lon_min, lon_max, level: int):
-    """Cell ids at `level` intersecting the lat/lon rectangle (1-D array).
-
-    Guaranteed superset via dense sampling: the rect is padded by half the
-    max cell diagonal and sampled at half the min cell width, so every cell
-    whose interior intersects the rect contributes at least one sample (its
-    inscribed disc of radius min_width/2 has center within the padded rect).
-    Overcover is harmless - the exact geometry test refines after the
-    cell-key join. Intended for small regions (polygons / ROIs); cost is
-    O((extent/cell_width)^2).
-    """
+def _bbox_samples(lat_min, lat_max, lon_min, lon_max, level: int):
+    """Flat (lat, lon) sample grid of `cover_bbox`: the rect padded by
+    half the max cell diagonal, sampled at half the min cell width, so
+    every cell whose interior intersects the rect contributes at least
+    one sample (its inscribed disc of radius min_width/2 has center
+    within the padded rect)."""
     pad = np.degrees(max_diag_rad(level)) / 2 * 1.01
     # Sample step: half the min width, shrunk by cos(lat) for longitude.
     step_lat = np.degrees(min_width_rad(level)) / 2
@@ -318,8 +313,36 @@ def cover_bbox(lat_min, lat_max, lon_min, lon_max, level: int):
     lons = np.arange(lon_min - pad, lon_max + pad + step_lon, step_lon)
     lats = np.clip(lats, -89.999, 89.999)
     glat, glon = np.meshgrid(lats, lons, indexing="ij")
-    ids = latlon_to_cell_id(glat.ravel(), glon.ravel(), level)
-    return np.unique(ids)
+    return glat.ravel(), glon.ravel()
+
+
+def cover_bbox(lat_min, lat_max, lon_min, lon_max, level: int):
+    """Cell ids at `level` intersecting the lat/lon rectangle (1-D array).
+
+    Guaranteed superset via dense sampling (`_bbox_samples`). Overcover
+    is harmless - the exact geometry test refines after the cell-key
+    join. Intended for small regions (polygons / ROIs); cost is
+    O((extent/cell_width)^2).
+    """
+    glat, glon = _bbox_samples(lat_min, lat_max, lon_min, lon_max, level)
+    return np.unique(latlon_to_cell_id(glat, glon, level))
+
+
+def cover_bboxes(boxes, level: int):
+    """`cover_bbox` of every (lat_min, lat_max, lon_min, lon_max) row of
+    `boxes` from ONE encode over the concatenated sample grids. Returns
+    (cells, box index): grouped by box in row order, each box's cells
+    ascending and unique - the concatenation of the per-box covers."""
+    grids = [_bbox_samples(*box, level) for box in boxes]
+    if not grids:
+        return np.array([], np.uint64), np.array([], np.int64)
+    sizes = [len(g[0]) for g in grids]
+    ids = latlon_to_cell_id(np.concatenate([g[0] for g in grids]),
+                            np.concatenate([g[1] for g in grids]), level)
+    covers = [np.unique(part)
+              for part in np.split(ids, np.cumsum(sizes)[:-1])]
+    owner = np.repeat(np.arange(len(covers)), [len(c) for c in covers])
+    return np.concatenate(covers), owner
 
 
 def split_bucket(cell_ids) -> np.ndarray:
@@ -327,15 +350,16 @@ def split_bucket(cell_ids) -> np.ndarray:
 
     Exact semantics of the reference's geographic split
     (export_beam_tfds.py:103): md5 of the *decimal string* of the python
-    int cell id, full 128-bit digest value mod 10.
+    int cell id, full 128-bit digest value mod 10. Signed ids are read
+    as their uint64 bit pattern. The digest runs once per distinct id.
     """
     import hashlib
     cell_ids = np.atleast_1d(np.asarray(cell_ids).astype(np.uint64))
-    out = np.empty(cell_ids.shape[0], dtype=np.int64)
-    for idx, c in enumerate(cell_ids):
-        out[idx] = int(hashlib.md5(str(int(c)).encode("utf-8")).hexdigest(),
-                       16) % 10
-    return out
+    uniq, inverse = np.unique(cell_ids, return_inverse=True)
+    out = np.array([int(hashlib.md5(str(int(c)).encode("utf-8"))
+                        .hexdigest(), 16) % 10 for c in uniq],
+                   dtype=np.int64)
+    return out[inverse]
 
 
 def cell_sql_query(src: str, lat_sql: str, lon_sql: str, level: int,

@@ -63,6 +63,14 @@ def with_cell(df: DataFrame, level: int, lat_col: str = "lat",
         F.col(lat_col), F.col(lon_col)))
 
 
+def region_rings(regions: pd.DataFrame, ring_col: str = "ring",
+                 id_col: str = "region_id") -> dict:
+    """{region id: flat float64 ring} of a small pandas region table."""
+    return dict(zip(regions[id_col].to_numpy(np.int64).tolist(),
+                    (np.asarray(r, dtype=np.float64)
+                     for r in regions[ring_col])))
+
+
 def region_covers_pdf(regions: pd.DataFrame, level: int,
                       ring_col: str = "ring",
                       id_col: str = "region_id",
@@ -72,20 +80,20 @@ def region_covers_pdf(regions: pd.DataFrame, level: int,
 
     Cover = guaranteed superset of cells intersecting each polygon's bbox
     (see s2.cover_bbox), grown by `buffer_deg` when the join targets the
-    buffered polygon; exact (buffered) PIP refines later.
+    buffered polygon; exact (buffered) PIP refines later. All regions'
+    covers come from one `cover_bboxes` call (one S2 encode), in region
+    order with each region's cells ascending.
     """
     grow = max(buffer_deg, 0.0)
-    cells, rids = [], []
-    for _, row in regions.iterrows():
-        ring = np.asarray(row[ring_col], dtype=np.float64)
-        x0, y0, x1, y1 = geometry.polygon_bbox(ring)
-        ids = INDEXES[index].cover_bbox(y0 - grow, y1 + grow,
-                                        x0 - grow, x1 + grow, level)
-        cells.append(ids.astype(np.int64))
-        rids.append(np.full(len(ids), row[id_col], dtype=np.int64))
+    boxes = []
+    for ring in regions[ring_col]:
+        x0, y0, x1, y1 = geometry.polygon_bbox(
+            np.asarray(ring, dtype=np.float64))
+        boxes.append((y0 - grow, y1 + grow, x0 - grow, x1 + grow))
+    cells, owner = INDEXES[index].cover_bboxes(boxes, level)
     return pd.DataFrame({
-        "cell": np.concatenate(cells) if cells else np.array([], np.int64),
-        id_col: np.concatenate(rids) if rids else np.array([], np.int64),
+        "cell": cells.astype(np.int64),
+        id_col: regions[id_col].to_numpy(np.int64)[owner],
     })
 
 
@@ -102,8 +110,7 @@ def pip_filter_udf(regions: pd.DataFrame, ring_col: str = "ring",
     task serialization); the test vectorizes per distinct region in the
     Arrow batch.
     """
-    rings = {int(r[id_col]): np.asarray(r[ring_col], dtype=np.float64)
-             for _, r in regions.iterrows()}
+    rings = region_rings(regions, ring_col, id_col)
 
     @pandas_udf(BooleanType())
     def _pip(lat: pd.Series, lon: pd.Series, rid: pd.Series) -> pd.Series:

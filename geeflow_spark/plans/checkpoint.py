@@ -122,26 +122,41 @@ def _write_manifest(files: _Files, output_path: str, rec: dict) -> None:
                      json.dumps(rec, indent=2, sort_keys=True))
 
 
+def _sql_name(name: str) -> str:
+    """`name` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_value(value, dtype) -> str:
+    """`value` as a SQL literal of type `dtype`: its string form, quoted
+    and escaped (Spark string literals read backslash escapes), cast."""
+    text = str(value).replace("\\", "\\\\").replace("'", "\\'")
+    return f"CAST('{text}' AS {dtype.simpleString()})"
+
+
 def _staged_write(df: DataFrame, staging: str, partition_col: str,
                   todo: list, id_col: str | None) -> dict:
     """Writes the `todo` partitions of `df` in one job, partitioned by
-    their index in `todo`; returns that job's observed metrics."""
+    their index in `todo`; returns that job's observed metrics.
+
+    The index and the observed aggregates are SQL text, one `F.expr`
+    each: built from `F.*` calls they would cost the driver two to four
+    JVM round trips per call."""
     dtype = df.schema[partition_col].dataType
-    values = [F.lit(p).cast(dtype) for p in todo]
-    idx = F.col(_INDEX_COL)
+    values = ", ".join(_sql_value(p, dtype) for p in todo)
+    idx = _sql_name(_INDEX_COL)
     aggs = []
     for i in range(len(todo)):
-        aggs.append(F.count(F.when(idx == i, 1)).alias(f"rows_{i}"))
+        aggs.append(F.expr(f"count_if({idx} = {i}) AS rows_{i}"))
         if id_col:
-            own = F.when(idx == i, F.col(id_col))
-            aggs += [F.min(own).cast("string").alias(f"id_min_{i}"),
-                     F.max(own).cast("string").alias(f"id_max_{i}")]
+            own = f"CASE WHEN {idx} = {i} THEN {_sql_name(id_col)} END"
+            aggs += [F.expr(f"CAST({fn}({own}) AS STRING) AS id_{fn}_{i}")
+                     for fn in ("min", "max")]
     obs = Observation()
     # array_position is 0 for a value outside `todo`, so idx is -1 there.
-    (df.withColumn(_INDEX_COL,
-                   F.array_position(F.array(*values), F.col(partition_col))
-                   - 1)
-     .filter(idx >= 0)
+    (df.withColumn(_INDEX_COL, F.expr(
+        f"array_position(array({values}), {_sql_name(partition_col)}) - 1"))
+     .filter(F.expr(f"{idx} >= 0"))
      .observe(obs, *aggs)
      .write.mode("overwrite").partitionBy(_INDEX_COL).parquet(staging))
     return obs.get

@@ -13,9 +13,9 @@ BASELINE.json input_hint:
     -> geographic split (md5(s2_cell) % 10)
   preserving the span-sequence (kind, text, media_ref, order) row-for-row.
 
-One narrow stage end-to-end on the document side: scan -> encode -> BHJ
--> PIP -> tile math -> split hash. The only shuffle is the final
-first-match aggregation (map-side partials shrink it to output size).
+One narrow stage end-to-end on the document side: scan -> one Arrow
+kernel (encode -> cover lookup -> PIP -> tile math -> split hash). The
+document side never shuffles.
 """
 
 from __future__ import annotations
@@ -23,7 +23,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType)
@@ -70,10 +69,12 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
     doc_id, spans, lat, lon, region_id, gridcode, class_name,
     utm_zone, tile_x, tile_y, split.
 
-    Plan shape (scale-first): scan -> ONE mapInPandas pass (S2 encode +
+    Plan shape (scale-first): scan -> ONE mapInArrow pass (S2 encode +
     cover-cell candidate lookup via searchsorted + PIP refine + UTM tile
-    + split cell) -> JVM-side md5 split bucket. The cover table (cell ->
-    candidate regions) and the rings travel in the task closure - the
+    + md5 split bucket of the level-`split_level` parent, hashed once
+    per distinct cell in the batch) whose output schema is the final
+    column order - nothing runs on the JVM after it. The cover table
+    (cell -> candidate regions) and the rings travel in the task closure - the
     small broadcast side - so the document rows cross the Arrow boundary
     exactly ONCE and the candidate fan-out (the old broadcast hash join,
     2.7x row inflation on the JVM side and a second Arrow round-trip)
@@ -109,8 +110,7 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
     cov_rids = cov["region_id"].to_numpy(np.int64)
     uc, ustart, ucnt = np.unique(cov_cells, return_index=True,
                                  return_counts=True)
-    rings = {int(r["region_id"]): np.asarray(r["ring"], dtype=np.float64)
-             for _, r in regions.iterrows()}
+    rings = spatial_join.region_rings(regions)
     keep = [c for c in ("gridcode", "class_name") if c in regions.columns]
     reg_ids_sorted = np.sort(regions["region_id"].to_numpy(np.int64))
     reg_order = np.argsort(regions["region_id"].to_numpy(np.int64))
@@ -125,7 +125,7 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
         + [StructField("utm_zone", StringType()),
            StructField("tile_x", DoubleType()),
            StructField("tile_y", DoubleType()),
-           StructField("split_cell", LongType())])
+           StructField("split", StringType(), nullable=False)])
     doc_cols = [f.name for f in doc_fields]
     lat_ix = doc_cols.index("lat")
     lon_ix = doc_cols.index("lon")
@@ -150,6 +150,7 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
         import pyarrow as pa
         half = tile_cell_size * tile_width / 2.0
         zone_dict = pa.array(zone_strings, type=pa.string())
+        split_dict = pa.array(splits.SPLIT_NAMES, type=pa.string())
         prop_pa = {c: pa.array(prop_arrays[c].tolist(),
                                type=pa.int64() if c == "gridcode"
                                else pa.string())
@@ -210,7 +211,7 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
             doc_ix, rid = doc_ix[inside], rid[inside]
             if len(doc_ix) == 0:
                 continue
-            # per-DOC tile + split (computed once per doc, gathered)
+            # per-DOC tile (computed once per doc, gathered)
             e, nn, zn, zl = utm_lib.from_latlon(la, lo)
             x0 = np.round((e - half) / tile_cell_size) * tile_cell_size
             y0 = np.round((nn - half) / tile_cell_size) * tile_cell_size
@@ -220,7 +221,8 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
                           np.clip(((la + 80.0) / 8.0).astype(np.int64),
                                   0, 20), 21)
             zone_code = (zn - 1) * 22 + li
-            scells = s2.parent(leaf, split_level).astype(np.int64)
+            # split bucket: one md5 per distinct split cell of the pairs
+            bucket = s2.split_bucket(s2.parent(leaf[doc_ix], split_level))
             base = rb.take(pa.array(doc_ix, type=pa.int64()))
             ridx = np.searchsorted(reg_ids_sorted, rid)
             extras = [pa.array(rid, type=pa.int64())]
@@ -231,18 +233,9 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
                                                type=pa.int64())),
                        pa.array(x0[doc_ix], type=pa.float64()),
                        pa.array(y0[doc_ix], type=pa.float64()),
-                       pa.array(scells[doc_ix], type=pa.int64())]
+                       split_dict.take(pa.array(bucket, type=pa.int64()))]
             yield pa.RecordBatch.from_arrays(
                 [base.column(i) for i in range(base.num_columns)] + extras,
                 names=[f.name for f in out_schema.fields])
 
-    refined = docs.mapInArrow(_kernel, out_schema)
-    bucket = splits.md5_mod10_col(F.col("split_cell"))
-    return (refined
-            .withColumn("split",
-                        F.when(bucket == 9, "test")
-                         .when(bucket == 8, "val")
-                         .otherwise("train"))
-            .drop("split_cell")
-            .select(*doc_cols, "region_id", *keep,
-                    "utm_zone", "tile_x", "tile_y", "split"))
+    return docs.mapInArrow(_kernel, out_schema)

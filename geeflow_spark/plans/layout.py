@@ -153,17 +153,11 @@ def join_points_regions_pruned(spark: SparkSession, path: str, regions,
     """
     import numpy as np
 
-    from geeflow_spark.functions import geometry
     from geeflow_spark.operators import spatial_join as sj
 
-    mod = INDEXES[index]
-    coarse = set()
-    for _, row in regions.iterrows():
-        ring = np.asarray(row["ring"], dtype=np.float64)
-        x0, y0, x1, y1 = geometry.polygon_bbox(ring)
-        ids = mod.cover_bbox(y0, y1, x0, x1, coarse_level)
-        coarse.update(int(c) for c in np.asarray(ids).astype(np.int64))
-    pts = read_cells(spark, path, sorted(coarse),
+    coarse = np.unique(sj.region_covers_pdf(regions, coarse_level,
+                                            index=index)["cell"])
+    pts = read_cells(spark, path, coarse.tolist(),
                      rebalance=rebalance).drop("cell_p")
     return sj.join_points_regions(pts, regions, level=level, index=index,
                                   precomputed_cell="cell", **join_kw)

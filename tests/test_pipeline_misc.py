@@ -225,6 +225,34 @@ def test_checkpoint_missing_staged_partition_raises(spark, tmp_path,
     assert back.select("doc_id").distinct().count() == 300
 
 
+def test_checkpoint_awkward_names(spark, tmp_path):
+    # Partition values with quotes, backslashes and backticks, and
+    # column names that need quoting, reach the write job's SQL index
+    # and observers intact: every manifest matches a direct groupBy.
+    values = ["it's", "a\\b", "tick`", "x\\'y", "plain"]
+    base = synth.docs(spark, 300).select(
+        F.col("doc_id").alias("doc id"),
+        (F.crc32(F.col("doc_id")) % 5).cast("int").alias("k"))
+    part = F.element_at(F.array(*[F.lit(v) for v in values]),
+                        F.col("k") + 1)
+    cases = [(base.withColumn("p`art", part), "p`art", values),
+             (base, "k", [0, 1, 2, 3, 4])]
+    for n, (df, col, todo) in enumerate(cases):
+        out = str(tmp_path / f"out{n}")
+        recs = checkpoint.run_partitioned(df, out, col, todo,
+                                          id_col="doc id")
+        key = F.col("`" + col.replace("`", "``") + "`")
+        exp = {str(r[0]): (r[1], str(r[2]), str(r[3])) for r in
+               df.groupBy(key).agg(F.count("*"), F.min("doc id"),
+                                   F.max("doc id")).collect()}
+        assert len(exp) == 5
+        got = {r["partition"]: (r["rows"], r["lineage"]["id_min"],
+                                r["lineage"]["id_max"]) for r in recs}
+        assert got == exp
+        assert sorted(os.listdir(out)) == sorted(
+            ["_manifest"] + [f"{col}={p}" for p in todo])
+
+
 def test_checkpoint_resume_file_uri(spark, tmp_path):
     # An output URI (not a bare path) keeps data, manifests and staging
     # on the filesystem Spark writes to.

@@ -203,25 +203,81 @@ def test_flagship_generate(spark):
     assert set(pdf["split"]).issubset({"train", "val", "test"})
 
 
-def test_md5_mod10_col_equals_hashlib(spark):
-    """JVM CRT md5 bucket == literal hashlib formula on random cells,
-    including sign-wrapped (uint64 > 2^63) ids."""
+import pytest as _pytest
+
+
+def test_split_bucket_equals_hashlib_on_wrapped_ids():
+    """The one split-bucket implementation (s2.split_bucket) == the
+    literal hashlib formula on random cells, including sign-wrapped
+    (uint64 > 2^63) ids."""
     import hashlib as _h
+
+    from geeflow_spark.functions import s2 as s2f
     rng = np.random.default_rng(5)
     ids = rng.integers(0, 2**63 - 1, 300, dtype=np.int64)
     ids = np.concatenate([ids, np.array([-1, -2**63, -12345],
                                         dtype=np.int64)])
-    pdf = pd.DataFrame({"cell": ids})
-    df = spark.createDataFrame(pdf)
-    got = df.select("cell", splits.md5_mod10_col(F.col("cell"))
-                    .alias("b")).toPandas()
-    for _, r in got.iterrows():
-        u = int(np.uint64(np.int64(r["cell"])))
+    got = s2f.split_bucket(ids)
+    for c, b in zip(ids, got):
+        u = int(np.uint64(np.int64(c)))
         exp = int(_h.md5(str(u).encode()).hexdigest(), 16) % 10
-        assert int(r["b"]) == exp
+        assert int(b) == exp
 
 
-import pytest as _pytest
+def test_generate_split_per_row(spark):
+    # Every row's split is the reference formula on the doc's level-9
+    # cell; all three splits occur, so swapping val and test fails.
+    import hashlib
+
+    from geeflow_spark.functions import s2 as s2f
+    docs = synth.docs(spark, 4000)
+    regs = synth.regions_pdf(40, radius_scale=2.0)
+    pdf = generate.generate_examples(docs, regs).select(
+        "lat", "lon", "split").toPandas()
+    cells = s2f.parent(s2f.latlon_to_cell_id(pdf["lat"].to_numpy(),
+                                             pdf["lon"].to_numpy()), 9)
+    names = {9: "test", 8: "val"}
+    exp = [names.get(int(hashlib.md5(str(int(c)).encode()).hexdigest(),
+                         16) % 10, "train") for c in cells]
+    assert pdf["split"].tolist() == exp
+    assert set(exp) == {"train", "val", "test"}
+
+
+def test_generate_plan_one_python_map_no_md5(spark):
+    # The split is hashed inside the Arrow kernel: the executed plan has
+    # one Python map node and no JVM md5.
+    ex = generate.generate_examples(_docs(spark), synth.regions_pdf(25),
+                                    cell_level=7)
+    ex.write.format("noop").mode("overwrite").save()
+    plan = ex._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ArrowEvalPython" not in plan and "md5" not in plan.lower(), plan
+
+
+def _cover_pairs(regs, level, index, buffer_deg):
+    got = spatial_join.region_covers_pdf(regs, level, index=index,
+                                         buffer_deg=buffer_deg)
+    assert list(got.dtypes) == [np.int64, np.int64]
+    return set(zip(got["cell"].tolist(), got["region_id"].tolist()))
+
+
+@_pytest.mark.parametrize("index,level", [("s2", 8), ("s2", 6), ("hex", 5)])
+@_pytest.mark.parametrize("buffer_deg", [0.0, 0.4])
+def test_region_covers_match_per_region_cover_bbox(index, level,
+                                                   buffer_deg):
+    # One batched cover call == a cover_bbox call per region, grown by
+    # the buffer; an empty region table gives no pairs.
+    regs = synth.regions_pdf(30, seed=3, radius_scale=2.0)
+    mod = spatial_join.INDEXES[index]
+    exp = set()
+    for rid, ring in zip(regs["region_id"], regs["ring"]):
+        x0, y0, x1, y1 = geometry.polygon_bbox(np.asarray(ring, float))
+        g = buffer_deg
+        exp |= {(int(c), int(rid)) for c in
+                mod.cover_bbox(y0 - g, y1 + g, x0 - g, x1 + g, level)
+                .astype(np.int64)}
+    assert _cover_pairs(regs, level, index, buffer_deg) == exp
+    assert _cover_pairs(regs.iloc[:0], level, index, buffer_deg) == set()
 
 
 @_pytest.mark.parametrize("index", ["s2", "hex"])
