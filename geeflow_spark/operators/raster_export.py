@@ -3,8 +3,10 @@
 Spark form of the reference's per-split mosaic (export_rasters.py:309-388
 `process_one_split` + the per-zone GroupByKey :494-498): after
 `tiles.assign_tiles` produces (utm_zone, xs, ys) keyed plot rows, a
-groupBy(zone, xs, ys).applyInPandas mosaics each split's plots into one
-raster and emits (zone, xs, ys, geotransform, raster, mask).
+groupBy(zone, xs, ys).applyInArrow mosaics each split's plots into one
+raster and emits (zone, xs, ys, geotransform, raster, mask). The split's
+plots reach the kernel as an Arrow table and its raster leaves as list
+arrays over the kernel's buffers: no pandas object is built per split.
 
 Tile exchange: the plot rows are hash-repartitioned on (utm_zone, xs, ys)
 into min(#splits, max(1, defaultParallelism // 2)) partitions before the
@@ -12,24 +14,25 @@ groupBy, which reuses that exchange. An implicit groupBy exchange carries
 little data (tensors of a few floats per plot), so AQE would coalesce it
 into one partition and mosaic every split in one task; a
 REPARTITION_BY_NUM exchange is not coalesced, so the splits spread over
-the cores. One task per two cores, because a pandas-UDF task keeps two
+the cores. One task per two cores, because an Arrow-UDF task keeps two
 processes busy: its JVM task thread (shuffle read, sort, Arrow both
-ways, parquet write) and its Python worker, which also pays a fixed
-start-up cost per task (PySpark re-reads its zipped package index, about
-0.2 s of CPU on a 4-vCPU VM). On `raster_mosaic` (4 cores, 32 splits)
-two tasks mosaic as fast as four with about a quarter less CPU per job
-(3.4 vs 4.4 CPU-s), which leaves the cores headroom for the JVM.
+ways, parquet write) and its Python worker. On `raster_mosaic` (4 cores,
+32 splits) two tasks mosaicked as fast as four with about a quarter less
+CPU per job (3.4 vs 4.4 CPU-s), which leaves the cores headroom for the
+JVM.
 
 Kernel (`mosaic_split`): one array pass per split, no loop over plots.
-Plot keys get group codes in sorted key order, and duplicate keys are
-averaged with np.add.at from each key's first row. Every (plot, row,
-col) gets its flat pixel index row*width+col, in plot-major order,
-masked to the raster. Weighted modes scatter-add with np.bincount (per
-channel, plus one for the weights); np.bincount adds in input order, so
-each pixel sums its plots in key order, bit for bit as a per-plot loop
-would. `none` keeps the last plot per pixel and `any` the first
-(np.unique on the reversed / forward pixel indices). `raster` and `mask`
-leave the worker as float32 / int32 ndarrays, not Python lists.
+Plot keys get group codes in sorted key order (np.lexsort), and
+duplicate keys are averaged with np.add.at from each key's first row.
+Every (plot, row, col) gets its flat pixel index row*width+col, in
+plot-major order, masked to the raster. Weighted modes scatter-add with
+np.bincount (per channel, plus one for the weights); np.bincount adds in
+input order, so each pixel sums its plots in key order, bit for bit as a
+per-plot loop would. `none` keeps the last plot per pixel and `any` the
+first (np.unique on the reversed / forward pixel indices). The tensors
+are read as one flat array and cut into pred_h*pred_w*pred_c values per
+plot, so a null or odd-sized tensor raises instead of shifting the plots
+after it.
 
 `write_rasters` writes the rows in one job described as
 `geeflow.operators.raster_export.write` and observes the rasters written
@@ -61,8 +64,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (ArrayType, DoubleType, FloatType,
                                IntegerType, StringType, StructField,
                                StructType)
@@ -104,15 +109,31 @@ def _plot_weights(h: int, w: int, mode: str) -> np.ndarray:
     return np.ones((h, w))
 
 
-def mosaic_split(plots: pd.DataFrame, *, x_lo: float, x_hi: float,
+def _group_codes(keys: list) -> np.ndarray:
+    """Per row, the rank of its key tuple among the distinct ones in
+    sorted order (pandas `groupby(sort=True).ngroup()`)."""
+    order = np.lexsort(keys[::-1])
+    new = np.zeros(len(order), dtype=bool)
+    for k in keys:
+        ks = k[order]
+        new[1:] |= ks[1:] != ks[:-1]
+    codes = np.empty(len(order), dtype=np.int64)
+    codes[order] = np.cumsum(new)
+    return codes
+
+
+def mosaic_split(plots: pa.Table, *, x_lo: float, x_hi: float,
                  y_lo: float, y_hi: float, cell_size: float,
                  plot_size_m: float, pred_h: int, pred_w: int, pred_c: int,
                  border_mode: str = "uniform_avg", normalize: bool = False,
                  clip_min: float | None = None,
                  clip_max: float | None = None,
                  discretization_factor: int | None = None,
-                 add_argmax: bool = False, shift_argmax: int = 0):
-    """One split's plots -> (raster (H,W,C), mask (H,W)). Pure numpy."""
+                 add_argmax: bool = False, shift_argmax: int = 0,
+                 name: str = "split"):
+    """One split's plots (an Arrow table of _PLOT_KEYS + `tensor`, a list
+    of pred_h*pred_w*pred_c values per row) -> (raster (H,W,C), mask
+    (H,W)). Pure numpy; `name` labels the split in errors."""
     height = int(round((y_hi - y_lo) / cell_size))
     width = int(round((x_hi - x_lo) / cell_size))
     # Guard against accidental multi-GB rasters: the caller controls
@@ -122,8 +143,16 @@ def mosaic_split(plots: pd.DataFrame, *, x_lo: float, x_hi: float,
     # OOMs").
     if height * width > 64_000_000:
         raise ValueError(
-            f"split raster {height}x{width} too large; increase "
+            f"{name}: raster {height}x{width} too large; increase "
             f"num_splits or cell_size")
+    # The flat values are cut into equal tensors, so one null or odd-sized
+    # tensor would shift every later plot's pixels.
+    size = pred_h * pred_w * pred_c
+    tensors = plots.column("tensor").combine_chunks()
+    if (tensors.null_count
+            or (tensors.value_lengths().to_numpy() != size).any()):
+        raise ValueError(f"{name}: every tensor must hold {pred_h}x"
+                         f"{pred_w}x{pred_c} = {size} values")
     n_px = height * width
     acc = np.zeros((n_px, pred_c))
     wacc = np.zeros(n_px)
@@ -133,16 +162,17 @@ def mosaic_split(plots: pd.DataFrame, *, x_lo: float, x_hi: float,
     # in sorted key order. Each key's sum starts at its first row and
     # adds the others in row order, as np.mean over the group does
     # (np.add.reduceat would sum in another order).
-    codes = plots.groupby(list(_PLOT_KEYS), sort=True).ngroup().to_numpy()
+    keys = [plots.column(k).to_numpy() for k in _PLOT_KEYS]
+    codes = _group_codes(keys)
     _, first = np.unique(codes, return_index=True)
-    vals = np.array(plots["tensor"].tolist(), dtype=np.float64)
-    vals = vals.reshape(len(plots), pred_h, pred_w, pred_c)
+    vals = tensors.flatten().to_numpy(zero_copy_only=False)
+    vals = vals.astype(np.float64).reshape(-1, pred_h, pred_w, pred_c)
     t = vals[first]
     rest = np.ones(len(codes), dtype=bool)
     rest[first] = False
     np.add.at(t, codes[rest], vals[rest])
     t /= np.bincount(codes)[:, None, None, None]
-    xp, yp, dx, dy = (plots[k].to_numpy()[first] for k in _PLOT_KEYS)
+    xp, yp, dx, dy = (k[first] for k in keys)
     x_start = xp + dx * cell_size - half
     y_end = yp - dy * cell_size + half
     y_start = y_end - pred_h * cell_size
@@ -213,27 +243,35 @@ def mosaic_assigned_tiles(assigned: DataFrame, *, zone_bboxes: dict,
     bounds = {z: get_split_boundaries(*bb, plot_size_m, num_splits)
               for z, bb in zone_bboxes.items()}
 
-    def _one(key, pdf):
-        zone, xs, ys = key
+    schema = to_arrow_schema(_OUT_SCHEMA)
+
+    def _list(values, field):
+        """One list cell over `values`, no copy."""
+        return pa.ListArray.from_arrays(
+            pa.array([0, len(values)], pa.int32()), pa.array(values),
+            type=schema.field(field).type)
+
+    def _one(key, table):
+        zone, xs, ys = (k.as_py() for k in key)
         xsb, ysb = bounds[zone]
         x_lo, x_hi = xsb[xs], xsb[xs + 1]
         y_lo, y_hi = ysb[ys], ysb[ys + 1]
         out, mask = mosaic_split(
-            pdf, x_lo=x_lo, x_hi=x_hi, y_lo=y_lo, y_hi=y_hi,
+            table, x_lo=x_lo, x_hi=x_hi, y_lo=y_lo, y_hi=y_hi,
             cell_size=cell_size, plot_size_m=plot_size_m, pred_h=pred_h,
             pred_w=pred_w, pred_c=pred_c, border_mode=border_mode,
-            **post_ops)
-        if mask.sum() == 0:
-            return pd.DataFrame(columns=[f.name for f in _OUT_SCHEMA])
+            name=f"split {zone!r} xs={xs} ys={ys}", **post_ops)
+        if not mask.any():
+            return schema.empty_table()
         gt = [float(x_lo), cell_size, 0.0, float(y_lo), 0.0, cell_size]
-        return pd.DataFrame([{
-            "utm_zone": zone, "xs": int(xs), "ys": int(ys),
-            "geotransform": gt,
-            "height": out.shape[0], "width": out.shape[1],
-            "channels": out.shape[2],
-            "raster": out.astype(np.float32).ravel(),
-            "mask": mask.astype(np.int32).ravel(),
-        }])
+        return pa.Table.from_arrays([
+            pa.array([zone], pa.string()),
+            pa.array([xs], pa.int32()), pa.array([ys], pa.int32()),
+            _list(np.array(gt), "geotransform"),
+            *(pa.array([n], pa.int32()) for n in out.shape),
+            _list(out.astype(np.float32).ravel(), "raster"),
+            _list(mask.astype(np.int32).ravel(), "mask"),
+        ], schema=schema)
 
     # One hash partition per split, capped at one per two cores (see the
     # module docstring): the plots shuffle is small, and AQE would
@@ -245,7 +283,7 @@ def mosaic_assigned_tiles(assigned: DataFrame, *, zone_bboxes: dict,
     return (assigned.select(*_SPLIT_KEYS, *_PLOT_KEYS, "tensor")
             .repartition(n_parts, *_SPLIT_KEYS)
             .groupBy(*_SPLIT_KEYS)
-            .applyInPandas(_one, _OUT_SCHEMA))
+            .applyInArrow(_one, _OUT_SCHEMA))
 
 
 def write_rasters(rasters: DataFrame, out: str, zones: list) -> dict:

@@ -18,17 +18,20 @@ the path BASELINE.json requires to match row-for-row:
     of its home split, clamped to [0, num_splits)
     (export_rasters.py:261-282), and must get >= 1 assignment (:287)
 
-Everything below is pure Spark column arithmetic + one explode of the 3x3
-candidate grid - whole-stage-codegen friendly, no Python in the row path.
-The grouping key for downstream mosaicking is (utm_zone, xs, ys), exactly
-the reference's GroupByKey key (export_rasters.py:494).
+The plan is built from SQL text - one `where` and a few `selectExpr`,
+with the boundaries as exact double literals - so it costs a handful of
+py4j calls rather than one per column builder. The home split is one
+array filter per row, the candidates two explodes of (h-1, h, h+1) with
+plain range and overlap predicates: whole-stage-codegen friendly, no
+Python in the row path. The grouping key for downstream mosaicking is
+(utm_zone, xs, ys), exactly the reference's GroupByKey key
+(export_rasters.py:494).
 """
 
 from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def get_split_boundaries(utm_x_min: float, utm_y_min: float,
@@ -56,10 +59,29 @@ def get_split_boundaries(utm_x_min: float, utm_y_min: float,
     return axis(utm_x_min, utm_x_max), axis(utm_y_min, utm_y_max)
 
 
+def _ident(name: str) -> str:
+    """`name` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _str(value: str) -> str:
+    """`value` as a single-quoted SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _double(value: float) -> str:
+    """`value` as an exact SQL double literal (repr round-trips)."""
+    return f"{float(value)!r}D"
+
+
+def _doubles(values) -> str:
+    return "array(" + ", ".join(map(_double, values)) + ")"
+
+
 def assign_tiles(plots: DataFrame, *, zone_bboxes: dict,
-                 grid_spacing_m: float = 960.0, cell_size: float = 10.0,
-                 plot_size_m: float = 960.0, num_splits: int = 4,
-                 pred_h: int = 4, pred_w: int = 4) -> DataFrame:
+                 cell_size: float = 10.0, plot_size_m: float = 960.0,
+                 num_splits: int = 4, pred_h: int = 4,
+                 pred_w: int = 4) -> DataFrame:
     """plots(id, utm_x, utm_y, dx, dy, utm_zone, ...) -> one row per
     (plot, assigned split tile), columns + (xs int, ys int).
 
@@ -71,62 +93,59 @@ def assign_tiles(plots: DataFrame, *, zone_bboxes: dict,
     for zone, (x0, y0, x1, y1) in zone_bboxes.items():
         xsb, ysb = get_split_boundaries(x0, y0, x1, y1, plot_size_m,
                                         num_splits)
-        x_map += [F.lit(zone), F.array(*map(F.lit, xsb))]
-        y_map += [F.lit(zone), F.array(*map(F.lit, ysb))]
+        x_map += [_str(zone), _doubles(xsb)]
+        y_map += [_str(zone), _doubles(ysb)]
 
     # Per-zone boundaries come from literal maps keyed by zone, with the
     # inner-join semantics of the zone worklist (unlisted or null zones
     # dropped). A joined table of the worklist would be built from Python
     # rows: one more Spark job per query, run in Python workers.
-    bounds_type = "map<string,array<double>>"
-    zone = F.col("utm_zone")
-    df = plots.filter(zone.isin(list(zone_bboxes))).select(
-        zone, *[c for c in plots.columns if c != "utm_zone"],
-        F.create_map(*x_map).cast(bounds_type)[zone].alias("x_splits"),
-        F.create_map(*y_map).cast(bounds_type)[zone].alias("y_splits"))
+    def bounds(kv):
+        return (f"CAST(map({', '.join(kv)}) AS map<string,array<double>>)"
+                "[`utm_zone`]")
+
+    cols = ["`utm_zone`"] + [_ident(c) for c in plots.columns
+                             if c != "utm_zone"]
+    zones = ", ".join(map(_str, zone_bboxes))
+    df = plots.where(f"`utm_zone` IN ({zones})" if zones else "false") \
+        .selectExpr(*cols, f"{bounds(x_map)} AS x_splits",
+                    f"{bounds(y_map)} AS y_splits")
 
     # Home split: (first index with boundary > coord) - 1
-    # (export_rasters.py:255-256). With uniform interior boundaries this is
-    # closed-form; use array filtering to stay faithful to ANY boundary
-    # layout (still pure column ops).
-    def home(coord, splits):
-        return (F.size(F.filter(splits, lambda b: b <= coord)) - 1)
+    # (export_rasters.py:255-256), once per row. With uniform interior
+    # boundaries this is closed-form; the array filter stays faithful to
+    # ANY boundary layout.
+    df = df.selectExpr(
+        *cols, "x_splits", "y_splits",
+        "size(filter(x_splits, b -> b <= `utm_x`)) - 1 AS _x_home",
+        "size(filter(y_splits, b -> b <= `utm_y`)) - 1 AS _y_home")
 
-    df = df.withColumn("_x_home", home(F.col("utm_x"), F.col("x_splits")))
-    df = df.withColumn("_y_home", home(F.col("utm_y"), F.col("y_splits")))
+    # Plot extent; `plot_size_m // 2` keeps the reference's floor-div.
+    cell, half = _double(cell_size), _double(plot_size_m // 2)
+    x_start = f"((`utm_x` + (`dx` * {cell})) - {half})"
+    x_stop = f"({x_start} + {_double(pred_w * cell_size)})"
+    y_end = f"((`utm_y` - (`dy` * {cell})) + {half})"
+    y_start = f"({y_end} - {_double(pred_h * cell_size)})"
 
-    half = float(plot_size_m // 2)  # floor-div semantics of the reference
-    x_start = F.col("utm_x") + F.col("dx") * cell_size - half
-    x_stop = x_start + pred_w * cell_size
-    y_end = F.col("utm_y") - F.col("dy") * cell_size + half
-    y_start = y_end - pred_h * cell_size
-
-    # 3x3 candidate splits around home, clamped (export_rasters.py:261-262).
-    cand = F.sequence(F.lit(-1), F.lit(1))
-    df = (df
-          .withColumn("_cx", F.explode(cand))
-          .withColumn("xs", F.col("_x_home") + F.col("_cx"))
-          .filter((F.col("xs") >= 0) & (F.col("xs") < num_splits))
-          .withColumn("_cy", F.explode(cand))
-          .withColumn("ys", F.col("_y_home") + F.col("_cy"))
-          .filter((F.col("ys") >= 0) & (F.col("ys") < num_splits)))
-
-    xs_lo = F.element_at(F.col("x_splits"), F.col("xs") + 1)
-    xs_hi = F.element_at(F.col("x_splits"), F.col("xs") + 2)
-    ys_lo = F.element_at(F.col("y_splits"), F.col("ys") + 1)
-    ys_hi = F.element_at(F.col("y_splits"), F.col("ys") + 2)
-
-    # Interval overlap, half-open exactly as the reference's slice test
-    # (export_rasters.py:268-282): skip iff stop <= lo or start >= hi.
-    overlap = ~((x_stop <= xs_lo) | (x_start >= xs_hi) |
-                (y_end <= ys_lo) | (y_start >= ys_hi))
-    out = df.filter(overlap).drop("_cx", "_cy", "_x_home", "_y_home",
-                                  "x_splits", "y_splits")
-    return out
+    # 3x3 candidate splits around home, clamped (export_rasters.py:261-262),
+    # then the interval overlap, half-open exactly as the reference's slice
+    # test (export_rasters.py:268-282): skip iff stop <= lo or start >= hi.
+    df = df.selectExpr(
+        *cols, "x_splits", "y_splits", "_y_home",
+        "explode(array(_x_home - 1, _x_home, _x_home + 1)) AS xs") \
+        .where(f"xs >= 0 AND xs < {int(num_splits)}") \
+        .selectExpr(
+            *cols, "x_splits", "y_splits", "xs",
+            "explode(array(_y_home - 1, _y_home, _y_home + 1)) AS ys") \
+        .where(f"ys >= 0 AND ys < {int(num_splits)} AND NOT ("
+               f"{x_stop} <= element_at(x_splits, xs + 1) OR "
+               f"{x_start} >= element_at(x_splits, xs + 2) OR "
+               f"{y_end} <= element_at(y_splits, ys + 1) OR "
+               f"{y_start} >= element_at(y_splits, ys + 2))")
+    return df.selectExpr(*cols, "xs", "ys")
 
 
 def tile_assign_pandas_oracle(plots_pdf, zone_bboxes: dict,
-                              grid_spacing_m: float = 960.0,
                               cell_size: float = 10.0,
                               plot_size_m: float = 960.0,
                               num_splits: int = 4, pred_h: int = 4,

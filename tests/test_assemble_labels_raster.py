@@ -2,6 +2,7 @@
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -216,6 +217,13 @@ def test_mosaic_border_modes_agree_on_disjoint(spark):
         np.testing.assert_allclose(r, base, err_msg=mode)
 
 
+def _arrow_plots(pdf):
+    """A pandas plots frame as the Arrow table `mosaic_split` takes."""
+    cols = {k: pdf[k].to_numpy() for k in ("utm_x", "utm_y", "dx", "dy")}
+    return pa.table({**cols, "tensor": pa.array(list(pdf["tensor"]),
+                                                pa.list_(pa.float64()))})
+
+
 def test_mosaic_overlap_average():
     """Two identical-footprint plots with values 0 and 2 -> uniform_avg 1."""
     pdf = pd.DataFrame([
@@ -225,9 +233,9 @@ def test_mosaic_overlap_average():
          "tensor": [2.0] * 32},
     ])
     out, mask = raster_export.mosaic_split(
-        pdf, x_lo=290000, x_hi=310000, y_lo=1090000, y_hi=1110000,
-        cell_size=10.0, plot_size_m=960.0, pred_h=4, pred_w=4, pred_c=2,
-        border_mode="uniform_avg")
+        _arrow_plots(pdf), x_lo=290000, x_hi=310000, y_lo=1090000,
+        y_hi=1110000, cell_size=10.0, plot_size_m=960.0, pred_h=4,
+        pred_w=4, pred_c=2, border_mode="uniform_avg")
     vals = out[mask]
     # overlap columns average to 1.0; non-overlap keep 0 or 2
     assert set(np.unique(vals)) <= {0.0, 1.0, 2.0}
@@ -240,10 +248,10 @@ def test_mosaic_post_ops():
          "tensor": ([1.0, 3.0] * 16)},
     ])
     out, mask = raster_export.mosaic_split(
-        pdf, x_lo=290000, x_hi=310000, y_lo=1090000, y_hi=1110000,
-        cell_size=10.0, plot_size_m=960.0, pred_h=4, pred_w=4, pred_c=2,
-        border_mode="none", normalize=True, add_argmax=True,
-        shift_argmax=1)
+        _arrow_plots(pdf), x_lo=290000, x_hi=310000, y_lo=1090000,
+        y_hi=1110000, cell_size=10.0, plot_size_m=960.0, pred_h=4,
+        pred_w=4, pred_c=2, border_mode="none", normalize=True,
+        add_argmax=True, shift_argmax=1)
     assert out.shape[-1] == 3  # 2 channels + argmax
     v = out[mask]
     np.testing.assert_allclose(v[:, 0] + v[:, 1], 1.0)  # normalized
@@ -365,12 +373,57 @@ def test_mosaic_split_matches_loop_oracle(border_mode, post_ops):
                       y_hi=y_lo + height * cell, cell_size=cell,
                       plot_size_m=plot_size_m, pred_h=h, pred_w=w,
                       pred_c=c, border_mode=border_mode, **post_ops)
-            got, got_mask = raster_export.mosaic_split(pdf, **kw)
+            got, got_mask = raster_export.mosaic_split(
+                _arrow_plots(pdf), **kw)
             exp, exp_mask = _mosaic_split_loop(pdf, **kw)
             where = f"cell={cell} shape={(h, w, c)} n={n}"
             assert np.array_equal(got_mask, exp_mask), where
             assert np.array_equal(got, exp), where
             assert got.dtype == exp.dtype and got.tobytes() == exp.tobytes()
+
+
+def test_mosaic_split_rejects_misaligned_tensors():
+    """A null or odd-sized tensor raises, naming the split, instead of
+    shifting the plots after it: each input holds 2 x 32 values in all."""
+    keys = {"utm_x": [300000.0] * 2, "utm_y": [1100000.0] * 2,
+            "dx": [0, 1], "dy": [0, 0]}
+    name = "split '32T' xs=1 ys=2"
+    for tensors in ([[0.0] * 31, [1.0] * 33], [None, [1.0] * 64]):
+        table = pa.table({**keys, "tensor": pa.array(
+            tensors, pa.list_(pa.float64()))})
+        with pytest.raises(ValueError, match=name):
+            raster_export.mosaic_split(
+                table, x_lo=290000, x_hi=310000, y_lo=1090000,
+                y_hi=1110000, cell_size=10.0, plot_size_m=960.0, pred_h=4,
+                pred_w=4, pred_c=2, name=name)
+
+
+def test_mosaic_groups_spanning_record_batches(spark):
+    """Splits whose plots reach the worker in several 7-row Arrow batches
+    mosaic bit for bit as in one batch. Every plot key comes twice, with
+    its own tensor, so the duplicate averaging spans batches too."""
+    assigned, zb = _assigned(spark)
+    twice = assigned.unionByName(
+        assigned.withColumn("tensor", F.reverse("tensor")))
+
+    def rasters():
+        rows = raster_export.mosaic_assigned_tiles(
+            twice, zone_bboxes=zb, num_splits=4, pred_c=2).collect()
+        return sorted((r["utm_zone"], r["xs"], r["ys"], r["geotransform"],
+                       np.array(r["raster"], np.float32).tobytes(),
+                       r["mask"]) for r in rows)
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = rasters()
+    before = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        small = rasters()
+    finally:
+        spark.conf.set(key, before)
+    sizes = twice.groupBy("utm_zone", "xs", "ys").count()
+    assert sizes.agg(F.max("count")).first()[0] > 7
+    assert len(default) > 4 and small == default
 
 
 def test_mosaic_one_task_per_split(spark):
@@ -391,7 +444,7 @@ def test_mosaic_one_task_per_split(spark):
     rows = out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
-    below = final.split("FlatMapGroupsInPandas", 1)[1]
+    below = final.split("FlatMapGroupsInArrow", 1)[1]
     exchanges = [ln for ln in below.splitlines()
                  if "Exchange " in ln and "BroadcastExchange" not in ln]
     n_parts = min(2 * 4 ** 2,

@@ -118,6 +118,32 @@ def test_tile_assignment_zone_worklist(spark):
     assert none.columns == out.columns and none.count() == 0
 
 
+def test_tile_assignment_awkward_names(spark):
+    # The plan is SQL text: a zone with a quote and a backslash, and
+    # pass-through columns that need quoting, must reach it as data.
+    zone = "3'2\\T"
+    zb = {zone: (200000., 1000000., 1160000., 1960000.),
+          "18N": (200000., 1000000., 1160000., 1960000.)}
+    pr = synth.predictions(spark, 300)
+    plots = pr.join(synth.cells_metadata(spark, 300), "id").select(
+        "id", "utm_x", "utm_y", "dx", "dy",
+        F.when(F.col("utm_zone") == "32T", zone).otherwise(
+            F.col("utm_zone")).alias("utm_zone"),
+        (F.col("id") * 2).alias("my col"), (F.col("id") + 1).alias("a`b"))
+    out = tiles.assign_tiles(plots, zone_bboxes=zb, num_splits=4)
+    assert out.columns == ["utm_zone", "id", "utm_x", "utm_y", "dx", "dy",
+                           "my col", "a`b", "xs", "ys"]
+    got = out.toPandas()
+    assert (got["my col"] == got["id"] * 2).all()
+    assert (got["a`b"] == got["id"] + 1).all()
+    exp = tiles.tile_assign_pandas_oracle(plots.toPandas(), zb, num_splits=4)
+    assert zone in set(got["utm_zone"])
+    assert set(map(tuple, got[["utm_zone", "xs", "ys", "id"]]
+                   .itertuples(index=False))) == \
+        set(map(tuple, exp.itertuples(index=False)))
+    assert got["id"].nunique() == 300
+
+
 def test_knn_matches_brute_force(spark):
     docs = _docs(spark)
     q = docs.limit(15).select(F.col("doc_id").alias("query_id"),

@@ -25,24 +25,38 @@ def test_pandas_udf_imports_installed_pyspark(spark):
     import pandas as pd
 
     def where(batches):
-        import pyspark
-        for b in batches:
-            yield pd.DataFrame({"file": [pyspark.__file__] * len(b)})
+        # A zipimporter re-reads its archive's directory in every task's
+        # importlib.invalidate_caches().
+        import sys
+        import zipimport
 
-    files = {r["file"] for r in spark.range(4, numPartitions=2)
-             .mapInPandas(where, "file string").collect()}
+        import pyspark
+        cached = [k for k, v in sys.path_importer_cache.items()
+                  if isinstance(v, zipimport.zipimporter)]
+        for b in batches:
+            yield pd.DataFrame({"file": [pyspark.__file__] * len(b),
+                                "zips": [",".join(cached)] * len(b)})
+
+    rows = spark.range(4, numPartitions=2).mapInPandas(
+        where, "file string, zips string").collect()
+    files = {r["file"] for r in rows}
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.python.daemon.module") == "geeflow_spark._daemon"
     assert files and not any(".zip" in f for f in files), files
+    assert {r["zips"] for r in rows} == {""}
 
 
 def test_worker_path_reorders_only_on_matching_version(tmp_path):
-    py4j = str(tmp_path / "py4j-0.10.9.9-src.zip")
+    py4j = str(tmp_path / f"py4j-{metadata.version('py4j')}-src.zip")
     site = "/python/site-packages"
     zipped = _fake_spark_zip(tmp_path, metadata.version("pyspark"))
     path = ["/work", zipped, py4j, JAR, "/repo", site]
-    assert _daemon.worker_path(path) == ["/work", "/repo", site, zipped, py4j]
+    assert _daemon.worker_path(path) == ["/work", "/repo", site]
 
+    # Either zip at another version than the installed one: the stock path.
+    old_py4j = str(tmp_path / "py4j-0.0.1-src.zip")
+    path = ["/work", zipped, old_py4j, JAR, "/repo", site]
+    assert _daemon.worker_path(path) == path
     stale = _fake_spark_zip(tmp_path, "0.0.1")
     path = ["/work", stale, py4j, JAR, "/repo", site]
     assert _daemon.worker_path(path) == path
