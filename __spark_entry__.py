@@ -3,9 +3,9 @@
 entry(spark)  - flagship: interleaved docs + derived geometry -> S2-cell
                 broadcast PIP join vs region polygons -> UTM tile origin ->
                 geographic split; spans preserved (BASELINE.json).
-queries()     - operator battery from SURVEY.md §2 + the training-data
-                pipeline ops; every SQL-expressible one has a DuckDB
-                oracle in oracle_sql() (same column names/types).
+queries()     - 13-query battery over the geo kernels (geo_*), the
+                catalog sources (src_s2_*) and stats (stats_*); each has
+                a DuckDB oracle in oracle_sql() (same column names/types).
 oracle_sql()  - independent closed-form recomputations (interval logic,
                 half-plane PIP, baked split boundaries, CRT md5%10), NOT
                 ports of the Spark plans - genuine cross-checks.
@@ -31,7 +31,7 @@ from geeflow_spark.functions import hex as _hex
 from geeflow_spark.functions import masks
 from geeflow_spark.functions import s2 as _s2
 from geeflow_spark.functions import utm as _utm
-from geeflow_spark.operators import dedup, knn, spatial_join, tiles
+from geeflow_spark.operators import knn, spatial_join, tiles
 from geeflow_spark.plans import generate, layout
 from geeflow_spark.sources import catalog, derived, synth
 
@@ -71,26 +71,7 @@ def _convex_regions_pdf() -> pd.DataFrame:
                          {"region_id": PENT[0], "ring": PENT[1]}])
 
 
-def _widen(df):
-    """Widens an under-partitioned input before CPU-heavy row-local
-    stages (r7). The test parquet tables are single files with ONE row
-    group, so however many byte-range splits the scan planner makes,
-    only one task reads rows and every scan-rooted stage runs on one
-    core of local[N]. dedup._spread only ever INCREASES parallelism -
-    a no-op on any real at-scale table (>= defaultParallelism
-    partitions), the same contract the dedup battery queries have used
-    since r5 ("spread: the testdata table is ONE parquet file").
-    """
-    return dedup._spread(
-        df, df.sparkSession.sparkContext.defaultParallelism)
-
-
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NOT widened: the geo kernels batch whole partitions through
-    # numpy (mapInArrow/pandas UDFs) and are fast on the single-row-
-    # group test file; measured with _widen the extra round-robin
-    # shuffle cost more than the added parallelism bought
-    # (geo_cell_counts 0.55 -> 1.06 s at sf1.0).
     return derived.with_geo(
         spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
@@ -207,18 +188,18 @@ def _q_geo_knn(spark, sf_dir):
 
 
 @pandas_udf(LongType())
-def _md5_mod10_str(s: pd.Series) -> pd.Series:
-    return s.map(lambda v: int(hashlib.md5(str(v).encode("utf-8"))
-                               .hexdigest(), 16) % 10)
+def _split_bucket(ids: pd.Series) -> pd.Series:
+    return pd.Series(_s2.split_bucket(ids.to_numpy()))
 
 
 def _q_geo_split_bucket(spark, sf_dir):
-    # Reference split-hash semantics (export_beam_tfds.py:103): full
-    # 128-bit md5 of the decimal string, mod 10. The oracle recomputes it
-    # via CRT digit decomposition - independent formulation.
+    # The generate kernel's split hash (s2.split_bucket), the reference's
+    # semantics (export_beam_tfds.py:103): full 128-bit md5 of the decimal
+    # string, mod 10. doc_id is a non-negative long, so its uint64 view
+    # has the same decimal string. The oracle recomputes it via CRT digit
+    # decomposition - independent formulation.
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = docs.select(_md5_mod10_str(F.col("doc_id").cast("string"))
-                      .alias("bucket"))
+    out = docs.select(_split_bucket(F.col("doc_id")).alias("bucket"))
     return out.groupBy("bucket").agg(F.count("*").alias("n")) \
         .select(F.col("bucket").cast("long").alias("bucket"), "n")
 
@@ -251,153 +232,6 @@ def _q_geo_cell_counts_hex(spark, sf_dir):
     enc = spatial_join.with_cell(docs, level=6, index="hex")
     return (enc.groupBy("cell").agg(F.count("*").alias("n"))
             .select(F.col("cell").cast("long").alias("cell"), "n"))
-
-
-def _q_dedup_exact(spark, sf_dir):
-    d = _widen(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    return dedup.exact_dedup(d, "text", "doc_id").select("doc_id")
-
-
-def _q_dedup_minhash(spark, sf_dir):
-    # Banded-LSH candidates -> exact Jaccard >= 0.6 verification. The
-    # DuckDB oracle is EXACT all-pairs string-shingle Jaccard: it checks
-    # both LSH recall (16x4 banding misses a J>=0.6 pair w.p. <=
-    # (1-J^4)^16, ~4e-8 at the gate corpus's minimum true J=0.9) and the
-    # verification predicate (hashed-set Jaccard == string-set Jaccard
-    # up to 64-bit shingle collisions).
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # spread: the testdata table is ONE parquet file; without it the
-    # whole signature stage runs on a single core (no-op at scale).
-    pairs = dedup.minhash_duplicate_pairs(
-        d, num_perm=64, bands=16, verify_jaccard=0.6,
-        spread=spark.sparkContext.defaultParallelism)
-    return pairs.select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-
-
-def _q_dedup_simhash(spark, sf_dir):
-    # Banded simhash near-dup pairs with the md5 hash family: md5 is
-    # computable in BOTH engines, so the DuckDB oracle recomputes the
-    # ENTIRE pipeline exactly (token md5-64 -> poly shingle fold mod
-    # 2^64 -> distinct -> per-bit majority -> 16-bit banding -> popcount
-    # <= 16) - same recipe that made the hex index driver-verifiable.
-    # The xxh64 production family is pytest-covered: the bit-exact twin
-    # is tests/test_pipeline_misc.py::test_xxh64_twin_matches_spark and
-    # the xxh64 simhash path runs in tests/test_pipeline_misc.py's
-    # simhash tests.
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = dedup.simhash_candidate_pairs(
-        d, shingle_k=2, bands=4, max_hamming=16, hash_family="md5",
-        spread=spark.sparkContext.defaultParallelism)
-    return out.select("a", "b", F.col("hamming").cast("long")
-                      .alias("hamming"))
-
-
-def _q_dedup_ngram(spark, sf_dir):
-    # EXACT all-pairs 3-gram Jaccard >= 0.5 (small-scale ground truth
-    # the LSH paths are judged against); SQL oracle via DuckDB list
-    # comprehensions over the same shingle definition.
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = dedup.ngram_jaccard_pairs(
-        d, threshold=0.5, shingle_k=3,
-        spread=spark.sparkContext.defaultParallelism)
-    return out.select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-
-
-def _q_dedup_components(spark, sf_dir):
-    # Near-dup CLUSTERS: pairs -> connected components (component =
-    # min member id = the canonical survivor), closing the dedup
-    # pipeline. Edges = the exact 3-gram J>=0.5 pair graph, so the
-    # DuckDB oracle independently recomputes BOTH the edges (list-
-    # comprehension shingle Jaccard) and the closure (recursive-CTE
-    # min-label propagation) - a genuine cross-check of the iterative
-    # Spark algorithm, not a replay.
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pairs = dedup.ngram_jaccard_pairs(
-        d, threshold=0.5, shingle_k=3,
-        spread=spark.sparkContext.defaultParallelism)
-    comp = dedup.connected_components(pairs)
-    return comp.select(F.col("id").cast("long").alias("id"),
-                       F.col("component").cast("long")
-                       .alias("component"))
-
-
-def _q_dedup_survivors(spark, sf_dir):
-    # The corpus-level dedup deliverable: pairs -> components -> the
-    # FILTERED corpus (drop non-canonical members; docs in no pair
-    # pass through). r6: the pair stage is the PRODUCTION scale path
-    # (banded minhash + exact-Jaccard verify, the dedup_minhash_pairs
-    # recipe) instead of the labeled all-pairs oracle path - the
-    # all-pairs stage made the battery wall quadratic-by-design
-    # (18.5s of a 40s battery at sf0.1) while measuring nothing about
-    # the survivors operator itself. Oracle: the recursive-CTE closure
-    # over EXACT all-pairs Jaccard >= 0.6 feeding a NOT-IN filter over
-    # documents - edges and closure independently recomputed by
-    # DuckDB, so the row ALSO re-proves banding recall 1.0 at the
-    # gate corpus (same argument as dedup_minhash_pairs).
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pairs = dedup.minhash_duplicate_pairs(
-        d, num_perm=64, bands=16, verify_jaccard=0.6,
-        spread=spark.sparkContext.defaultParallelism)
-    out = dedup.dedup_survivors(d, pairs)
-    return out.select(F.col("doc_id").cast("long").alias("doc_id"))
-
-
-def _q_dedup_survivors_quality(spark, sf_dir):
-    # Quality-aware survivor selection: keep the LONGEST member of
-    # each duplicate cluster (ties -> min id) instead of the arbitrary
-    # min-id one - what production pipelines actually want. Same
-    # production pair stage as dedup_survivors; the oracle recomputes
-    # closure AND the (length DESC, id ASC) winner per component from
-    # scratch. At sf0.01 20 of the 24 dropped ids differ from the
-    # min-id rule, so this row pins the argmax semantics, not a
-    # relabeling of dedup_survivors.
-    # Widen ONLY the pair-stage input (minhash spreads internally via
-    # `spread`); the docs frame itself is consumed three times
-    # (members join + anti-join + here) and widening it paid the
-    # round-robin shuffle on every consumer (measured +3 s at sf1.0).
-    d = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-         .withColumn("_len", F.length("text")))
-    pairs = dedup.minhash_duplicate_pairs(
-        d, num_perm=64, bands=16, verify_jaccard=0.6,
-        spread=spark.sparkContext.defaultParallelism)
-    out = dedup.dedup_survivors(d, pairs, quality_col="_len")
-    return out.select(F.col("doc_id").cast("long").alias("doc_id"))
-
-
-def _q_dedup_simhash_manku(spark, sf_dir):
-    # The SCALE banding under the driver oracle: Manku block-
-    # combination keys (blocks=6, t=3 -> 20 tables of ~32-bit keys,
-    # guaranteed recall for hamming <= 3) on the md5-family simhash.
-    # BENCH/SF1.md shows this is the path that survives 10^7+ docs
-    # (16-bit bands go quadratic there by pigeonhole); the oracle
-    # replays signature AND banding from scratch in DuckDB, so the
-    # CORRECTNESS row covers exactly the path production runs.
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = dedup.simhash_candidate_pairs(
-        d, shingle_k=2, blocks=6, block_t=3, max_hamming=3,
-        hash_family="md5",
-        spread=spark.sparkContext.defaultParallelism)
-    return out.select("a", "b", F.col("hamming").cast("long")
-                      .alias("hamming"))
-
-
-def _q_spans_explode(spark, sf_dir):
-    # Interleaved span derivation + order-preserving explode (the
-    # span-sequence invariant surfaced as an oracle-checkable query).
-    d = derived.with_spans(_widen(spark.read.parquet(
-        f"{sf_dir}/documents.parquet")))
-    # posexplode_outer + isNotNull, same rows as posexplode: the plain
-    # generator makes Catalyst infer a size(spans)>0 filter that
-    # re-runs the whole span transform per row.
-    ex = d.select("doc_id",
-                  F.posexplode_outer("spans").alias("span_idx", "s")) \
-        .filter(F.col("s").isNotNull())
-    return ex.select("doc_id",
-                     F.col("span_idx").cast("long").alias("span_idx"),
-                     F.col("s.kind").alias("kind"),
-                     F.col("s.offset").cast("long").alias("offset"),
-                     F.coalesce(F.col("s.text"), F.col("s.media_ref"))
-                     .alias("content"))
 
 
 def _q_src_s2_cloudfree_mosaic(spark, sf_dir):
@@ -476,15 +310,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "geo_tile_origin": _q_geo_tile_origin,
         "geo_cell_counts": _q_geo_cell_counts,
         "geo_cell_counts_hex": _q_geo_cell_counts_hex,
-        "dedup_exact": _q_dedup_exact,
-        "dedup_minhash_pairs": _q_dedup_minhash,
-        "dedup_simhash_pairs": _q_dedup_simhash,
-        "dedup_ngram_pairs": _q_dedup_ngram,
-        "dedup_components": _q_dedup_components,
-        "dedup_survivors": _q_dedup_survivors,
-        "dedup_survivors_quality": _q_dedup_survivors_quality,
-        "dedup_simhash_manku": _q_dedup_simhash_manku,
-        "spans_explode": _q_spans_explode,
         "src_s2_cloudfree_mosaic": _q_src_s2_cloudfree_mosaic,
         "src_s2_quality_mosaic": _q_src_s2_quality_mosaic,
         "stats_moments": _q_stats_moments,
@@ -586,134 +411,6 @@ def _knn_oracle() -> str:
     """
 
 
-def _ngram_jaccard_oracle(k: int, threshold: float) -> str:
-    """EXACT all-pairs k-token-shingle Jaccard >= threshold in DuckDB.
-
-    Independent formulation (string shingles + list_intersect) of the
-    engine's hashed-set Jaccard; serves both the exact crossJoin
-    operator (dedup_ngram_pairs) and the LSH operator
-    (dedup_minhash_pairs) - for the latter it checks candidate recall
-    AND verification in one shot.
-    """
-    return rf"""
-      WITH sh AS (
-        SELECT doc_id,
-               list_distinct(CASE
-                 WHEN len(string_split_regex(trim(text), '\s+')) >= {k}
-                 THEN [array_to_string(
-                        string_split_regex(trim(text), '\s+')[i:i+{k - 1}],
-                        ' ')
-                       for i in range(
-                         1,
-                         len(string_split_regex(trim(text),
-                                                '\s+')) - {k - 2})]
-                 WHEN length(trim(text)) > 0
-                 THEN [array_to_string(
-                         string_split_regex(trim(text), '\s+'), ' ')]
-                 ELSE []
-               END) AS s
-        FROM documents)
-      SELECT x.doc_id AS a, y.doc_id AS b,
-             ROUND(CAST(len(list_intersect(x.s, y.s)) AS DOUBLE)
-                   / (len(x.s) + len(y.s)
-                      - len(list_intersect(x.s, y.s))), 6) AS jaccard
-      FROM sh x, sh y
-      WHERE x.doc_id < y.doc_id
-        AND (len(x.s) + len(y.s)) > 0
-        AND CAST(len(list_intersect(x.s, y.s)) AS DOUBLE)
-            / (len(x.s) + len(y.s)
-               - len(list_intersect(x.s, y.s))) >= {threshold}
-    """
-
-
-# Full-pipeline simhash recompute (md5 hash family; see _q_dedup_simhash).
-# _SIMHASH_PREFIX ends at the `hb` CTE (signed 64-bit simhash per doc);
-# two banding suffixes share it: 16-bit bands (_SIMHASH_ORACLE) and the
-# Manku block-combination tables (_simhash_manku_oracle).
-_SIMHASH_PREFIX = r"""
-  WITH tok AS (
-    SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'),
-                               x -> x <> '') AS ws
-    FROM documents),
-  th AS (
-    SELECT doc_id, list_transform(ws, w ->
-      CAST(CAST(('0x' || substr(md5(w), 1, 16)) AS UBIGINT) AS HUGEINT))
-      AS hs
-    FROM tok),
-  sh AS (
-    SELECT doc_id, list_distinct(
-      CASE WHEN len(hs) >= 2
-           THEN [ (hs[i] * 1099511628211 + hs[i+1])
-                  % 18446744073709551616
-                  for i in range(1, len(hs)) ]
-           ELSE hs END) AS shs
-    FROM th),
-  bitsum AS (
-    SELECT t.doc_id, b.range AS bit,
-           SUM(CASE WHEN (u.s // CAST(power(2.0, b.range) AS HUGEINT))
-                         % 2 = 1
-                    THEN 1 ELSE -1 END) AS ssum
-    FROM sh t, unnest(t.shs) AS u(s), range(0, 64) b
-    GROUP BY t.doc_id, b.range),
-  hv AS (
-    SELECT s.doc_id,
-           COALESCE(SUM(CASE WHEN bs.ssum > 0
-                        THEN CAST(power(2.0, bs.bit) AS HUGEINT)
-                        ELSE 0 END), 0) AS hu
-    FROM sh s LEFT JOIN bitsum bs ON s.doc_id = bs.doc_id
-    GROUP BY s.doc_id),
-  hb AS (
-    SELECT doc_id, hu,
-           CAST(CASE WHEN hu >= 9223372036854775808
-                THEN hu - 18446744073709551616 ELSE hu END AS BIGINT) AS h
-    FROM hv)"""
-
-_SIMHASH_ORACLE = _SIMHASH_PREFIX + r""",
-  bands AS (
-    SELECT doc_id, h, b.range AS band,
-           (hu // CAST(power(2.0, 16 * b.range) AS HUGEINT)) % 65536
-             AS bval
-    FROM hb, range(0, 4) b),
-  pairs AS (
-    SELECT DISTINCT x.doc_id AS a, y.doc_id AS b,
-           bit_count(xor(x.h, y.h)) AS hamming
-    FROM bands x JOIN bands y
-      ON x.band = y.band AND x.bval = y.bval AND x.doc_id < y.doc_id)
-  SELECT a, b, CAST(hamming AS BIGINT) AS hamming FROM pairs
-  WHERE hamming <= 16
-"""
-
-
-def _simhash_manku_oracle(blocks: int, block_t: int,
-                          max_hamming: int) -> str:
-    """Manku block-combination banding replay on the md5 simhash.
-
-    The C(blocks, block_t) combination masks are plain signed-int64
-    constants (dedup._block_combo_masks - the SAME function the Spark
-    path uses, but the masks are just integer literals here, and the
-    bitwise AND + equality grouping is recomputed by DuckDB from
-    scratch on its own md5 pipeline). Two's-complement AND on BIGINT
-    equals the unsigned AND bit-for-bit, so masked-value equality is
-    exact.
-    """
-    masks = dedup._block_combo_masks(blocks, block_t)
-    values = ", ".join(f"({i}, CAST({m} AS BIGINT))"
-                       for i, m in enumerate(masks))
-    return _SIMHASH_PREFIX + f""",
-  combos(band, mask) AS (SELECT * FROM (VALUES {values})),
-  bands AS (
-    SELECT doc_id, h, band, h & mask AS bval
-    FROM hb, combos),
-  pairs AS (
-    SELECT DISTINCT x.doc_id AS a, y.doc_id AS b,
-           bit_count(xor(x.h, y.h)) AS hamming
-    FROM bands x JOIN bands y
-      ON x.band = y.band AND x.bval = y.bval AND x.doc_id < y.doc_id)
-  SELECT a, b, CAST(hamming AS BIGINT) AS hamming FROM pairs
-  WHERE hamming <= {max_hamming}
-"""
-
-
 def _split_bucket_oracle() -> str:
     # int(md5_hex, 16) % 10 via CRT: mod 2 from the last hex digit, mod 5
     # from the hex-digit sum (16 === 1 mod 5).
@@ -763,104 +460,6 @@ def oracle_sql() -> dict[str, str]:
         # Full Snyder-series UTM forward transform + tile snap in SQL.
         "geo_tile_origin": _utm.tile_origin_sql_query(
             "documents", _LAT, _LON, 10.0, 96),
-        "dedup_exact": r"""
-          SELECT MIN(doc_id) AS doc_id FROM (
-            SELECT doc_id,
-                   lower(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS k
-            FROM documents)
-          GROUP BY k
-        """,
-        "dedup_ngram_pairs": _ngram_jaccard_oracle(3, 0.5),
-        # components of the same exact pair graph via recursive-CTE
-        # min-label closure - independent of the Spark iteration.
-        "dedup_components": f"""
-          WITH RECURSIVE e AS MATERIALIZED (
-            SELECT a, b FROM ({_ngram_jaccard_oracle(3, 0.5)})
-          ),
-          sym AS MATERIALIZED (
-            SELECT a AS s, b AS d FROM e
-            UNION ALL SELECT b, a FROM e
-          ),
-          reach(n, l) AS (
-            SELECT s, s FROM sym
-            UNION
-            SELECT sym.d, reach.l FROM reach JOIN sym ON sym.s = reach.n
-          )
-          SELECT CAST(n AS BIGINT) AS id,
-                 CAST(MIN(l) AS BIGINT) AS component
-          FROM reach GROUP BY n
-        """,
-        # survivors = documents minus non-canonical component members;
-        # closure recomputed as in dedup_components, but the edge set
-        # is EXACT all-pairs Jaccard >= 0.6 - the truth the Spark
-        # side's production minhash+verify pair stage must equal (the
-        # dedup_minhash_pairs recall argument, re-proven here through
-        # the closure).
-        "dedup_survivors": f"""
-          WITH RECURSIVE e AS MATERIALIZED (
-            SELECT a, b FROM ({_ngram_jaccard_oracle(3, 0.6)})
-          ),
-          sym AS MATERIALIZED (
-            SELECT a AS s, b AS d FROM e
-            UNION ALL SELECT b, a FROM e
-          ),
-          reach(n, l) AS (
-            SELECT s, s FROM sym
-            UNION
-            SELECT sym.d, reach.l FROM reach JOIN sym ON sym.s = reach.n
-          ),
-          comp AS (SELECT n, MIN(l) AS component FROM reach GROUP BY n)
-          SELECT CAST(doc_id AS BIGINT) AS doc_id FROM documents
-          WHERE doc_id NOT IN (SELECT n FROM comp WHERE component <> n)
-        """,
-        # quality-aware winner: same closure, then the (length DESC,
-        # id ASC) rank-1 member per component survives; everything in
-        # a component but not rank-1 is dropped.
-        "dedup_survivors_quality": f"""
-          WITH RECURSIVE e AS MATERIALIZED (
-            SELECT a, b FROM ({_ngram_jaccard_oracle(3, 0.6)})
-          ),
-          sym AS MATERIALIZED (
-            SELECT a AS s, b AS d FROM e
-            UNION ALL SELECT b, a FROM e
-          ),
-          reach(n, l) AS (
-            SELECT s, s FROM sym
-            UNION
-            SELECT sym.d, reach.l FROM reach JOIN sym ON sym.s = reach.n
-          ),
-          comp AS (SELECT n, MIN(l) AS component FROM reach GROUP BY n),
-          m AS (
-            SELECT comp.n, comp.component, length(d.text) AS q
-            FROM comp JOIN documents d ON d.doc_id = comp.n),
-          w AS (
-            SELECT n, row_number() OVER (
-                PARTITION BY component ORDER BY q DESC, n ASC) AS rk
-            FROM m)
-          SELECT CAST(doc_id AS BIGINT) AS doc_id FROM documents
-          WHERE doc_id NOT IN (SELECT n FROM w WHERE rk > 1)
-        """,
-        "dedup_minhash_pairs": _ngram_jaccard_oracle(3, 0.6),
-        "dedup_simhash_pairs": _SIMHASH_ORACLE,
-        "dedup_simhash_manku": _simhash_manku_oracle(6, 3, 3),
-        "spans_explode": r"""
-          WITH base AS (
-            SELECT doc_id, string_split_regex(trim(text), '\s+') AS words
-            FROM documents),
-          s AS (
-            SELECT doc_id, g.range AS span_idx, words
-            FROM base, range(0, 4) g)
-          SELECT doc_id, CAST(span_idx AS BIGINT) AS span_idx,
-                 CASE WHEN span_idx % 2 = 0 THEN 'text' ELSE 'media' END
-                   AS kind,
-                 CAST(span_idx * 32 + doc_id % 7 AS BIGINT) AS offset,
-                 CASE WHEN span_idx % 2 = 0 THEN
-                   array_to_string(words[CAST(span_idx*2+1 AS INT):
-                                         CAST(span_idx*2+2 AS INT)], ' ')
-                 ELSE 'media/' || CAST(doc_id AS VARCHAR) || '/'
-                      || CAST(span_idx AS VARCHAR) END AS content
-          FROM s
-        """,
         "src_s2_cloudfree_mosaic": f"""
           WITH s2 AS (
             SELECT event_id AS scene_id, user_id % 50 AS cell, ts,

@@ -220,8 +220,9 @@ def per_band_counter_stats(df: DataFrame, array_col: str, n_bands: int,
                            key_cols: list[str] = ()) -> dict:
     """BandsAccumulator: stats per last-axis band of a flattened array
     column with band-interleaved layout (..., C). Returns
-    {band_index: as_dict} like stats_util.py:416-424. The collecting jobs
-    are described as COLLECT_JOB_DESCRIPTION.
+    {band_index: as_dict} like stats_util.py:416-424. A value past the
+    end of a short mask has a null mask element and counts as masked.
+    The collecting jobs are described as COLLECT_JOB_DESCRIPTION.
     """
     key_cols = list(key_cols)
     idx = F.posexplode(F.col(array_col)).alias("pos", "val")
@@ -230,7 +231,8 @@ def per_band_counter_stats(df: DataFrame, array_col: str, n_bands: int,
     sel = sel.withColumn("band", F.pmod(F.col("pos"), F.lit(n_bands)))
     if mask_col:
         sel = sel.withColumn(
-            "_mv", F.element_at(F.col("_m"), (F.col("pos") + 1).cast("int")))
+            "_mv",
+            F.try_element_at(F.col("_m"), (F.col("pos") + 1).cast("int")))
         mask_arg = "_mv"
     else:
         mask_arg = None

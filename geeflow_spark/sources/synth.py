@@ -8,8 +8,10 @@ a driver-side bottleneck.
 
 Determinism recipe: all randomness derives from `splitmix64(doc id + salt)`
 implemented in Spark column arithmetic (JVM-side, no Python in the hot
-path). The same splitmix64 is re-implemented in numpy (`splitmix64_np`) so
-pandas oracles can recompute identical values row-for-row.
+path): shifts and xors on longs, the wrapping multiplies in exact decimal
+arithmetic mod 2^64, so no step overflows under ANSI. The same splitmix64
+is re-implemented in numpy (`splitmix64_np`) so pandas oracles can
+recompute identical values row-for-row.
 
 Tables:
   docs(doc_id string, spans array<struct<kind,text,media_ref,offset>>,
@@ -31,6 +33,8 @@ Tables:
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,26 +52,63 @@ WORDS = ("spark tile region join cell index query scan filter merge "
          "window batch row data map reduce shuffle key value grid").split()
 
 
-def _splitmix64_cols(col):
-    """splitmix64 finalizer on a long column, pure Spark arithmetic.
+# splitmix64 constants as signed longs: the golden gamma 0x9E3779B97F4A7C15
+# and the multipliers 0xBF58476D1CE4E5B9, 0x94D049BB133111EB.
+_GAMMA = -7046029254386353131
+_M1 = -4658895280553007687
+_M2 = -7723592293110705685
+_ID_MUL = 2862933555777941757
 
-    Returns a uniformly-mixed signed 64-bit column. Overflow wraps (Java
-    long semantics) which is exactly what splitmix64 wants.
+
+def _mul64(z, k: int, add: int = 0):
+    """`z * k + add` mod 2^64 as a signed long, for a long column `z`.
+
+    Long arithmetic would overflow, which raises under ANSI. The product
+    is exact in decimal instead: two longs multiply to less than 2^126,
+    which fits decimal(38,0). `pmod` then wraps it like Java long
+    arithmetic does.
     """
-    z = (col + F.lit(-7046029254386353131)).cast("long")  # golden gamma
-    # z ^= z >>> 30; z *= M1; z ^= z >>> 27; z *= M2; z ^= z >>> 31
-    z = z.bitwiseXOR(F.shiftrightunsigned(z, 30)) * F.lit(-4658895280553007687)
-    z = z.bitwiseXOR(F.shiftrightunsigned(z, 27)) * F.lit(-7723592293110705685)
-    z = z.bitwiseXOR(F.shiftrightunsigned(z, 31))
-    return z
+    x = z.cast("decimal(20,0)") * F.lit(Decimal(k))
+    if add:
+        x = x + F.lit(Decimal(add))
+    half = F.lit(Decimal(1 << 63))
+    return (F.pmod(x + half, F.lit(Decimal(1 << 64))) - half).cast("long")
+
+
+def _splitmix64_steps(salt: int) -> list:
+    """The steps of `_uniform`, each a function of the previous step's
+    column: splitmix64(col * _ID_MUL + salt), then its top 53 bits as a
+    double in [0,1), like `uniform_np`."""
+    return [
+        lambda z: _mul64(z, _ID_MUL, salt + _GAMMA),
+        # z ^= z >>> 30; z *= M1; z ^= z >>> 27; z *= M2; z ^= z >>> 31
+        lambda z: _mul64(z.bitwiseXOR(F.shiftrightunsigned(z, 30)), _M1),
+        lambda z: _mul64(z.bitwiseXOR(F.shiftrightunsigned(z, 27)), _M2),
+        lambda z: (F.shiftrightunsigned(
+            z.bitwiseXOR(F.shiftrightunsigned(z, 31)), 11).cast("double")
+            / F.lit(float(1 << 53))),
+    ]
 
 
 def _uniform(col, salt: int):
     """Uniform double in [0,1) from a long column + salt (deterministic)."""
-    mixed = _splitmix64_cols((col * F.lit(2862933555777941757)) + F.lit(salt))
-    # Use top 53 bits for the double mantissa.
-    return (F.shiftrightunsigned(mixed, 11).cast("double")
-            / F.lit(float(1 << 53)))
+    for step in _splitmix64_steps(salt):
+        col = step(col)
+    return col
+
+
+def _uniform_array(ids, salt: int):
+    """`_uniform` of each element of an array<long> column.
+
+    One `transform` per step, so a lambda variable holds each step's
+    value. Spark does not share common subexpressions inside a lambda: a
+    single lambda over `_uniform` would evaluate the first multiply 8
+    times per element (each xorshift reads its input twice), about 4x
+    slower.
+    """
+    for step in _splitmix64_steps(salt):
+        ids = F.transform(ids, step)
+    return ids
 
 
 def splitmix64_np(x: np.ndarray) -> np.ndarray:
@@ -236,12 +277,11 @@ def scenes(spark: SparkSession, n_cells: int = 50, n_times: int = 24,
           t_i.cast("long") * F.lit(91 * 24 * 3600 * 1000 // 3) +
           (cell_i * 37 % 1000) * F.lit(3600 * 1000))
     npx = hw * hw
+    pixels = F.sequence(idc * npx, idc * npx + (npx - 1))
     band = lambda salt: F.transform(  # noqa: E731
-        F.sequence(F.lit(0), F.lit(npx - 1)),
-        lambda p: ((_uniform(idc * npx + p, salt)) * 100.0).cast("float"))
-    mask = F.transform(
-        F.sequence(F.lit(0), F.lit(npx - 1)),
-        lambda p: (_uniform(idc * npx + p, 99) > 0.2).cast("tinyint"))
+        _uniform_array(pixels, salt), lambda u: (u * 100.0).cast("float"))
+    mask = F.transform(_uniform_array(pixels, 99),
+                       lambda u: (u > 0.2).cast("tinyint"))
     return df.select(
         F.format_string("scene%08d", idc).alias("scene_id"),
         ts.alias("ts"),
@@ -270,9 +310,8 @@ def predictions(spark: SparkSession, n: int = 500, h: int = 4, w: int = 4,
     df = spark.range(0, n, 1, 4)
     idc = F.col("id")
     npx = h * w * c
-    tensor = F.transform(
-        F.sequence(F.lit(0), F.lit(npx - 1)),
-        lambda p: (_uniform(idc * npx + p, 51)).cast("float"))
+    tensor = _uniform_array(F.sequence(idc * npx, idc * npx + (npx - 1)),
+                            51).cast("array<float>")
     return df.select(
         idc.alias("id"),
         (idc % 3 - 1).cast("int").alias("dy"),

@@ -1,50 +1,13 @@
-"""dedup / text metrics / rasterize / checkpoint tests."""
+"""rasterize / checkpoint / CLI tests."""
 
 import os
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from geeflow_spark.operators import dedup, rasterize
+from geeflow_spark.operators import rasterize
 from geeflow_spark.plans import checkpoint
 from geeflow_spark.sources import synth
-
-
-def test_exact_dedup(spark):
-    pdf = pd.DataFrame({
-        "doc_id": [1, 2, 3, 4, 5],
-        "text": ["Hello  World", "hello world", "unique one",
-                 "HELLO WORLD ", "another"],
-    })
-    out = dedup.exact_dedup(spark.createDataFrame(pdf)).toPandas()
-    assert sorted(out["doc_id"]) == [1, 3, 5]  # min id survives
-
-
-def test_minhash_finds_near_dups(spark):
-    base = ("the quick brown fox jumps over the lazy dog and keeps "
-            "running through the green forest all day long " * 3)
-    near = base.replace("green", "dark")
-    other = ("completely different content about spark joins and "
-             "shuffle partitions in distributed systems " * 3)
-    pdf = pd.DataFrame({"doc_id": [1, 2, 3],
-                        "text": [base, near, other]})
-    pairs = dedup.minhash_duplicate_pairs(
-        spark.createDataFrame(pdf), num_perm=64, bands=16,
-        verify_jaccard=0.5).toPandas()
-    assert set(map(tuple, pairs[["a", "b"]].itertuples(index=False))) == \
-        {(1, 2)}
-
-
-def test_simhash_close_for_near_dups(spark):
-    base = "alpha beta gamma delta epsilon zeta eta theta " * 4
-    near = base.replace("zeta", "zetaa")
-    pdf = pd.DataFrame({"doc_id": [1, 2], "text": [base, near]})
-    out = spark.createDataFrame(pdf).select(
-        dedup.simhash_udf()(F.col("text")).alias("h")).toPandas()
-    h1, h2 = int(out["h"][0]), int(out["h"][1])
-    hamming = bin((h1 ^ h2) & ((1 << 64) - 1)).count("1")
-    assert hamming <= 16
 
 
 def test_rasterize_first_max_exists(spark):
@@ -451,284 +414,47 @@ def test_cli_stats_summary_line(spark, tmp_path, monkeypatch, capsys):
         == exp[1]
 
 
-def test_exact_dedup_hash_collision_safe(spark):
-    # Force a first-digest collision via an injected constant hasher:
-    # the second independent digest must keep distinct texts apart.
-    pdf = pd.DataFrame({"doc_id": [1, 2, 3],
-                        "text": ["alpha text", "totally different", "alpha  TEXT"]})
-    out = dedup.exact_dedup(
-        spark.createDataFrame(pdf),
-        key_fns=[lambda c: F.lit(0), lambda c: F.sha2(c, 256)]).toPandas()
-    assert sorted(out["doc_id"]) == [1, 2]  # collision did not merge 1 & 2
+def test_cli_binaries_in_stock_session(spark, tmp_path, monkeypatch, capsys):
+    # A stock Spark 4 session runs with ANSI on. The three binaries run in
+    # it as they are, and building their session through get_spark leaves
+    # the caller's setting alone.
+    import json
 
+    from pyspark.sql import SparkSession
 
-def test_ngram_jaccard_exact_all_pairs(spark):
-    a = "one two three four five six seven eight"
-    b = "one two three four five six seven nine"   # high overlap with a
-    c = "alpha beta gamma delta epsilon"
-    pdf = pd.DataFrame({"doc_id": [1, 2, 3], "text": [a, b, c]})
-    got = dedup.ngram_jaccard_pairs(
-        spark.createDataFrame(pdf), threshold=0.3, shingle_k=3).toPandas()
-    assert set(map(tuple, got[["a", "b"]].itertuples(index=False))) == {(1, 2)}
-    # exact value: shingles(a)=6, shingles(b)=6, common=5 -> 5/7
-    import math
-    assert math.isclose(got["jaccard"].iloc[0], 5 / 7, rel_tol=1e-9)
-
-
-def test_shingle_hashes_jvm_matches_python_semantics(spark):
-    # Cardinalities match the python mirror for normal/short/empty text.
-    pdf = pd.DataFrame({"text": ["a b c d e", "a b", "", "one"]})
-    got = spark.createDataFrame(pdf).select(
-        F.size(dedup.shingle_hashes_col(F.col("text"), 3)).alias("n")
-    ).toPandas()["n"].tolist()
-    exp = [len(dedup._token_shingles(t, 3)) for t in pdf["text"]]
-    assert got == exp
-
-
-def test_hash64_vectorized_matches_scalar():
-    strs = ["", "a", "hello world", "x" * 100, "unicode ☃ ümlaut"]
-    got = dedup._hash64_strs(strs)
-    for s, g in zip(strs, got):
-        h = 0xCBF29CE484222325
-        for byte in s.encode("utf-8"):
-            h = ((h ^ byte) * 0x100000001B3) % (1 << 64)
-        assert int(g) == h
-
-
-def test_simhash_candidate_pairs(spark):
-    base = ("the quick brown fox jumps over the lazy dog and keeps "
-            "running through the green forest all day long " * 2)
-    pdf = pd.DataFrame({
-        "doc_id": [1, 2, 3],
-        "text": [base, base.replace("green", "dark"),
-                 "entirely different words about spark shuffles"]})
-    # bands=16 -> pigeonhole guarantees recall for hamming <= 15
-    # (4 bands only guarantees hamming <= 3; near-dups here land ~9-15).
-    out = dedup.simhash_candidate_pairs(
-        spark.createDataFrame(pdf), bands=16, max_hamming=15).toPandas()
-    assert set(map(tuple, out[["a", "b"]].itertuples(index=False))) \
-        == {(1, 2)}
-    assert (out["hamming"] <= 15).all()
-
-
-def test_connected_components_vs_union_find(spark):
-    # random sparse pair graphs vs an independent python union-find
-    rng = np.random.default_rng(17)
-    for trial in range(3):
-        n = 60
-        m = rng.integers(20, 60)
-        a = rng.integers(0, n, m)
-        off = rng.integers(1, n, m)
-        b = (a + off) % n
-        pdf = pd.DataFrame({"a": a, "b": b}).drop_duplicates()
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for x, y in pdf.itertuples(index=False):
-            parent[find(int(x))] = find(int(y))
-        seen = sorted(set(pdf["a"]) | set(pdf["b"]))
-        roots = {}
-        expect = {}
-        for v in seen:  # ascending: root label = min member
-            r = find(v)
-            roots.setdefault(r, v)
-            expect[v] = roots[r]
-        got = dedup.connected_components(
-            spark.createDataFrame(pdf)).toPandas()
-        got_map = dict(zip(got["id"], got["component"]))
-        assert got_map == expect, trial
-
-
-def test_connected_components_chain_and_empty(spark):
-    # worst-case diameter: a pure chain (converges, label = 0) and an
-    # empty edge set (empty output, correct schema)
-    chain = pd.DataFrame({"a": range(0, 15), "b": range(1, 16)})
-    got = dedup.connected_components(
-        spark.createDataFrame(chain)).toPandas()
-    assert sorted(got["id"]) == list(range(16))
-    assert set(got["component"]) == {0}
-    empty = spark.createDataFrame([], "a long, b long")
-    out = dedup.connected_components(empty)
-    assert out.columns == ["id", "component"]
-    assert out.count() == 0
-
-
-def test_connected_components_long_chain_log_rounds(spark):
-    # Pointer jumping: a diameter-120 chain must close in O(log d)
-    # rounds (plain min-label propagation would need 120 and trip any
-    # reasonable max_iter). max_iter=12 both proves the bound and
-    # guards against a regression to linear-round propagation.
-    chain = pd.DataFrame({"a": range(0, 120), "b": range(1, 121)})
-    got = dedup.connected_components(
-        spark.createDataFrame(chain), max_iter=12).toPandas()
-    assert set(got["component"]) == {0}
-    assert len(got) == 121
-    assert dedup._last_cc_rounds <= 12
-
-
-def test_connected_components_releases_checkpoints(spark):
-    # Superseded per-round localCheckpoint blocks must be released as
-    # the loop advances; after unpersisting the returned frame the
-    # session holds no more persisted RDDs than before the call.
-    sc = spark.sparkContext
-    spark.catalog.clearCache()
-    before = dedup._persistent_rdd_ids(sc)
-    chain = pd.DataFrame({"a": range(0, 40), "b": range(1, 41)})
-    out = dedup.connected_components(spark.createDataFrame(chain))
-    assert out.count() == 41
-    after = dedup._persistent_rdd_ids(sc) - before
-    # only the final round's checkpoint may remain live (the result)
-    assert len(after) <= 2, after
-    dedup._release_rdds(sc, after)
-    assert not (dedup._persistent_rdd_ids(sc) - before)
-
-
-def test_dedup_survivors(spark):
-    # pairs {1-2, 2-3} and {7-9}: components {1,2,3} (survivor 1) and
-    # {7,9} (survivor 7); docs 4, 5 appear in no pair and pass through.
-    docs = spark.createDataFrame(pd.DataFrame(
-        {"doc_id": [1, 2, 3, 4, 5, 7, 9],
-         "text": list("abcdefg")}))
-    pairs = spark.createDataFrame(pd.DataFrame(
-        {"a": [1, 2, 7], "b": [2, 3, 9]}))
-    out = dedup.dedup_survivors(docs, pairs).toPandas()
-    assert sorted(out["doc_id"]) == [1, 4, 5, 7]
-    assert list(out.columns) == ["doc_id", "text"]
-    assert dedup._last_survivors_path == "broadcast"
-    dedup.release_survivors_state()
-
-
-def test_dedup_survivors_quality(spark):
-    # quality_col winner selection: component {1,2,3} keeps 2 (highest
-    # quality; null on 3 ranks lowest), component {4,5} ties on
-    # quality and falls back to the min-id rule (keeps 4); doc 6 is in
-    # no pair and passes through. Winner 2 != min id 1 pins that the
-    # argmax actually ran.
-    docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2, 3, 4, 5, 6],
-                      "text": list("abcdef"),
-                      "q": [5.0, 9.0, None, 7.0, 7.0, 1.0]}))
-    pairs = spark.createDataFrame(pd.DataFrame(
-        {"a": [1, 2, 4], "b": [2, 3, 5]}))
-    out = dedup.dedup_survivors(docs, pairs, quality_col="q").toPandas()
-    assert sorted(out["doc_id"]) == [2, 4, 6]
-    assert list(out.columns) == ["doc_id", "text", "q"]
-    dedup.release_survivors_state()
-
-
-def test_dedup_survivors_broadcast_gate(spark):
-    # Majority-duplicate corpus (the web-scale regime the gate exists
-    # for): 300 docs in 100 chains of 3 -> 200 dropped. With the
-    # threshold below the drop count the anti-join must NOT be forced
-    # to broadcast (AQE plans it); survivors must be identical on both
-    # paths, and neither path may leak drop-list blocks after
-    # release_survivors_state().
-    sc = spark.sparkContext
-    spark.catalog.clearCache()
-    docs = spark.range(300).withColumnRenamed("id", "doc_id")
-    pairs = spark.createDataFrame(pd.DataFrame(
-        {"a": [3 * i + j for i in range(100) for j in (0, 1)],
-         "b": [3 * i + j for i in range(100) for j in (1, 2)]}))
-    before = dedup._persistent_rdd_ids(sc)
-
-    forced = dedup.dedup_survivors(docs, pairs, broadcast_max_rows=50)
-    got_shuffle = sorted(r["doc_id"] for r in forced.collect())
-    assert dedup._last_survivors_path == "shuffle"
-    # the forced path's logical plan carries no broadcast hint
-    assert "broadcast" not in forced._jdf.queryExecution() \
-        .logical().toString().lower()
-
-    bcast = dedup.dedup_survivors(docs, pairs, broadcast_max_rows=10**6)
-    got_bcast = sorted(r["doc_id"] for r in bcast.collect())
-    assert dedup._last_survivors_path == "broadcast"
-
-    expect = sorted(3 * i for i in range(100))
-    assert got_shuffle == got_bcast == expect
-    dedup.release_survivors_state()
-    assert not (dedup._persistent_rdd_ids(sc) - before)
-
-
-def test_block_combo_masks_properties():
-    # Pure-python pigeonhole property: for random hash pairs with
-    # d <= blocks - t flipped bits, SOME combination mask sees equal
-    # masked values; masks jointly cover all 64 bits; count = C(B,t).
-    from math import comb
-    rng = np.random.default_rng(9)
-    for blocks, t in ((6, 3), (8, 4), (4, 2), (5, 5)):
-        masks = dedup._block_combo_masks(blocks, t)
-        assert len(masks) == comb(blocks, t)
-        m_u = [np.uint64(m % (1 << 64)) for m in masks]
-        cover = np.uint64(0)
-        for m in m_u:
-            cover |= m
-        if t == blocks:
-            assert cover == np.uint64(0xFFFFFFFFFFFFFFFF)
-        d_max = blocks - t
-        for _ in range(200):
-            h = np.uint64(rng.integers(0, 1 << 63))
-            flips = rng.choice(64, size=rng.integers(0, d_max + 1),
-                               replace=False)
-            h2 = h
-            for b in flips:
-                h2 = h2 ^ (np.uint64(1) << np.uint64(b))
-            assert any((h & m) == (h2 & m) for m in m_u), \
-                (blocks, t, flips)
-
-
-def test_simhash_block_combo_recall(spark):
-    # Manku block-combination keys (blocks=6, t=3): EVERY pair with
-    # hamming <= blocks - t = 3 must be found (pigeonhole guarantee),
-    # and nothing above max_hamming may appear. Truth = brute-force
-    # popcount over the same simhashes.
-    rng = np.random.default_rng(3)
-    vocab = [f"w{i}" for i in range(500)]
-    base = [" ".join(rng.choice(vocab, 30)) for _ in range(40)]
-    texts = base + base[:10]  # 10 exact dups (hamming 0)
-    pdf = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-    df = spark.createDataFrame(pdf)
-    got = dedup.simhash_candidate_pairs(
-        df, shingle_k=2, blocks=6, block_t=3, max_hamming=3).toPandas()
-    hp = df.select("doc_id", dedup.simhash_udf(2)(F.col("text"))
-                   .alias("h")).toPandas().sort_values("doc_id")
-    h = hp["h"].to_numpy(np.int64).astype(np.uint64)
-    truth = {(a, b) for a in range(len(h)) for b in range(a + 1, len(h))
-             if bin(int(h[a] ^ h[b])).count("1") <= 3}
-    assert truth  # the exact dups guarantee a non-trivial truth set
-    assert set(map(tuple, got[["a", "b"]].itertuples(index=False))) \
-        == truth
-    assert (got["hamming"] <= 3).all()
-
-
-def test_xxh64_twin_matches_spark(spark):
-    from tools.xxh64 import xxh64_str_signed
-    strs = ["", "a", "hello world", "x" * 40, "ünïcode ☃", "y" * 31]
-    df = spark.createDataFrame(pd.DataFrame({"s": strs}))
-    got = [r[0] for r in df.select(F.xxhash64("s")).collect()]
-    assert got == [xxh64_str_signed(s) for s in strs]
-
-
-def test_dedup_survivors_quality_string_ids(spark):
-    # The (quality DESC, id ASC) tie-break must hold for STRING doc
-    # ids too (negating a string id casts to NULL and silently breaks
-    # argmax determinism - the bug this pins).
-    docs = spark.createDataFrame(pd.DataFrame({
-        "doc_id": ["doc02", "doc01", "doc03", "doc09"],
-        "text": list("abcd"),
-        "q": [7.0, 7.0, 9.0, 1.0]}))
-    pairs = spark.createDataFrame(pd.DataFrame(
-        {"a": ["doc01", "doc02"], "b": ["doc02", "doc03"]}))
-    out = dedup.dedup_survivors(docs, pairs, quality_col="q").toPandas()
-    # component {doc01,doc02,doc03}: doc03 wins on quality
-    assert sorted(out["doc_id"]) == ["doc03", "doc09"]
-    # quality tie between doc01/doc02 alone -> min id wins
-    pairs2 = spark.createDataFrame(pd.DataFrame(
-        {"a": ["doc01"], "b": ["doc02"]}))
-    out2 = dedup.dedup_survivors(docs, pairs2,
-                                 quality_col="q").toPandas()
-    assert sorted(out2["doc_id"]) == ["doc01", "doc03", "doc09"]
-    dedup.release_survivors_state()
+    from geeflow_spark import cli
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    key = "spark.sql.ansi.enabled"
+    prev = spark.conf.get(key)
+    assert prev == "true"  # get_spark keeps Spark 4's default
+    spark.conf.set(key, "true")
+    try:
+        docs, plots, table = (str(tmp_path / d)
+                              for d in ("docs", "plots", "table"))
+        synth.docs(spark, 200).write.parquet(docs)
+        zb = _cli_raster_plots(spark, plots, n=100)
+        _cli_stats_table(spark, table)
+        runs = [
+            ["generate", "--docs", docs, "--out", str(tmp_path / "ex")],
+            ["rasters", "--plots", plots, "--zone-bboxes", json.dumps(zb),
+             "--out", str(tmp_path / "rasters"), "--cell-size", "1920"],
+            ["stats", "--table", table, "--array-col", "feat",
+             "--n-bands", "2", "--mask-col", "m",
+             "--out", str(tmp_path / "stats")],
+        ]
+        got = {}
+        for argv in runs:
+            cli.main(argv)
+            got[argv[0]] = json.loads(
+                capsys.readouterr().out.strip().splitlines()[-1])
+        assert spark.conf.get(key) == "true"
+    finally:
+        spark.conf.set(key, prev)
+    gen = got["generate"]
+    assert (gen["partitions_written"], gen["partitions_skipped"]) == (3, 0)
+    assert gen["total_rows"] == sum(gen["rows"].values()) > 0
+    ras = got["rasters"]
+    assert set(ras["rasters"]) == set(zb)
+    assert ras["total_rasters"] == sum(ras["rasters"].values()) > 0
+    assert got["stats"]["bands"] == [0, 1]
+    assert got["stats"]["n"] == {"0": 8, "1": 8}

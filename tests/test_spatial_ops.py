@@ -354,3 +354,23 @@ def test_knn_cost_based_fast_path_identical(spark):
         .select("query_id", "data_id", "rank").toPandas()
     key = lambda df: sorted(map(tuple, df.itertuples(index=False)))  # noqa
     assert key(ring) == key(fast)
+
+
+def test_synth_splitmix64_matches_numpy_twin(spark):
+    # The column splitmix64 (ANSI on) equals the numpy mirror bit for bit:
+    # on ids whose products wrap past 2^64 both ways, on docs' lat/lon, and
+    # per array element (predictions' tensor, through `_uniform_array`).
+    ids = [0, 1, 12345, -1, -(1 << 63), (1 << 63) - 1, 1 << 40]
+    df = spark.createDataFrame([(i,) for i in ids], "id long")
+    got = [r[0] for r in df.select(synth._uniform(F.col("id"), 7)).collect()]
+    assert got == synth.uniform_np(np.array(ids, dtype=np.int64), 7).tolist()
+
+    pdf = synth.docs(spark, 300).toPandas()
+    lat, lon = synth.doc_latlon_np(np.arange(300, dtype=np.int64))
+    assert (pdf["lat"].to_numpy() == lat).all()
+    assert (pdf["lon"].to_numpy() == lon).all()
+
+    t = synth.predictions(spark, 10, 2, 2, 1).orderBy("id").toPandas()
+    exp = synth.uniform_np(np.arange(40, dtype=np.int64), 51)
+    assert (np.concatenate(t["tensor"].to_list())
+            == exp.astype(np.float32)).all()

@@ -20,7 +20,6 @@ UNREACHED_ALLOWLIST = {
     "geeflow_spark.functions.ccdc",
     "geeflow_spark.functions.coords",
     "geeflow_spark.functions.times",
-    "geeflow_spark.operators.dedup",
     "geeflow_spark.operators.knn",
     "geeflow_spark.operators.rasterize",
     "geeflow_spark.operators.reducers",
