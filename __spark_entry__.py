@@ -21,14 +21,15 @@ import os
 import re
 from collections.abc import Callable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType
+from pyspark.sql.types import (DoubleType, LongType, StringType,
+                               StructField, StructType)
 
 from geeflow_spark.functions import hex as _hex
-from geeflow_spark.functions import masks
 from geeflow_spark.functions import s2 as _s2
 from geeflow_spark.functions import utm as _utm
 from geeflow_spark.operators import knn, spatial_join, tiles
@@ -204,29 +205,38 @@ def _q_geo_split_bucket(spark, sf_dir):
         .select(F.col("bucket").cast("long").alias("bucket"), "n")
 
 
+@pandas_udf(StructType([StructField("utm_zone", StringType()),
+                         StructField("tile_x", DoubleType()),
+                         StructField("tile_y", DoubleType())]))
+def _tile_origin(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
+    code, x0, y0 = _utm.tile_origin(lat.to_numpy(np.float64),
+                                    lon.to_numpy(np.float64), 10.0, 96)
+    return pd.DataFrame({"utm_zone": np.array(_utm.ZONE_STRINGS)[code],
+                         "tile_x": x0, "tile_y": y0})
+
+
 def _q_geo_tile_origin(spark, sf_dir):
-    # UTM tile origins. ORACLED: utm.tile_origin_sql_query recomputes
-    # the full Snyder series + zone/letter rules + tile snap in DuckDB
+    # UTM tile origins from the generate kernel's own tile code
+    # (utm.tile_origin). ORACLED: tile_origin_sql_query recomputes the
+    # full Snyder series + zone/letter rules + tile snap in DuckDB
     # (bit-exact on 1.3M validation points).
     docs = _docs(spark, sf_dir)
-    tiled = docs.select("doc_id", generate.tile_udf(10.0, 96)(
-        F.col("lat"), F.col("lon")).alias("t"))
+    tiled = docs.select("doc_id", _tile_origin(F.col("lat"), F.col("lon"))
+                        .alias("t"))
     return tiled.select("doc_id", "t.utm_zone", "t.tile_x", "t.tile_y")
 
 
 def _q_geo_cell_counts(spark, sf_dir):
-    # Salted per-cell aggregation at level 5. ORACLED: s2.cell_sql_query
-    # replays the exact S2 encode (face/st/Hilbert) in pure SQL.
+    # Per-cell counts at level 5. ORACLED: cell_sql_query replays the
+    # exact S2 encode (face/st/Hilbert) in pure SQL.
     docs = _docs(spark, sf_dir).select("doc_id", "lat", "lon")
-    enc = spatial_join.with_cell(docs, level=5)
-    # no sort: gate is order-free. Salt on the unique doc_id so even
-    # duplicate points spread (see salted_cell_counts docstring).
-    return spatial_join.salted_cell_counts(enc, salt_cols=["doc_id"])
+    # no sort: gate is order-free.
+    return spatial_join.with_cell(docs, level=5).groupBy("cell").count()
 
 
 def _q_geo_cell_counts_hex(spark, sf_dir):
     # Hex-twin index (north rule: H3 sibling next to S2): per-cell doc
-    # counts at res 6. ORACLED - hex.hex_cell_sql recomputes the packed
+    # counts at res 6. ORACLED - hex_cell_sql recomputes the packed
     # cell id in pure SQL (same literals, same floor(x+0.5) tie rule).
     docs = _docs(spark, sf_dir).select("doc_id", "lat", "lon")
     enc = spatial_join.with_cell(docs, level=6, index="hex")
@@ -242,7 +252,9 @@ def _q_src_s2_cloudfree_mosaic(spark, sf_dir):
     # (ee_data.py:209-230) through the catalog mechanism.
     src = catalog.demo_s2_source(sf_dir)
     df = catalog.cloud_filtered(src, spark, 30.0)
-    df = df.filter(masks.s2_qa60_cloud_mask_col(F.col("QA60")) == 1)
+    # QA60 bits 10 (opaque clouds) and 11 (cirrus) both clear.
+    df = df.filter((F.col("QA60").bitwiseAND(1 << 10) == 0)
+                   & (F.col("QA60").bitwiseAND(1 << 11) == 0))
     w = Window.partitionBy("cell").orderBy(F.col("ts").desc(),
                                            F.col("scene_id").desc())
     return (df.withColumn("rn", F.row_number().over(w))
@@ -433,6 +445,233 @@ def _split_bucket_oracle() -> str:
     """
 
 
+def hex_cell_sql(lat_sql: str, lon_sql: str, res: int) -> str:
+    """Scalar SQL expression (DuckDB) computing the packed hex cell id.
+
+    Mirrors hex.latlon_to_axial + _cube_round + pack exactly: identical
+    IEEE-754 operation sequence, identical literals, floor(x+0.5)."""
+    s = repr(_hex.size_for_res(res))
+    x = f"(({_hex.SQRT3_3!r} * ({lon_sql}) - ({lat_sql}) / 3.0) / {s})"
+    z = f"((2.0 / 3.0 * ({lat_sql})) / {s})"
+    y = f"(-{x} - {z})"
+    rx = f"floor({x} + 0.5)"
+    ry = f"floor({y} + 0.5)"
+    rz = f"floor({z} + 0.5)"
+    dx = f"abs({rx} - {x})"
+    dy = f"abs({ry} - {y})"
+    dz = f"abs({rz} - {z})"
+    fq = (f"(CASE WHEN {dx} > {dy} AND {dx} > {dz} "
+          f"THEN -{ry} - {rz} ELSE {rx} END)")
+    fr = (f"(CASE WHEN NOT ({dx} > {dy} AND {dx} > {dz}) "
+          f"AND NOT ({dy} > {dz}) THEN -{rx} - {ry} ELSE {rz} END)")
+    return (f"(CAST({res} AS BIGINT) * 72057594037927936"  # << 56
+            f" + (CAST({fq} AS BIGINT) + {_hex.OFF}) * 268435456"  # << 28
+            f" + (CAST({fr} AS BIGINT) + {_hex.OFF}))")
+
+
+def cell_sql_query(src: str, lat_sql: str, lon_sql: str, level: int,
+                   keep: str = "doc_id") -> str:
+    """ANSI-SQL (DuckDB) recomputation of `s2.latlon_to_cell_id` at `level`.
+
+    Returns a full SELECT producing (`keep` columns, cell BIGINT) from
+    `src`, where `cell` is bit-for-bit the signed-int64 reinterpretation
+    of the S2 cell id `functions.s2` computes. Determinism contract (same
+    spirit as hex_cell_sql): identical op sequence — unit-sphere xyz,
+    cube-face selection, quadratic (u,v)->(s,t), trunc to 30-bit ij,
+    then `level` explicit Hilbert rounds driven by s2's
+    _POS_TO_IJ/_POS_TO_ORIENTATION tables (inverted to IJ->POS CASE
+    expressions). Floor-boundary flips from <=1-ulp libm sin/cos
+    differences would need s*2^level within ~1e-14 of an integer —
+    validated 0 mismatches on 1.2M points at levels 5/6/8.
+
+    Levels <= 15 keep the generated SQL small (one CTE pair per round).
+    """
+    assert 1 <= level <= 15
+    ij_to_pos = [[0] * 4 for _ in range(4)]
+    for o in range(4):
+        for pos in range(4):
+            ij_to_pos[o][int(_s2._POS_TO_IJ[o][pos])] = pos
+
+    def pos_case(o_expr: str, ij_expr: str) -> str:
+        whens = " ".join(
+            f"WHEN {o_expr} = {o} AND {ij_expr} = {ij} "
+            f"THEN {ij_to_pos[o][ij]}"
+            for o in range(4) for ij in range(4))
+        return f"CASE {whens} END"
+
+    def orient_case(pos_expr: str) -> str:
+        whens = " ".join(
+            f"WHEN {pos_expr} = {p} THEN {int(_s2._POS_TO_ORIENTATION[p])}"
+            for p in range(4))
+        return f"CASE {whens} END"
+
+    rounds = []
+    for k in range(level):
+        shift = _s2.MAX_LEVEL - 1 - k
+        prev_o = f"o{k}"
+        pc = pos_case(prev_o, f"ij{k}")
+        rounds.append(f"""
+  r{k} AS (
+    SELECT *, ((i >> {shift}) & 1) * 2 + ((j >> {shift}) & 1) AS ij{k}
+    FROM {'base' if k == 0 else f'r{k - 1}x'}
+  ),
+  r{k}x AS (
+    SELECT *, {pc} AS pos{k},
+      xor({prev_o}, {orient_case(pc)}) AS o{k + 1}
+    FROM r{k}
+  )""")
+    pos_expr = " + ".join(
+        f"CAST(pos{k} AS HUGEINT) * {1 << (2 * (level - 1 - k))}"
+        for k in range(level))
+    lsb_shift = 2 * (_s2.MAX_LEVEL - level)
+    max_ij = (1 << _s2.MAX_LEVEL) - 1
+    return f"""
+WITH pt AS (
+  SELECT {keep}, {lat_sql} AS lat, {lon_sql} AS lon FROM {src}
+),
+xyz AS (
+  SELECT *, cos(radians(lat)) * cos(radians(lon)) AS x,
+            cos(radians(lat)) * sin(radians(lon)) AS y,
+            sin(radians(lat)) AS z
+  FROM pt
+),
+fuv AS (
+  SELECT *,
+    CASE WHEN abs(x) >= abs(y)
+         THEN (CASE WHEN abs(x) >= abs(z) THEN 0 ELSE 2 END)
+         ELSE (CASE WHEN abs(y) >= abs(z) THEN 1 ELSE 2 END)
+    END AS f0
+  FROM xyz
+),
+fuv2 AS (
+  SELECT *,
+    CASE WHEN (CASE f0 WHEN 0 THEN x WHEN 1 THEN y ELSE z END) < 0
+         THEN f0 + 3 ELSE f0 END AS face
+  FROM fuv
+),
+uv AS (
+  SELECT *,
+    CASE face WHEN 0 THEN y/x WHEN 1 THEN -x/y WHEN 2 THEN -x/z
+              WHEN 3 THEN z/x WHEN 4 THEN z/y ELSE -y/z END AS u,
+    CASE face WHEN 0 THEN z/x WHEN 1 THEN z/y WHEN 2 THEN -y/z
+              WHEN 3 THEN y/x WHEN 4 THEN -x/y ELSE -x/z END AS v
+  FROM fuv2
+),
+st AS (
+  SELECT *,
+    CASE WHEN u >= 0 THEN 0.5 * sqrt(1 + 3*u)
+         ELSE 1 - 0.5 * sqrt(1 - 3*u) END AS s,
+    CASE WHEN v >= 0 THEN 0.5 * sqrt(1 + 3*v)
+         ELSE 1 - 0.5 * sqrt(1 - 3*v) END AS t
+  FROM uv
+),
+base AS (
+  SELECT *,
+    LEAST(GREATEST(CAST(trunc(s * {1 << _s2.MAX_LEVEL}.0) AS BIGINT), 0),
+          {max_ij}) AS i,
+    LEAST(GREATEST(CAST(trunc(t * {1 << _s2.MAX_LEVEL}.0) AS BIGINT), 0),
+          {max_ij}) AS j,
+    (face & 1) AS o0
+  FROM st
+),{','.join(rounds)}
+SELECT {keep},
+  CAST(CASE WHEN cu >= 9223372036854775808
+            THEN cu - 18446744073709551616 ELSE cu END AS BIGINT) AS cell
+FROM (
+  SELECT {keep},
+    CAST(face AS HUGEINT) * {1 << (2 * _s2.MAX_LEVEL + 1)}
+    + ({pos_expr}) * {1 << (lsb_shift + 1)}
+    + {1 << lsb_shift} AS cu
+  FROM r{level - 1}x
+)
+"""
+
+
+def tile_origin_sql_query(src: str, lat_sql: str, lon_sql: str,
+                          cell_size: float, width: int,
+                          keep: str = "doc_id") -> str:
+    """ANSI-SQL (DuckDB) recomputation of `utm.tile_origin`: the
+    `from_latlon` series plus the snapped tile origin.
+
+    Returns a full SELECT producing (`keep` cols, utm_zone VARCHAR,
+    tile_x DOUBLE, tile_y DOUBLE) from `src`. Determinism contract:
+    the exact Snyder eq. 8-9..8-15 op sequence with `functions.utm`'s
+    literal constants (repr full precision); round() agrees with
+    numpy's banker's rounding except at exact .5 ties, which are
+    measure-zero for transcendental eastings (validated 0 mismatches
+    on 1.3M points incl. the Norway/Svalbard exception bands).
+    """
+    e, ep2 = repr(_utm.E), repr(_utm.E_P2)
+    m1, m2, m3, m4 = (repr(_utm.M1), repr(_utm.M2), repr(_utm.M3),
+                      repr(_utm.M4))
+    r, k0 = repr(_utm.R), repr(_utm.K0)
+    half = repr(cell_size * width / 2.0)
+    cs = repr(cell_size)
+    zl = _utm.ZONE_LETTERS
+    return f"""
+WITH pt AS (
+  SELECT {keep}, {lat_sql} AS lat, {lon_sql} AS lon FROM {src}
+),
+zn AS (
+  SELECT *,
+    CASE
+      WHEN lat >= 72 AND lat <= 84 AND lon >= 0 AND lon < 9 THEN 31
+      WHEN lat >= 72 AND lat <= 84 AND lon >= 9 AND lon < 21 THEN 33
+      WHEN lat >= 72 AND lat <= 84 AND lon >= 21 AND lon < 33 THEN 35
+      WHEN lat >= 72 AND lat <= 84 AND lon >= 33 AND lon < 42 THEN 37
+      WHEN lat >= 56 AND lat < 64 AND lon >= 3 AND lon < 12 THEN 32
+      ELSE LEAST(GREATEST(CAST(floor((lon + 180.0) / 6.0) AS BIGINT) + 1,
+                          1), 60)
+    END AS zone_number,
+    CASE WHEN lat >= -80 AND lat <= 84
+         THEN substr('{zl}',
+              CAST(LEAST(GREATEST(trunc((lat + 80.0) / 8.0), 0),
+                         {len(zl) - 1}) AS INT) + 1, 1)
+         ELSE 'Z' END AS zone_letter
+  FROM pt
+),
+tr AS (
+  SELECT *,
+    radians(lat) AS lat_rad,
+    sin(radians(lat)) AS lat_sin,
+    cos(radians(lat)) AS lat_cos,
+    sin(radians(lat)) / cos(radians(lat)) AS lat_tan
+  FROM zn
+),
+tr2 AS (
+  SELECT *,
+    lat_tan * lat_tan AS lat_tan2,
+    (lat_tan * lat_tan) * (lat_tan * lat_tan) AS lat_tan4,
+    {r} / sqrt(1 - {e} * lat_sin * lat_sin) AS n,
+    {ep2} * lat_cos * lat_cos AS c,
+    lat_cos * (mod(radians(lon) - radians((zone_number - 1) * 6 - 180 + 3)
+                   + pi(), 2 * pi()) - pi()) AS a,
+    {r} * ({m1} * lat_rad - {m2} * sin(2 * lat_rad)
+           + {m3} * sin(4 * lat_rad) - {m4} * sin(6 * lat_rad)) AS m
+  FROM tr
+),
+en AS (
+  SELECT *,
+    {k0} * n * (a
+      + (a*a*a) / 6 * (1 - lat_tan2 + c)
+      + (a*a*a*a*a) / 120 * (5 - 18 * lat_tan2 + lat_tan4
+                             + 72 * c - 58 * {ep2})) + 500000.0 AS easting,
+    {k0} * (m + n * lat_tan * (
+      (a*a) / 2
+      + (a*a*a*a) / 24 * (5 - lat_tan2 + 9 * c + 4 * c * c)
+      + (a*a*a*a*a*a) / 720 * (61 - 58 * lat_tan2 + lat_tan4
+                               + 600 * c - 330 * {ep2})))
+    + CASE WHEN lat < 0 THEN 10000000.0 ELSE 0.0 END AS northing
+  FROM tr2
+)
+SELECT {keep},
+  CAST(zone_number AS VARCHAR) || zone_letter AS utm_zone,
+  round((easting - {half}) / {cs}) * {cs} AS tile_x,
+  round((northing - {half}) / {cs}) * {cs} AS tile_y
+FROM en
+"""
+
+
 def oracle_sql() -> dict[str, str]:
     sqls = {
         "geo_pip_rectangles": _rect_oracle(),
@@ -445,7 +684,7 @@ def oracle_sql() -> dict[str, str]:
         "geo_knn": _knn_oracle(),
         "geo_split_bucket": _split_bucket_oracle(),
         "geo_cell_counts_hex": f"""
-          SELECT {_hex.hex_cell_sql(_LAT, _LON, 6)} AS cell,
+          SELECT {hex_cell_sql(_LAT, _LON, 6)} AS cell,
                  COUNT(*) AS n
           FROM documents GROUP BY 1
         """,
@@ -454,11 +693,11 @@ def oracle_sql() -> dict[str, str]:
         # 0 mismatches on 1.2M points vs the numpy kernel.
         "geo_cell_counts": f"""
           SELECT cell, COUNT(*) AS count
-          FROM ({_s2.cell_sql_query("documents", _LAT, _LON, 5)})
+          FROM ({cell_sql_query("documents", _LAT, _LON, 5)})
           GROUP BY cell
         """,
         # Full Snyder-series UTM forward transform + tile snap in SQL.
-        "geo_tile_origin": _utm.tile_origin_sql_query(
+        "geo_tile_origin": tile_origin_sql_query(
             "documents", _LAT, _LON, 10.0, 96),
         "src_s2_cloudfree_mosaic": f"""
           WITH s2 AS (

@@ -80,53 +80,6 @@ def points_in_polygon_batch(px: np.ndarray, py: np.ndarray,
     return out
 
 
-def rect_ring(x0: float, y0: float, x1: float, y1: float) -> np.ndarray:
-    """Rectangle as a flat ring (ccw)."""
-    return np.array([x0, y0, x1, y0, x1, y1, x0, y1], dtype=np.float64)
-
-
-def segments_intersect_rect(poly: np.ndarray, x0, y0, x1, y1) -> bool:
-    """Does the polygon ring intersect (overlap or contain or cross) the
-    rectangle? Used for rectangle-ROI filterBounds refinement.
-    """
-    bx0, by0, bx1, by1 = polygon_bbox(poly)
-    if bx1 < x0 or bx0 > x1 or by1 < y0 or by0 > y1:
-        return False
-    # Any polygon vertex in rect?
-    xs, ys = poly[0::2], poly[1::2]
-    if np.any((xs >= x0) & (xs <= x1) & (ys >= y0) & (ys <= y1)):
-        return True
-    # Any rect corner in polygon?
-    cx = np.array([x0, x1, x1, x0])
-    cy = np.array([y0, y0, y1, y1])
-    if points_in_polygon(cx, cy, poly).any():
-        return True
-    # Edge crossings (conservative: check segment pair intersections).
-    rx = rect_ring(x0, y0, x1, y1)
-    return _rings_edges_cross(poly, rx)
-
-
-def _rings_edges_cross(a: np.ndarray, b: np.ndarray) -> bool:
-    ax0, ay0 = a[0::2], a[1::2]
-    ax1, ay1 = np.roll(ax0, -1), np.roll(ay0, -1)
-    bx0, by0 = b[0::2], b[1::2]
-    bx1, by1 = np.roll(bx0, -1), np.roll(by0, -1)
-
-    def cross(ox, oy, px, py, qx, qy):
-        return (px - ox) * (qy - oy) - (py - oy) * (qx - ox)
-
-    # All pairs: (na, nb)
-    d1 = cross(ax0[:, None], ay0[:, None], ax1[:, None], ay1[:, None],
-               bx0[None, :], by0[None, :])
-    d2 = cross(ax0[:, None], ay0[:, None], ax1[:, None], ay1[:, None],
-               bx1[None, :], by1[None, :])
-    d3 = cross(bx0[None, :], by0[None, :], bx1[None, :], by1[None, :],
-               ax0[:, None], ay0[:, None])
-    d4 = cross(bx0[None, :], by0[None, :], bx1[None, :], by1[None, :],
-               ax1[:, None], ay1[:, None])
-    return bool(np.any((d1 * d2 < 0) & (d3 * d4 < 0)))
-
-
 def point_segments_distance(px: np.ndarray, py: np.ndarray,
                             ring: np.ndarray) -> np.ndarray:
     """Min distance from each point to the polygon BOUNDARY (planar).
@@ -170,12 +123,3 @@ def points_in_buffered_polygon(px: np.ndarray, py: np.ndarray,
     if radius > 0:
         return inside | (d <= radius)
     return inside & (d >= -radius)
-
-
-def realign_ring_scale(ring: np.ndarray, scale: float) -> np.ndarray:
-    """Clips ring coordinates to the closest grid points at `scale`
-    (pipelines.py:253-262 realign_geometry_scale): every coordinate
-    becomes round(z / scale) * scale, keeping ROI grids of different
-    scales aligned so gridded image sizes stay equal."""
-    ring = np.asarray(ring, dtype=np.float64)
-    return np.round(ring / scale) * scale

@@ -216,27 +216,3 @@ def cover_bboxes(boxes, res: int):
     owner = np.repeat(np.arange(len(covers)), [len(c) for c in covers])
     cells = np.concatenate(covers) if covers else np.array([], np.int64)
     return cells, owner
-
-
-def hex_cell_sql(lat_sql: str, lon_sql: str, res: int) -> str:
-    """Scalar SQL expression (DuckDB) computing the packed hex cell id.
-
-    Mirrors latlon_to_axial + _cube_round + pack exactly: identical
-    IEEE-754 operation sequence, identical literals, floor(x+0.5)."""
-    s = repr(size_for_res(res))
-    x = f"(({SQRT3_3!r} * ({lon_sql}) - ({lat_sql}) / 3.0) / {s})"
-    z = f"((2.0 / 3.0 * ({lat_sql})) / {s})"
-    y = f"(-{x} - {z})"
-    rx = f"floor({x} + 0.5)"
-    ry = f"floor({y} + 0.5)"
-    rz = f"floor({z} + 0.5)"
-    dx = f"abs({rx} - {x})"
-    dy = f"abs({ry} - {y})"
-    dz = f"abs({rz} - {z})"
-    fq = (f"(CASE WHEN {dx} > {dy} AND {dx} > {dz} "
-          f"THEN -{ry} - {rz} ELSE {rx} END)")
-    fr = (f"(CASE WHEN NOT ({dx} > {dy} AND {dx} > {dz}) "
-          f"AND NOT ({dy} > {dz}) THEN -{rx} - {ry} ELSE {rz} END)")
-    return (f"(CAST({res} AS BIGINT) * 72057594037927936"  # << 56
-            f" + (CAST({fq} AS BIGINT) + {OFF}) * 268435456"  # << 28
-            f" + (CAST({fr} AS BIGINT) + {OFF}))")

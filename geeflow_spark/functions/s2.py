@@ -84,15 +84,9 @@ def latlon_to_xyz(lat_deg, lon_deg):
                      np.sin(phi)], axis=-1)
 
 
-def xyz_to_latlon(xyz):
-    x, y, z = xyz[..., 0], xyz[..., 1], xyz[..., 2]
-    lat = np.degrees(np.arctan2(z, np.sqrt(x * x + y * y)))
-    lon = np.degrees(np.arctan2(y, x))
-    return lat, lon
-
-
 def xyz_to_face_uv(xyz):
-    """xyz -> (face, u, v), vectorized. Standard S2 cube projection."""
+    """xyz -> (face, u, v), vectorized. Standard S2 cube projection: u and
+    v are one division each, by the face's major coordinate."""
     x, y, z = xyz[..., 0], xyz[..., 1], xyz[..., 2]
     ax, ay, az = np.abs(x), np.abs(y), np.abs(z)
     face = np.where(ax >= ay,
@@ -101,12 +95,8 @@ def xyz_to_face_uv(xyz):
     major = np.choose(face, [x, y, z])
     face = np.where(major < 0, face + 3, face).astype(np.int64)
     # u, v per face (standard S2 axes).
-    u = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4, face == 5],
-        [y / x, -x / y, -x / z, z / x, z / y, -y / z])
-    v = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4, face == 5],
-        [z / x, z / y, -y / z, y / x, -x / y, -x / z])
+    u = np.choose(face, [y, -x, -x, z, z, -y]) / major
+    v = np.choose(face, [z, z, -y, y, -x, -x]) / major
     return face, u, v
 
 
@@ -262,14 +252,6 @@ def cell_center_st(cell_id):
     return face, s, t
 
 
-def cell_id_to_center_latlon(cell_id):
-    """Cell id -> (lat, lon) of the cell center, vectorized."""
-    face, s, t = cell_center_st(cell_id)
-    xyz = face_uv_to_xyz(face, st_to_uv(s), st_to_uv(t))
-    xyz = xyz / np.linalg.norm(xyz, axis=-1, keepdims=True)
-    return xyz_to_latlon(xyz)
-
-
 def neighbors_ring(cell_id, level: int, ring: int):
     """All cells at `level` with Chebyshev ij-distance <= ring (the full
     (2r+1)^2 block), vectorized over an array of cell ids.
@@ -360,124 +342,6 @@ def split_bucket(cell_ids) -> np.ndarray:
                         .hexdigest(), 16) % 10 for c in uniq],
                    dtype=np.int64)
     return out[inverse]
-
-
-def cell_sql_query(src: str, lat_sql: str, lon_sql: str, level: int,
-                   keep: str = "doc_id") -> str:
-    """ANSI-SQL (DuckDB) recomputation of `latlon_to_cell_id` at `level`.
-
-    Returns a full SELECT producing (`keep` columns, cell BIGINT) from
-    `src`, where `cell` is bit-for-bit the signed-int64 reinterpretation
-    of the S2 cell id this module computes. Determinism contract (same
-    spirit as hex.hex_cell_sql): identical op sequence — unit-sphere xyz,
-    cube-face selection, quadratic (u,v)->(s,t), trunc to 30-bit ij,
-    then `level` explicit Hilbert rounds driven by the same
-    _POS_TO_IJ/_POS_TO_ORIENTATION tables (inverted to IJ->POS CASE
-    expressions). Floor-boundary flips from <=1-ulp libm sin/cos
-    differences would need s*2^level within ~1e-14 of an integer —
-    validated 0 mismatches on 1.2M points at levels 5/6/8.
-
-    Levels <= 15 keep the generated SQL small (one CTE pair per round).
-    """
-    assert 1 <= level <= 15
-    ij_to_pos = [[0] * 4 for _ in range(4)]
-    for o in range(4):
-        for pos in range(4):
-            ij_to_pos[o][int(_POS_TO_IJ[o][pos])] = pos
-
-    def pos_case(o_expr: str, ij_expr: str) -> str:
-        whens = " ".join(
-            f"WHEN {o_expr} = {o} AND {ij_expr} = {ij} "
-            f"THEN {ij_to_pos[o][ij]}"
-            for o in range(4) for ij in range(4))
-        return f"CASE {whens} END"
-
-    def orient_case(pos_expr: str) -> str:
-        whens = " ".join(
-            f"WHEN {pos_expr} = {p} THEN {int(_POS_TO_ORIENTATION[p])}"
-            for p in range(4))
-        return f"CASE {whens} END"
-
-    rounds = []
-    for k in range(level):
-        shift = MAX_LEVEL - 1 - k
-        prev_o = f"o{k}"
-        pc = pos_case(prev_o, f"ij{k}")
-        rounds.append(f"""
-  r{k} AS (
-    SELECT *, ((i >> {shift}) & 1) * 2 + ((j >> {shift}) & 1) AS ij{k}
-    FROM {'base' if k == 0 else f'r{k - 1}x'}
-  ),
-  r{k}x AS (
-    SELECT *, {pc} AS pos{k},
-      xor({prev_o}, {orient_case(pc)}) AS o{k + 1}
-    FROM r{k}
-  )""")
-    pos_expr = " + ".join(
-        f"CAST(pos{k} AS HUGEINT) * {1 << (2 * (level - 1 - k))}"
-        for k in range(level))
-    lsb_shift = 2 * (MAX_LEVEL - level)
-    max_ij = (1 << MAX_LEVEL) - 1
-    return f"""
-WITH pt AS (
-  SELECT {keep}, {lat_sql} AS lat, {lon_sql} AS lon FROM {src}
-),
-xyz AS (
-  SELECT *, cos(radians(lat)) * cos(radians(lon)) AS x,
-            cos(radians(lat)) * sin(radians(lon)) AS y,
-            sin(radians(lat)) AS z
-  FROM pt
-),
-fuv AS (
-  SELECT *,
-    CASE WHEN abs(x) >= abs(y)
-         THEN (CASE WHEN abs(x) >= abs(z) THEN 0 ELSE 2 END)
-         ELSE (CASE WHEN abs(y) >= abs(z) THEN 1 ELSE 2 END)
-    END AS f0
-  FROM xyz
-),
-fuv2 AS (
-  SELECT *,
-    CASE WHEN (CASE f0 WHEN 0 THEN x WHEN 1 THEN y ELSE z END) < 0
-         THEN f0 + 3 ELSE f0 END AS face
-  FROM fuv
-),
-uv AS (
-  SELECT *,
-    CASE face WHEN 0 THEN y/x WHEN 1 THEN -x/y WHEN 2 THEN -x/z
-              WHEN 3 THEN z/x WHEN 4 THEN z/y ELSE -y/z END AS u,
-    CASE face WHEN 0 THEN z/x WHEN 1 THEN z/y WHEN 2 THEN -y/z
-              WHEN 3 THEN y/x WHEN 4 THEN -x/y ELSE -x/z END AS v
-  FROM fuv2
-),
-st AS (
-  SELECT *,
-    CASE WHEN u >= 0 THEN 0.5 * sqrt(1 + 3*u)
-         ELSE 1 - 0.5 * sqrt(1 - 3*u) END AS s,
-    CASE WHEN v >= 0 THEN 0.5 * sqrt(1 + 3*v)
-         ELSE 1 - 0.5 * sqrt(1 - 3*v) END AS t
-  FROM uv
-),
-base AS (
-  SELECT *,
-    LEAST(GREATEST(CAST(trunc(s * {1 << MAX_LEVEL}.0) AS BIGINT), 0),
-          {max_ij}) AS i,
-    LEAST(GREATEST(CAST(trunc(t * {1 << MAX_LEVEL}.0) AS BIGINT), 0),
-          {max_ij}) AS j,
-    (face & 1) AS o0
-  FROM st
-),{','.join(rounds)}
-SELECT {keep},
-  CAST(CASE WHEN cu >= 9223372036854775808
-            THEN cu - 18446744073709551616 ELSE cu END AS BIGINT) AS cell
-FROM (
-  SELECT {keep},
-    CAST(face AS HUGEINT) * {1 << (2 * MAX_LEVEL + 1)}
-    + ({pos_expr}) * {1 << (lsb_shift + 1)}
-    + {1 << lsb_shift} AS cu
-  FROM r{level - 1}x
-)
-"""
 
 
 def ring_bound_m(cell_id, level: int, ring: int,

@@ -50,6 +50,9 @@ P5 = 1097.0 / 512 * _E4
 K0 = 0.9996
 
 ZONE_LETTERS = "CDEFGHJKLMNPQRSTUVWXX"
+# "<zone number><letter>" of every zone code that `tile_origin` returns.
+ZONE_STRINGS = tuple(f"{z}{letter}" for z in range(1, 61)
+                     for letter in ZONE_LETTERS + "Z")
 
 
 def _mod_angle(value):
@@ -162,88 +165,22 @@ def from_latlon(latitude, longitude, force_zone_number=None,
     return easting, northing, zone_number, zone_letter
 
 
-def tile_origin_sql_query(src: str, lat_sql: str, lon_sql: str,
-                          cell_size: float, width: int,
-                          keep: str = "doc_id") -> str:
-    """ANSI-SQL (DuckDB) recomputation of `from_latlon` + the snapped
-    tile origin of plans.generate.tile_udf.
-
-    Returns a full SELECT producing (`keep` cols, utm_zone VARCHAR,
-    tile_x DOUBLE, tile_y DOUBLE) from `src`. Determinism contract:
-    the exact Snyder eq. 8-9..8-15 op sequence with THIS module's
-    literal constants (repr full precision); round() agrees with
-    numpy's banker's rounding except at exact .5 ties, which are
-    measure-zero for transcendental eastings (validated 0 mismatches
-    on 1.3M points incl. the Norway/Svalbard exception bands).
-    """
-    e, ep2 = repr(E), repr(E_P2)
-    m1, m2, m3, m4 = repr(M1), repr(M2), repr(M3), repr(M4)
-    r, k0 = repr(R), repr(K0)
-    half = repr(cell_size * width / 2.0)
-    cs = repr(cell_size)
-    zl = ZONE_LETTERS
-    return f"""
-WITH pt AS (
-  SELECT {keep}, {lat_sql} AS lat, {lon_sql} AS lon FROM {src}
-),
-zn AS (
-  SELECT *,
-    CASE
-      WHEN lat >= 72 AND lat <= 84 AND lon >= 0 AND lon < 9 THEN 31
-      WHEN lat >= 72 AND lat <= 84 AND lon >= 9 AND lon < 21 THEN 33
-      WHEN lat >= 72 AND lat <= 84 AND lon >= 21 AND lon < 33 THEN 35
-      WHEN lat >= 72 AND lat <= 84 AND lon >= 33 AND lon < 42 THEN 37
-      WHEN lat >= 56 AND lat < 64 AND lon >= 3 AND lon < 12 THEN 32
-      ELSE LEAST(GREATEST(CAST(floor((lon + 180.0) / 6.0) AS BIGINT) + 1,
-                          1), 60)
-    END AS zone_number,
-    CASE WHEN lat >= -80 AND lat <= 84
-         THEN substr('{zl}',
-              CAST(LEAST(GREATEST(trunc((lat + 80.0) / 8.0), 0),
-                         {len(zl) - 1}) AS INT) + 1, 1)
-         ELSE 'Z' END AS zone_letter
-  FROM pt
-),
-tr AS (
-  SELECT *,
-    radians(lat) AS lat_rad,
-    sin(radians(lat)) AS lat_sin,
-    cos(radians(lat)) AS lat_cos,
-    sin(radians(lat)) / cos(radians(lat)) AS lat_tan
-  FROM zn
-),
-tr2 AS (
-  SELECT *,
-    lat_tan * lat_tan AS lat_tan2,
-    (lat_tan * lat_tan) * (lat_tan * lat_tan) AS lat_tan4,
-    {r} / sqrt(1 - {e} * lat_sin * lat_sin) AS n,
-    {ep2} * lat_cos * lat_cos AS c,
-    lat_cos * (mod(radians(lon) - radians((zone_number - 1) * 6 - 180 + 3)
-                   + pi(), 2 * pi()) - pi()) AS a,
-    {r} * ({m1} * lat_rad - {m2} * sin(2 * lat_rad)
-           + {m3} * sin(4 * lat_rad) - {m4} * sin(6 * lat_rad)) AS m
-  FROM tr
-),
-en AS (
-  SELECT *,
-    {k0} * n * (a
-      + (a*a*a) / 6 * (1 - lat_tan2 + c)
-      + (a*a*a*a*a) / 120 * (5 - 18 * lat_tan2 + lat_tan4
-                             + 72 * c - 58 * {ep2})) + 500000.0 AS easting,
-    {k0} * (m + n * lat_tan * (
-      (a*a) / 2
-      + (a*a*a*a) / 24 * (5 - lat_tan2 + 9 * c + 4 * c * c)
-      + (a*a*a*a*a*a) / 720 * (61 - 58 * lat_tan2 + lat_tan4
-                               + 600 * c - 330 * {ep2})))
-    + CASE WHEN lat < 0 THEN 10000000.0 ELSE 0.0 END AS northing
-  FROM tr2
-)
-SELECT {keep},
-  CAST(zone_number AS VARCHAR) || zone_letter AS utm_zone,
-  round((easting - {half}) / {cs}) * {cs} AS tile_x,
-  round((northing - {half}) / {cs}) * {cs} AS tile_y
-FROM en
-"""
+def tile_origin(lat, lon, cell_size: float, width: int):
+    """(lat, lon) arrays -> (zone_code, x0, y0): the snapped origin of the
+    width x width tile of `cell_size` m centred on each point
+    (UtmGridMapping.from_latlon_center, reference coords.py:90-99,
+    75-78), and the point's UTM zone as an index into ZONE_STRINGS."""
+    lat = np.asarray(lat, dtype=np.float64)
+    e, n, zone_number, _ = from_latlon(lat, lon)
+    half = cell_size * width / 2.0
+    x0 = np.round((e - half) / cell_size) * cell_size
+    y0 = np.round((n - half) / cell_size) * cell_size
+    # the latitude band of latitude_to_zone_letter, "Z" outside -80..84
+    last = len(ZONE_LETTERS) - 1
+    band = np.where((lat >= -80) & (lat <= 84),
+                    np.clip(((lat + 80.0) / 8.0).astype(np.int64), 0, last),
+                    last + 1)
+    return (zone_number - 1) * (last + 2) + band, x0, y0
 
 
 def to_latlon(easting, northing, zone_number, zone_letter=None,

@@ -63,7 +63,6 @@ the open-source reference - behavior re-derived from its call site
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -297,227 +296,3 @@ def write_rasters(rasters: DataFrame, out: str, zones: list) -> dict:
         rasters.observe(obs, *counts).write.mode("overwrite").parquet(out)
     got = obs.get
     return {z: got[f"n_{i}"] for i, z in enumerate(zones)}
-
-
-# ---------------------------------------------------------------------------
-# einops.rearrange analog (export_rasters.py:236-237: predictions of
-# shape (n, ..., y, x, c) pass through `einops.rearrange(pred, spec)`
-# before split assignment). Pure-numpy subset parser: named axes,
-# transposition, and parenthesized merge/split groups - the operations
-# a layout spec string uses. No einops dependency in this container.
-# ---------------------------------------------------------------------------
-
-def _parse_axes(side: str) -> list[list[str]]:
-    """'a (b c) d' -> [['a'], ['b', 'c'], ['d']]."""
-    groups, i, toks = [], 0, side.split()
-    while i < len(toks):
-        t = toks[i]
-        if t.startswith("("):
-            grp = []
-            t = t[1:]
-            while True:
-                done = t.endswith(")")
-                t = t[:-1] if done else t
-                if t:
-                    grp.append(t)
-                if done:
-                    break
-                i += 1
-                t = toks[i]
-            groups.append(grp)
-        else:
-            groups.append([t])
-        i += 1
-    return groups
-
-
-def einops_rearrange(arr: np.ndarray, spec: str, **sizes) -> np.ndarray:
-    """numpy equivalent of einops.rearrange for reshape/transpose specs.
-
-    Supports named axes, '(a b)' merge/split groups on either side; every
-    axis name must appear exactly once per side; split-group sizes come
-    from `sizes` (all but one axis per input group may be inferred).
-    """
-    lhs, rhs = (s.strip() for s in spec.split("->"))
-    lg, rg = _parse_axes(lhs), _parse_axes(rhs)
-    lflat = [a for g in lg for a in g]
-    rflat = [a for g in rg for a in g]
-    if sorted(lflat) != sorted(rflat):
-        raise ValueError(f"axes mismatch in `{spec}`")
-    if len(lg) != arr.ndim:
-        raise ValueError(f"`{spec}` lhs has {len(lg)} dims, "
-                         f"input has {arr.ndim}")
-    # resolve elementary axis sizes from input shape + sizes kwargs
-    dim = dict(sizes)
-    for g, n in zip(lg, arr.shape):
-        known = [a for a in g if a in dim]
-        unknown = [a for a in g if a not in dim]
-        prod = int(np.prod([dim[a] for a in known])) if known else 1
-        if len(unknown) > 1:
-            raise ValueError(f"cannot infer sizes of {unknown} in `{spec}`")
-        if unknown:
-            if n % prod:
-                raise ValueError(f"dim {n} not divisible by {prod}")
-            dim[unknown[0]] = n // prod
-        elif prod != n:
-            raise ValueError(f"group {g} sizes {prod} != input dim {n}")
-    expanded = arr.reshape([dim[a] for a in lflat])
-    perm = [lflat.index(a) for a in rflat]
-    out = expanded.transpose(perm)
-    return out.reshape([int(np.prod([dim[a] for a in g])) for g in rg])
-
-
-def rearrange_predictions(df: DataFrame, spec: str,
-                          shape: tuple[int, ...],
-                          tensor_col: str = "tensor",
-                          **sizes) -> tuple[DataFrame, tuple[int, ...]]:
-    """Applies a rearrange spec to every row's flat tensor (known common
-    `shape`), Arrow-batched; returns (df, new_shape). The per-row batch
-    axis is implicit - the spec addresses the ROW shape, exactly like
-    the reference's FLAGS.rearrange addresses (..., y, x, c) with n
-    riding along (export_rasters.py:236-237)."""
-    probe = einops_rearrange(np.zeros(shape, dtype=np.float32), spec,
-                             **sizes)
-    new_shape = probe.shape
-    n_spec = "n " + spec.replace("->", "-> n ", 1)
-
-    def _apply(it):
-        for pdf in it:
-            if len(pdf):
-                arr = np.stack([np.asarray(v, dtype=np.float32)
-                                for v in pdf[tensor_col]])
-                arr = arr.reshape((len(pdf),) + tuple(shape))
-                got = einops_rearrange(arr, n_spec, **sizes)
-                pdf[tensor_col] = list(got.reshape(len(pdf), -1))
-            yield pdf
-
-    return df.mapInPandas(_apply, df.schema), new_shape
-
-
-# ---------------------------------------------------------------------------
-# columns_to_export DSL (export_rasters.py:153-189 `_extract_data`)
-# ---------------------------------------------------------------------------
-
-def parse_column_spec(column: str) -> dict:
-    """Parses one columns_to_export entry.
-
-    Modifier grammar, applied in the reference's exact order
-    (export_rasters.py:156-169):
-      "name@T"          -> temperature scaling with T
-      "name/D"          -> divide by D
-      "name_i"          -> time index i (select timestep)
-      "name:c1:c2:..."  -> channel selection
-    Modifiers compose, e.g. "probs:0:2/255@1.5_3".
-    """
-    temperature, divide_by, time_index, channels = 1.0, 1.0, None, None
-    if "@" in column:
-        column, t = column.split("@")
-        temperature = float(t)
-    if "/" in column:
-        column, d = column.split("/")
-        divide_by = float(d)
-    if "_" in column:
-        column, ti = column.split("_")
-        time_index = int(ti)
-    if ":" in column:
-        column, *ch = column.split(":")
-        channels = [int(x) for x in ch]
-    return {"name": column, "temperature": temperature,
-            "divide_by": divide_by, "time_index": time_index,
-            "channels": channels}
-
-
-def extract_column(arrays: dict, column: str) -> np.ndarray:
-    """npz-analog extraction with the DSL applied (export_rasters.py
-    `_extract_data`): channel slice -> time slice -> float32 -> divide
-    -> temperature scaling -> dim normalization to (B, H, W, C)."""
-    from geeflow_spark.functions import masks
-
-    spec = parse_column_spec(column)
-    preds = np.array(arrays[spec["name"]])
-    if spec["channels"]:
-        preds = preds[..., spec["channels"]]
-    if spec["time_index"] is not None:
-        preds = preds[:, spec["time_index"]]
-    if preds.dtype.kind == "f":
-        preds = preds.astype(np.float32)
-    if spec["divide_by"] != 1:
-        preds = preds / spec["divide_by"]
-    if spec["temperature"] != 1:
-        preds = masks.temp_scaling(preds, spec["temperature"])
-    if len(preds.shape) == 3:  # (B, H, W) -> add C
-        preds = np.expand_dims(preds, axis=-1)
-    if len(preds.shape) == 2:  # (B, C) -> add (H, W)
-        preds = np.expand_dims(preds, axis=(1, 2))
-    return preds
-
-
-def select_export_column(df: DataFrame, column: str,
-                         tensor_cols: dict | None = None) -> DataFrame:
-    """columns_to_export entry -> mosaic-ready (tensor, h, w, c) columns.
-
-    The Spark form of the reference's per-column export loop
-    (export_rasters.py:408-419 iterates columns_to_export and runs the
-    whole mosaic per column): the named prediction head is selected and
-    the DSL modifiers (channel slice / time index / divide /
-    temperature) are applied, emitting the canonical `tensor` column
-    `mosaic_assigned_tiles` consumes.
-
-    `tensor_cols` maps head name -> (array_col, t_col|None); default:
-    the head name IS the array column, no time axis. Rows are processed
-    as one stacked numpy batch when shapes agree (the export contract -
-    pred_h/w/c are constants per table), falling back to per-row numpy
-    otherwise.
-    """
-    spec = parse_column_spec(column)
-    arr_col, t_col = (tensor_cols or {}).get(spec["name"],
-                                             (spec["name"], None))
-
-    def _apply(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            hs = pdf["h"].to_numpy()
-            ws = pdf["w"].to_numpy()
-            cs = pdf["c"].to_numpy()
-            uniform = len(set(hs)) == 1 and len(set(ws)) == 1 \
-                and len(set(cs)) == 1
-            out_rows = []
-            if uniform:
-                h, w, c = int(hs[0]), int(ws[0]), int(cs[0])
-                mat = np.stack([np.asarray(x, dtype=np.float32)
-                                for x in pdf[arr_col]])
-                if t_col:
-                    t = int(pdf[t_col].iloc[0])
-                    mat = mat.reshape(len(pdf), t, h, w, c)
-                else:
-                    mat = mat.reshape(len(pdf), h, w, c)
-                got = extract_column({spec["name"]: mat}, column)
-                out = pdf.copy()
-                out["tensor"] = list(
-                    got.astype(np.float32).reshape(len(pdf), -1))
-                out["c"] = got.shape[-1]
-                out_rows.append(out)
-            else:
-                for i in range(len(pdf)):
-                    h, w, c = int(hs[i]), int(ws[i]), int(cs[i])
-                    mat = np.asarray(pdf[arr_col].iloc[i],
-                                     dtype=np.float32)
-                    mat = mat.reshape(1, h, w, c)
-                    got = extract_column({spec["name"]: mat}, column)
-                    row = pdf.iloc[[i]].copy()
-                    row["tensor"] = [got[0].astype(np.float32).ravel()]
-                    row["c"] = got.shape[-1]
-                    out_rows.append(row)
-            yield pd.concat(out_rows, ignore_index=True)
-
-    fields = [f for f in df.schema.fields if f.name != "tensor"]
-    names = {f.name for f in fields}
-    out_fields = list(fields)
-    if "tensor" not in names:
-        out_fields.append(StructField("tensor", ArrayType(FloatType())))
-    else:
-        out_fields = [f if f.name != "tensor"
-                      else StructField("tensor", ArrayType(FloatType()))
-                      for f in df.schema.fields]
-    return df.mapInPandas(_apply, StructType(out_fields))

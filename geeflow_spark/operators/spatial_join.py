@@ -12,7 +12,7 @@ Strategy (BASELINE.json north_star):
      numpy for small sets; distributed mapInPandas for large sets).
   3. Equi-join on the cell key - broadcast hash join when the polygon
      side is small (no shuffle of the point side at all), sort-merge join
-     on the cell key otherwise, with explicit salting for hot cells.
+     on the cell key otherwise (AQE splits skewed cell partitions).
   4. Exact refine: vectorized ray-casting PIP inside a pandas UDF.
 
 At 100 TB the broadcast path streams the document table through a single
@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, LongType
@@ -202,40 +202,6 @@ def first_match(joined: DataFrame, key_cols: list[str],
     return out.select(*key_cols, *sel)
 
 
-def salted_cell_counts(points_with_cell: DataFrame, cell_col: str = "cell",
-                       n_salt: int = 16,
-                       salt_cols: list[str] | None = None) -> DataFrame:
-    """Per-cell counts with explicit two-stage salted aggregation.
-
-    Defuses hot coastal/urban cells (BASELINE.json north_rule: explicit
-    skew handling, the analog of the reference's Reshuffle at
-    export_beam_tfds.py:225): stage 1 aggregates (cell, salt) partials -
-    hot cells spread over n_salt reducers - stage 2 sums the partials.
-
-    The salt is a CONTENT hash (xxhash64), not a partition-index
-    function: the same input spreads identically run to run regardless
-    of input partitioning, so the skew defuse is reproducible (r3
-    verdict: the old monotonically_increasing_id salt made stage-1
-    partial sizes vary with task layout).
-
-    `salt_cols`: columns to hash for the salt - pass the table's UNIQUE
-    id column when one exists (every battery caller passes doc_id).
-    The default hashes ALL columns, which is deterministic but degrades
-    for fully identical rows (duplicate points, null-island defaults,
-    or a cell-only projection): identical rows share one salt, so a hot
-    cell of duplicates collapses back onto a single stage-1 reducer.
-    Results stay correct either way; only the skew protection weakens -
-    give the function a distinguishing column when the input can
-    contain duplicate rows.
-    """
-    cols = list(salt_cols) if salt_cols else points_with_cell.columns
-    salted = points_with_cell.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in cols]),
-                        F.lit(n_salt)))
-    stage1 = salted.groupBy(cell_col, "_salt").count()
-    return stage1.groupBy(cell_col).agg(F.sum("count").alias("count"))
-
-
 def join_points_regions_smj(points: DataFrame, regions_df: DataFrame,
                             level: int = 8, lat_col: str = "lat",
                             lon_col: str = "lon",
@@ -249,8 +215,7 @@ def join_points_regions_smj(points: DataFrame, regions_df: DataFrame,
     The polygon ring travels with the join row, so the exact PIP refine
     runs without any rebroadcast.
     """
-    from pyspark.sql.types import (ArrayType, DoubleType, StructField,
-                                   StructType)
+    from pyspark.sql.types import StructField, StructType
 
     reg_schema = StructType(
         [f for f in regions_df.schema.fields] +

@@ -1,12 +1,9 @@
 """Geographic train/val/test split assignment.
 
-Exact semantics of the reference's split logic
-(/root/reference/geeflow/export_beam_tfds.py:91-111):
-  - if a split column exists: equality filter, with "val"=="validation"
-    aliasing (:95-97);
-  - else: S2 cell at `level` (default 9, ~14-20 km), bucket =
-    int(md5(str(cell_id)).hexdigest(), 16) % 10; 9 -> test, 8 -> val,
-    the rest -> train (:99-109).
+Exact semantics of the reference's geographic split
+(geeflow/export_beam_tfds.py:99-109): S2 cell at `level`
+(default 9, ~14-20 km), bucket = int(md5(str(cell_id)).hexdigest(), 16)
+% 10; 9 -> test, 8 -> val, the rest -> train.
 
 The md5 runs over the DECIMAL STRING of the python int cell id - we keep
 that exactly (uint64 rendering). The bucket has one implementation,
@@ -51,12 +48,3 @@ def with_split(df: DataFrame, level: int = 9, lat_col: str = "lat",
     names = F.array(*[F.lit(s) for s in SPLIT_NAMES])
     return b.withColumn(out_col, F.element_at(names, F.col("_bucket") + 1)) \
         .drop("_bucket")
-
-
-def filter_split(df: DataFrame, split: str,
-                 split_col: str = "split") -> DataFrame:
-    """Split equality filter with the val/validation alias
-    (export_beam_tfds.py:95-97)."""
-    if split in ("val", "validation"):
-        return df.filter(F.col(split_col).isin("val", "validation"))
-    return df.filter(F.col(split_col) == split)

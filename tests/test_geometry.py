@@ -85,10 +85,3 @@ def test_batch_matrix():
     assert m.shape == (2, 2)
     assert m[0].tolist() == [True, True]
     assert m[1].tolist() == [False, False]
-
-
-def test_rect_intersections():
-    assert geometry.segments_intersect_rect(SQUARE, 1, 1, 3, 3)
-    assert geometry.segments_intersect_rect(SQUARE, 2.5, 2.5, 3, 3) is False
-    assert geometry.segments_intersect_rect(SQUARE, -1, -1, 3, 3)  # contains
-    assert geometry.segments_intersect_rect(SQUARE, 0.5, 0.5, 1.5, 1.5)

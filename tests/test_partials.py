@@ -1,14 +1,13 @@
 """Exact-semantics tests for the round-2 partials: polygon buffer,
-realign, columns_to_export DSL, CCDC fallback, schema planner, bounded
-mosaic reducer, labels-writer cap."""
+CCDC fallback, schema planner, bounded mosaic reducer, labels-writer
+cap."""
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from geeflow_spark.functions import geometry, masks
-from geeflow_spark.operators import raster_export as rx
+from geeflow_spark.functions import geometry
 from geeflow_spark.operators import reducers, spatial_join
 from geeflow_spark.plans import labels as labels_mod
 from geeflow_spark.plans import schema as schema_mod
@@ -50,34 +49,6 @@ def test_buffered_spatial_join(spark):
                                            buffer_deg=0.5)
     assert sorted(plain.toPandas()["doc_id"]) == [1]
     assert sorted(buf.toPandas()["doc_id"]) == [1, 2]
-
-
-def test_realign_ring_scale():
-    ring = np.array([123.4, 67.8, 130.1, 76.0])
-    got = geometry.realign_ring_scale(ring, 30.0)
-    assert got.tolist() == [120.0, 60.0, 120.0, 90.0]
-    # tie policy: numpy round-half-to-even (same convention as the tile
-    # origin snapping in plans/generate + coords)
-    assert geometry.realign_ring_scale(np.array([45.0, 75.0]),
-                                       30.0).tolist() == [60.0, 60.0]
-    # grid-aligned coords are fixed points
-    assert (geometry.realign_ring_scale(got, 30.0) == got).all()
-
-
-def test_columns_to_export_dsl_roundtrip():
-    spec = rx.parse_column_spec("probs:0:2_3/255@1.5")
-    assert spec == {"name": "probs", "temperature": 1.5,
-                    "divide_by": 255.0, "time_index": 3,
-                    "channels": [0, 2]}
-    arr = {"probs": np.random.default_rng(0).random((2, 5, 4, 4, 3))}
-    got = rx.extract_column(arr, "probs:0:2_3/255@1.5")
-    exp = masks.temp_scaling(
-        arr["probs"][..., [0, 2]][:, 3].astype(np.float32) / 255.0, 1.5)
-    assert got.shape == (2, 4, 4, 2) and np.allclose(got, exp)
-    assert rx.extract_column({"x": np.ones((3, 2))}, "x").shape \
-        == (3, 1, 1, 2)
-    assert rx.extract_column({"x": np.ones((3, 4, 4))}, "x").shape \
-        == (3, 4, 4, 1)
 
 
 def test_ccdc_filter_bounds_fallback(spark):
@@ -130,17 +101,3 @@ def test_save_labels_cap(spark, tmp_path):
     with pytest.raises(ValueError, match="not a labels table"):
         labels_mod.save_labels(synth.docs(spark, 30), str(tmp_path / "b.parquet"),
                                max_driver_rows=10)
-
-
-def test_select_export_column_dsl(spark):
-    # predictions table with a named head `probs` (flat h*w*c arrays);
-    # the DSL selects channel 1 and divides by 2.
-    pred = synth.predictions(spark, 20, h=4, w=4, c=2) \
-        .withColumnRenamed("tensor", "probs")
-    out = rx.select_export_column(pred, "probs:1/2")
-    row = out.limit(1).toPandas().iloc[0]
-    assert row["c"] == 1 and len(row["tensor"]) == 4 * 4 * 1
-    raw = pred.limit(1).toPandas().iloc[0]
-    exp = (np.asarray(raw["probs"], dtype=np.float32)
-           .reshape(4, 4, 2)[..., [1]] / 2.0)
-    assert np.allclose(np.asarray(row["tensor"]).reshape(4, 4, 1), exp)

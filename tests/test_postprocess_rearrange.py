@@ -1,69 +1,10 @@
-"""post_process_map hook (export_beam_tfds.py:240-249) and the
-einops.rearrange analog (export_rasters.py:236-237)."""
+"""post_process_map hook (export_beam_tfds.py:240-249)."""
 
-import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from geeflow_spark.operators import raster_export as rx
 from geeflow_spark.plans import config as cfg_mod
 
-
-# ---------------------------------------------------------------------------
-# einops_rearrange vs manual numpy
-# ---------------------------------------------------------------------------
-
-def test_rearrange_transpose():
-    a = np.arange(24).reshape(2, 3, 4)
-    got = rx.einops_rearrange(a, "h w c -> c h w")
-    np.testing.assert_array_equal(got, a.transpose(2, 0, 1))
-
-
-def test_rearrange_merge_and_split():
-    a = np.arange(48).reshape(6, 8)
-    got = rx.einops_rearrange(a, "(h2 h) w -> h2 h w", h2=2)
-    np.testing.assert_array_equal(got, a.reshape(2, 3, 8))
-    back = rx.einops_rearrange(got, "h2 h w -> (h2 h) w")
-    np.testing.assert_array_equal(back, a)
-    # non-trivial: split channels then move the sub-axis outside
-    b = np.arange(2 * 3 * 8).reshape(2, 3, 8)
-    got = rx.einops_rearrange(b, "h w (c2 c) -> c2 h w c", c2=2)
-    exp = b.reshape(2, 3, 2, 4).transpose(2, 0, 1, 3)
-    np.testing.assert_array_equal(got, exp)
-
-
-def test_rearrange_errors():
-    a = np.zeros((2, 3))
-    with pytest.raises(ValueError, match="axes mismatch"):
-        rx.einops_rearrange(a, "h w -> h c")
-    with pytest.raises(ValueError, match="dims"):
-        rx.einops_rearrange(a, "h w c -> c h w")
-    with pytest.raises(ValueError, match="divisible"):
-        rx.einops_rearrange(a, "(a b) w -> a b w", a=4)
-
-
-def test_rearrange_predictions_roundtrip(spark):
-    h, w, c = 4, 4, 3
-    rng = np.random.default_rng(3)
-    tensors = [rng.normal(size=h * w * c).astype(np.float32).tolist()
-               for _ in range(10)]
-    df = spark.createDataFrame(pd.DataFrame(
-        {"plot_id": range(10), "tensor": tensors}))
-    out, new_shape = rx.rearrange_predictions(
-        df, "h w c -> c h w", (h, w, c))
-    assert new_shape == (c, h, w)
-    got = {r["plot_id"]: r["tensor"] for r in out.collect()}
-    for i, t in enumerate(tensors):
-        exp = np.asarray(t, dtype=np.float32).reshape(h, w, c) \
-            .transpose(2, 0, 1).ravel()
-        np.testing.assert_array_equal(np.asarray(got[i], dtype=np.float32),
-                                      exp)
-
-
-# ---------------------------------------------------------------------------
-# post_process_map through the config front-end
-# ---------------------------------------------------------------------------
 
 def _dem_config():
     c = cfg_mod.DotDict()
@@ -104,31 +45,3 @@ def test_post_process_map_unknown_name(spark):
     c.post_process_map = 42
     with pytest.raises(ValueError, match="Unsupported post_process_map"):
         cfg_mod.run_pipeline(spark, c)
-
-
-def test_rearrange_property_random_specs():
-    # property sweep: random dims + random permutation with random
-    # adjacent merges on either side must equal reshape+transpose.
-    rng = np.random.default_rng(17)
-    for trial in range(200):
-        nd = int(rng.integers(2, 5))
-        dims = [int(rng.integers(1, 5)) for _ in range(nd)]
-        names = [f"a{i}" for i in range(nd)]
-        arr = np.arange(int(np.prod(dims))).reshape(dims)
-        perm = list(rng.permutation(nd))
-        rhs_names = [names[p] for p in perm]
-        # randomly merge one adjacent pair on the rhs
-        rhs = list(rhs_names)
-        if nd >= 2 and rng.random() < 0.5:
-            i = int(rng.integers(0, nd - 1))
-            rhs = rhs[:i] + [f"({rhs[i]} {rhs[i+1]})"] + rhs[i + 2:]
-        from geeflow_spark.operators import raster_export as rx
-        spec = " ".join(names) + " -> " + " ".join(rhs)
-        got = rx.einops_rearrange(arr, spec)
-        exp = arr.transpose(perm)
-        if len(rhs) != nd:  # one merge applied
-            shp = list(exp.shape)
-            i = next(j for j, t in enumerate(rhs) if t.startswith("("))
-            exp = exp.reshape(shp[:i] + [shp[i] * shp[i + 1]]
-                              + shp[i + 2:])
-        np.testing.assert_array_equal(got, exp, err_msg=spec)

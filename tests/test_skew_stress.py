@@ -5,18 +5,14 @@ so a pathological distribution (every document inside ONE hot S2 cell
 and ONE region) cannot create a hot reducer in the join itself - the
 per-task work stays proportional to the task's input rows. This pins
 that property: 200k single-cell docs complete with exact counts and
-bounded wall, and the salted aggregation splits the hot cell's count
-across reducers without changing totals.
+bounded wall.
 """
 
 import time
 
-import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
-from geeflow_spark.operators import spatial_join
 from geeflow_spark.plans import generate
 
 
@@ -39,73 +35,3 @@ def test_flagship_single_hot_cell(spark):
     wall = time.monotonic() - t0
     assert total == n  # every doc inside the one region, exactly once
     assert wall < 120, f"hot-cell flagship took {wall:.0f}s"
-
-
-def test_salted_counts_on_hot_cell(spark):
-    # one dominant cell + a tail: salted two-stage agg returns exact
-    # totals (stage-1 spreads the hot key over n_salt reducers).
-    n = 50_000
-    docs = (spark.range(0, n, 1, 8)
-            .select(F.col("id").alias("doc_id"),
-                    F.when(F.col("id") % 10 < 9, F.lit(47.35))
-                    .otherwise(F.lit(-33.9)).alias("lat"),
-                    F.when(F.col("id") % 10 < 9, F.lit(8.45))
-                    .otherwise(F.lit(18.4)).alias("lon")))
-    enc = spatial_join.with_cell(docs, level=8)
-    got = spatial_join.salted_cell_counts(enc).toPandas()
-    assert int(got["count"].sum()) == n
-    assert got["count"].max() == int(n * 0.9)
-    assert len(got) == 2
-
-
-def test_salt_deterministic_and_spread(spark):
-    # The salt is a row-content hash: (a) identical input produces the
-    # IDENTICAL stage-1 partial layout regardless of partitioning -
-    # repartitioned input yields the same (cell, salt) partial counts -
-    # and (b) the hot cell's rows actually spread across all n_salt
-    # values with no degenerate salt bucket.
-    n, n_salt = 40_000, 16
-    docs = (spark.range(0, n, 1, 8)
-            .select(F.col("id").alias("doc_id"),
-                    F.lit(47.35).alias("lat"), F.lit(8.45).alias("lon")))
-    enc = spatial_join.with_cell(docs, level=8)
-
-    def partials(df):
-        salted = df.withColumn(
-            "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]),
-                            F.lit(n_salt)))
-        return (salted.groupBy("cell", "_salt").count().toPandas()
-                .sort_values(["cell", "_salt"]).reset_index(drop=True))
-
-    a = partials(enc)
-    b = partials(enc.repartition(3))  # different physical layout
-    pd.testing.assert_frame_equal(a, b)
-    assert len(a) == n_salt  # one hot cell spread over every salt
-    # even-ish spread: no salt bucket more than 2x the mean
-    assert a["count"].max() < 2 * n / n_salt
-
-
-def test_salt_cols_spreads_duplicate_rows(spark):
-    # Fully identical rows all content-hash to ONE salt (the documented
-    # degradation); salting on the unique id column restores the
-    # spread. Totals are exact either way.
-    n, n_salt = 8_000, 16
-    docs = (spark.range(0, n, 1, 4)
-            .select(F.col("id").alias("doc_id"),
-                    F.lit(47.35).alias("lat"), F.lit(8.45).alias("lon")))
-    enc = spatial_join.with_cell(docs, level=8)
-
-    def max_partial(df, **kw):
-        salted_cols = kw.get("salt_cols") or df.columns
-        salted = df.withColumn(
-            "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in salted_cols]),
-                            F.lit(n_salt)))
-        return (salted.groupBy("cell", "_salt").count()
-                .agg(F.max("count")).collect()[0][0])
-
-    dup = enc.drop("doc_id")  # cell/lat/lon only: every row identical
-    assert max_partial(dup) == n  # collapse: one salt gets everything
-    assert max_partial(enc, salt_cols=["doc_id"]) < 2 * n / n_salt
-    got = spatial_join.salted_cell_counts(
-        enc, salt_cols=["doc_id"]).toPandas()
-    assert int(got["count"].sum()) == n and len(got) == 1

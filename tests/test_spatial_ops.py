@@ -60,6 +60,50 @@ def test_first_match_deterministic_min_region(spark):
     assert got.sort_index().equals(exp.sort_index())
 
 
+def tile_assign_pandas_oracle(plots_pdf, zone_bboxes: dict,
+                              cell_size: float = 10.0,
+                              plot_size_m: float = 960.0,
+                              num_splits: int = 4, pred_h: int = 4,
+                              pred_w: int = 4):
+    """Row-for-row oracle: verbatim port of the reference's assignment
+    loop (export_rasters.py:250-289) in plain python over pandas rows.
+    Diffed against `tiles.assign_tiles`.
+    """
+    out = []
+    for _, row in plots_pdf.iterrows():
+        zone = row["utm_zone"]
+        if zone not in zone_bboxes:
+            continue
+        x0, y0, x1, y1 = zone_bboxes[zone]
+        x_splits, y_splits = tiles.get_split_boundaries(
+            x0, y0, x1, y1, plot_size_m, num_splits)
+        utm_x, utm_y, dx, dy = (row["utm_x"], row["utm_y"], row["dx"],
+                                row["dy"])
+        try:
+            x_split = next(i - 1 for i, xx in enumerate(x_splits)
+                           if xx > utm_x)
+            y_split = next(i - 1 for i, yy in enumerate(y_splits)
+                           if yy > utm_y)
+        except StopIteration:
+            continue
+        assignments = []
+        for xs in range(max(0, x_split - 1), min(num_splits, x_split + 2)):
+            for ys in range(max(0, y_split - 1),
+                            min(num_splits, y_split + 2)):
+                x_start = utm_x + dx * cell_size - plot_size_m // 2
+                x_stop = x_start + pred_w * cell_size
+                if x_stop <= x_splits[xs] or x_start >= x_splits[xs + 1]:
+                    continue
+                y_end = utm_y - dy * cell_size + plot_size_m // 2
+                y_start = y_end - pred_h * cell_size
+                if y_end <= y_splits[ys] or y_start >= y_splits[ys + 1]:
+                    continue
+                assignments.append((zone, xs, ys, row["id"]))
+        assert assignments, f"Plot {row['id']} has not been assigned"
+        out.extend(assignments)
+    return pd.DataFrame(out, columns=["utm_zone", "xs", "ys", "id"])
+
+
 def test_tile_assignment_row_for_row(spark):
     cm = synth.cells_metadata(spark, 300)
     pr = synth.predictions(spark, 300)
@@ -69,7 +113,7 @@ def test_tile_assignment_row_for_row(spark):
           "18N": (200000., 1000000., 1160000., 1960000.)}
     got = tiles.assign_tiles(plots, zone_bboxes=zb, num_splits=4) \
         .select("utm_zone", "xs", "ys", "id").toPandas()
-    exp = tiles.tile_assign_pandas_oracle(plots.toPandas(), zb, num_splits=4)
+    exp = tile_assign_pandas_oracle(plots.toPandas(), zb, num_splits=4)
     assert set(map(tuple, got.itertuples(index=False))) == \
         set(map(tuple, exp.itertuples(index=False)))
     # every plot assigned at least once (reference assert :287)
@@ -88,7 +132,7 @@ def test_tile_boundary_multi_assignment(spark):
     plots = spark.createDataFrame(pdf)
     got = tiles.assign_tiles(plots, zone_bboxes=zb, num_splits=4) \
         .select("xs", "ys").toPandas()
-    exp = tiles.tile_assign_pandas_oracle(pdf, zb, num_splits=4)
+    exp = tile_assign_pandas_oracle(pdf, zb, num_splits=4)
     assert len(got) == len(exp) >= 2
     assert set(map(tuple, got.itertuples(index=False))) == \
         set((r.xs, r.ys) for r in exp.itertuples())
@@ -108,7 +152,7 @@ def test_tile_assignment_zone_worklist(spark):
     assert out.columns == ["utm_zone", "id", "utm_x", "utm_y", "dx", "dy",
                            "xs", "ys"]
     got = out.select("utm_zone", "xs", "ys", "id").toPandas()
-    exp = tiles.tile_assign_pandas_oracle(pdf, zb, num_splits=4)
+    exp = tile_assign_pandas_oracle(pdf, zb, num_splits=4)
     assert sorted(got["id"].unique()) == [0, 3]
     assert set(map(tuple, got.itertuples(index=False))) == \
         set(map(tuple, exp.itertuples(index=False)))
@@ -136,7 +180,7 @@ def test_tile_assignment_awkward_names(spark):
     got = out.toPandas()
     assert (got["my col"] == got["id"] * 2).all()
     assert (got["a`b"] == got["id"] + 1).all()
-    exp = tiles.tile_assign_pandas_oracle(plots.toPandas(), zb, num_splits=4)
+    exp = tile_assign_pandas_oracle(plots.toPandas(), zb, num_splits=4)
     assert zone in set(got["utm_zone"])
     assert set(map(tuple, got[["utm_zone", "xs", "ys", "id"]]
                    .itertuples(index=False))) == \
@@ -170,12 +214,6 @@ def test_split_semantics(spark):
                 16) % 10
         expect = "test" if h == 9 else ("val" if h == 8 else "train")
         assert out["split"].iloc[i] == expect
-    # val/validation alias filter
-    df = spark.createDataFrame(
-        pd.DataFrame({"split": ["val", "validation", "train", "test"]}))
-    assert splits.filter_split(df, "val").count() == 2
-    assert splits.filter_split(df, "validation").count() == 2
-    assert splits.filter_split(df, "train").count() == 1
 
 
 def test_span_sequence_preserved_through_shuffles(spark):

@@ -1,9 +1,10 @@
 """The SQL-recomputability contracts behind the driver oracles.
 
 Each engine kernel that a battery query relies on has a pure-SQL twin
-(DuckDB) that must match bit-for-bit: the S2 cell encode
-(s2.cell_sql_query) and the UTM tile origin (utm.tile_origin_sql_query).
-These tests sweep adversarial inputs well beyond the gate data.
+(DuckDB) in `__spark_entry__.py` that must match bit-for-bit: the S2
+cell encode (cell_sql_query) and the UTM tile origin
+(tile_origin_sql_query). These tests sweep adversarial inputs well
+beyond the gate data.
 """
 
 import duckdb
@@ -11,6 +12,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from __spark_entry__ import cell_sql_query, tile_origin_sql_query
 from geeflow_spark.functions import s2, utm
 
 
@@ -28,7 +30,7 @@ def test_s2_cell_sql_matches_numpy(level):
                         "lat": lat, "lon": lon})
     con = duckdb.connect()
     con.register("pts", pdf)
-    q = s2.cell_sql_query("pts", "lat", "lon", level)
+    q = cell_sql_query("pts", "lat", "lon", level)
     got = con.execute(q + " ORDER BY doc_id").df()["cell"] \
         .to_numpy(np.int64)
     exp = s2.latlon_to_cell_id(lat, lon, level).astype(np.int64)
@@ -46,13 +48,10 @@ def test_utm_tile_sql_matches_numpy():
                         "lat": lat, "lon": lon})
     con = duckdb.connect()
     con.register("pts", pdf)
-    q = utm.tile_origin_sql_query("pts", "lat", "lon", 10.0, 96)
+    q = tile_origin_sql_query("pts", "lat", "lon", 10.0, 96)
     got = con.execute(q + " ORDER BY doc_id").df()
-    e, n, zn, zl = utm.from_latlon(lat, lon)
-    x0 = np.round((e - 480.0) / 10.0) * 10.0
-    y0 = np.round((n - 480.0) / 10.0) * 10.0
-    zone = (pd.Series(zn).astype(str) + pd.Series(zl).astype(str)) \
-        .to_numpy()
+    code, x0, y0 = utm.tile_origin(lat, lon, 10.0, 96)
+    zone = np.array(utm.ZONE_STRINGS)[code]
     assert (got["utm_zone"].to_numpy() == zone).all()
     assert (got["tile_x"].to_numpy() == x0).all()
     assert (got["tile_y"].to_numpy() == y0).all()

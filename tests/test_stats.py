@@ -22,6 +22,11 @@ def _counter_dict(spark, arr, mask=None, to_int=True):
     return m, b, stats.counter_as_dict(m, b)
 
 
+def _bins_list(c: dict, mn: int, mx: int):
+    """CounterAccumulator.bins (stats_util.py:254-263)."""
+    return stats._hist(c, mn, mx)[1]
+
+
 def test_hist_quantile_reference_values():
     # stats_util_test.py:171-181
     arr = np.array([0, 1, 2, 3, 4, 5, 6, 7, 8, 1000])
@@ -37,7 +42,7 @@ def test_counter_scalar_values(spark):
     m, b, d = _counter_dict(spark, arr)
     assert d["mode"] == 4
     c = {bin_: cnt for bin_, cnt in b}
-    assert stats.bins_list(c, int(d["min"]), int(d["max"])) == \
+    assert _bins_list(c, int(d["min"]), int(d["max"])) == \
         [1, 0, 3, 2, 0, 1, 0, 1]
     a = np.array(arr)
     assert d["mean"] == a.mean()
@@ -63,7 +68,7 @@ def test_counter_floats(spark):
     m, b, d = _counter_dict(spark, arr)
     assert d["mode"] == 3
     c = {bin_: cnt for bin_, cnt in b}
-    assert stats.bins_list(c, int(d["min"]), int(d["max"])) == [1, 0, 0, 0, 2]
+    assert _bins_list(c, int(d["min"]), int(d["max"])) == [1, 0, 0, 0, 2]
     a = np.array(arr)
     assert d["min"] == -1.9 and d["max"] == 3.7
     assert d["mean"] == a.mean()
@@ -83,7 +88,7 @@ def test_counter_direct_masking(spark):
     assert d["bins_std"] == 1
     assert d["min"] == 2 and d["max"] == 4
     c = {bin_: cnt for bin_, cnt in b}
-    assert stats.bins_list(c, 2, 4) == [1, 0, 1]
+    assert _bins_list(c, 2, 4) == [1, 0, 1]
 
 
 def test_moments_simple(spark):
@@ -91,8 +96,8 @@ def test_moments_simple(spark):
     arr = np.array([2, 4, 4, 4, 5, 5, 7, 9], dtype=float)
     import pandas as pd
     df = spark.createDataFrame(pd.DataFrame({"v": arr}))
-    d = stats.derive_moment_stats(
-        stats.moments_agg(df, "v").collect()[0].asDict())
+    moments, _ = stats.counter_agg(df, "v")
+    d = stats.derive_moment_stats(moments.collect()[0].asDict())
     assert d["mean"] == arr.mean()
     assert d["std"] == arr.std()
     assert d["var"] == arr.var()
@@ -134,11 +139,9 @@ def test_counter_wide_range_has_no_hist_quantiles():
     assert hist_keys <= narrow.keys()
 
 
-def test_save_json_format(tmp_path):
+def test_save_json_format():
     # stats_util.py:130 formatting contract
-    p = tmp_path / "s.json"
-    stats.save_stats_json({"b": 1, "a": {"z": 2, "y": 3}}, str(p))
-    assert p.read_text() == (
+    assert stats.stats_json({"b": 1, "a": {"z": 2, "y": 3}}) == (
         '{\n    "a":{\n        "y":3,\n        "z":2\n    },\n    "b":1\n}')
 
 
