@@ -49,6 +49,29 @@ def _pixel_centers(x_min: float, y_min: float, cell: float, width: int,
     return gx.ravel(), gy.ravel()
 
 
+def _reduce_pixels(px: np.ndarray, py: np.ndarray, rings: list,
+                   values: np.ndarray, reducer: str
+                   ) -> tuple[np.ndarray, np.ndarray]:
+    """Per-pixel reduction of the `values` of the rings covering each
+    pixel center -> (float values, 0 where no ring covers; bool mask).
+    `rings`/`values` are in `first` order; there may be none."""
+    if not rings:
+        return np.zeros(len(px)), np.zeros(len(px), dtype=bool)
+    contain = geometry.points_in_polygon_batch(px, py, rings)
+    any_hit = contain.any(axis=1)
+    if reducer in ("first", "firstNonNull"):
+        # Lowest order wins; argmax returns first True.
+        vals = values[np.argmax(contain, axis=1)]
+    elif reducer == "max":
+        vals = np.where(contain, values[None, :], -np.inf).max(axis=1)
+    else:  # mode: most frequent covering value; ties -> smaller
+        vals = np.zeros(len(px))
+        for p in np.nonzero(any_hit)[0]:
+            vs, cnts = np.unique(values[contain[p]], return_counts=True)
+            vals[p] = vs[np.argmax(cnts)]
+    return np.where(any_hit, vals, 0.0), any_hit
+
+
 def rasterize_fc(rois: DataFrame, regions: pd.DataFrame, prop: str,
                  *, reducer: str = "max",
                  class_names: list[str] | None = None,
@@ -90,22 +113,7 @@ def rasterize_fc(rois: DataFrame, regions: pd.DataFrame, prop: str,
             px, py = _pixel_centers(float(x_min.iloc[i]),
                                     float(y_min.iloc[i]),
                                     float(cell.iloc[i]), w, h)
-            contain = geometry.points_in_polygon_batch(px, py, rings)
-            any_hit = contain.any(axis=1)
-            if reducer in ("first", "firstNonNull"):
-                # Lowest order wins; argmax returns first True.
-                idx = np.argmax(contain, axis=1)
-                vals = values[idx]
-            elif reducer == "max":
-                vv = np.where(contain, values[None, :], -np.inf)
-                vals = vv.max(axis=1)
-            else:  # mode: most frequent covering value; ties -> smaller
-                vals = np.zeros(len(px))
-                for p in np.nonzero(any_hit)[0]:
-                    vs, cnts = np.unique(values[contain[p]],
-                                         return_counts=True)
-                    vals[p] = vs[np.argmax(cnts)]
-            vals = np.where(any_hit, vals, 0.0)
+            vals, any_hit = _reduce_pixels(px, py, rings, values, reducer)
             out_v.append(vals.astype(np.float32).tolist())
             out_m.append(any_hit.astype(np.int32).tolist())
         return pd.DataFrame({"values": out_v, "mask": out_m})
@@ -224,24 +232,7 @@ def rasterize_fc_distributed(rois: DataFrame, regions_df: DataFrame,
         w, h = int(r0["width"]), int(r0["height"])
         px, py = _pixel_centers(float(r0["x_min"]), float(r0["y_min"]),
                                 float(r0["cell_size"]), w, h)
-        if rings:
-            contain = geometry.points_in_polygon_batch(px, py, rings)
-        else:
-            contain = np.zeros((len(px), 0), dtype=bool)
-        any_hit = contain.any(axis=1) if contain.shape[1] else \
-            np.zeros(len(px), dtype=bool)
-        if contain.shape[1] == 0:
-            vals = np.zeros(len(px))
-        elif reducer in ("first", "firstNonNull"):
-            vals = values[np.argmax(contain, axis=1)]
-        elif reducer == "max":
-            vals = np.where(contain, values[None, :], -np.inf).max(axis=1)
-        else:  # mode
-            vals = np.zeros(len(px))
-            for p in np.nonzero(any_hit)[0]:
-                vs, cnts = np.unique(values[contain[p]], return_counts=True)
-                vals[p] = vs[np.argmax(cnts)]
-        vals = np.where(any_hit, vals, 0.0)
+        vals, any_hit = _reduce_pixels(px, py, rings, values, reducer)
         out = {c: [r0[c]] for c in roi_cols}
         out[out_col] = [{"values": vals.astype(np.float32).tolist(),
                          "mask": any_hit.astype(np.int32).tolist()}]

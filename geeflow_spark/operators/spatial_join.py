@@ -5,29 +5,27 @@ The Spark-native replacement for the reference's Earth-Engine-delegated
 image collections, :132 for feature collections) and the first-match
 property lookup `fc_get` (ee_algo.py:129-137).
 
-Strategy (BASELINE.json north_star):
-  1. Encode the big point side to S2 cells at a chosen level via an
-     Arrow-batched pandas UDF (JVM->Arrow->numpy, never per-row Python).
-  2. Cover each polygon's bbox with cells at the same level (driver-side
-     numpy for small sets; distributed mapInPandas for large sets).
-  3. Equi-join on the cell key - broadcast hash join when the polygon
-     side is small (no shuffle of the point side at all), sort-merge join
-     on the cell key otherwise (AQE splits skewed cell partitions).
-  4. Exact refine: vectorized ray-casting PIP inside a pandas UDF.
-
-At 100 TB the broadcast path streams the document table through a single
-stage: scan -> encode -> BHJ -> PIP filter, with zero shuffles until the
-caller aggregates.
+`RegionMatcher` is the one answer to "which regions contain this point":
+a point fans out to the regions whose bbox cover holds its cell, then
+`pip_refine` keeps the pairs inside the (optionally buffered) ring.
+`join_points_regions` runs it in one `mapInArrow` over the point side
+(the small region side travels in the task closure; the points never
+shuffle), and so does the `plans.generate` kernel. Large region tables
+take `join_points_regions_smj`: covers per Arrow batch, a cell-keyed
+join Catalyst plans, then `pip_refine` with the ring from the row.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType, LongType
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import (BooleanType, LongType, StructField,
+                               StructType)
 
 from geeflow_spark.functions import geometry, s2
 from geeflow_spark.functions import hex as hexmod
@@ -41,9 +39,11 @@ class _IndexMap(dict):
 INDEXES = _IndexMap({"s2": s2, "hex": hexmod})
 
 
-def s2_cell_udf(level: int, index: str = "s2"):
-    """Returns a pandas UDF (lat, lon) -> cell id (as signed long) for
-    the chosen index twin ("s2" | "hex")."""
+def with_cell(df: DataFrame, level: int, lat_col: str = "lat",
+              lon_col: str = "lon", out_col: str = "cell",
+              index: str = "s2") -> DataFrame:
+    """Adds the cell-id column (signed long) at `level` for the chosen
+    index twin ("s2" | "hex"), encoded in an Arrow-batched pandas UDF."""
     mod = INDEXES[index]
 
     @pandas_udf(LongType())
@@ -52,29 +52,17 @@ def s2_cell_udf(level: int, index: str = "s2"):
                                     lon.to_numpy(np.float64), level)
         return pd.Series(np.asarray(ids).astype(np.int64))
 
-    return _enc
+    return df.withColumn(out_col, _enc(F.col(lat_col), F.col(lon_col)))
 
 
-def with_cell(df: DataFrame, level: int, lat_col: str = "lat",
-              lon_col: str = "lon", out_col: str = "cell",
-              index: str = "s2") -> DataFrame:
-    """Adds the cell-id column at `level` for the chosen index."""
-    return df.withColumn(out_col, s2_cell_udf(level, index)(
-        F.col(lat_col), F.col(lon_col)))
-
-
-def region_rings(regions: pd.DataFrame, ring_col: str = "ring",
-                 id_col: str = "region_id") -> dict:
-    """{region id: flat float64 ring} of a small pandas region table."""
-    return dict(zip(regions[id_col].to_numpy(np.int64).tolist(),
-                    (np.asarray(r, dtype=np.float64)
-                     for r in regions[ring_col])))
+def arrow_np(rb, ix: int, dtype) -> np.ndarray:
+    """Column `ix` of an Arrow record batch as a numpy `dtype` array."""
+    return rb.column(ix).to_numpy(zero_copy_only=False) \
+        .astype(dtype, copy=False)
 
 
 def region_covers_pdf(regions: pd.DataFrame, level: int,
-                      ring_col: str = "ring",
-                      id_col: str = "region_id",
-                      index: str = "s2",
+                      id_col: str = "region_id", index: str = "s2",
                       buffer_deg: float = 0.0) -> pd.DataFrame:
     """(cell, region_id) cover pairs for a small pandas region table.
 
@@ -86,7 +74,7 @@ def region_covers_pdf(regions: pd.DataFrame, level: int,
     """
     grow = max(buffer_deg, 0.0)
     boxes = []
-    for ring in regions[ring_col]:
+    for ring in regions["ring"]:
         x0, y0, x1, y1 = geometry.polygon_bbox(
             np.asarray(ring, dtype=np.float64))
         boxes.append((y0 - grow, y1 + grow, x0 - grow, x1 + grow))
@@ -97,56 +85,89 @@ def region_covers_pdf(regions: pd.DataFrame, level: int,
     })
 
 
-def pip_filter_udf(regions: pd.DataFrame, ring_col: str = "ring",
-                   id_col: str = "region_id", buffer_deg: float = 0.0):
-    """Pandas UDF (lat, lon, region_id) -> bool exact containment.
+def pip_refine(lon: np.ndarray, lat: np.ndarray, rid: np.ndarray,
+               rings: dict, buffer_deg: float = 0.0) -> np.ndarray:
+    """Exact containment of candidate (point, region) pairs -> bool mask.
 
-    With `buffer_deg` != 0 the test is Minkowski membership in the TRUE
+    One vectorized PIP call per distinct region in `rid`. With
+    `buffer_deg` != 0 the test is Minkowski membership in the TRUE
     buffered (or eroded, negative) polygon - distance-to-boundary form,
     exact for non-convex rings (geometry.points_in_buffered_polygon;
     EE geometry.buffer analog, ee_data.py:1187-1196).
-
-    The region table rides inside the closure (it is small / broadcast by
-    task serialization); the test vectorizes per distinct region in the
-    Arrow batch.
     """
-    rings = region_rings(regions, ring_col, id_col)
+    inside = np.zeros(len(rid), dtype=bool)
+    for r in np.unique(rid):
+        m = rid == r
+        inside[m] = geometry.points_in_buffered_polygon(
+            lon[m], lat[m], rings[int(r)], buffer_deg)
+    return inside
 
-    @pandas_udf(BooleanType())
-    def _pip(lat: pd.Series, lon: pd.Series, rid: pd.Series) -> pd.Series:
-        px = lon.to_numpy(np.float64)
-        py = lat.to_numpy(np.float64)
-        rid_np = rid.to_numpy(np.int64)
-        out = np.zeros(len(px), dtype=bool)
-        for r in np.unique(rid_np):
-            m = rid_np == r
-            ring = rings.get(int(r))
-            if ring is None:
-                continue
-            if buffer_deg:
-                out[m] = geometry.points_in_buffered_polygon(
-                    px[m], py[m], ring, buffer_deg)
-            else:
-                out[m] = geometry.points_in_polygon(px[m], py[m], ring)
-        return pd.Series(out)
 
-    return _pip
+class RegionMatcher:
+    """Which regions of a small pandas region table contain each point.
+    Built once from the table, shipped in a task closure: the rings and
+    the covers as sorted unique cells `uc`, each owning the segment
+    `ustart`/`ucnt` of candidate region ids in `cov_rids`."""
+
+    def __init__(self, regions: pd.DataFrame, level: int,
+                 index: str = "s2", buffer_deg: float = 0.0):
+        cov = region_covers_pdf(regions, level, index=index,
+                                buffer_deg=buffer_deg).sort_values("cell")
+        self.cov_rids = cov["region_id"].to_numpy(np.int64)
+        self.uc, self.ustart, self.ucnt = np.unique(
+            cov["cell"].to_numpy(np.int64), return_index=True,
+            return_counts=True)
+        self.rings = {int(r): np.asarray(ring, dtype=np.float64)
+                      for r, ring in zip(regions["region_id"],
+                                         regions["ring"])}
+        self.buffer_deg = buffer_deg
+
+    def __call__(self, cells: np.ndarray, lat: np.ndarray,
+                 lon: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """int64 cells (at the matcher's level) and coordinates of n
+        points -> (point_ix, region_id) of every containing pair,
+        point-major."""
+        uc = self.uc
+        if len(uc) == 0:
+            return np.zeros(0, np.int64), np.zeros(0, np.int64)
+        # candidate pairs: each point x its cell's cover segment
+        pos = np.minimum(np.searchsorted(uc, cells), len(uc) - 1)
+        cnt = np.where(uc[pos] == cells, self.ucnt[pos], 0).astype(np.int64)
+        total = int(cnt.sum())
+        point_ix = np.repeat(np.arange(len(cells)), cnt)
+        within = np.arange(total) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+        rid = self.cov_rids[np.repeat(self.ustart[pos], cnt) + within]
+        inside = pip_refine(lon[point_ix], lat[point_ix], rid, self.rings,
+                            self.buffer_deg)
+        return point_ix[inside], rid[inside]
+
+
+def region_props(regions: pd.DataFrame, cols: list,
+                 schema: pa.Schema | None = None
+                 ) -> tuple[np.ndarray, pa.RecordBatch]:
+    """(ascending region ids, Arrow batch of the `cols` properties in
+    that order): `props.take(np.searchsorted(ids, rid))` gathers the
+    properties of `RegionMatcher`'s region ids."""
+    reg = regions.iloc[np.argsort(regions["region_id"].to_numpy(np.int64),
+                                  kind="stable")]
+    return (reg["region_id"].to_numpy(np.int64),
+            pa.RecordBatch.from_pandas(reg[cols], schema=schema,
+                                       preserve_index=False))
 
 
 def join_points_regions(points: DataFrame, regions: pd.DataFrame,
-                        level: int = 8, lat_col: str = "lat",
-                        lon_col: str = "lon",
+                        level: int = 8,
                         region_cols: tuple = ("region_id",),
-                        how: str = "inner",
                         index: str = "s2",
                         buffer_deg: float = 0.0,
                         precomputed_cell: str | None = None) -> DataFrame:
-    """Spatial inner/left join: point rows x containing regions.
+    """Spatial inner join: point rows (`lat`, `lon`) x containing regions.
 
-    Broadcast path: candidate cells of all regions are broadcast; the
-    point side never shuffles. Every matching (point, region) pair is
-    returned (multiplicity preserved - `fc_get`-style first-match is a
-    separate reducer, see `first_match`).
+    One `mapInArrow` over the point side: cell encode, `RegionMatcher`,
+    gather of the `region_cols` properties. Output: the point columns
+    except the cell key, then `region_id`, then the properties. Every
+    matching (point, region) pair is returned (multiplicity preserved -
+    `fc_get`-style first-match is a separate reducer, see `first_match`).
 
     `precomputed_cell`: name of an existing level-`level` cell column
     to use instead of re-encoding - the cell-clustered layout
@@ -154,32 +175,40 @@ def join_points_regions(points: DataFrame, regions: pd.DataFrame,
     reads don't pay the encode again (at 10^12 rows the read-time
     re-encode would dwarf the join).
     """
-    spark = points.sparkSession
-    covers = region_covers_pdf(regions, level, index=index,
-                               buffer_deg=buffer_deg)
-    covers_df = spark.createDataFrame(covers)
+    match = RegionMatcher(regions, level, index=index, buffer_deg=buffer_deg)
     keep = [c for c in regions.columns if c in region_cols and c != "region_id"]
-    if keep:
-        props = spark.createDataFrame(regions[["region_id"] + keep])
-        covers_df = covers_df.join(F.broadcast(props), "region_id")
+    ids, props = region_props(regions, keep)
+    enc = INDEXES[index].latlon_to_cell_id
 
-    if precomputed_cell is not None:
-        pts = points.withColumnRenamed(precomputed_cell, "cell") \
-            if precomputed_cell != "cell" else points
-    else:
-        pts = with_cell(points, level, lat_col, lon_col, index=index)
-    cand = pts.join(F.broadcast(covers_df), "cell", "inner")
-    refined = cand.filter(
-        pip_filter_udf(regions, buffer_deg=buffer_deg)(
-            F.col(lat_col), F.col(lon_col), F.col("region_id")))
-    if how == "inner":
-        return refined.drop("cell")
-    if how == "left":
-        matched = refined.drop("cell")
-        return points.join(matched.select(*points.columns, "region_id",
-                                          *keep),
-                           on=points.columns, how="left")
-    raise ValueError(f"unsupported how={how}")
+    cols = points.columns
+    lat_ix, lon_ix = cols.index("lat"), cols.index("lon")
+    cell_ix = cols.index(precomputed_cell) if precomputed_cell else None
+    out_ix = [i for i, c in enumerate(cols)
+              if c not in ("cell", precomputed_cell)]
+    out_schema = StructType(
+        [points.schema.fields[i] for i in out_ix]
+        + [StructField("region_id", LongType())]
+        + [StructField(f.name, from_arrow_type(f.type))
+           for f in props.schema])
+
+    def _join(batches):
+        for rb in batches:
+            la = arrow_np(rb, lat_ix, np.float64)
+            lo = arrow_np(rb, lon_ix, np.float64)
+            if cell_ix is None:
+                cells = np.asarray(enc(la, lo, level)).astype(np.int64)
+            else:
+                cells = arrow_np(rb, cell_ix, np.int64)
+            pix, rid = match(cells, la, lo)
+            if len(pix) == 0:
+                continue
+            base = rb.take(pa.array(pix))
+            reg = props.take(pa.array(np.searchsorted(ids, rid)))
+            yield pa.RecordBatch.from_arrays(
+                [base.column(i) for i in out_ix] + [pa.array(rid)]
+                + reg.columns, names=out_schema.names)
+
+    return points.mapInArrow(_join, out_schema)
 
 
 def first_match(joined: DataFrame, key_cols: list[str],
@@ -203,56 +232,39 @@ def first_match(joined: DataFrame, key_cols: list[str],
 
 
 def join_points_regions_smj(points: DataFrame, regions_df: DataFrame,
-                            level: int = 8, lat_col: str = "lat",
-                            lon_col: str = "lon",
-                            ring_col: str = "ring",
-                            index: str = "s2") -> DataFrame:
-    """Sort-merge-join path for LARGE polygon sides.
+                            level: int = 8, index: str = "s2") -> DataFrame:
+    """Join path for LARGE region tables (`region_id`, `ring`, ...),
+    which are never collected; the points carry `lat` and `lon`.
 
-    Both sides are keyed by cell: points encode, regions explode their
-    covers via mapInPandas (distributed - no driver bottleneck). Catalyst
-    plans an SMJ on the cell key; AQE splits skewed cell partitions.
-    The polygon ring travels with the join row, so the exact PIP refine
-    runs without any rebroadcast.
+    Both sides are keyed by cell: points encode, regions get their covers
+    from `region_covers_pdf` per Arrow batch. Catalyst plans the join
+    (SMJ when both sides are large; AQE splits skewed cells). The ring
+    travels with the joined row into `pip_refine`: no rebroadcast.
     """
-    from pyspark.sql.types import StructField, StructType
+    ring_ix = regions_df.columns.index("ring")
+    cov_schema = StructType(regions_df.schema.fields
+                            + [StructField("cell", LongType())])
 
-    reg_schema = StructType(
-        [f for f in regions_df.schema.fields] +
-        [StructField("cell", LongType())])
-
-    def _explode_covers(it):
-        for pdf in it:
-            out_rows = {c: [] for c in pdf.columns}
-            out_cells = []
-            for i in range(len(pdf)):
-                ring = np.asarray(pdf[ring_col].iloc[i], dtype=np.float64)
-                x0, y0, x1, y1 = geometry.polygon_bbox(ring)
-                ids = INDEXES[index].cover_bbox(y0, y1, x0, x1, level).astype(np.int64)
-                for c in pdf.columns:
-                    out_rows[c].extend([pdf[c].iloc[i]] * len(ids))
-                out_cells.extend(ids.tolist())
-            out = pd.DataFrame(out_rows)
-            out["cell"] = pd.Series(out_cells, dtype="int64")
-            yield out
-
-    covers = regions_df.mapInPandas(_explode_covers, reg_schema)
-    pts = with_cell(points, level, lat_col, lon_col, index=index)
-    cand = pts.join(covers, "cell", "inner")
+    def _covers(batches):
+        for rb in batches:
+            cov = region_covers_pdf(
+                pd.DataFrame({"row": np.arange(rb.num_rows),
+                              "ring": rb.column(ring_ix).to_pandas()}),
+                level, id_col="row", index=index)
+            yield pa.RecordBatch.from_arrays(
+                rb.take(pa.array(cov["row"].to_numpy())).columns
+                + [pa.array(cov["cell"].to_numpy())],
+                names=cov_schema.names)
 
     @pandas_udf(BooleanType())
-    def _pip_ring(lat: pd.Series, lon: pd.Series, ring: pd.Series) -> pd.Series:
-        px = lon.to_numpy(np.float64)
-        py = lat.to_numpy(np.float64)
-        out = np.zeros(len(px), dtype=bool)
-        # Vectorize per distinct ring within the Arrow batch (after a
-        # cell-keyed SMJ, batches are dominated by few rings).
-        keys = ring.map(lambda r: np.asarray(r, dtype=np.float64).tobytes())
-        for key, idx in keys.groupby(keys).groups.items():
-            pos = keys.index.get_indexer(idx)
-            r = np.frombuffer(key, dtype=np.float64)
-            out[pos] = geometry.points_in_polygon(px[pos], py[pos], r)
-        return pd.Series(out)
+    def _pip(lat: pd.Series, lon: pd.Series, rid: pd.Series,
+             ring: pd.Series) -> pd.Series:
+        rid = rid.to_numpy(np.int64)
+        rings = {int(r): np.asarray(ring.iloc[i], dtype=np.float64)
+                 for r, i in zip(*np.unique(rid, return_index=True))}
+        return pd.Series(pip_refine(lon.to_numpy(np.float64),
+                                    lat.to_numpy(np.float64), rid, rings))
 
-    return cand.filter(_pip_ring(F.col(lat_col), F.col(lon_col),
-                                 F.col(ring_col))).drop("cell")
+    covers = regions_df.mapInArrow(_covers, cov_schema)
+    cand = with_cell(points, level, index=index).join(covers, "cell")
+    return cand.filter(_pip("lat", "lon", "region_id", "ring")).drop("cell")

@@ -246,18 +246,16 @@ def _rename_outputs(df: DataFrame, name: str, bands: list[str]) -> DataFrame:
 
 
 # FCs at or below this row count take the collect+broadcast path; above
-# it the distributed (SMJ / grid-cover) paths run. Overridable per
-# source via cfg["fc_broadcast_threshold"]; 0 forces the large path.
+# it the distributed (SMJ / grid-cover) paths run. The crossover was not
+# measured; 0 forces the large path.
 FC_BROADCAST_THRESHOLD = 100_000
 
 
-def _fc_is_small(df: DataFrame, cfg: dict) -> bool:
-    limit = int(cfg.get("fc_broadcast_threshold", FC_BROADCAST_THRESHOLD))
-    if limit <= 0:
-        return False
+def _fc_is_small(df: DataFrame) -> bool:
     # limit+1 head probe, NOT count(): a 10^9-row FC answers this from
     # its first partitions.
-    return len(df.select(F.lit(1)).head(limit + 1)) <= limit
+    limit = FC_BROADCAST_THRESHOLD
+    return limit > 0 and len(df.select(F.lit(1)).head(limit + 1)) <= limit
 
 
 def run_pipeline(spark: SparkSession, config: dict,
@@ -326,7 +324,7 @@ def run_pipeline(spark: SparkSession, config: dict,
                 raise ValueError(f"fc_get source `{name}` needs labels")
             props = list(cfg["select"])
             idc = cfg.get("id_col", "index")
-            if _fc_is_small(df, cfg):
+            if _fc_is_small(df):
                 joined = spatial_join.join_points_regions(
                     labels, df.toPandas(),
                     region_cols=("region_id", *props))
@@ -345,7 +343,7 @@ def run_pipeline(spark: SparkSession, config: dict,
                 raise ValueError(f"fc_to_image source `{name}` needs rois")
             prop = cfg["select"]
             prop = prop[0] if isinstance(prop, (list, tuple)) else prop
-            if _fc_is_small(df, cfg):
+            if _fc_is_small(df):
                 out[name] = rasterize.rasterize_fc(
                     labels, df.toPandas(), prop,
                     reducer=kw.get("reduce_fn", "first"))

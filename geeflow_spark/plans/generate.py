@@ -7,8 +7,8 @@ BASELINE.json input_hint:
 
   docs(doc_id, spans, lat, lon)
     -> S2 cell encode (Arrow-batched)
-    -> broadcast PIP join against region polygons (filterBounds + fc_get
-       first-match semantics)
+    -> point-in-region match against region polygons
+       (spatial_join.RegionMatcher; filterBounds semantics)
     -> UTM tile assignment (UtmGridMapping.from_latlon_center grid math)
     -> geographic split (md5(s2_cell) % 10)
   preserving the span-sequence (kind, text, media_ref, order) row-for-row.
@@ -22,11 +22,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType)
 
-from geeflow_spark.functions import geometry, s2, utm
+from geeflow_spark.functions import s2, utm
 from geeflow_spark.operators import spatial_join, splits
 
 def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
@@ -39,15 +40,15 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
     utm_zone, tile_x, tile_y, split.
 
     Plan shape (scale-first): scan -> ONE mapInArrow pass (S2 encode +
-    cover-cell candidate lookup via searchsorted + PIP refine + UTM tile
-    + md5 split bucket of the level-`split_level` parent, hashed once
-    per distinct cell in the batch) whose output schema is the final
-    column order - nothing runs on the JVM after it. The cover table
-    (cell -> candidate regions) and the rings travel in the task closure - the
-    small broadcast side - so the document rows cross the Arrow boundary
-    exactly ONCE and the candidate fan-out (the old broadcast hash join,
-    2.7x row inflation on the JVM side and a second Arrow round-trip)
-    happens as a numpy gather inside the kernel.
+    `spatial_join.RegionMatcher`, i.e. cover-cell candidate lookup via
+    searchsorted + PIP refine, + UTM tile + md5 split bucket of the
+    level-`split_level` parent, hashed once per distinct cell in the
+    batch) whose output schema is the final column order - nothing runs
+    on the JVM after it. The matcher (cover table and rings) travels in
+    the task closure - the small broadcast side - so the document rows
+    cross the Arrow boundary exactly ONCE and the candidate fan-out (the
+    old broadcast hash join, 2.7x row inflation on the JVM side and a
+    second Arrow round-trip) happens as a numpy gather inside the kernel.
 
     Why this topology beats scan->encode UDF->BHJ->fused UDF at N->4N:
     a Python-UDF stage occupies a JVM task thread AND a python worker
@@ -68,19 +69,10 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
     the scan. The column passes through to the output (it is part of
     the doc schema).
     """
-    covers = spatial_join.region_covers_pdf(regions, cell_level)
-    # cell -> flat segment of candidate region ids (sorted for
-    # searchsorted lookup inside the kernel).
-    cov = covers.sort_values("cell")
-    cov_cells = cov["cell"].to_numpy(np.int64)
-    cov_rids = cov["region_id"].to_numpy(np.int64)
-    uc, ustart, ucnt = np.unique(cov_cells, return_index=True,
-                                 return_counts=True)
-    rings = spatial_join.region_rings(regions)
+    match = spatial_join.RegionMatcher(regions, cell_level)
     keep = [c for c in ("gridcode", "class_name") if c in regions.columns]
-    reg_ids_sorted = np.sort(regions["region_id"].to_numpy(np.int64))
-    reg_order = np.argsort(regions["region_id"].to_numpy(np.int64))
-    prop_arrays = {c: regions[c].to_numpy()[reg_order] for c in keep}
+    ids, props = spatial_join.region_props(regions, keep, pa.schema(
+        [(c, pa.int64() if c == "gridcode" else pa.string()) for c in keep]))
 
     doc_fields = list(docs.schema.fields)
     out_schema = StructType(
@@ -109,26 +101,17 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
     # per-row string object (the per-object conversion was the python
     # workers' hottest serial section under 16-way concurrency).
     def _kernel(batches):
-        import pyarrow as pa
         zone_dict = pa.array(utm.ZONE_STRINGS, type=pa.string())
         split_dict = pa.array(splits.SPLIT_NAMES, type=pa.string())
-        prop_pa = {c: pa.array(prop_arrays[c].tolist(),
-                               type=pa.int64() if c == "gridcode"
-                               else pa.string())
-                   for c in keep}
         for rb in batches:
-            n = rb.num_rows
-            if n == 0 or len(uc) == 0:
+            if rb.num_rows == 0:
                 continue
-            la = rb.column(lat_ix).to_numpy(zero_copy_only=False) \
-                .astype(np.float64, copy=False)
-            lo = rb.column(lon_ix).to_numpy(zero_copy_only=False) \
-                .astype(np.float64, copy=False)
+            la = spatial_join.arrow_np(rb, lat_ix, np.float64)
+            lo = spatial_join.arrow_np(rb, lon_ix, np.float64)
             if pc_ix is not None:
                 # stored fine cell: both levels are parent() bit math -
                 # no S2 encode at read time at all.
-                leaf = rb.column(pc_ix).to_numpy(zero_copy_only=False) \
-                    .astype(np.int64, copy=False)
+                leaf = spatial_join.arrow_np(rb, pc_ix, np.int64)
                 # parent()'s lsb trick only goes COARSER: a stored cell
                 # coarser than either consumer level would yield a
                 # malformed finer id - and silently wrong join cells /
@@ -147,29 +130,7 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
                 # ONE leaf encode serves both levels (parent = bit math).
                 leaf = s2.latlon_to_cell_id(la, lo)
             cells = s2.parent(leaf, cell_level).astype(np.int64)
-            # candidate (doc, region) pairs via the cover segments
-            pos = np.searchsorted(uc, cells)
-            posc = np.minimum(pos, len(uc) - 1)
-            match = uc[posc] == cells
-            cnt = np.where(match, ucnt[posc], 0).astype(np.int64)
-            total = int(cnt.sum())
-            if total == 0:
-                continue
-            doc_ix = np.repeat(np.arange(n), cnt)
-            within = (np.arange(total)
-                      - np.repeat(np.cumsum(cnt) - cnt, cnt))
-            rid = cov_rids[np.repeat(ustart[posc], cnt) + within]
-            # exact PIP refine per region on the paired coords
-            pla, plo = la[doc_ix], lo[doc_ix]
-            inside = np.zeros(total, dtype=bool)
-            for r in np.unique(rid):
-                ring = rings.get(int(r))
-                if ring is None:
-                    continue
-                m = rid == r
-                inside[m] = geometry.points_in_polygon(plo[m], pla[m],
-                                                       ring)
-            doc_ix, rid = doc_ix[inside], rid[inside]
+            doc_ix, rid = match(cells, la, lo)
             if len(doc_ix) == 0:
                 continue
             # per-DOC tile (computed once per doc, gathered)
@@ -178,11 +139,8 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
             # split bucket: one md5 per distinct split cell of the pairs
             bucket = s2.split_bucket(s2.parent(leaf[doc_ix], split_level))
             base = rb.take(pa.array(doc_ix, type=pa.int64()))
-            ridx = np.searchsorted(reg_ids_sorted, rid)
-            extras = [pa.array(rid, type=pa.int64())]
-            for c in keep:
-                extras.append(prop_pa[c].take(
-                    pa.array(ridx, type=pa.int64())))
+            extras = [pa.array(rid, type=pa.int64())] + props.take(
+                pa.array(np.searchsorted(ids, rid))).columns
             extras += [zone_dict.take(pa.array(zone_code[doc_ix],
                                                type=pa.int64())),
                        pa.array(x0[doc_ix], type=pa.float64()),

@@ -5,7 +5,6 @@ source registry)."""
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from geeflow_spark.operators import reducers
 from geeflow_spark.plans import config as cfg_mod
@@ -225,14 +224,13 @@ def test_standardized_path_reference_value():
 # (VERDICT r2 weak item; small -> broadcast, large -> SMJ/grid covers)
 # ---------------------------------------------------------------------------
 
-def _fc_config(fc_src, algo, select, threshold):
+def _fc_config(fc_src, algo, select):
     c = cfg_mod.DotDict()
     c.sources = cfg_mod.DotDict()
     fg = cfg_mod.get_source_config(fc_src, "fc")
     fg.algo = algo
     fg.select = select
     fg.module = fc_src
-    fg.fc_broadcast_threshold = threshold
     c.sources.country = fg
     return c
 
@@ -244,18 +242,19 @@ def test_fc_get_large_path_no_driver_collect(spark, monkeypatch):
     labels = synth.labels(spark, 60)
 
     small = cfg_mod.run_pipeline(
-        spark, _fc_config(fc_src, "fc_get", ["gridcode"], 10**6),
+        spark, _fc_config(fc_src, "fc_get", ["gridcode"]),
         labels=labels)["country"].toPandas()
 
     # Large path: threshold 0 forces it; toPandas is BANNED during plan
     # construction (monkeypatch guard - the r2 verdict's weak item).
+    monkeypatch.setattr(cfg_mod, "FC_BROADCAST_THRESHOLD", 0)
     from pyspark.sql import DataFrame as _DF
     real_topandas = _DF.toPandas
     monkeypatch.setattr(_DF, "toPandas",
                         lambda self: (_ for _ in ()).throw(
                             AssertionError("driver collect in large-FC path")))
     big_df = cfg_mod.run_pipeline(
-        spark, _fc_config(fc_src, "fc_get", ["gridcode"], 0),
+        spark, _fc_config(fc_src, "fc_get", ["gridcode"]),
         labels=labels)["country"]
     monkeypatch.setattr(_DF, "toPandas", real_topandas)
     big = big_df.toPandas()
@@ -280,16 +279,17 @@ def test_fc_to_image_large_path_matches_broadcast(spark, monkeypatch):
         "height": [6] * 12,
     }))
     small = cfg_mod.run_pipeline(
-        spark, _fc_config(fc_src, "fc_to_image", ["gridcode"], 10**6),
+        spark, _fc_config(fc_src, "fc_to_image", ["gridcode"]),
         labels=rois)["country"].toPandas()
 
+    monkeypatch.setattr(cfg_mod, "FC_BROADCAST_THRESHOLD", 0)
     from pyspark.sql import DataFrame as _DF
     real_topandas = _DF.toPandas
     monkeypatch.setattr(_DF, "toPandas",
                         lambda self: (_ for _ in ()).throw(
                             AssertionError("driver collect in large-FC path")))
     big_df = cfg_mod.run_pipeline(
-        spark, _fc_config(fc_src, "fc_to_image", ["gridcode"], 0),
+        spark, _fc_config(fc_src, "fc_to_image", ["gridcode"]),
         labels=rois)["country"]
     monkeypatch.setattr(_DF, "toPandas", real_topandas)
     big = big_df.toPandas()

@@ -59,9 +59,6 @@ def test_clustered_write_resumable_per_cell_partition(spark, tmp_path):
     # write driven through checkpoint.run_partitioned resumes per
     # cell_p with lineage+metrics, and a torn cell directory is
     # recomputed exactly once.
-    import json
-    import os
-
     from pyspark.sql import functions as F
 
     from geeflow_spark.operators.spatial_join import with_cell

@@ -40,6 +40,11 @@ def test_rasterize_first_max_exists(spark):
         class_names=["b"]).collect()[0]["raster"]
     assert got_cls["mask"] == [0, 1, 1, 0, 1, 1]  # region a dropped
     assert got_cls["values"][1] == 0.0  # class b -> index 0
+    # every feature dropped by the remap: no rings, an all-masked raster
+    got_none = rasterize.rasterize_fc(
+        rois, regs, "class_name", reducer="first",
+        class_names=["zzz"]).collect()[0]["raster"]
+    assert got_none["mask"] == [0] * 6 and got_none["values"] == [0.0] * 6
 
 
 def test_checkpoint_resume(spark, tmp_path):

@@ -4,8 +4,6 @@
 import datetime as dt
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
 
 from geeflow_spark.operators import reducers
 from geeflow_spark.sources import synth

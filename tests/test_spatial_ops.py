@@ -19,20 +19,28 @@ def _docs(spark):
 
 
 def test_join_points_regions_matches_numpy_oracle(spark):
+    # Every point-in-region join - the one-map join, the large-FC
+    # sort-merge path and the generate kernel - against one oracle.
     docs = _docs(spark)
     regs = synth.regions_pdf(25)
-    got = spatial_join.join_points_regions(docs, regs, level=7) \
-        .select("doc_id", "region_id").toPandas()
-    got_set = set(map(tuple, got.itertuples(index=False)))
-
     pdf = docs.select("doc_id", "lat", "lon").toPandas()
     mat = geometry.points_in_polygon_batch(
         pdf["lon"].to_numpy(), pdf["lat"].to_numpy(),
         [np.asarray(r, dtype=np.float64) for r in regs["ring"]])
     exp = {(pdf["doc_id"].iloc[i], int(regs["region_id"].iloc[k]))
            for i, k in zip(*np.nonzero(mat))}
-    assert got_set == exp
-    assert len(got_set) > 0
+    assert len(exp) > 0
+
+    joins = {
+        "one_map": spatial_join.join_points_regions(docs, regs, level=7),
+        "smj": spatial_join.join_points_regions_smj(
+            docs, spark.createDataFrame(regs), level=7),
+        "generate": generate.generate_examples(docs, regs, cell_level=7),
+    }
+    for name, j in joins.items():
+        got = j.select("doc_id", "region_id").toPandas()
+        assert len(got) == len(exp), name
+        assert set(map(tuple, got.itertuples(index=False))) == exp, name
 
 
 def test_smj_path_matches_broadcast_path(spark):
@@ -316,6 +324,20 @@ def test_generate_plan_one_python_map_no_md5(spark):
     plan = ex._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInArrow") == 1, plan
     assert "ArrowEvalPython" not in plan and "md5" not in plan.lower(), plan
+
+
+def test_join_points_regions_plan_one_arrow_map(spark):
+    # Encode, cover lookup, PIP refine and the property gather run in
+    # one Arrow map over the point side: no pandas UDF, no broadcast
+    # join.
+    j = spatial_join.join_points_regions(
+        _docs(spark), synth.regions_pdf(25), level=7,
+        region_cols=("region_id", "gridcode"))
+    j.write.format("noop").mode("overwrite").save()
+    plan = j._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+    assert "BroadcastHashJoin" not in plan, plan
 
 
 def _cover_pairs(regs, level, index, buffer_deg):

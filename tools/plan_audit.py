@@ -11,7 +11,8 @@ extracts the scale-relevant plan properties:
   - read_cols: ReadSchema width per scan vs the table's full width
     (column pruning - a 2-column projection must not scan 10 columns)
   - codegen: WholeStageCodegen span count (JVM-side expression work)
-  - python: ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas nodes
+  - python: ArrowEvalPython / MapInPandas / MapInArrow /
+    FlatMapGroupsInPandas nodes
     (each is an Arrow boundary - should match the operator's design,
     e.g. the flagship has exactly ONE)
 
@@ -45,7 +46,7 @@ def audit_plan(df) -> dict:
         "codegen_spans": len(set(re.findall(r"\[codegen id : (\d+)\]",
                                             plan))),
         "python_nodes": sorted(set(re.findall(
-            r"\(\d+\) (ArrowEvalPython|MapInPandas"
+            r"\(\d+\) (ArrowEvalPython|MapInPandas|MapInArrow"
             r"|FlatMapGroupsInPandas|AggregateInPandas)", plan))),
         "pushed_filters": sorted(set(p for p in pushed if p)),
         "read_cols": [len([c for c in rs.split(",") if ":" in c])
