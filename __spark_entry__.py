@@ -3,7 +3,7 @@
 entry(spark)  - flagship: interleaved docs + derived geometry -> S2-cell
                 broadcast PIP join vs region polygons -> UTM tile origin ->
                 geographic split; spans preserved (BASELINE.json).
-queries()     - 13-query battery over the geo kernels (geo_*), the
+queries()     - 11-query battery over the geo kernels (geo_*), the
                 catalog sources (src_s2_*) and stats (stats_*); each has
                 a DuckDB oracle in oracle_sql() (same column names/types).
 oracle_sql()  - independent closed-form recomputations (interval logic,
@@ -16,9 +16,6 @@ explicit id tiebreaks; integer outputs cast to BIGINT on both sides.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import re
 from collections.abc import Callable
 
 import numpy as np
@@ -32,8 +29,8 @@ from pyspark.sql.types import (DoubleType, LongType, StringType,
 from geeflow_spark.functions import hex as _hex
 from geeflow_spark.functions import s2 as _s2
 from geeflow_spark.functions import utm as _utm
-from geeflow_spark.operators import knn, spatial_join, tiles
-from geeflow_spark.plans import generate, layout
+from geeflow_spark.operators import spatial_join, stats, tiles
+from geeflow_spark.plans import generate
 from geeflow_spark.sources import catalog, derived, synth
 
 # ---------------------------------------------------------------------------
@@ -108,51 +105,6 @@ def _q_geo_pip_rectangles(spark, sf_dir):
                       .alias("region_id"))
 
 
-def _source_fingerprint(sf_dir: str, table: str = "documents") -> str:
-    """Content fingerprint (names + sizes + mtimes) of a source parquet
-    table: fixture caches keyed on it can never silently reuse a stale
-    clustered copy after the test data is regenerated in place, and
-    concurrent harnesses over different data can't collide on one /tmp
-    path."""
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    parts = [src]
-    files = (sorted(os.listdir(src)) if os.path.isdir(src) else [""])
-    for f in files:
-        st = os.stat(os.path.join(src, f) if f else src)
-        parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
-
-
-def _q_geo_pip_pruned(spark, sf_dir):
-    # The 100 TB scan story under the oracle: the SAME rectangle PIP
-    # join as geo_pip_rectangles, but answered through a cell-CLUSTERED
-    # copy of the documents table (plans/layout.py) so the region
-    # covers become a directory-level partition filter and the scan
-    # reads only the touched coarse cells. Output is identical to
-    # geo_pip_rectangles, so the same independent half-plane SQL oracle
-    # applies. The one-time clustering write is a cached fixture keyed
-    # on the SOURCE's content fingerprint (bench warmups absorb it, so
-    # timed runs never include it; regenerated test data invalidates
-    # it). The executed plan must carry a NON-EMPTY PartitionFilters -
-    # the query fails loudly (RuntimeError, -O-proof) if pruning
-    # regresses.
-    base = os.path.basename(os.path.normpath(sf_dir))
-    fp = _source_fingerprint(sf_dir)
-    path = f"/tmp/geeflow_clustered_l6c3_{base}_{fp}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        layout.write_cell_clustered(
-            _docs(spark, sf_dir).select("doc_id", "lat", "lon"), path,
-            level=6, coarse_level=3)
-    out = layout.join_points_regions_pruned(
-        spark, path, _rect_regions_pdf(), level=6, coarse_level=3)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    if not re.search(r"PartitionFilters: \[[^\]]", plan):
-        raise RuntimeError(
-            "pruned-scan PIP join lost its partition filter")
-    return out.select("doc_id", F.col("region_id").cast("long")
-                      .alias("region_id"))
-
-
 def _q_geo_pip_convex(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     out = spatial_join.join_points_regions(
@@ -173,19 +125,6 @@ def _q_geo_tile_assign(spark, sf_dir):
                              pred_w=PRED_HW)
     return out.select("doc_id", F.col("xs").cast("long").alias("xs"),
                       F.col("ys").cast("long").alias("ys"))
-
-
-def _q_geo_knn(spark, sf_dir):
-    docs = _docs(spark, sf_dir).select("doc_id", "lat", "lon")
-    q = docs.filter(F.col("doc_id") < 20) \
-        .select(F.col("doc_id").alias("query_id"), "lat", "lon")
-    d = docs.select(F.col("doc_id").alias("data_id"), "lat", "lon")
-    # threshold=0: the gate exercises the RING path (the scale
-    # machinery) even though the gate-sized data would take the
-    # cost-based brute-force shortcut by default.
-    out = knn.knn(q, d, k=5, level=4, brute_force_threshold=0)
-    return out.select("query_id", "data_id",
-                      F.col("rank").cast("long").alias("rank"))
 
 
 @pandas_udf(LongType())
@@ -292,32 +231,30 @@ def _q_src_s2_quality_mosaic(spark, sf_dir):
 
 
 def _q_stats_moments(spark, sf_dir):
+    # Unmasked moments from the aggregation `cli stats` runs
+    # (stats.counter_agg).
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (ev.groupBy("event_type")
-            .agg(F.round(F.sum("value"), 4).alias("sum"),
-                 F.round(F.sum(F.col("value") * F.col("value")), 4)
-                 .alias("sum2"),
-                 F.count("value").alias("n"),
-                 F.round(F.min("value"), 6).alias("min"),
-                 F.round(F.max("value"), 6).alias("max")))
+    moments, _ = stats.counter_agg(ev, "value", ["event_type"])
+    return moments.select("event_type",
+                          F.round("sum", 4).alias("sum"),
+                          F.round("sum2", 4).alias("sum2"), "n",
+                          F.round("min", 6).alias("min"),
+                          F.round("max", 6).alias("max"))
 
 
 def _q_stats_hist_bins(spark, sf_dir):
-    # CounterAccumulator integer binning: truncation toward zero
-    # (stats_util.py:212-214 astype(int)).
+    # CounterAccumulator integer bins from stats.counter_agg: truncation
+    # toward zero (stats_util.py:212-214 astype(int)).
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (ev.select("event_type",
-                      F.col("value").cast("long").alias("bin"))
-            .groupBy("event_type", "bin").agg(F.count("*").alias("cnt")))
+    _, bins = stats.counter_agg(ev, "value", ["event_type"])
+    return bins.select("event_type", "bin", F.col("count").alias("cnt"))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "geo_pip_rectangles": _q_geo_pip_rectangles,
-        "geo_pip_pruned": _q_geo_pip_pruned,
         "geo_pip_convex": _q_geo_pip_convex,
         "geo_tile_assign": _q_geo_tile_assign,
-        "geo_knn": _q_geo_knn,
         "geo_split_bucket": _q_geo_split_bucket,
         "geo_tile_origin": _q_geo_tile_origin,
         "geo_cell_counts": _q_geo_cell_counts,
@@ -399,27 +336,6 @@ def _tile_oracle() -> str:
               OR utm_x + dx*{CELL_SIZE} - {half} >= ({xs_cases_hi}))
         AND NOT (utm_y - dy*{CELL_SIZE} + {half} <= ({ys_cases_lo})
               OR utm_y - dy*{CELL_SIZE} + {half} - {ext} >= ({ys_cases_hi}))
-    """
-
-
-def _knn_oracle() -> str:
-    return f"""
-      WITH pts AS (
-        SELECT doc_id, {_LAT} AS lat, {_LON} AS lon FROM documents
-      ), pairs AS (
-        SELECT q.doc_id AS query_id, d.doc_id AS data_id,
-               2.0 * 6371010.0 * asin(sqrt(
-                 pow(sin(radians(d.lat - q.lat) / 2), 2) +
-                 cos(radians(q.lat)) * cos(radians(d.lat)) *
-                 pow(sin(radians(d.lon - q.lon) / 2), 2))) AS dist_m
-        FROM pts q, pts d WHERE q.doc_id < 20
-      )
-      SELECT query_id, data_id, CAST(rnk AS BIGINT) AS rank FROM (
-        SELECT query_id, data_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY dist_m ASC, data_id ASC) AS rnk
-        FROM pairs)
-      WHERE rnk <= 5
     """
 
 
@@ -675,13 +591,9 @@ FROM en
 def oracle_sql() -> dict[str, str]:
     sqls = {
         "geo_pip_rectangles": _rect_oracle(),
-        # identical result contract to geo_pip_rectangles - the pruned
-        # scan must not change a single row.
-        "geo_pip_pruned": _rect_oracle(),
         "geo_pip_convex": (_halfplane(TRI[1], TRI[0]) + " UNION ALL "
                            + _halfplane(PENT[1], PENT[0])),
         "geo_tile_assign": _tile_oracle(),
-        "geo_knn": _knn_oracle(),
         "geo_split_bucket": _split_bucket_oracle(),
         "geo_cell_counts_hex": f"""
           SELECT {hex_cell_sql(_LAT, _LON, 6)} AS cell,

@@ -7,21 +7,17 @@ role* honestly from first principles:
 
   - pointy-top hexagonal grid in the (lon, lat) degree plane, axial
     coordinates (q, r) via the standard hex-pixel transform;
-  - aperture-7-style hierarchy: cell size shrinks by sqrt(7) per
-    resolution (H3's aperture), parent(cell) = encode(center, res-1)
-    with H3's own fuzzy-containment caveat (children are not strictly
-    inside parents - true of real H3 too);
-  - k-ring (hex-disk) neighbor generation, bbox covering, and a
-    latitude-aware ring distance certificate for kNN.
+  - aperture-7-style resolutions: cell size shrinks by sqrt(7) per
+    resolution (H3's aperture);
+  - bbox covering.
 
 IDs are NOT Uber-H3 binary compatible (documented limitation); every
-engine contract (spatial join, kNN, cell counts) is index-agnostic and
-certified by exact refine stages (PIP / haversine), so the index only
-has to be a consistent hierarchical space partitioner - which this is.
+engine contract (spatial join, cell counts) is index-agnostic and
+certified by the exact PIP refine, so the index only has to be a
+consistent space partitioner - which this is.
 
 Non-wrapping at the antimeridian: cells at lon +/-180 do not join
-across; kNN's brute-force straggler pass and the PIP refine keep
-results exact regardless.
+across; the PIP refine keeps join results exact regardless.
 
 Determinism contract: `latlon_to_cell_id` uses floor(x+0.5) rounding
 (half-up, NOT numpy banker's rounding) and the literal constants below,
@@ -40,8 +36,6 @@ SQRT3_3 = 0.5773502691896258   # sqrt(3)/3
 APERTURE = 2.6457513110645907  # sqrt(7)
 S0 = 8.0                       # res-0 circumradius in degrees
 OFF = 1 << 27                  # axial offset for non-negative packing
-EARTH_RADIUS_M = 6371010.0
-DEG_TO_RAD = 0.017453292519943295
 
 
 def size_for_res(res: int) -> float:
@@ -100,10 +94,6 @@ def latlon_to_cell_id(lat_deg, lon_deg, res: int) -> np.ndarray:
     return pack(q, r, res)
 
 
-def level_of(cell_id) -> np.ndarray:
-    return np.asarray(cell_id, dtype=np.int64) >> np.int64(56)
-
-
 def cell_center(cell_id) -> tuple[np.ndarray, np.ndarray]:
     """(lat_deg, lon_deg) of the cell center."""
     q, r, res = unpack(cell_id)
@@ -111,83 +101,6 @@ def cell_center(cell_id) -> tuple[np.ndarray, np.ndarray]:
     lon = s * (SQRT3 * q + SQRT3 / 2.0 * r)
     lat = s * 1.5 * r
     return lat, lon
-
-
-def parent(cell_id, res: int) -> np.ndarray:
-    """Coarser-res cell containing this cell's CENTER (H3 semantics:
-    fuzzy containment, like real H3 aperture-7 parents)."""
-    lat, lon = cell_center(cell_id)
-    return latlon_to_cell_id(lat, lon, res)
-
-
-def _disk_offsets(ring: int) -> np.ndarray:
-    """(n, 2) axial offsets of the hex disk of radius `ring`."""
-    out = []
-    for dq in range(-ring, ring + 1):
-        for dr in range(max(-ring, -dq - ring), min(ring, -dq + ring) + 1):
-            out.append((dq, dr))
-    return np.asarray(out, dtype=np.int64)
-
-
-def neighbors_ring(cell_id, res: int, ring: int) -> np.ndarray:
-    """(n_cells, disk_size) int64: hex disk of radius `ring` per cell.
-
-    Disk (filled), matching the s2 twin's (2r+1)^2 block contract: the
-    caller equi-joins candidates against these and dedups."""
-    q, r, _ = unpack(cell_id)
-    offs = _disk_offsets(ring)
-    qq = q[:, None] + offs[None, :, 0]
-    rr = r[:, None] + offs[None, :, 1]
-    return pack(qq, rr, res)
-
-
-def ring_bound_m(cell_id, res: int, ring: int) -> np.ndarray:
-    """Per-cell conservative lower bound (meters) on the great-circle
-    distance from any point in the cell to any point OUTSIDE the hex
-    disk of radius `ring` around it.
-
-    Planar: outside the disk means hex distance >= ring+1 from the
-    center cell, and the minimum center-to-center degree distance at
-    hex distance d is the disk INRADIUS 1.5*d*s (NOT the flat-to-flat
-    multiple - the former r1 constant sqrt(3)*d*s overclaimed by up to
-    ~15%); subtract one circumradius per cell for the two points'
-    offsets within their cells: B = 1.5*(ring+1)*s - 2s.
-    Sphere: for the bound-minimizing point |dlat| <= B (else |dlat|
-    alone exceeds B radians-worth), so both latitudes are below
-    phi_max = |lat_c| + B + s. With c = cos(phi_max)*(2/pi) (the 2/pi
-    is the exact same-latitude chord slack), distance_rad >=
-    max(|dlat|, c*|dlon|) over sqrt(dlat^2+dlon^2) >= B, minimized at
-    the branch balance point: >= B * c / sqrt(1 + c^2). (The r1 form
-    dropped the component-split factor entirely and was only saved by
-    the 2/pi slack; this form is a proof, not incidental headroom.)
-    The planar grid does NOT wrap, so the whole bound is additionally
-    capped by the true distance to the antimeridian and to the nearest
-    pole - beyond either "portal" a sphere path can be shorter than any
-    planar reasoning admits. Near the seam/poles the certificate
-    degrades to 0 and the kNN straggler pass takes over (exactness is
-    never lost, only the fast path).
-    """
-    lat, lon = cell_center(cell_id)
-    s = size_for_res(res)
-    r_m = EARTH_RADIUS_M
-    margin_m = 2.0 * s * DEG_TO_RAD * r_m  # query offset within its cell
-    b_deg = max(1.5 * (ring + 1) * s - 2.0 * s, 0.0)
-    phi_max = np.minimum(np.abs(lat) + b_deg + s, 89.999)
-    c = np.minimum(1.0, np.cos(np.radians(phi_max))) * (2.0 / np.pi)
-    planar = b_deg * DEG_TO_RAD * r_m * c / np.sqrt(1.0 + c * c)
-    # Distance to the antimeridian: arcsin(cos(lat) sin(dlon)) >=
-    # cos(lat) sin(dlon) for dlon <= 90 deg.
-    dlon_am = np.clip(180.0 - np.abs(lon), 0.0, 90.0)
-    am_cap = (np.cos(np.radians(lat))
-              * np.sin(np.radians(dlon_am)) * r_m) - margin_m
-    pole_cap = (90.0 - np.abs(lat)) * DEG_TO_RAD * r_m - margin_m
-    return np.maximum(np.minimum(np.minimum(planar, am_cap), pole_cap), 0.0)
-
-
-def min_width_rad(res: int) -> float:
-    """Equatorial flat-to-flat width in radians (schedule sizing only;
-    the exact certificate is the latitude-aware `ring_bound_m`)."""
-    return SQRT3 * size_for_res(res) * DEG_TO_RAD
 
 
 def cover_bbox(lat_min, lat_max, lon_min, lon_max, res: int) -> np.ndarray:

@@ -1,4 +1,4 @@
-"""Vectorized S2 cell-id encoding/decoding in pure numpy.
+"""Vectorized S2 cell-id encoding in pure numpy.
 
 Implements the public S2 geometry cell-id scheme (s2geometry.io: cube faces
 -> quadratic (u,v)->(s,t) transform -> 30-level Hilbert quadtree, 64-bit ids
@@ -10,8 +10,7 @@ Used for:
     (call site /root/reference/geeflow/export_beam_tfds.py:99-109; the
     function itself is absent from the open-source release, so semantics are
     the standard S2 leaf->parent cell id),
-  - cell-keyed spatial joins (cover both sides, equi-join, exact refine),
-  - cell-ring-expansion kNN (BASELINE.json north_rule).
+  - cell-keyed spatial joins (cover both sides, equi-join, exact refine).
 
 All public functions accept/return numpy arrays (uint64 for cell ids).
 """
@@ -37,6 +36,7 @@ _POS_TO_ORIENTATION = np.array(
     [SWAP_MASK, 0, 0, INVERT_MASK + SWAP_MASK], dtype=np.uint64)
 
 _lookup_pos = np.zeros(1 << (2 * LOOKUP_BITS + 2), dtype=np.uint64)
+# The decode table; the decoder that reads it is tests/test_s2.py's.
 _lookup_ij = np.zeros(1 << (2 * LOOKUP_BITS + 2), dtype=np.uint64)
 
 
@@ -64,7 +64,6 @@ for _o in range(4):
 # S2 metric constants (radians on the unit sphere, divide by 2^level).
 MIN_WIDTH_DERIV = 2 * np.sqrt(2.0) / 3.0          # kMinWidth
 MAX_DIAG_DERIV = 2.438654594434021                # kMaxDiag
-EARTH_RADIUS_M = 6371010.0
 
 
 def min_width_rad(level: int) -> float:
@@ -100,36 +99,12 @@ def xyz_to_face_uv(xyz):
     return face, u, v
 
 
-def face_uv_to_xyz(face, u, v):
-    """(face, u, v) -> xyz (not normalized), vectorized."""
-    face = np.asarray(face)
-    u = np.asarray(u, dtype=np.float64)
-    v = np.asarray(v, dtype=np.float64)
-    ones = np.ones_like(u)
-    x = np.select([face == 0, face == 1, face == 2,
-                   face == 3, face == 4, face == 5],
-                  [ones, -u, -u, -ones, v, v])
-    y = np.select([face == 0, face == 1, face == 2,
-                   face == 3, face == 4, face == 5],
-                  [u, ones, -v, -v, -ones, u])
-    z = np.select([face == 0, face == 1, face == 2,
-                   face == 3, face == 4, face == 5],
-                  [v, v, ones, -u, -u, -ones])
-    return np.stack([x, y, z], axis=-1)
-
-
 def uv_to_st(u):
     """Quadratic projection u -> s in [0,1] (S2_QUADRATIC_PROJECTION)."""
     u = np.asarray(u, dtype=np.float64)
     pos = u >= 0
     return np.where(pos, 0.5 * np.sqrt(1 + 3 * np.where(pos, u, 0)),
                     1 - 0.5 * np.sqrt(1 - 3 * np.where(pos, 0, u)))
-
-
-def st_to_uv(s):
-    s = np.asarray(s, dtype=np.float64)
-    return np.where(s >= 0.5, (1.0 / 3.0) * (4 * s * s - 1),
-                    (1.0 / 3.0) * (1 - 4 * (1 - s) * (1 - s)))
 
 
 def st_to_ij(s):
@@ -154,26 +129,6 @@ def face_ij_to_cell_id(face, i, j):
         pos |= (bits >> np.uint64(2)) << np.uint64(k * 2 * LOOKUP_BITS)
         bits &= np.uint64(SWAP_MASK | INVERT_MASK)
     return (n + pos) * np.uint64(2) + np.uint64(1)
-
-
-def cell_id_to_face_ij(cell_id):
-    """Leaf-aligned decode: cell id -> (face, i, j, orientation-free)."""
-    cell_id = np.asarray(cell_id).astype(np.uint64)
-    face = (cell_id >> np.uint64(POS_BITS)).astype(np.int64)
-    pos = (cell_id & np.uint64((1 << POS_BITS) - 1)) >> np.uint64(1)
-    bits = (face & SWAP_MASK).astype(np.uint64)
-    i = np.zeros_like(cell_id)
-    j = np.zeros_like(cell_id)
-    nbits_mask = np.uint64((1 << (2 * LOOKUP_BITS)) - 1)
-    for k in range(7, -1, -1):
-        bits += ((pos.astype(np.uint64) >> np.uint64(k * 2 * LOOKUP_BITS))
-                 & nbits_mask) << np.uint64(2)
-        bits = _lookup_ij[bits]
-        i |= (bits >> np.uint64(LOOKUP_BITS + 2)) << np.uint64(k * LOOKUP_BITS)
-        j |= ((bits >> np.uint64(2)) & np.uint64((1 << LOOKUP_BITS) - 1)) \
-            << np.uint64(k * LOOKUP_BITS)
-        bits &= np.uint64(SWAP_MASK | INVERT_MASK)
-    return face, i.astype(np.int64), j.astype(np.int64)
 
 
 def latlon_to_cell_id(lat_deg, lon_deg, level: int = MAX_LEVEL):
@@ -219,65 +174,6 @@ def parent(cell_id, level: int):
     # (id & -new_lsb) | new_lsb, with unsigned two's complement.
     neg = (~new_lsb) + np.uint64(1)
     return (cell_id & neg) | new_lsb
-
-
-def level_of(cell_id):
-    """Level of cell ids, vectorized (position of lowest set bit)."""
-    cell_id = np.asarray(cell_id).astype(np.uint64)
-    lsb = cell_id & ((~cell_id) + np.uint64(1))
-    # log2(lsb) is exact for powers of two below 2^53... use bit counting.
-    shift = np.zeros(cell_id.shape, dtype=np.int64)
-    v = lsb.copy()
-    for b in (32, 16, 8, 4, 2, 1):
-        big = v >= (np.uint64(1) << np.uint64(b))
-        shift += np.where(big, b, 0)
-        v = np.where(big, v >> np.uint64(b), v)
-    return MAX_LEVEL - shift // 2
-
-
-def cell_center_st(cell_id):
-    """(face, s, t) of the cell center, vectorized."""
-    cell_id = np.asarray(cell_id).astype(np.uint64)
-    face, i, j = cell_id_to_face_ij(cell_id)
-    lsb = cell_id & ((~cell_id) + np.uint64(1))
-    # Center correction: leaf decode gives the leaf containing the Hilbert
-    # curve entry; the true center in ij units is (i & -size) + size/2 where
-    # size = lsb in ij units = sqrt(lsb>>1)... derive from level instead.
-    lvl = level_of(cell_id)
-    size = (np.int64(1) << (MAX_LEVEL - lvl).astype(np.int64))
-    i_c = (i & ~(size - 1)) + size // 2
-    j_c = (j & ~(size - 1)) + size // 2
-    s = (i_c.astype(np.float64)) / (1 << MAX_LEVEL)
-    t = (j_c.astype(np.float64)) / (1 << MAX_LEVEL)
-    return face, s, t
-
-
-def neighbors_ring(cell_id, level: int, ring: int):
-    """All cells at `level` with Chebyshev ij-distance <= ring (the full
-    (2r+1)^2 block), vectorized over an array of cell ids.
-
-    Cross-face neighbors are produced by projecting the offset cell-center
-    (s,t) (possibly outside [0,1]) through (u,v)->xyz and re-encoding - the
-    same geometric idea as S2's FromFaceIJWrap. Duplicates possible near
-    cube corners; callers should dedupe.
-
-    Returns array of shape (n, (2*ring+1)**2).
-    """
-    cell_id = np.atleast_1d(np.asarray(cell_id)).astype(np.uint64)
-    face, s, t = cell_center_st(cell_id)
-    step = 1.0 / (1 << level)
-    offsets = np.arange(-ring, ring + 1, dtype=np.float64) * step
-    # (n, k) grids of offset centers in st space.
-    s_off = s[:, None, None] + offsets[None, :, None]
-    t_off = t[:, None, None] + offsets[None, None, :]
-    s_off, t_off = np.broadcast_arrays(s_off, t_off)
-    face_b = np.broadcast_to(face[:, None, None], s_off.shape)
-    u = st_to_uv(s_off)
-    v = st_to_uv(t_off)
-    xyz = face_uv_to_xyz(face_b, u, v)
-    xyz = xyz / np.linalg.norm(xyz, axis=-1, keepdims=True)
-    ids = xyz_to_cell_id(xyz, level)
-    return ids.reshape(cell_id.shape[0], -1)
 
 
 def _bbox_samples(lat_min, lat_max, lon_min, lon_max, level: int):
@@ -342,13 +238,3 @@ def split_bucket(cell_ids) -> np.ndarray:
                         .hexdigest(), 16) % 10 for c in uniq],
                    dtype=np.int64)
     return out[inverse]
-
-
-def ring_bound_m(cell_id, level: int, ring: int,
-                 radius_m: float = 6371010.0):
-    """Per-cell lower bound (meters) to anything outside the (2r+1)^2
-    ring block - constant for S2 (cells have a global min width);
-    mirrors hex.ring_bound_m's interface for index-agnostic kNN."""
-    import numpy as np
-    n = len(np.asarray(cell_id))
-    return np.full(n, max(ring - 1, 0) * min_width_rad(level) * radius_m)

@@ -159,8 +159,7 @@ def join_points_regions(points: DataFrame, regions: pd.DataFrame,
                         level: int = 8,
                         region_cols: tuple = ("region_id",),
                         index: str = "s2",
-                        buffer_deg: float = 0.0,
-                        precomputed_cell: str | None = None) -> DataFrame:
+                        buffer_deg: float = 0.0) -> DataFrame:
     """Spatial inner join: point rows (`lat`, `lon`) x containing regions.
 
     One `mapInArrow` over the point side: cell encode, `RegionMatcher`,
@@ -168,12 +167,6 @@ def join_points_regions(points: DataFrame, regions: pd.DataFrame,
     except the cell key, then `region_id`, then the properties. Every
     matching (point, region) pair is returned (multiplicity preserved -
     `fc_get`-style first-match is a separate reducer, see `first_match`).
-
-    `precomputed_cell`: name of an existing level-`level` cell column
-    to use instead of re-encoding - the cell-clustered layout
-    (plans/layout.py) stores the fine cell at write time precisely so
-    reads don't pay the encode again (at 10^12 rows the read-time
-    re-encode would dwarf the join).
     """
     match = RegionMatcher(regions, level, index=index, buffer_deg=buffer_deg)
     keep = [c for c in regions.columns if c in region_cols and c != "region_id"]
@@ -182,9 +175,7 @@ def join_points_regions(points: DataFrame, regions: pd.DataFrame,
 
     cols = points.columns
     lat_ix, lon_ix = cols.index("lat"), cols.index("lon")
-    cell_ix = cols.index(precomputed_cell) if precomputed_cell else None
-    out_ix = [i for i, c in enumerate(cols)
-              if c not in ("cell", precomputed_cell)]
+    out_ix = [i for i, c in enumerate(cols) if c != "cell"]
     out_schema = StructType(
         [points.schema.fields[i] for i in out_ix]
         + [StructField("region_id", LongType())]
@@ -195,10 +186,7 @@ def join_points_regions(points: DataFrame, regions: pd.DataFrame,
         for rb in batches:
             la = arrow_np(rb, lat_ix, np.float64)
             lo = arrow_np(rb, lon_ix, np.float64)
-            if cell_ix is None:
-                cells = np.asarray(enc(la, lo, level)).astype(np.int64)
-            else:
-                cells = arrow_np(rb, cell_ix, np.int64)
+            cells = np.asarray(enc(la, lo, level)).astype(np.int64)
             pix, rid = match(cells, la, lo)
             if len(pix) == 0:
                 continue

@@ -122,9 +122,8 @@ def counter_agg(df: DataFrame, value_col: str, key_cols: list[str] = (),
     return moments, bins
 
 
-def counter_as_dict(moment_row: dict, bins_rows: list[tuple[int, int]],
-                    numeric: bool = True, to_int: bool = True,
-                    drop_support: bool = False) -> dict:
+def counter_as_dict(moment_row: dict, bins_rows: list[tuple[int, int]]
+                    ) -> dict:
     """Assembles the reference's CounterAccumulator.as_dict output
     (stats_util.py:225-241) from the two aggregation results.
 
@@ -135,34 +134,28 @@ def counter_as_dict(moment_row: dict, bins_rows: list[tuple[int, int]],
     c = {int(b): int(cnt) for b, cnt in bins_rows}
     if not c or not sum(c.values()):
         return {}
-    d = derive_moment_stats(moment_row) if numeric else {}
-    if not numeric:
-        d = {"sum": 0.0, "sum2": 0.0,
-             "n": int(sum(c.values())), "min": None, "max": None,
-             "size": int(sum(c.values()))}
+    d = derive_moment_stats(moment_row)
     d["n_masked"] = int(moment_row.get("n_masked", 0))
     # mode: most_common(1) - max count, first-inserted on ties; we pin
     # (count desc, bin asc) for determinism.
     d["mode"] = max(sorted(c), key=lambda k: c[k])
-    if numeric:
-        x, b = _hist(c, int(d["min"]), int(d["max"]))
-        d["bins_mean"] = _bins_mean(c)
-        d["bins_std"] = _bins_std(c)
-        if x is not None:
-            d["bins_median"] = hist_quantile(x, b, 0.5)
-            p25, p75 = hist_quantile(x, b, [0.25, 0.75])
-            d["bins_iqr"] = p75 - p25
-            d["bins_iqr_std"] = d["bins_iqr"] / 1.349
-            med = hist_quantile(x, b, 0.5)
-            ax = np.abs(np.array(x) - med)
-            ax, ab = zip(*sorted(zip(ax, b)))
-            d["bins_mad"] = hist_quantile(ax, ab, 0.5)
-            d["bins_mad_std"] = d["bins_mad"] * 1.4826
-    support = {"c": {str(k): v for k, v in sorted(c.items())},
-               "numeric": numeric, "to_int": to_int}
-    if not drop_support:
-        for k, v in support.items():
-            d[f"~{k}"] = v
+    x, b = _hist(c, int(d["min"]), int(d["max"]))
+    d["bins_mean"] = _bins_mean(c)
+    d["bins_std"] = _bins_std(c)
+    if x is not None:
+        d["bins_median"] = hist_quantile(x, b, 0.5)
+        p25, p75 = hist_quantile(x, b, [0.25, 0.75])
+        d["bins_iqr"] = p75 - p25
+        d["bins_iqr_std"] = d["bins_iqr"] / 1.349
+        med = hist_quantile(x, b, 0.5)
+        ax = np.abs(np.array(x) - med)
+        ax, ab = zip(*sorted(zip(ax, b)))
+        d["bins_mad"] = hist_quantile(ax, ab, 0.5)
+        d["bins_mad_std"] = d["bins_mad"] * 1.4826
+    # Support fields of a numeric, integer-binned counter.
+    d["~c"] = {str(k): v for k, v in sorted(c.items())}
+    d["~numeric"] = True
+    d["~to_int"] = True
     return d
 
 

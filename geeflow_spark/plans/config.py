@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from geeflow_spark.functions import times
 from geeflow_spark.operators import rasterize, reducers, spatial_join
+from geeflow_spark.session import job_description
 from geeflow_spark.sources import catalog
 from geeflow_spark.sources.registry import (DEFAULT_REGISTRY, Registry,
                                             TableSource)
@@ -255,7 +256,16 @@ def _fc_is_small(df: DataFrame) -> bool:
     # limit+1 head probe, NOT count(): a 10^9-row FC answers this from
     # its first partitions.
     limit = FC_BROADCAST_THRESHOLD
-    return limit > 0 and len(df.select(F.lit(1)).head(limit + 1)) <= limit
+    if limit <= 0:
+        return False
+    with job_description(df.sparkSession, "geeflow.plans.config.fc_probe"):
+        return len(df.select(F.lit(1)).head(limit + 1)) <= limit
+
+
+def _fc_to_pandas(df: DataFrame):
+    """The small FC on the driver, for the broadcast paths."""
+    with job_description(df.sparkSession, "geeflow.plans.config.fc_collect"):
+        return df.toPandas()
 
 
 def run_pipeline(spark: SparkSession, config: dict,
@@ -326,7 +336,7 @@ def run_pipeline(spark: SparkSession, config: dict,
             idc = cfg.get("id_col", "index")
             if _fc_is_small(df):
                 joined = spatial_join.join_points_regions(
-                    labels, df.toPandas(),
+                    labels, _fc_to_pandas(df),
                     region_cols=("region_id", *props))
             else:
                 joined = spatial_join.join_points_regions_smj(
@@ -345,17 +355,19 @@ def run_pipeline(spark: SparkSession, config: dict,
             prop = prop[0] if isinstance(prop, (list, tuple)) else prop
             if _fc_is_small(df):
                 out[name] = rasterize.rasterize_fc(
-                    labels, df.toPandas(), prop,
+                    labels, _fc_to_pandas(df), prop,
                     reducer=kw.get("reduce_fn", "first"))
             else:
                 grid = cfg.get("fc_grid")
                 if grid is None:
                     # one tiny action: max ROI extent -> each ROI covers
                     # <= 4 grid cells, features explode proportionally.
-                    g = labels.agg(F.max(
-                        F.greatest(F.col("cell_size") * F.col("width"),
-                                   F.col("cell_size") * F.col("height"))
-                    ).alias("g")).collect()[0]["g"]
+                    with job_description(
+                            spark, "geeflow.plans.config.roi_extent"):
+                        g = labels.agg(F.max(F.greatest(
+                            F.col("cell_size") * F.col("width"),
+                            F.col("cell_size") * F.col("height"))
+                        ).alias("g")).collect()[0]["g"]
                     # empty labels -> NULL max; any grid yields the same
                     # (empty) output, so fall back to a unit grid.
                     grid = float(g) if g is not None else 1.0

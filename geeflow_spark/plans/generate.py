@@ -32,8 +32,7 @@ from geeflow_spark.operators import spatial_join, splits
 
 def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
                       cell_level: int = 8, split_level: int = 9,
-                      tile_cell_size: float = 10.0, tile_width: int = 96,
-                      precomputed_cell: str | None = None
+                      tile_cell_size: float = 10.0, tile_width: int = 96
                       ) -> DataFrame:
     """The flagship query. Returns one row per (doc, containing region):
     doc_id, spans, lat, lon, region_id, gridcode, class_name,
@@ -58,16 +57,6 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
     inflated 30% from local[4] to local[16] on the old plan; see
     BENCH/BASELINE.md). The document side never shuffles; the only wide
     exchange is whatever aggregation the caller adds downstream.
-
-    `precomputed_cell`: name of a stored S2 cell column at a level >=
-    max(cell_level, split_level) - the cell-clustered layout
-    (plans/layout.py) writes one precisely so reads skip the trig-heavy
-    S2 encode: both the join cell and the split cell derive from the
-    stored id by parent() bit math. Combined with layout.read_cells
-    restricted to the regions' coarse cover, this is the pruned-scan
-    flagship: identical output (parent() is transitive), a fraction of
-    the scan. The column passes through to the output (it is part of
-    the doc schema).
     """
     match = spatial_join.RegionMatcher(regions, cell_level)
     keep = [c for c in ("gridcode", "class_name") if c in regions.columns]
@@ -87,8 +76,6 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
     doc_cols = [f.name for f in doc_fields]
     lat_ix = doc_cols.index("lat")
     lon_ix = doc_cols.index("lon")
-    pc_ix = (doc_cols.index(precomputed_cell)
-             if precomputed_cell is not None else None)
 
     # mapInArrow, not mapInPandas: the document payload (spans - nested
     # array<struct> columns) passes through as Arrow buffers and the
@@ -108,27 +95,8 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
                 continue
             la = spatial_join.arrow_np(rb, lat_ix, np.float64)
             lo = spatial_join.arrow_np(rb, lon_ix, np.float64)
-            if pc_ix is not None:
-                # stored fine cell: both levels are parent() bit math -
-                # no S2 encode at read time at all.
-                leaf = spatial_join.arrow_np(rb, pc_ix, np.int64)
-                # parent()'s lsb trick only goes COARSER: a stored cell
-                # coarser than either consumer level would yield a
-                # malformed finer id - and silently wrong join cells /
-                # md5 split buckets. Enforce the docstring contract at
-                # runtime (one vectorized min per Arrow batch, ~free).
-                need = max(cell_level, split_level)
-                have = int(s2.level_of(leaf).min())
-                if have < need:
-                    raise RuntimeError(
-                        f"precomputed_cell column {precomputed_cell!r} "
-                        f"holds level-{have} cells but generate_examples"
-                        f" needs level >= {need} (max of cell_level="
-                        f"{cell_level}, split_level={split_level}); "
-                        f"re-encode or store a finer cell")
-            else:
-                # ONE leaf encode serves both levels (parent = bit math).
-                leaf = s2.latlon_to_cell_id(la, lo)
+            # ONE leaf encode serves both levels (parent = bit math).
+            leaf = s2.latlon_to_cell_id(la, lo)
             cells = s2.parent(leaf, cell_level).astype(np.int64)
             doc_ix, rid = match(cells, la, lo)
             if len(doc_ix) == 0:

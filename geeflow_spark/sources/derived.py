@@ -6,7 +6,7 @@ the pre-registered parquet views - so oracle-checkable geo queries derive
 lat/lon/utm coordinates from `doc_id` with congruential arithmetic that is
 expressible IDENTICALLY in pyspark columns and ANSI SQL (exact in both:
 all intermediates < 2^63, divisions produce exactly-representable
-doubles). The general engine kernels (ray-casting PIP, ring kNN, tile
+doubles). The general engine kernels (ray-casting PIP, cell encodes, tile
 math) run on the Spark side; the SQL oracle recomputes the same answers
 through independent closed forms (interval logic, half-plane tests,
 explicit boundary constants), giving genuine cross-validation.

@@ -300,3 +300,44 @@ def test_fc_to_image_large_path_matches_broadcast(spark, monkeypatch):
     for i in range(12):
         assert list(s["raster"][i]["values"]) == list(b["raster"][i]["values"])
         assert list(s["raster"][i]["mask"]) == list(b["raster"][i]["mask"])
+
+
+@pytest.mark.parametrize("threshold", [cfg_mod.FC_BROADCAST_THRESHOLD, 0])
+def test_fc_driver_jobs_carry_layer_names(spark, monkeypatch, threshold):
+    # The FC-size probe, the small-FC collects and the max-ROI-extent
+    # collect run under `geeflow.plans.config.*` descriptions, on both
+    # FC-size paths; the caller's description is restored.
+    monkeypatch.setattr(cfg_mod, "FC_BROADCAST_THRESHOLD", threshold)
+    regions = synth.regions_pdf(8, radius_scale=3.0)
+    fc_src = TableSource("demo_fc3", None, bands=["gridcode"], kind="fc",
+                         loader=lambda s: s.createDataFrame(regions))
+    rois = spark.createDataFrame(pd.DataFrame({
+        "index": range(12),
+        "lat": np.linspace(-50, 40, 12), "lon": np.linspace(-120, 100, 12),
+        "x_min": np.linspace(-120, 100, 12),
+        "y_min": np.linspace(-50, 40, 12),
+        "cell_size": [0.5] * 12, "width": [8] * 12, "height": [6] * 12,
+    }))
+    c = _fc_config(fc_src, "fc_get", ["gridcode"])
+    c.sources.landcover = _fc_config(fc_src, "fc_to_image",
+                                     ["gridcode"]).sources.country
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def jobs():
+        seq = store.jobsList(None)
+        return [seq.apply(i) for i in range(seq.size())]
+
+    jobs_before = {j.jobId() for j in jobs()}
+    sc.setJobDescription("caller")
+    try:
+        out = cfg_mod.run_pipeline(spark, c, labels=rois)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    new = [j for j in jobs() if j.jobId() not in jobs_before]
+    descs = [j.description().get() if j.description().isDefined() else None
+             for j in new]
+    assert new and all(d and d.startswith("geeflow.plans.config.")
+                       for d in descs), descs
+    assert set(out) == {"country", "landcover"}

@@ -13,6 +13,82 @@ LAT = rng.uniform(-85, 85, 5000)
 LON = rng.uniform(-180, 180, 5000)
 
 
+def face_uv_to_xyz(face, u, v):
+    """(face, u, v) -> xyz (not normalized), vectorized."""
+    face = np.asarray(face)
+    u = np.asarray(u, dtype=np.float64)
+    v = np.asarray(v, dtype=np.float64)
+    ones = np.ones_like(u)
+    x = np.select([face == 0, face == 1, face == 2,
+                   face == 3, face == 4, face == 5],
+                  [ones, -u, -u, -ones, v, v])
+    y = np.select([face == 0, face == 1, face == 2,
+                   face == 3, face == 4, face == 5],
+                  [u, ones, -v, -v, -ones, u])
+    z = np.select([face == 0, face == 1, face == 2,
+                   face == 3, face == 4, face == 5],
+                  [v, v, ones, -u, -u, -ones])
+    return np.stack([x, y, z], axis=-1)
+
+
+def st_to_uv(s):
+    s = np.asarray(s, dtype=np.float64)
+    return np.where(s >= 0.5, (1.0 / 3.0) * (4 * s * s - 1),
+                    (1.0 / 3.0) * (1 - 4 * (1 - s) * (1 - s)))
+
+
+def cell_id_to_face_ij(cell_id):
+    """Leaf-aligned decode: cell id -> (face, i, j, orientation-free)."""
+    cell_id = np.asarray(cell_id).astype(np.uint64)
+    face = (cell_id >> np.uint64(s2.POS_BITS)).astype(np.int64)
+    pos = (cell_id & np.uint64((1 << s2.POS_BITS) - 1)) >> np.uint64(1)
+    bits = (face & s2.SWAP_MASK).astype(np.uint64)
+    i = np.zeros_like(cell_id)
+    j = np.zeros_like(cell_id)
+    nbits_mask = np.uint64((1 << (2 * s2.LOOKUP_BITS)) - 1)
+    for k in range(7, -1, -1):
+        bits += ((pos.astype(np.uint64)
+                  >> np.uint64(k * 2 * s2.LOOKUP_BITS))
+                 & nbits_mask) << np.uint64(2)
+        bits = s2._lookup_ij[bits]
+        i |= ((bits >> np.uint64(s2.LOOKUP_BITS + 2))
+              << np.uint64(k * s2.LOOKUP_BITS))
+        j |= ((bits >> np.uint64(2))
+              & np.uint64((1 << s2.LOOKUP_BITS) - 1)) \
+            << np.uint64(k * s2.LOOKUP_BITS)
+        bits &= np.uint64(s2.SWAP_MASK | s2.INVERT_MASK)
+    return face, i.astype(np.int64), j.astype(np.int64)
+
+
+def level_of(cell_id):
+    """Level of cell ids, vectorized (position of lowest set bit)."""
+    cell_id = np.asarray(cell_id).astype(np.uint64)
+    lsb = cell_id & ((~cell_id) + np.uint64(1))
+    # log2(lsb) is exact for powers of two below 2^53... use bit counting.
+    shift = np.zeros(cell_id.shape, dtype=np.int64)
+    v = lsb.copy()
+    for b in (32, 16, 8, 4, 2, 1):
+        big = v >= (np.uint64(1) << np.uint64(b))
+        shift += np.where(big, b, 0)
+        v = np.where(big, v >> np.uint64(b), v)
+    return s2.MAX_LEVEL - shift // 2
+
+
+def cell_center_st(cell_id):
+    """(face, s, t) of the cell center, vectorized."""
+    cell_id = np.asarray(cell_id).astype(np.uint64)
+    face, i, j = cell_id_to_face_ij(cell_id)
+    # The leaf decode gives the leaf the Hilbert curve enters the cell
+    # at; the center in ij units is (i & -size) + size/2.
+    lvl = level_of(cell_id)
+    size = (np.int64(1) << (s2.MAX_LEVEL - lvl).astype(np.int64))
+    i_c = (i & ~(size - 1)) + size // 2
+    j_c = (j & ~(size - 1)) + size // 2
+    s = (i_c.astype(np.float64)) / (1 << s2.MAX_LEVEL)
+    t = (j_c.astype(np.float64)) / (1 << s2.MAX_LEVEL)
+    return face, s, t
+
+
 def xyz_to_latlon(xyz):
     x, y, z = xyz[..., 0], xyz[..., 1], xyz[..., 2]
     lat = np.degrees(np.arctan2(z, np.sqrt(x * x + y * y)))
@@ -23,8 +99,8 @@ def xyz_to_latlon(xyz):
 def cell_id_to_center_latlon(cell_id):
     """Cell id -> (lat, lon) of the cell center, vectorized: the decoder
     the encode roundtrips are checked against."""
-    face, s, t = s2.cell_center_st(cell_id)
-    xyz = s2.face_uv_to_xyz(face, s2.st_to_uv(s), s2.st_to_uv(t))
+    face, s, t = cell_center_st(cell_id)
+    xyz = face_uv_to_xyz(face, st_to_uv(s), st_to_uv(t))
     xyz = xyz / np.linalg.norm(xyz, axis=-1, keepdims=True)
     return xyz_to_latlon(xyz)
 
@@ -41,7 +117,7 @@ def test_parent_consistency():
     for level in (3, 9, 17, 25):
         direct = s2.latlon_to_cell_id(LAT, LON, level)
         assert np.all(direct == s2.parent(leaf, level))
-        assert np.all(s2.level_of(direct) == level)
+        assert np.all(level_of(direct) == level)
 
 
 def test_center_recode_stable():
@@ -55,23 +131,6 @@ def test_parent_hierarchy_nested():
     c9 = s2.latlon_to_cell_id(LAT, LON, 9)
     c5 = s2.latlon_to_cell_id(LAT, LON, 5)
     assert np.all(s2.parent(c9, 5) == c5)
-
-
-def test_neighbors_ring_block():
-    c = s2.latlon_to_cell_id(np.array([47.37]), np.array([8.54]), 9)
-    ring1 = np.unique(s2.neighbors_ring(c, 9, 1))
-    assert c[0] in ring1 and len(ring1) == 9  # interior cell: full 3x3
-    ring2 = np.unique(s2.neighbors_ring(c, 9, 2))
-    assert set(ring1).issubset(set(ring2)) and len(ring2) == 25
-
-
-def test_neighbors_cross_face():
-    # lon=45 is a cube-face boundary; the ring must cross it seamlessly.
-    c = s2.latlon_to_cell_id(np.array([0.001]), np.array([44.9999]), 10)
-    ring = np.unique(s2.neighbors_ring(c, 10, 2))
-    assert len(ring) >= 20
-    la, lo = cell_id_to_center_latlon(ring)
-    assert (lo > 45).any() and (lo < 45).any()
 
 
 def test_cover_bbox_superset():
@@ -96,7 +155,7 @@ def test_antimeridian_and_poles_encode():
     lat = np.array([0.0, 0.0, 89.99, -89.99])
     lon = np.array([179.999, -179.999, 10.0, 10.0])
     ids = s2.latlon_to_cell_id(lat, lon, 12)
-    assert np.all(s2.level_of(ids) == 12)
+    assert np.all(level_of(ids) == 12)
     la, lo = cell_id_to_center_latlon(ids)
     assert np.abs(la - lat).max() < 0.1
 

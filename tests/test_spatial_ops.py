@@ -1,13 +1,13 @@
 """Spark-level tests: spatial join vs numpy oracle, tile assignment
-row-for-row vs the verbatim reference-loop oracle, kNN vs brute force,
-splits, span-sequence preservation through every shuffle-bearing op."""
+row-for-row vs the verbatim reference-loop oracle, splits, span-sequence
+preservation through every shuffle-bearing op."""
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
 from geeflow_spark.functions import geometry
-from geeflow_spark.operators import knn, spatial_join, splits, tiles
+from geeflow_spark.operators import spatial_join, splits, tiles
 from geeflow_spark.plans import generate
 from geeflow_spark.sources import synth
 
@@ -196,19 +196,6 @@ def test_tile_assignment_awkward_names(spark):
     assert got["id"].nunique() == 300
 
 
-def test_knn_matches_brute_force(spark):
-    docs = _docs(spark)
-    q = docs.limit(15).select(F.col("doc_id").alias("query_id"),
-                              "lat", "lon")
-    d = docs.select(F.col("doc_id").alias("data_id"), "lat", "lon")
-    got = knn.knn(q, d, k=4, level=6).select(
-        "query_id", "data_id", "rank").toPandas()
-    exp = knn.knn_brute_force(q, d, k=4).select(
-        "query_id", "data_id", "rank").toPandas()
-    assert set(map(tuple, got.itertuples(index=False))) == \
-        set(map(tuple, exp.itertuples(index=False)))
-
-
 def test_split_semantics(spark):
     import hashlib
     from geeflow_spark.functions import s2 as s2f
@@ -384,36 +371,6 @@ def test_join_points_regions_both_indexes(spark, index):
     ref_set = set(map(tuple, ref.select("doc_id", "region_id").toPandas()
                       .itertuples(index=False)))
     assert got == ref_set and len(got) > 0
-
-
-@_pytest.mark.parametrize("index", ["s2", "hex"])
-def test_knn_both_indexes_vs_brute_force(spark, index):
-    from geeflow_spark.operators import knn as knn_mod
-    docs = synth.docs(spark, 1500).select(
-        F.col("doc_id").alias("data_id"), "lat", "lon")
-    q = synth.docs(spark, 1500).filter(F.col("doc_id") < "doc0000000015") \
-        .select(F.col("doc_id").alias("query_id"), "lat", "lon")
-    got = knn_mod.knn(q, docs, k=4, level=4, index=index,
-                      brute_force_threshold=0) \
-        .select("query_id", "data_id", "rank").toPandas()
-    exp = knn_mod.knn_brute_force(q, docs, k=4) \
-        .select("query_id", "data_id", "rank").toPandas()
-    key = lambda df: sorted(map(tuple, df.itertuples(index=False)))  # noqa
-    assert key(got) == key(exp)
-
-
-def test_knn_cost_based_fast_path_identical(spark):
-    from geeflow_spark.operators import knn as knn_mod
-    docs = synth.docs(spark, 800).select(
-        F.col("doc_id").alias("data_id"), "lat", "lon")
-    q = synth.docs(spark, 800).filter(F.col("doc_id") < "doc0000000010") \
-        .select(F.col("doc_id").alias("query_id"), "lat", "lon")
-    ring = knn_mod.knn(q, docs, k=3, level=4, brute_force_threshold=0) \
-        .select("query_id", "data_id", "rank").toPandas()
-    fast = knn_mod.knn(q, docs, k=3, level=4) \
-        .select("query_id", "data_id", "rank").toPandas()
-    key = lambda df: sorted(map(tuple, df.itertuples(index=False)))  # noqa
-    assert key(ring) == key(fast)
 
 
 def test_synth_splitmix64_matches_numpy_twin(spark):

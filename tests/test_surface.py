@@ -33,20 +33,16 @@ UNREACHED_ALLOWLIST = {
     "geeflow_spark.functions.ccdc",
     "geeflow_spark.functions.coords",
     "geeflow_spark.functions.times",
-    "geeflow_spark.operators.knn",
     "geeflow_spark.operators.rasterize",
     "geeflow_spark.operators.reducers",
     "geeflow_spark.plans.assemble",
     "geeflow_spark.plans.config",
     "geeflow_spark.plans.labels",
-    "geeflow_spark.plans.layout",
     "geeflow_spark.plans.schema",
     "geeflow_spark.sources.catalog",
     "geeflow_spark.sources.derived",
     "geeflow_spark.sources.iceberg",
     "geeflow_spark.sources.registry",
-    "geeflow_spark.streaming",
-    "geeflow_spark.streaming.ingest",
 }
 
 
