@@ -3,7 +3,7 @@
 entry(spark)  - flagship: interleaved docs + derived geometry -> S2-cell
                 broadcast PIP join vs region polygons -> UTM tile origin ->
                 geographic split; spans preserved (BASELINE.json).
-queries()     - 11-query battery over the geo kernels (geo_*), the
+queries()     - 10-query battery over the geo kernels (geo_*), the
                 catalog sources (src_s2_*) and stats (stats_*); each has
                 a DuckDB oracle in oracle_sql() (same column names/types).
 oracle_sql()  - independent closed-form recomputations (interval logic,
@@ -26,12 +26,12 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType)
 
-from geeflow_spark.functions import hex as _hex
 from geeflow_spark.functions import s2 as _s2
 from geeflow_spark.functions import utm as _utm
 from geeflow_spark.operators import spatial_join, stats, tiles
 from geeflow_spark.plans import generate
 from geeflow_spark.sources import catalog, derived, synth
+from geeflow_spark.sources.registry import TableSource
 
 # ---------------------------------------------------------------------------
 # Fixed geo fixtures shared by Spark queries and SQL oracles.
@@ -173,14 +173,38 @@ def _q_geo_cell_counts(spark, sf_dir):
     return spatial_join.with_cell(docs, level=5).groupBy("cell").count()
 
 
-def _q_geo_cell_counts_hex(spark, sf_dir):
-    # Hex-twin index (north rule: H3 sibling next to S2): per-cell doc
-    # counts at res 6. ORACLED - hex_cell_sql recomputes the packed
-    # cell id in pure SQL (same literals, same floor(x+0.5) tie rule).
-    docs = _docs(spark, sf_dir).select("doc_id", "lat", "lon")
-    enc = spatial_join.with_cell(docs, level=6, index="hex")
-    return (enc.groupBy("cell").agg(F.count("*").alias("n"))
-            .select(F.col("cell").cast("long").alias("cell"), "n"))
+# The registry-driven ORACLE queries (src_s2_*) read a sentinel2_sr-shaped
+# table derived from the sandbox `events` table with congruential
+# arithmetic that both Spark and DuckDB compute exactly.
+DEMO_CLOUD_SQL = ("(((event_id * 2654435761) % 4294967296)"
+                  " / 4294967296.0 * 110.0)")
+DEMO_B4_SQL = "(100.0 + ((event_id * 7919) % 10000) / 10.0)"
+DEMO_B8_SQL = "(200.0 + ((event_id * 104729) % 10000) / 10.0)"
+DEMO_QA60_SQL = "((event_id * 40503 + 12345) % 4096)"
+
+
+def demo_s2_source(sf_dir: str) -> TableSource:
+    """`sentinel2_sr`-shaped TableSource derived from {sf_dir}/events:
+    scene_id=event_id, cell=user_id%50, cloud % / B4 / B8 / QA60 by the
+    DEMO_*_SQL arithmetic."""
+
+    def load(spark: SparkSession) -> DataFrame:
+        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+        eid = F.col("event_id")
+        return ev.select(
+            eid.alias("scene_id"),
+            (F.col("user_id") % 50).alias("cell"),
+            F.col("ts"),
+            (((eid * 2654435761) % 4294967296) / F.lit(4294967296.0)
+             * 110.0).alias("CLOUDY_PIXEL_PERCENTAGE"),
+            (F.lit(100.0) + ((eid * 7919) % 10000) / 10.0).alias("B4"),
+            (F.lit(200.0) + ((eid * 104729) % 10000) / 10.0).alias("B8"),
+            ((eid * 40503 + 12345) % 4096).alias("QA60"))
+
+    return TableSource(
+        name="sentinel2_sr_demo", path=None,
+        bands=["B4", "B8", "QA60"], vis_bands=["B4"],
+        filters=[("<=CLOUDY_PIXEL_PERCENTAGE", 100)], loader=load)
 
 
 def _q_src_s2_cloudfree_mosaic(spark, sf_dir):
@@ -189,7 +213,7 @@ def _q_src_s2_cloudfree_mosaic(spark, sf_dir):
     # clear scene per cell -> NDVI. Mirrors the reference's
     # filter_by_cloud_percentage + im_cloud_mask + mosaic flow
     # (ee_data.py:209-230) through the catalog mechanism.
-    src = catalog.demo_s2_source(sf_dir)
+    src = demo_s2_source(sf_dir)
     df = catalog.cloud_filtered(src, spark, 30.0)
     # QA60 bits 10 (opaque clouds) and 11 (cirrus) both clear.
     df = df.filter((F.col("QA60").bitwiseAND(1 << 10) == 0)
@@ -212,7 +236,7 @@ def _q_src_s2_quality_mosaic(spark, sf_dir):
     # wins); outputs are re-rounded to the exact 0.1 grid the synth
     # bands live on, so the float32 patch contract cannot smear them.
     from geeflow_spark.operators import reducers
-    src = catalog.demo_s2_source(sf_dir)
+    src = demo_s2_source(sf_dir)
     df = catalog.cloud_filtered(src, spark, 30.0)
     df = df.select(
         "cell", "ts", "scene_id",
@@ -258,7 +282,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "geo_split_bucket": _q_geo_split_bucket,
         "geo_tile_origin": _q_geo_tile_origin,
         "geo_cell_counts": _q_geo_cell_counts,
-        "geo_cell_counts_hex": _q_geo_cell_counts_hex,
         "src_s2_cloudfree_mosaic": _q_src_s2_cloudfree_mosaic,
         "src_s2_quality_mosaic": _q_src_s2_quality_mosaic,
         "stats_moments": _q_stats_moments,
@@ -361,44 +384,20 @@ def _split_bucket_oracle() -> str:
     """
 
 
-def hex_cell_sql(lat_sql: str, lon_sql: str, res: int) -> str:
-    """Scalar SQL expression (DuckDB) computing the packed hex cell id.
-
-    Mirrors hex.latlon_to_axial + _cube_round + pack exactly: identical
-    IEEE-754 operation sequence, identical literals, floor(x+0.5)."""
-    s = repr(_hex.size_for_res(res))
-    x = f"(({_hex.SQRT3_3!r} * ({lon_sql}) - ({lat_sql}) / 3.0) / {s})"
-    z = f"((2.0 / 3.0 * ({lat_sql})) / {s})"
-    y = f"(-{x} - {z})"
-    rx = f"floor({x} + 0.5)"
-    ry = f"floor({y} + 0.5)"
-    rz = f"floor({z} + 0.5)"
-    dx = f"abs({rx} - {x})"
-    dy = f"abs({ry} - {y})"
-    dz = f"abs({rz} - {z})"
-    fq = (f"(CASE WHEN {dx} > {dy} AND {dx} > {dz} "
-          f"THEN -{ry} - {rz} ELSE {rx} END)")
-    fr = (f"(CASE WHEN NOT ({dx} > {dy} AND {dx} > {dz}) "
-          f"AND NOT ({dy} > {dz}) THEN -{rx} - {ry} ELSE {rz} END)")
-    return (f"(CAST({res} AS BIGINT) * 72057594037927936"  # << 56
-            f" + (CAST({fq} AS BIGINT) + {_hex.OFF}) * 268435456"  # << 28
-            f" + (CAST({fr} AS BIGINT) + {_hex.OFF}))")
-
-
 def cell_sql_query(src: str, lat_sql: str, lon_sql: str, level: int,
                    keep: str = "doc_id") -> str:
     """ANSI-SQL (DuckDB) recomputation of `s2.latlon_to_cell_id` at `level`.
 
     Returns a full SELECT producing (`keep` columns, cell BIGINT) from
     `src`, where `cell` is bit-for-bit the signed-int64 reinterpretation
-    of the S2 cell id `functions.s2` computes. Determinism contract (same
-    spirit as hex_cell_sql): identical op sequence — unit-sphere xyz,
-    cube-face selection, quadratic (u,v)->(s,t), trunc to 30-bit ij,
-    then `level` explicit Hilbert rounds driven by s2's
-    _POS_TO_IJ/_POS_TO_ORIENTATION tables (inverted to IJ->POS CASE
-    expressions). Floor-boundary flips from <=1-ulp libm sin/cos
-    differences would need s*2^level within ~1e-14 of an integer —
-    validated 0 mismatches on 1.2M points at levels 5/6/8.
+    of the S2 cell id `functions.s2` computes. Determinism contract:
+    identical op sequence — unit-sphere xyz, cube-face selection,
+    quadratic (u,v)->(s,t), trunc to 30-bit ij, then `level` explicit
+    Hilbert rounds driven by s2's _POS_TO_IJ/_POS_TO_ORIENTATION tables
+    (inverted to IJ->POS CASE expressions). Floor-boundary flips from
+    <=1-ulp libm sin/cos differences would need s*2^level within ~1e-14
+    of an integer — validated 0 mismatches on 1.2M points at levels
+    5/6/8.
 
     Levels <= 15 keep the generated SQL small (one CTE pair per round).
     """
@@ -595,11 +594,6 @@ def oracle_sql() -> dict[str, str]:
                            + _halfplane(PENT[1], PENT[0])),
         "geo_tile_assign": _tile_oracle(),
         "geo_split_bucket": _split_bucket_oracle(),
-        "geo_cell_counts_hex": f"""
-          SELECT {hex_cell_sql(_LAT, _LON, 6)} AS cell,
-                 COUNT(*) AS n
-          FROM documents GROUP BY 1
-        """,
         # Bit-exact SQL recomputation of the level-5 S2 encode (cube
         # face + quadratic st + 5 explicit Hilbert rounds); validated
         # 0 mismatches on 1.2M points vs the numpy kernel.
@@ -614,10 +608,10 @@ def oracle_sql() -> dict[str, str]:
         "src_s2_cloudfree_mosaic": f"""
           WITH s2 AS (
             SELECT event_id AS scene_id, user_id % 50 AS cell, ts,
-                   {catalog.DEMO_CLOUD_SQL} AS cpp,
-                   {catalog.DEMO_B4_SQL} AS B4,
-                   {catalog.DEMO_B8_SQL} AS B8,
-                   {catalog.DEMO_QA60_SQL} AS QA60
+                   {DEMO_CLOUD_SQL} AS cpp,
+                   {DEMO_B4_SQL} AS B4,
+                   {DEMO_B8_SQL} AS B8,
+                   {DEMO_QA60_SQL} AS QA60
             FROM events),
           f AS (
             SELECT * FROM s2
@@ -636,9 +630,9 @@ def oracle_sql() -> dict[str, str]:
         "src_s2_quality_mosaic": f"""
           WITH s2 AS (
             SELECT event_id AS scene_id, user_id % 50 AS cell, ts,
-                   {catalog.DEMO_CLOUD_SQL} AS cpp,
-                   {catalog.DEMO_B4_SQL} AS B4,
-                   {catalog.DEMO_B8_SQL} AS B8
+                   {DEMO_CLOUD_SQL} AS cpp,
+                   {DEMO_B4_SQL} AS B4,
+                   {DEMO_B8_SQL} AS B8
             FROM events),
           f AS (SELECT * FROM s2 WHERE cpp <= 100 AND cpp < 30),
           r AS (

@@ -2,7 +2,7 @@
 
 Re-implements the *semantics* of the reference's grid/ROI model
 (/root/reference/geeflow/coords.py:42-215 `UtmGridMapping`,
-:218-250 `get_geotransform_info`, :31-39 lat/lon ROI) on top of our own
+:31-39 lat/lon ROI) on top of our own
 pure-numpy UTM module. All fields vectorize: `utm_x_min`/`utm_y_min`
 (and width/height) may be numpy arrays, matching the reference's
 vectorized test (coords_test.py:76-84).
@@ -20,14 +20,11 @@ Key pinned behaviors (reference file:line):
     midpoint (coords.py:130-135)
   - rescale keeps outer extent, int() truncation of new W/H, re-snap via
     round (coords.py:180-189)
-  - get_geotransform_info EPSG by arithmetic:
-    (32600 if lat>=0 else 32700) + floor((lon+180)/6)+1 (coords.py:238)
 """
 
 from __future__ import annotations
 
 import dataclasses
-import math
 from collections.abc import Sequence
 
 import numpy as np
@@ -35,10 +32,6 @@ import numpy as np
 from geeflow_spark.functions import utm as utm_lib
 
 DEG_AT_EQUATOR_IN_M = 111_111.111
-
-# Grid-size helper constants (reference geeflow/utils.py:31-53).
-LAT_TO_METERS = 111694
-LON_TO_METERS = 112000
 
 
 def get_lat_lon_roi_bounds(lat, lon, width_m=None, width_deg=None):
@@ -50,16 +43,6 @@ def get_lat_lon_roi_bounds(lat, lon, width_m=None, width_deg=None):
     width_deg = width_deg or width_m / DEG_AT_EQUATOR_IN_M
     delta = width_deg / 2
     return (lon - delta, lat - delta, lon + delta, lat + delta)
-
-
-def get_utm_grid_size(start_lat, start_lon, end_lat, end_lon, width):
-    """Number of grid cells covering a lat/lon box (reference utils.py:35-53)."""
-    max_cos = max(abs(math.cos(math.radians(start_lat))),
-                  abs(math.cos(math.radians(end_lat))))
-    x_num = math.ceil(LON_TO_METERS * max_cos * (end_lon - start_lon) / width)
-    # 5000 m offset headroom, as in the reference.
-    y_num = math.ceil((LAT_TO_METERS * (end_lat - start_lat) + 5000) / width)
-    return x_num, y_num
 
 
 @dataclasses.dataclass
@@ -183,58 +166,3 @@ class UtmGridMapping:
             int(self.height * self.cell_size / cell_size),
             utm_x_min=round(self.utm_x_min / cell_size) * cell_size,
             utm_y_min=round(self.utm_y_min / cell_size) * cell_size)
-
-
-def get_geotransform_info(lat: float, lon: float, img_width_m: float,
-                          resolution: float) -> dict:
-    """Geotransform + EPSG for a center point (reference coords.py:218-250).
-
-    The reference uses pyproj for the forward transform; we use our own
-    pure-numpy UTM series (agrees to <1e-3 m).
-    """
-    epsg_code = (32600 if lat >= 0 else 32700) + (math.floor((lon + 180) / 6) + 1)
-    zone_number = epsg_code % 100
-    utm_x, utm_y, _, _ = utm_lib.from_latlon(
-        lat, lon, force_zone_number=zone_number)
-    top_left_x = utm_x - (img_width_m / 2)
-    top_left_y = utm_y + (img_width_m / 2)
-    geotransform = (top_left_x, resolution, 0, top_left_y, 0, -resolution)
-    return dict(geotransform=geotransform, epsg=f"EPSG:{epsg_code}")
-
-
-def get_utm_zones() -> list[tuple[int, int, int, int]]:
-    """All UTM zone tiles (start_lat, start_lon, lat_step, lon_step).
-
-    Exact same enumeration semantics (including every exception branch and
-    the resulting zone list) as reference ee_export_utils.py:67-104:
-    8-degree bands from -72 to 80, 6-degree zones, with the 31V/32V
-    correction and the Svalbard X-band merges. The lon==24 branch
-    reproduces the reference's (start_lon=12, lon_step=21) output verbatim
-    so downstream zone worklists match row-for-row.
-    """
-    lat_step_default, lon_step_default = 8, 6
-    zones = []
-    for lat in range(-72, 80, lat_step_default):
-        for lon in range(-180, 180, lon_step_default):
-            start_lon, start_lat = lon, lat
-            lon_step, lat_step = lon_step_default, lat_step_default
-            if lat == 56:  # 31V narrowed / 32V widened.
-                if lon == 0:
-                    lon_step = 3
-                elif lon == 6:
-                    lon_step = 9
-                    start_lon -= 3
-            elif lat == 72:  # X band: 12 deg tall, 31X/33X/35X/37X merges.
-                lat_step = 12
-                if lon == 0:
-                    lon_step = 9
-                elif lon in (6, 18, 30):
-                    continue
-                elif lon == 12:
-                    start_lon, lon_step = 9, 12
-                elif lon == 24:
-                    start_lon, lon_step = 12, 21
-                elif lon == 36:
-                    start_lon, lon_step = 33, 9
-            zones.append((start_lat, start_lon, lat_step, lon_step))
-    return zones

@@ -177,7 +177,7 @@ def parent(cell_id, level: int):
 
 
 def _bbox_samples(lat_min, lat_max, lon_min, lon_max, level: int):
-    """Flat (lat, lon) sample grid of `cover_bbox`: the rect padded by
+    """Flat (lat, lon) sample grid of one box's cover: the rect padded by
     half the max cell diagonal, sampled at half the min cell width, so
     every cell whose interior intersects the rect contributes at least
     one sample (its inscribed disc of radius min_width/2 has center
@@ -194,23 +194,16 @@ def _bbox_samples(lat_min, lat_max, lon_min, lon_max, level: int):
     return glat.ravel(), glon.ravel()
 
 
-def cover_bbox(lat_min, lat_max, lon_min, lon_max, level: int):
-    """Cell ids at `level` intersecting the lat/lon rectangle (1-D array).
-
-    Guaranteed superset via dense sampling (`_bbox_samples`). Overcover
-    is harmless - the exact geometry test refines after the cell-key
-    join. Intended for small regions (polygons / ROIs); cost is
-    O((extent/cell_width)^2).
-    """
-    glat, glon = _bbox_samples(lat_min, lat_max, lon_min, lon_max, level)
-    return np.unique(latlon_to_cell_id(glat, glon, level))
-
-
 def cover_bboxes(boxes, level: int):
-    """`cover_bbox` of every (lat_min, lat_max, lon_min, lon_max) row of
-    `boxes` from ONE encode over the concatenated sample grids. Returns
-    (cells, box index): grouped by box in row order, each box's cells
-    ascending and unique - the concatenation of the per-box covers."""
+    """Cell ids at `level` intersecting each (lat_min, lat_max, lon_min,
+    lon_max) row of `boxes`, from ONE encode over the concatenated sample
+    grids (`_bbox_samples`). Returns (cells, box index): grouped by box in
+    row order, each box's cells ascending and unique.
+
+    Guaranteed superset via dense sampling. Overcover is harmless - the
+    exact geometry test refines after the cell-key join. Intended for
+    small regions (polygons / ROIs); cost is O((extent/cell_width)^2)
+    per box."""
     grids = [_bbox_samples(*box, level) for box in boxes]
     if not grids:
         return np.array([], np.uint64), np.array([], np.int64)
@@ -234,7 +227,7 @@ def split_bucket(cell_ids) -> np.ndarray:
     import hashlib
     cell_ids = np.atleast_1d(np.asarray(cell_ids).astype(np.uint64))
     uniq, inverse = np.unique(cell_ids, return_inverse=True)
-    out = np.array([int(hashlib.md5(str(int(c)).encode("utf-8"))
-                        .hexdigest(), 16) % 10 for c in uniq],
+    out = np.array([int.from_bytes(hashlib.md5(str(int(c)).encode("utf-8"))
+                                   .digest(), "big") % 10 for c in uniq],
                    dtype=np.int64)
     return out[inverse]

@@ -53,34 +53,6 @@ def _relativedelta_add(d: datetime.datetime, years: int = 0,
             + datetime.timedelta(days=days))
 
 
-def incremental_date_list(start, n, *, years=0, months=0, days=0):
-    """n datetimes at the given increments (times.py:79-90)."""
-    assert years or months or days, \
-        "At least one of the inc units should be set."
-    if isinstance(start, (float, int, np.number)):
-        start = millis_to_datetime(start)
-    elif isinstance(start, str):
-        start = to_datetime(start, DATE_FORMAT)
-    else:
-        start = make_tza(start)
-    return [_relativedelta_add(start, years=i * years, months=i * months,
-                               days=i * days) for i in range(n)]
-
-
-def get_date_ranges(start, n: int, months: int = 0, months_skip: int = 0,
-                    days: int = 0):
-    """n (date_str, months, days) tuples (times.py:93-99)."""
-    return [(to_datestr(x), months, days)
-            for x in incremental_date_list(start, n,
-                                           months=months + months_skip,
-                                           days=days)]
-
-
-def adjust_for_hemisphere(data, north, south):
-    """Hemisphere-dependent config value (times.py:117-121)."""
-    return north if data["lat"] >= 0 else south
-
-
 def outer_dates(date_ranges, to_str=True):
     """Min start / max end envelope over (start, months) ranges
     (times.py:124-131) - the predicate pushed down to source scans."""

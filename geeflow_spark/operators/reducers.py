@@ -2,10 +2,10 @@
 
 Spark-native forms of the reference's ImageCollection reducers
 (/root/reference/geeflow/ee_algo.py:246-331 `get_ic_reduce_fn`):
-mosaic / mean / median / max / min / mode / first / percentile /
-with_most_valid_pixels_in_band_0, plus the date-range sampler
-(ee_algo.py:394-428 `ic_sample_date_ranges`) with its exact midpoint
-timestamp formula `int(start.ts + end.ts) // 2 * 1000` (ee_algo.py:421).
+mosaic / qualityMosaic / mean / median / max / min / mode / first, plus
+the date-range sampler (ee_algo.py:394-428 `ic_sample_date_ranges`) with
+its exact midpoint timestamp formula `int(start.ts + end.ts) // 2 * 1000`
+(ee_algo.py:421).
 
 Input model: scenes(cell long, ts long(ms), B<i> array<float>,
 mask array<tinyint>) - one row per (footprint cell, timestep), pixel
@@ -276,141 +276,3 @@ def sample_date_ranges(scenes: DataFrame, band_cols: list[str],
     for o in outs[1:]:
         out = out.unionByName(o)
     return out
-
-
-def most_valid_pixels(scenes: DataFrame, band_cols: list[str],
-                      key_cols: list[str] = ("cell",),
-                      mask_col: str = "mask",
-                      mosaic: bool = False) -> DataFrame:
-    """with_most_valid_pixels_in_band_0[_mosaic] (ee_algo.py:308-330):
-    count valid pixels of band 0 per scene; keep the argmax scene, or
-    mosaic sorted ascending by count (best on top)."""
-    counted = scenes.withColumn(
-        "_nvalid",
-        F.aggregate(F.col(mask_col), F.lit(0),
-                    lambda a, m: a + (m > 0).cast("int")))
-    if not mosaic:
-        w = Window.partitionBy(*list(key_cols)).orderBy(
-            F.col("_nvalid").desc(), F.col("ts").desc(),
-            F.col("scene_id").desc())
-        return counted.withColumn("_rn", F.row_number().over(w)) \
-            .filter(F.col("_rn") == 1).drop("_rn", "_nvalid")
-    # mosaic: ascending sort -> later (higher count) on top; reuse the
-    # ordered fold with _nvalid as the order key by mapping it onto ts.
-    reordered = counted.withColumn("ts", F.col("_nvalid").cast("long")) \
-        .drop("_nvalid")
-    return _ordered_first_nonnull(reordered, band_cols, list(key_cols),
-                                  mask_col, newest_first=True)
-
-
-def percentile_reduce(scenes: DataFrame, band_cols: list[str],
-                      percentiles=(10, 25, 50, 75, 90),
-                      key_cols: list[str] = ("cell",),
-                      mask_col: str = "mask") -> DataFrame:
-    """Per-pixel exact percentiles across scenes (ee_algo.py:305-307,
-    default percentiles [10, 25, 50, 75, 90]). Output columns
-    `B<i>_p<q>` arrays. Exact (not approx) to match EE's reducer on the
-    small per-pixel samples."""
-    from pyspark.sql.types import (ArrayType, FloatType, StructField,
-                                   StructType)
-    key_cols = list(key_cols)
-    key_fields = [scenes.schema[k] for k in key_cols]
-    out_fields = [StructField(f"{b}_p{q}", ArrayType(FloatType()))
-                  for b in band_cols for q in percentiles]
-    schema = StructType(key_fields + out_fields)
-
-    def _reduce(pdf: pd.DataFrame) -> pd.DataFrame:
-        masks = np.stack(pdf[mask_col].to_numpy()) > 0  # (T, P)
-        row = {k: [pdf[k].iloc[0]] for k in key_cols}
-        for b in band_cols:
-            arr = np.stack(pdf[b].to_numpy()).astype(np.float64)
-            marr = np.where(masks, arr, np.nan)
-            with np.errstate(all="ignore"):
-                for q in percentiles:
-                    v = np.nanpercentile(marr, q, axis=0)
-                    row[f"{b}_p{q}"] = [np.nan_to_num(v)
-                                        .astype(np.float32).tolist()]
-        return pd.DataFrame(row)
-
-    return scenes.groupBy(*key_cols).applyInPandas(_reduce, schema)
-
-
-def reduce_resolution(pixels: DataFrame, *, factor: int, hw: int,
-                      band_cols: list[str], mode: str = "mean",
-                      key_cols: list[str] = ("cell",),
-                      mask_col: str = "mask") -> DataFrame:
-    """reduceResolutionTo{Mean,MeanAndStd,MeanAndStdAndMax,Max}
-    (ee_algo.py:270-304): downsample each hw x hw patch into
-    (hw/factor)^2 coarse cells by mean/std/max over the contributing
-    fine pixels (masked pixels excluded). Pure Spark aggregation after
-    pixel -> coarse-cell key assignment (posexplode + groupBy) - the
-    partial+final aggregation replaces the reference's pre-aggregation
-    workaround (maxPixels=4096 limits don't exist here)."""
-    assert hw % factor == 0
-    coarse_w = hw // factor
-    key_cols = list(key_cols)
-    ex = pixels.select(
-        *key_cols,
-        F.posexplode(F.arrays_zip(*[F.col(b) for b in band_cols],
-                                  F.col(mask_col))).alias("px", "z"))
-    row = F.floor(F.col("px") / hw)
-    col = F.col("px") % hw
-    coarse = (F.floor(row / factor) * coarse_w
-              + F.floor(col / factor)).alias("coarse_px")
-    vals = [F.when(F.col(f"z.{mask_col}") > 0, F.col(f"z.{b}")).alias(b)
-            for b in band_cols]
-    ex = ex.select(*key_cols, coarse, *vals)
-    aggs = []
-    for b in band_cols:
-        if mode in ("mean", "mean_std", "mean_std_max"):
-            aggs.append(F.avg(b).cast("float").alias(f"{b}_mean"))
-        if mode in ("mean_std", "mean_std_max"):
-            aggs.append(F.coalesce(F.stddev_pop(b), F.lit(0.0))
-                        .cast("float").alias(f"{b}_std"))
-        if mode in ("max", "mean_std_max"):
-            aggs.append(F.max(b).cast("float").alias(f"{b}_max"))
-    aggs.append(F.count(band_cols[0]).alias("valid"))
-    per_coarse = ex.groupBy(*key_cols, "coarse_px").agg(*aggs)
-    # Reassemble coarse arrays in pixel order.
-    val_cols = [f.name for f in per_coarse.schema.fields
-                if f.name not in key_cols + ["coarse_px"]]
-    s = F.sort_array(F.collect_list(F.struct(
-        F.col("coarse_px"), *[F.col(c) for c in val_cols])))
-    out = per_coarse.groupBy(*key_cols).agg(s.alias("_s"))
-    return out.select(*key_cols,
-                      *[F.col("_s")[c].alias(c) for c in val_cols])
-
-
-def add_roi_validity(scenes: DataFrame, mask_col: str = "mask",
-                     out_col: str = "validity") -> DataFrame:
-    """Per-scene validity fraction: mean of the mask over the ROI
-    (ee_algo.py:431-441 add_roi_validity)."""
-    frac = (F.aggregate(F.col(mask_col), F.lit(0),
-                        lambda a, m: a + (m > 0).cast("int"))
-            .cast("double") / F.size(F.col(mask_col)))
-    return scenes.withColumn(out_col, frac)
-
-
-def add_abs_time_difference(scenes: DataFrame, ref_ts_ms: int,
-                            ts_col: str = "ts",
-                            out_col: str = "abs_time_difference"
-                            ) -> DataFrame:
-    """|ts - ref| in ms (ee_algo.py:444-448)."""
-    return scenes.withColumn(out_col,
-                             F.abs(F.col(ts_col) - F.lit(ref_ts_ms)))
-
-
-def filter_bounds_fallback_first(scenes: DataFrame, bounds_pred,
-                                 order_cols=("ts", "scene_id")) -> DataFrame:
-    """CCDC filterBounds-empty fallback (ee_algo.py:209-212): keep the
-    scenes matching `bounds_pred`; if NONE match, fall back to the
-    collection's first element (deterministic: min by `order_cols`).
-
-    The emptiness probe is one driver-side count - the exact analog of
-    the reference's server-side `ee.Algorithms.If(ccdc.size().eq(0),
-    ic.first(), ...)`, evaluated once per request, never per row.
-    """
-    filtered = scenes.filter(bounds_pred)
-    if filtered.isEmpty():
-        return scenes.orderBy(*[F.col(c).asc() for c in order_cols]).limit(1)
-    return filtered

@@ -1,4 +1,4 @@
-"""Cell-keyed spatial joins: points x polygon regions.
+"""S2-cell-keyed spatial joins: points x polygon regions.
 
 The Spark-native replacement for the reference's Earth-Engine-delegated
 `filterBounds` spatial join (/root/reference/geeflow/ee_algo.py:56-58 for
@@ -28,28 +28,17 @@ from pyspark.sql.types import (BooleanType, LongType, StructField,
                                StructType)
 
 from geeflow_spark.functions import geometry, s2
-from geeflow_spark.functions import hex as hexmod
-
-# Index twins (north rule: S2 AND H3-style hex, selectable everywhere).
-class _IndexMap(dict):
-    def __missing__(self, k):
-        raise KeyError(f"Unknown cell index `{k}`; have {sorted(self)}")
-
-
-INDEXES = _IndexMap({"s2": s2, "hex": hexmod})
 
 
 def with_cell(df: DataFrame, level: int, lat_col: str = "lat",
-              lon_col: str = "lon", out_col: str = "cell",
-              index: str = "s2") -> DataFrame:
-    """Adds the cell-id column (signed long) at `level` for the chosen
-    index twin ("s2" | "hex"), encoded in an Arrow-batched pandas UDF."""
-    mod = INDEXES[index]
+              lon_col: str = "lon", out_col: str = "cell") -> DataFrame:
+    """Adds the S2 cell-id column (signed long) at `level`, encoded in an
+    Arrow-batched pandas UDF."""
 
     @pandas_udf(LongType())
     def _enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        ids = mod.latlon_to_cell_id(lat.to_numpy(np.float64),
-                                    lon.to_numpy(np.float64), level)
+        ids = s2.latlon_to_cell_id(lat.to_numpy(np.float64),
+                                   lon.to_numpy(np.float64), level)
         return pd.Series(np.asarray(ids).astype(np.int64))
 
     return df.withColumn(out_col, _enc(F.col(lat_col), F.col(lon_col)))
@@ -62,15 +51,15 @@ def arrow_np(rb, ix: int, dtype) -> np.ndarray:
 
 
 def region_covers_pdf(regions: pd.DataFrame, level: int,
-                      id_col: str = "region_id", index: str = "s2",
+                      id_col: str = "region_id",
                       buffer_deg: float = 0.0) -> pd.DataFrame:
-    """(cell, region_id) cover pairs for a small pandas region table.
+    """(cell, region_id) S2 cover pairs for a small pandas region table.
 
-    Cover = guaranteed superset of cells intersecting each polygon's bbox
-    (see s2.cover_bbox), grown by `buffer_deg` when the join targets the
-    buffered polygon; exact (buffered) PIP refines later. All regions'
-    covers come from one `cover_bboxes` call (one S2 encode), in region
-    order with each region's cells ascending.
+    Cover = guaranteed superset of cells intersecting each polygon's bbox,
+    grown by `buffer_deg` when the join targets the buffered polygon;
+    exact (buffered) PIP refines later. All regions' covers come from one
+    `s2.cover_bboxes` call (one S2 encode), in region order with each
+    region's cells ascending.
     """
     grow = max(buffer_deg, 0.0)
     boxes = []
@@ -78,7 +67,7 @@ def region_covers_pdf(regions: pd.DataFrame, level: int,
         x0, y0, x1, y1 = geometry.polygon_bbox(
             np.asarray(ring, dtype=np.float64))
         boxes.append((y0 - grow, y1 + grow, x0 - grow, x1 + grow))
-    cells, owner = INDEXES[index].cover_bboxes(boxes, level)
+    cells, owner = s2.cover_bboxes(boxes, level)
     return pd.DataFrame({
         "cell": cells.astype(np.int64),
         id_col: regions[id_col].to_numpy(np.int64)[owner],
@@ -110,8 +99,8 @@ class RegionMatcher:
     `ustart`/`ucnt` of candidate region ids in `cov_rids`."""
 
     def __init__(self, regions: pd.DataFrame, level: int,
-                 index: str = "s2", buffer_deg: float = 0.0):
-        cov = region_covers_pdf(regions, level, index=index,
+                 buffer_deg: float = 0.0):
+        cov = region_covers_pdf(regions, level,
                                 buffer_deg=buffer_deg).sort_values("cell")
         self.cov_rids = cov["region_id"].to_numpy(np.int64)
         self.uc, self.ustart, self.ucnt = np.unique(
@@ -158,7 +147,6 @@ def region_props(regions: pd.DataFrame, cols: list,
 def join_points_regions(points: DataFrame, regions: pd.DataFrame,
                         level: int = 8,
                         region_cols: tuple = ("region_id",),
-                        index: str = "s2",
                         buffer_deg: float = 0.0) -> DataFrame:
     """Spatial inner join: point rows (`lat`, `lon`) x containing regions.
 
@@ -168,10 +156,9 @@ def join_points_regions(points: DataFrame, regions: pd.DataFrame,
     matching (point, region) pair is returned (multiplicity preserved -
     `fc_get`-style first-match is a separate reducer, see `first_match`).
     """
-    match = RegionMatcher(regions, level, index=index, buffer_deg=buffer_deg)
+    match = RegionMatcher(regions, level, buffer_deg=buffer_deg)
     keep = [c for c in regions.columns if c in region_cols and c != "region_id"]
     ids, props = region_props(regions, keep)
-    enc = INDEXES[index].latlon_to_cell_id
 
     cols = points.columns
     lat_ix, lon_ix = cols.index("lat"), cols.index("lon")
@@ -186,7 +173,7 @@ def join_points_regions(points: DataFrame, regions: pd.DataFrame,
         for rb in batches:
             la = arrow_np(rb, lat_ix, np.float64)
             lo = arrow_np(rb, lon_ix, np.float64)
-            cells = np.asarray(enc(la, lo, level)).astype(np.int64)
+            cells = s2.latlon_to_cell_id(la, lo, level).astype(np.int64)
             pix, rid = match(cells, la, lo)
             if len(pix) == 0:
                 continue
@@ -220,7 +207,7 @@ def first_match(joined: DataFrame, key_cols: list[str],
 
 
 def join_points_regions_smj(points: DataFrame, regions_df: DataFrame,
-                            level: int = 8, index: str = "s2") -> DataFrame:
+                            level: int = 8) -> DataFrame:
     """Join path for LARGE region tables (`region_id`, `ring`, ...),
     which are never collected; the points carry `lat` and `lon`.
 
@@ -238,7 +225,7 @@ def join_points_regions_smj(points: DataFrame, regions_df: DataFrame,
             cov = region_covers_pdf(
                 pd.DataFrame({"row": np.arange(rb.num_rows),
                               "ring": rb.column(ring_ix).to_pandas()}),
-                level, id_col="row", index=index)
+                level, id_col="row")
             yield pa.RecordBatch.from_arrays(
                 rb.take(pa.array(cov["row"].to_numpy())).columns
                 + [pa.array(cov["cell"].to_numpy())],
@@ -254,5 +241,5 @@ def join_points_regions_smj(points: DataFrame, regions_df: DataFrame,
                                     lat.to_numpy(np.float64), rid, rings))
 
     covers = regions_df.mapInArrow(_covers, cov_schema)
-    cand = with_cell(points, level, index=index).join(covers, "cell")
+    cand = with_cell(points, level).join(covers, "cell")
     return cand.filter(_pip("lat", "lon", "region_id", "ring")).drop("cell")

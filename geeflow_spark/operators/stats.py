@@ -91,7 +91,7 @@ def derive_moment_stats(row: dict) -> dict:
 
 
 def counter_agg(df: DataFrame, value_col: str, key_cols: list[str] = (),
-                mask_col: str | None = None, to_int: bool = True
+                mask_col: str | None = None
                 ) -> tuple[DataFrame, DataFrame]:
     """CounterAccumulator as two aggregations.
 
@@ -115,7 +115,7 @@ def counter_agg(df: DataFrame, value_col: str, key_cols: list[str] = (),
                    + [F.count(F.when(masked, 1)).alias("n_masked")])
 
     # astype(int) truncation toward zero for float dtypes.
-    bin_col = (v.cast("double").cast("long") if to_int else v)
+    bin_col = v.cast("double").cast("long")
     bins = df.filter(keep & v.isNotNull()) \
              .groupBy(*key_cols, bin_col.alias("bin")) \
              .agg(F.count("*").alias("count"))

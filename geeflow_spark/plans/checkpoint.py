@@ -22,7 +22,9 @@ Design (works on plain parquet dirs; Iceberg-compatible layout):
     and only then is its manifest record written under `<out>/_manifest/`
     as JSON: partition value, row count, lineage, input fingerprint,
     wall time, engine version. Manifest => partition committed; a crash
-    anywhere re-runs exactly the partitions without a manifest.
+    anywhere re-runs exactly the partitions without a manifest. A
+    manifest that does not parse (a crash between its `create` and its
+    `close`) counts as absent, and its rewrite overwrites it.
   - Every file operation (manifests, moves, deletes) goes through the
     Hadoop FileSystem of Spark's session, so `output_path` may be any
     path or URI Spark writes to (local dir, `file://`, `hdfs://`,
@@ -83,7 +85,9 @@ class _Files:
             out.close()
 
     def read_json_dir(self, path: str) -> list:
-        """The `*.json` files directly under `path`, in name order."""
+        """The `*.json` files directly under `path` that parse, in name
+        order. A file torn by a crash between its `create` and `close`
+        does not parse and is left out."""
         d = self._path(path)
         if not self._fs.exists(d):
             return []
@@ -95,6 +99,8 @@ class _Files:
                 try:
                     recs.append(json.loads(
                         bytes(stream.readAllBytes()).decode()))
+                except ValueError:  # JSONDecodeError, UnicodeDecodeError
+                    pass
                 finally:
                     stream.close()
         return recs

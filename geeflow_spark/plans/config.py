@@ -2,11 +2,6 @@
 ConfigDict-style tree and resolve it onto the Spark operators.
 
 Semantic port of the reference's dispatcher half:
-  - `parse_arg` / `autotype` / `get_type_with_default`: the config-arg
-    DSL (utils.py:108-181, :182-209) - single string like
-    "runlocal,schedule=long,res=128" -> typed dot-dict, with the same
-    convenience rules (bare name -> True; single unnamed value -> first
-    spec key; strict bool parsing; lazy autotyping of unspecced keys).
   - `get_source_config`: source-config skeleton (utils.py:244-254).
   - `ALGO_MAP` + `get_algo`: module -> default algo resolution
     (pipelines.py:41-56, :265-275).
@@ -27,7 +22,7 @@ per scene) are lifted to 1-pixel patches, mirroring the reference's
 from __future__ import annotations
 
 import datetime as _dt
-from typing import Any, Callable
+from typing import Callable
 
 import numpy as np
 
@@ -53,67 +48,6 @@ class DotDict(dict):
 
     def __setattr__(self, k, v):
         self[k] = v
-
-
-def autotype(x: str) -> Any:
-    """Auto-converts string to bool/int/float (utils.py:195-205)."""
-    if x.lower() in {"true", "false"}:
-        return x.lower() == "true"
-    try:
-        return int(x)
-    except ValueError:
-        try:
-            return float(x)
-        except ValueError:
-            return x
-
-
-def get_type_with_default(v: Any) -> tuple[Any, Callable[[Any], Any]]:
-    """(default, converter) per utils.py:182-193 incl. strict bools."""
-    if isinstance(v, bool):
-        def strict_bool(x):
-            assert x.lower() in {"true", "false", ""}
-            return x.lower() == "true"
-        return (v, strict_bool)
-    if isinstance(v, (tuple, list)):
-        assert len(v) == 2 and isinstance(v[1], type), (
-            "List/tuple types not supported (',' is the delimiter)")
-        return (v[0], v[1])
-    return (v, type(v))
-
-
-def parse_arg(arg: str | None, lazy: bool = False, **spec) -> DotDict:
-    """The config-string DSL, exact semantics of utils.py:108-181.
-
-    "runlocal,schedule=long,res=128" -> {runlocal: True, ...}; a single
-    bare token is True if specced (or no spec), else the value of the
-    FIRST spec entry; unhandled keys raise unless lazy (then autotyped).
-    """
-    arg = arg or ""
-    spec = {k: get_type_with_default(v) for k, v in spec.items()}
-    result = DotDict()
-
-    if arg and "," not in arg and "=" not in arg:
-        if arg in spec or not spec:
-            arg = f"{arg}=True"
-        else:
-            arg = f"{list(spec.keys())[0]}={arg}"
-
-    raw_kv = {raw.split("=")[0]: raw.split("=", 1)[-1] if "=" in raw
-              else "True"
-              for raw in arg.split(",") if raw}
-
-    for name, (default, type_fn) in spec.items():
-        val = raw_kv.pop(name, None)
-        result[name] = type_fn(val) if val is not None else default
-
-    if raw_kv:
-        if lazy:
-            for k, v in raw_kv.items():
-                result[k] = autotype(v)
-        else:
-            raise ValueError(f"Unhandled config args remain: {raw_kv}")
-    return result
 
 
 def get_source_config(module: str, out: str | None = None) -> DotDict:
@@ -153,13 +87,10 @@ SUPPORTED_ALGOS = ("ic_sample", "ic_sample_date_ranges",
 # Spark analog: the "feature data" is the per-source DataFrame dict, so
 # a kernel is Callable[[dict[str, DataFrame]], dict[str, DataFrame]] -
 # typically wrapping mapInPandas over one or more sources. Configs name
-# kernels by string (picklable / config-file friendly) or pass a
-# callable directly, mirroring the reference's str-vs-callable dispatch.
+# kernels by string (picklable / config-file friendly), the key a
+# kernel is stored under here, or pass a callable directly, mirroring
+# the reference's str-vs-callable dispatch.
 POST_PROCESS_KERNELS: dict[str, Callable] = {}
-
-
-def register_post_process(name: str, fn: Callable) -> None:
-    POST_PROCESS_KERNELS[name] = fn
 
 
 def resolve_post_process(pp) -> Callable:
@@ -432,27 +363,3 @@ def _ccdc_annual(df: DataFrame, name: str, fmt: dict, kw: dict) -> DataFrame:
                          if c not in ("tStart", "tEnd", "coefs")],
                        F.col("_c.tensor").alias(f"{name}/ccdc"),
                        F.col("_c.mask").alias(f"{name}_mask/ccdc")))
-
-
-def standardized_path(path: str, split_name: str | None = None,
-                      postfix: str | None = None,
-                      default_dir: str | None = None,
-                      file_extension: str = ".json") -> str:
-    """Constructs/adjusts full paths for metadata files - semantic port
-    of utils.py:221-254 (tfds-name ':' -> '/', default-dir anchoring,
-    split subdir, '_postfix' vs '/postfix', extension suffix)."""
-    import os
-    if not path.startswith("/"):
-        path = path.replace(":", "/")  # tfds name string
-        if default_dir is not None:
-            path = os.path.join(default_dir, path)
-    if split_name:
-        path = os.path.join(path, split_name)
-    if postfix:
-        if path.endswith("/"):
-            path = os.path.join(path, postfix)
-        else:
-            path = f"{path}_{postfix}"
-    if not path.endswith(file_extension):
-        path += file_extension
-    return path

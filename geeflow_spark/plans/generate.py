@@ -28,7 +28,12 @@ from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType)
 
 from geeflow_spark.functions import s2, utm
-from geeflow_spark.operators import spatial_join, splits
+from geeflow_spark.operators import spatial_join
+
+# Split name of each md5 bucket 0..9 (export_beam_tfds.py:99-109): 9 is
+# test, 8 is val, the rest train.
+SPLIT_NAMES = ("train",) * 8 + ("val", "test")
+
 
 def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
                       cell_level: int = 8, split_level: int = 9,
@@ -89,7 +94,7 @@ def generate_examples(docs: DataFrame, regions: pd.DataFrame, *,
     # workers' hottest serial section under 16-way concurrency).
     def _kernel(batches):
         zone_dict = pa.array(utm.ZONE_STRINGS, type=pa.string())
-        split_dict = pa.array(splits.SPLIT_NAMES, type=pa.string())
+        split_dict = pa.array(SPLIT_NAMES, type=pa.string())
         for rb in batches:
             if rb.num_rows == 0:
                 continue

@@ -279,43 +279,6 @@ def cloud_filtered(src: TableSource, spark: SparkSession,
     return df.filter(F.col(key) < percentage)
 
 
-# ---------------------------------------------------------------------------
-# Demo S2 table derived from the sandbox `events` table: the registry-
-# driven ORACLE query (src_s2_cloudfree_mosaic) needs a table both Spark
-# and DuckDB can derive with exact integer arithmetic.
-# ---------------------------------------------------------------------------
-
-DEMO_CLOUD_SQL = ("(((event_id * 2654435761) % 4294967296)"
-                  " / 4294967296.0 * 110.0)")
-DEMO_B4_SQL = "(100.0 + ((event_id * 7919) % 10000) / 10.0)"
-DEMO_B8_SQL = "(200.0 + ((event_id * 104729) % 10000) / 10.0)"
-DEMO_QA60_SQL = "((event_id * 40503 + 12345) % 4096)"
-
-
-def demo_s2_source(sf_dir: str) -> TableSource:
-    """`sentinel2_sr`-shaped TableSource derived from {sf_dir}/events:
-    scene_id=event_id, cell=user_id%50, cloud % / B4 / B8 / QA60 by
-    congruential arithmetic exactly expressible in ANSI SQL."""
-
-    def load(spark: SparkSession) -> DataFrame:
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        eid = F.col("event_id")
-        return ev.select(
-            eid.alias("scene_id"),
-            (F.col("user_id") % 50).alias("cell"),
-            F.col("ts"),
-            (((eid * 2654435761) % 4294967296) / F.lit(4294967296.0)
-             * 110.0).alias("CLOUDY_PIXEL_PERCENTAGE"),
-            (F.lit(100.0) + ((eid * 7919) % 10000) / 10.0).alias("B4"),
-            (F.lit(200.0) + ((eid * 104729) % 10000) / 10.0).alias("B8"),
-            ((eid * 40503 + 12345) % 4096).alias("QA60"))
-
-    return TableSource(
-        name="sentinel2_sr_demo", path=None,
-        bands=["B4", "B8", "QA60"], vis_bands=["B4"],
-        filters=[("<=CLOUDY_PIXEL_PERCENTAGE", 100)], loader=load)
-
-
 # Populate the default registry at import (the reference catalog is
 # likewise module-level, ee_data.py top level).
 build_registry()

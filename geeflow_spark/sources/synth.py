@@ -20,11 +20,8 @@ Tables:
         offset strictly increasing per doc (span-sequence invariant).
       - 30% of docs drawn from 5 "city" clusters -> hot S2 cell prefixes
         (coastal/urban skew; exercises salting).
-  regions(region_id long, ring array<double>, class_name string,
-          gridcode int)  - small polygon set, always broadcastable.
-  labels(index, lat, lon, label_name, label, split)
-      - mirror of the reference's demo_labels.csv shape
-        (geeflow/data/demo_labels.csv).
+  regions_pdf(region_id long, ring array<double>, class_name string,
+          gridcode int)  - small pandas polygon set, always broadcastable.
   scenes(scene_id, ts, cell long, B1..B4 array<float>, mask array<byte>,
          cloud_pct) - time-stamped raster patches for temporal reducers.
   cells_metadata(id, utm_x, utm_y, utm_zone) + predictions(id, dy, dx,
@@ -235,34 +232,6 @@ def regions_pdf(n: int = 40, seed: int = 7, radius_scale: float = 1.0,
             "gridcode": int(rid * 10 + rid % 3),
         })
     return pd.DataFrame(rows)
-
-
-def regions(spark: SparkSession, n: int = 40, seed: int = 7) -> DataFrame:
-    return spark.createDataFrame(regions_pdf(n, seed))
-
-
-def labels(spark: SparkSession, n: int = 200, with_split: bool = True
-           ) -> DataFrame:
-    """Demo-labels-shaped point table (reference data/demo_labels.csv)."""
-    df = spark.range(0, n, 1, 4)
-    idc = F.col("id")
-    # Zurich-ish and London-ish clusters like the reference demo.
-    zurich = (idc % 2) == 0
-    lat = F.when(zurich, 47.2 + _uniform(idc, 11) * 0.4) \
-           .otherwise(51.3 + _uniform(idc, 11) * 0.4)
-    lon = F.when(zurich, 8.4 + _uniform(idc, 12) * 0.5) \
-           .otherwise(-0.3 + _uniform(idc, 12) * 0.5)
-    cols = [
-        idc.cast("int").alias("index"),
-        lat.alias("lat"), lon.alias("lon"),
-        F.when(idc % 3 == 0, "apple").otherwise("prune").alias("label_name"),
-        (idc % 3 == 0).cast("int").alias("label"),
-    ]
-    if with_split:
-        u = _uniform(idc, 13)
-        cols.append(F.when(u < 0.7, "train").when(u < 0.85, "val")
-                    .otherwise("test").alias("split"))
-    return df.select(*cols)
 
 
 def scenes(spark: SparkSession, n_cells: int = 50, n_times: int = 24,

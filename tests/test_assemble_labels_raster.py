@@ -8,7 +8,8 @@ from pyspark.sql import functions as F
 
 from geeflow_spark.operators import raster_export, tiles
 from geeflow_spark.plans import assemble, labels
-from geeflow_spark.sources import synth
+
+import helpers
 
 
 # --- assemble (ee_export_utils.py exact rules) -----------------------------
@@ -147,7 +148,7 @@ def test_item_to_roi_variants():
 
 
 def test_with_roi_columns_matches_scalar(spark):
-    lab = synth.labels(spark, 50)
+    lab = helpers.labels(spark, 50)
     out = labels.with_roi_columns(lab, img_width_m=960,
                                   max_cell_size_m=10).toPandas()
     for _, r in out.head(5).iterrows():

@@ -7,6 +7,7 @@ exercises the filters/masks a real user of that source relies on.
 import pytest
 from pyspark.sql import functions as F
 
+from __spark_entry__ import demo_s2_source
 from geeflow_spark.sources import catalog
 from geeflow_spark.sources.registry import DEFAULT_REGISTRY
 
@@ -91,7 +92,7 @@ def test_band_selection_and_validation(spark):
 
 
 def test_demo_s2_source_through_registry(spark):
-    src = catalog.demo_s2_source("/root/testdata/sf0.001")
+    src = demo_s2_source("/root/testdata/sf0.001")
     df = src.load(spark)
     assert df.filter(F.col("CLOUDY_PIXEL_PERCENTAGE") > 100).count() == 0
     assert set(src.bands) <= set(df.columns)

@@ -97,32 +97,10 @@ def test_ccdc_padding():
 
 # --- times (times_test.py semantics) ---------------------------------------
 
-def test_incremental_date_list():
-    out = times.incremental_date_list("2020-01-31", 3, months=1)
-    assert [times.to_datestr(d) for d in out] == \
-        ["2020-01-31", "2020-02-29", "2020-03-31"]
-    out = times.incremental_date_list(1577836800000.0, 2, years=1)
-    assert [d.year for d in out] == [2020, 2021]
-    assert all(times.is_tza(d) for d in out)
-
-
-def test_get_date_ranges():
-    assert times.get_date_ranges("2018-01-01", 2, 12) == \
-        [("2018-01-01", 12, 0), ("2019-01-01", 12, 0)]
-    assert times.get_date_ranges("2020-01-01", 2, months=1,
-                                 months_skip=2) == \
-        [("2020-01-01", 1, 0), ("2020-04-01", 1, 0)]
-
-
 def test_outer_dates():
     ranges = [("2018-06-01", 12), ("2017-01-01", 3)]
     lo, hi = times.outer_dates(ranges)
     assert (lo, hi) == ("2017-01-01", "2019-06-01")
-
-
-def test_hemisphere():
-    assert times.adjust_for_hemisphere({"lat": 10}, "N", "S") == "N"
-    assert times.adjust_for_hemisphere({"lat": -10}, "N", "S") == "S"
 
 
 def test_tza_roundtrip():

@@ -1,17 +1,18 @@
 """Exact-semantics tests for the round-2 partials: polygon buffer,
-CCDC fallback, schema planner, bounded mosaic reducer, labels-writer
+schema planner, bounded mosaic reducer, labels-writer
 cap."""
 
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from geeflow_spark.functions import geometry
 from geeflow_spark.operators import reducers, spatial_join
 from geeflow_spark.plans import labels as labels_mod
 from geeflow_spark.plans import schema as schema_mod
 from geeflow_spark.sources import synth
+
+import helpers
 
 
 def test_buffered_polygon_membership_exact():
@@ -51,19 +52,6 @@ def test_buffered_spatial_join(spark):
     assert sorted(buf.toPandas()["doc_id"]) == [1, 2]
 
 
-def test_ccdc_filter_bounds_fallback(spark):
-    scenes = synth.scenes(spark, n_cells=5, n_times=3, hw=2)
-    # Non-empty filter: plain filtered result.
-    got = reducers.filter_bounds_fallback_first(scenes, F.col("cell") == 2)
-    assert got.select("cell").distinct().collect()[0][0] == 2
-    # Empty filter -> ic.first(): the single earliest scene.
-    fb = reducers.filter_bounds_fallback_first(scenes, F.col("cell") == 999)
-    rows = fb.collect()
-    assert len(rows) == 1
-    first = scenes.orderBy("ts", "scene_id").limit(1).collect()[0]
-    assert rows[0]["scene_id"] == first["scene_id"]
-
-
 def test_schema_planner():
     row = {"id": np.int64(3), "split": np.str_("train"),
            "s2/B3": np.zeros((2, 4, 4, 1), np.float32),
@@ -94,7 +82,7 @@ def test_mosaic_bounded_buffer_same_result(spark):
 
 
 def test_save_labels_cap(spark, tmp_path):
-    small = synth.labels(spark, 50)
+    small = helpers.labels(spark, 50)
     p = str(tmp_path / "l.parquet")
     labels_mod.save_labels(small, p)
     assert pd.read_parquet(p).shape[0] == 50

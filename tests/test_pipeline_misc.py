@@ -193,6 +193,38 @@ def test_checkpoint_missing_staged_partition_raises(spark, tmp_path,
     assert back.select("doc_id").distinct().count() == 300
 
 
+def _rows_checksum(df):
+    """(row count, sum of per-row xxhash64 over all columns)."""
+    row = df.agg(F.count("*"), F.sum(F.xxhash64(*df.columns)
+                                     .cast("decimal(20,0)"))).collect()[0]
+    return int(row[0]), row[1]
+
+
+def test_checkpoint_resume_torn_manifest(spark, tmp_path):
+    # A crash between a manifest's create and its close leaves a 0-byte
+    # manifest. The relaunch treats it as absent: it re-runs and rewrites
+    # only that partition, and the dataset reads back unchanged.
+    import json
+
+    out = str(tmp_path / "out")
+    docs = synth.docs(spark, 300).withColumn(
+        "part", (F.crc32(F.col("doc_id")) % 3).cast("int"))
+    checkpoint.run_partitioned(docs, out, "part", [0, 1, 2],
+                               id_col="doc_id")
+    clean = _rows_checksum(spark.read.parquet(out + "/part=*"))
+    man = checkpoint.manifest_dir(out)
+    open(os.path.join(man, "1.json"), "wb").close()
+    recs = checkpoint.run_partitioned(docs, out, "part", [0, 1, 2],
+                                      id_col="doc_id")
+    assert [r["partition"] for r in recs] == ["1"]
+    assert _rows_checksum(spark.read.parquet(out + "/part=*")) == clean
+    assert sorted(os.listdir(man)) == ["0.json", "1.json", "2.json"]
+    for p in range(3):
+        with open(os.path.join(man, f"{p}.json")) as f:
+            assert json.load(f)["partition"] == str(p)
+    assert not os.path.exists(os.path.join(out, "_staging"))
+
+
 def test_checkpoint_awkward_names(spark, tmp_path):
     # Partition values with quotes, backslashes and backticks, and
     # column names that need quoting, reach the write job's SQL index

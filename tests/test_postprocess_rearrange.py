@@ -15,7 +15,7 @@ def _dem_config():
     return c
 
 
-def test_post_process_map_named_kernel(spark):
+def test_post_process_map_named_kernel(spark, monkeypatch):
     def clip_kernel(out):
         return {k: v.withColumn(
             "elevation/elevation",
@@ -23,7 +23,7 @@ def test_post_process_map_named_kernel(spark):
             if "elevation/elevation" in v.columns else v
             for k, v in out.items()}
 
-    cfg_mod.register_post_process("clip500", clip_kernel)
+    monkeypatch.setitem(cfg_mod.POST_PROCESS_KERNELS, "clip500", clip_kernel)
     c = _dem_config()
     c.post_process_map = "clip500"
     out = cfg_mod.run_pipeline(spark, c)

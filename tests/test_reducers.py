@@ -92,68 +92,6 @@ def test_sample_date_ranges_filters_and_stamps(spark):
     assert out.groupby(["cell", "timestamps"]).size().max() == 1
 
 
-def test_most_valid_pixels_argmax(spark):
-    df, pdf = _scenes_pdf(spark, n_cells=5, n_times=6, hw=4)
-    got = reducers.most_valid_pixels(df, ["B1"]).toPandas()
-    for cell, grp in pdf.groupby("cell"):
-        cnt = (np.stack(grp["mask"].to_numpy()) > 0).sum(axis=1)
-        best = cnt.max()
-        row = got[got["cell"] == cell]
-        assert len(row) == 1
-        got_cnt = (np.array(row["mask"].iloc[0]) > 0).sum()
-        assert got_cnt == best
-
-
-def test_percentile_reduce(spark):
-    df, pdf = _scenes_pdf(spark, n_cells=4, n_times=8, hw=3)
-    got = {r["cell"]: r for r in
-           reducers.percentile_reduce(df, ["B1"], (25, 50, 75)).collect()}
-    for cell, grp in pdf.groupby("cell"):
-        arr = _stack(grp, "B1")
-        mask = _stack(grp, "mask") > 0
-        marr = np.where(mask, arr, np.nan)
-        for q in (25, 50, 75):
-            exp = np.nan_to_num(np.nanpercentile(marr, q, axis=0))
-            np.testing.assert_allclose(
-                np.array(got[cell][f"B1_p{q}"]), exp, rtol=1e-6)
-
-
-def test_reduce_resolution(spark):
-    df, pdf = _scenes_pdf(spark, n_cells=3, n_times=1, hw=4)
-    got = {r["cell"]: r for r in
-           reducers.reduce_resolution(df, factor=2, hw=4,
-                                      band_cols=["B1"],
-                                      mode="mean_std_max").collect()}
-    for cell, grp in pdf.groupby("cell"):
-        arr = _stack(grp, "B1")[0].reshape(4, 4)
-        mask = (_stack(grp, "mask")[0] > 0).reshape(4, 4)
-        r = got[cell]
-        for cy in range(2):
-            for cx in range(2):
-                block = arr[cy * 2:(cy + 1) * 2, cx * 2:(cx + 1) * 2]
-                bm = mask[cy * 2:(cy + 1) * 2, cx * 2:(cx + 1) * 2]
-                vals = block[bm]
-                i = cy * 2 + cx
-                if len(vals):
-                    np.testing.assert_allclose(r["B1_mean"][i],
-                                               vals.mean(), rtol=1e-6)
-                    np.testing.assert_allclose(r["B1_std"][i],
-                                               vals.std(), rtol=1e-5)
-                    np.testing.assert_allclose(r["B1_max"][i],
-                                               vals.max(), rtol=1e-6)
-
-
-def test_roi_validity_and_time_diff(spark):
-    df, pdf = _scenes_pdf(spark, n_cells=2, n_times=2, hw=4)
-    got = reducers.add_roi_validity(df).toPandas()
-    for _, r in got.iterrows():
-        exp = (np.array(r["mask"]) > 0).mean()
-        assert abs(r["validity"] - exp) < 1e-9
-    t = reducers.add_abs_time_difference(df, 1514764800000).toPandas()
-    assert (t["abs_time_difference"] ==
-            (t["ts"] - 1514764800000).abs()).all()
-
-
 def test_quality_mosaic_matches_numpy_argmax(spark):
     # EE qualityMosaic(band): per-pixel argmax composite by the quality
     # band; ties pinned to (quality, ts, scene_id) max - later wins.

@@ -135,7 +135,7 @@ def test_parent_hierarchy_nested():
 
 def test_cover_bbox_superset():
     box = (47.0, 47.5, 8.0, 8.8)
-    cov = s2.cover_bbox(*box, 9)
+    cov, _ = s2.cover_bboxes([box], 9)
     plat = rng.uniform(box[0], box[1], 3000)
     plon = rng.uniform(box[2], box[3], 3000)
     pc = s2.latlon_to_cell_id(plat, plon, 9)

@@ -6,8 +6,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from geeflow_spark.functions import geometry
-from geeflow_spark.operators import spatial_join, splits, tiles
+from geeflow_spark.functions import geometry, s2
+from geeflow_spark.operators import spatial_join, tiles
 from geeflow_spark.plans import generate
 from geeflow_spark.sources import synth
 
@@ -196,21 +196,6 @@ def test_tile_assignment_awkward_names(spark):
     assert got["id"].nunique() == 300
 
 
-def test_split_semantics(spark):
-    import hashlib
-    from geeflow_spark.functions import s2 as s2f
-    docs = _docs(spark).limit(200)
-    out = splits.with_split(docs, level=9).select("doc_id", "lat", "lon",
-                                                  "split").toPandas()
-    cells = s2f.latlon_to_cell_id(out["lat"].to_numpy(),
-                                  out["lon"].to_numpy(), 9)
-    for i, c in enumerate(cells):
-        h = int(hashlib.md5(str(int(np.uint64(c))).encode()).hexdigest(),
-                16) % 10
-        expect = "test" if h == 9 else ("val" if h == 8 else "train")
-        assert out["split"].iloc[i] == expect
-
-
 def test_span_sequence_preserved_through_shuffles(spark):
     """BASELINE.json per-row invariant: span-sequence equality
     (kind, text, media_ref, order) after shuffle-bearing operators."""
@@ -327,50 +312,34 @@ def test_join_points_regions_plan_one_arrow_map(spark):
     assert "BroadcastHashJoin" not in plan, plan
 
 
-def _cover_pairs(regs, level, index, buffer_deg):
-    got = spatial_join.region_covers_pdf(regs, level, index=index,
-                                         buffer_deg=buffer_deg)
+def cover_bbox(lat_min, lat_max, lon_min, lon_max, level: int):
+    """Oracle of `s2.cover_bboxes`: one box's cover, from its own encode
+    of its own sample grid."""
+    glat, glon = s2._bbox_samples(lat_min, lat_max, lon_min, lon_max, level)
+    return np.unique(s2.latlon_to_cell_id(glat, glon, level))
+
+
+def _cover_pairs(regs, level, buffer_deg):
+    got = spatial_join.region_covers_pdf(regs, level, buffer_deg=buffer_deg)
     assert list(got.dtypes) == [np.int64, np.int64]
     return set(zip(got["cell"].tolist(), got["region_id"].tolist()))
 
 
-@_pytest.mark.parametrize("index,level", [("s2", 8), ("s2", 6), ("hex", 5)])
+@_pytest.mark.parametrize("level", [8, 6], ids=["s2-8", "s2-6"])
 @_pytest.mark.parametrize("buffer_deg", [0.0, 0.4])
-def test_region_covers_match_per_region_cover_bbox(index, level,
-                                                   buffer_deg):
+def test_region_covers_match_per_region_cover_bbox(level, buffer_deg):
     # One batched cover call == a cover_bbox call per region, grown by
     # the buffer; an empty region table gives no pairs.
     regs = synth.regions_pdf(30, seed=3, radius_scale=2.0)
-    mod = spatial_join.INDEXES[index]
     exp = set()
     for rid, ring in zip(regs["region_id"], regs["ring"]):
         x0, y0, x1, y1 = geometry.polygon_bbox(np.asarray(ring, float))
         g = buffer_deg
         exp |= {(int(c), int(rid)) for c in
-                mod.cover_bbox(y0 - g, y1 + g, x0 - g, x1 + g, level)
+                cover_bbox(y0 - g, y1 + g, x0 - g, x1 + g, level)
                 .astype(np.int64)}
-    assert _cover_pairs(regs, level, index, buffer_deg) == exp
-    assert _cover_pairs(regs.iloc[:0], level, index, buffer_deg) == set()
-
-
-@_pytest.mark.parametrize("index", ["s2", "hex"])
-def test_join_points_regions_both_indexes(spark, index):
-    # Same exact PIP output regardless of the index twin used for the
-    # candidate cover (the refine stage makes the join index-agnostic).
-    import pandas as pd
-    from geeflow_spark.operators import spatial_join
-    docs = synth.docs(spark, 2000).select("doc_id", "lat", "lon")
-    regions = synth.regions_pdf(12, radius_scale=2.0)
-    out = spatial_join.join_points_regions(docs, regions, level=6,
-                                           index=index)
-    got = set(map(tuple, out.select("doc_id", "region_id").toPandas()
-                  .itertuples(index=False)))
-    ref = spatial_join.join_points_regions(docs, regions, level=6,
-                                           index="s2" if index == "hex"
-                                           else "hex")
-    ref_set = set(map(tuple, ref.select("doc_id", "region_id").toPandas()
-                      .itertuples(index=False)))
-    assert got == ref_set and len(got) > 0
+    assert _cover_pairs(regs, level, buffer_deg) == exp
+    assert _cover_pairs(regs.iloc[:0], level, buffer_deg) == set()
 
 
 def test_synth_splitmix64_matches_numpy_twin(spark):

